@@ -144,24 +144,23 @@ def build_index(
     return InvertedIndex(term_freq, term_doc_freq, doc_info, corpus_info)
 
 
-def materialize_index(
-    index: InvertedIndex, out_dir: str, partition_by_corpus: bool = True
-) -> None:
+def materialize_index(index: InvertedIndex, out_dir: str) -> None:
     """Persist the four index tables as parquet (the offline half of the
     reference's index/search split — replaces the Cassandra store, S6).
 
-    ``term_freq`` is written sorted by term within files so parquet
-    min/max row-group statistics prune term point-lookups; with
-    ``partition_by_corpus`` the ``(corpus_name, term)`` Cassandra partition
-    key becomes directory-level partition pruning + row-group skipping.
+    ``term_freq`` is partitioned by ``corpus_name`` and written sorted by
+    term within files: the ``(corpus_name, term)`` Cassandra partition key
+    becomes directory-level partition pruning + parquet min/max row-group
+    skipping on term point-lookups.
     """
     import os
 
-    tf = index.term_freq.sortWithinPartitions("term")
-    writer = tf.write.mode("overwrite")
-    if partition_by_corpus:
-        writer = writer.partitionBy("corpus_name")
-    writer.parquet(os.path.join(out_dir, "term_freq"))
+    (
+        index.term_freq.sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .partitionBy("corpus_name")
+        .parquet(os.path.join(out_dir, "term_freq"))
+    )
     for name, df in [
         ("term_doc_freq", index.term_doc_freq),
         ("doc_info", index.doc_info),

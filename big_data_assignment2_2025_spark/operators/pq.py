@@ -181,7 +181,7 @@ def _encode_np(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     m, kc, d_sub = codebooks.shape
     # precondition made LOUD (r14, ADVICE): the fused query path assumes
     # clean fixed-length embeddings — np.stack upstream already raises on
-    # null/ragged rows, and a NaN component would argmin differently from
+    # ragged rows, and a NaN/inf component would argmin differently from
     # Catalyst's array_min (NaN sorts greatest there) — so reject rather
     # than silently diverge from pq_encode
     if X.ndim != 2 or X.shape[1] != m * d_sub:
@@ -189,6 +189,8 @@ def _encode_np(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
             f"pq encode expects dense {m * d_sub}-dim embeddings, got "
             f"shape {X.shape}"
         )
+    if not np.isfinite(X).all():
+        raise ValueError("pq encode expects finite embedding components")
     n = X.shape[0]
     codes = np.empty((n, m), dtype=np.int64)
     for j in range(m):
@@ -294,12 +296,14 @@ def pq_topk_fused(
     take = max(k, shortlist or 0)
     m, _, d_sub = codebooks.shape
     # dirty-input guard (r14, ADVICE): pq_encode's Catalyst expression
-    # tolerated null/short embeddings (null distances sort away); the
-    # numpy batch encode would raise on them instead — filter the rows
-    # that could never encode BEFORE the Arrow pass (no-op on the clean
-    # fixtures, same contract as ann_sq8_topk's null filter)
+    # tolerated null/short embeddings and NULL elements (null distances
+    # sort away); the numpy batch encode would read a NULL element as NaN
+    # and raise — filter the rows that could never encode BEFORE the
+    # Arrow pass (no-op on the clean fixtures, same contract as
+    # ann_sq8_topk's null filter). array_compact drops NULL elements, so
+    # one size check rejects null, short and NULL-holding vectors alike.
     partial = corpus.where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == m * d_sub)
+        F.size(F.array_compact(vec_col)) == m * d_sub
     ).select(
         F.col(id_col), F.col(vec_col).alias("__vec")
     ).mapInPandas(

@@ -15,9 +15,6 @@ lines not yet represented in the registry:
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -29,7 +26,12 @@ from ..operators.index import (
     idempotent_reindex,
     incremental_reindex,
 )
-from ..sources.readers import load_table, read_corpus_tsv, read_documents
+from ..sources.readers import (
+    load_table,
+    read_corpus_tsv,
+    read_documents,
+    scratch_dir,
+)
 from ..sources.sinks import write_jsonl, write_orc, write_tsv
 
 
@@ -113,9 +115,7 @@ def tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write the corpus through the TSV sink (S4) and read it back through
     the schema'd TSV source (S3); values must survive the round-trip."""
     corpus = read_documents(spark, sf_dir)
-    out = os.path.join(
-        tempfile.gettempdir(), f"tsv_rt_{sf_dir.strip('/').replace('/', '_')}"
-    )
+    out = scratch_dir(sf_dir, "tsv_rt")
     write_tsv(corpus, out)
     back = read_corpus_tsv(spark, out)
     return back.select(
@@ -135,9 +135,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC is the second first-class columnar format after parquet — same
     vectorized scan, predicate pushdown and column pruning apply."""
     docs = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(), f"orc_rt_{sf_dir.strip('/').replace('/', '_')}"
-    )
+    out = scratch_dir(sf_dir, "orc_rt")
     write_orc(docs, out)
     back = spark.read.orc(out)
     return back.select("doc_id", "lang", "source", "n_chars")
@@ -154,9 +152,7 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-only columns — schema'd reads are the production contract for
     line-JSON interchange)."""
     docs = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(), f"jsonl_rt_{sf_dir.strip('/').replace('/', '_')}"
-    )
+    out = scratch_dir(sf_dir, "jsonl_rt")
     write_jsonl(docs, out)
     back = spark.read.schema(docs.schema).json(out)
     return back.select("doc_id", "lang", "source", "n_chars")

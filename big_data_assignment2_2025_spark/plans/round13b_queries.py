@@ -27,19 +27,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.incremental_view import IncrementalAggView
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged
 from ..sources.snapshots import SnapshotStore
 
 #: bloom narrative: residue split (every member spans the key domain)
@@ -97,12 +90,8 @@ def _staged_bloom_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     (to witness they cannot prune), bloom index built on o_orderkey.
     The builder asserts the pre-index plan was conservative (all 8
     members) so the gate's pruning is attributable to the bloom."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapbloom1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             (F.col("o_orderkey") * 2).alias("pk"),
@@ -121,10 +110,8 @@ def _staged_bloom_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
         )
         n = store.build_blooms(spark, ["pk"])
         assert n == _BLOOM_MEMBERS, f"indexed {n} members"
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged(sf_dir, "snapbloom1", build))
 
 
 def storage_bloom_point_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,17 +198,9 @@ def _staged_mv(spark: SparkSession, sf_dir: str) -> tuple:
     The view refreshes after EVERY version; the builder asserts the
     receipt narrative (bootstrap rebuild, then four incrementals, then
     a no-op replay) and persists the receipts for the gate."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    src_base = os.path.join(tempfile.gettempdir(), f"snapmvsrc1_{tag}")
-    mv_base = os.path.join(tempfile.gettempdir(), f"snapmvview1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(mv_base, fprint) or not os.path.isdir(
-        os.path.join(src_base, "data")
-    ):
-        for b in (src_base, mv_base):
-            if os.path.exists(b):
-                shutil.rmtree(b)
-        store = SnapshotStore(src_base)
+
+    def build(root: str) -> None:
+        store = SnapshotStore(os.path.join(root, "src"))
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         ).withColumn(
@@ -234,7 +213,8 @@ def _staged_mv(spark: SparkSession, sf_dir: str) -> tuple:
             stats_cols=["o_orderkey"],
         )
         mv = IncrementalAggView(
-            mv_base, store, ["o_orderpriority"], {"sum_cents": "cents"}
+            os.path.join(root, "view"), store, ["o_orderpriority"],
+            {"sum_cents": "cents"},
         )
         receipts = [mv.refresh(spark)]
         store.commit(orders.where(k % 2 == 1), mode="append")
@@ -275,16 +255,19 @@ def _staged_mv(spark: SparkSession, sf_dir: str) -> tuple:
             f"change volume {total_change} vs {n_source} source rows — "
             "the incremental claim would be hollow"
         )
-        with open(os.path.join(mv_base, "_receipts.json"), "w") as fh:
+        with open(os.path.join(root, "_receipts.json"), "w") as fh:
             json.dump({"receipts": receipts, "n_source": n_source}, fh)
-        with open(os.path.join(mv_base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(mv_base, fprint)
-    store = SnapshotStore(src_base)
+
+    # the view reads the source store: one staged root holds both, so
+    # they are committed and rebuilt together
+    root = staged(sf_dir, "snapmv1", build)
     mv = IncrementalAggView(
-        mv_base, store, ["o_orderpriority"], {"sum_cents": "cents"}
+        os.path.join(root, "view"),
+        SnapshotStore(os.path.join(root, "src")),
+        ["o_orderpriority"],
+        {"sum_cents": "cents"},
     )
-    with open(os.path.join(mv_base, "_receipts.json")) as fh:
+    with open(os.path.join(root, "_receipts.json")) as fh:
         receipts = json.load(fh)
     return mv, receipts
 

@@ -45,19 +45,12 @@ extensions per SURVEY.md §7.
 from __future__ import annotations
 
 import datetime as _dt
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged
 
 # --------------------------------------------------------------------------
 # 1. Salted skew join
@@ -130,22 +123,17 @@ _LO, _HI = "1997-01-01", "1998-01-01"
 
 
 def _staged_range_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Orders re-written ``repartitionByRange(o_orderdate)`` into a cached
-    per-fixture temp dir — the "range-clustered table" a lakehouse would
-    maintain; cache validity is fingerprint-gated like every other derived
-    copy (see ``bucketed_table``)."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"rangeparts_{tag}", "orders")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(path, fprint):
-        (
-            load_table(spark, sf_dir, "orders")
-            .repartitionByRange(_N_RANGE_FILES, "o_orderdate")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        mark_derived_cache(path, fprint)
-    return path
+    """Orders re-written ``repartitionByRange(o_orderdate)`` into a staged
+    per-fixture dir — the "range-clustered table" a lakehouse would
+    maintain."""
+    return staged(
+        sf_dir,
+        "rangeparts_orders",
+        lambda path: load_table(spark, sf_dir, "orders")
+        .repartitionByRange(_N_RANGE_FILES, "o_orderdate")
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
 
 def manifest_for(spark: SparkSession, path: str) -> list[dict]:

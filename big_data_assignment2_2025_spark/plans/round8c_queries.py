@@ -23,20 +23,11 @@ the source, which is precisely what hash-gating checks.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_of
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged
 from ..sources.snapshots import SnapshotStore
 
 #: the append split: v1 = doc_id % 3 != 0 (overwrite), v2 += doc_id % 3 == 0
@@ -47,13 +38,9 @@ def _staged_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     """Per-fixture snapshot store with exactly three committed versions:
     v1 overwrite (two thirds of documents), v2 append (the remaining
     third), v3 compact. Fingerprint-gated like every derived copy
-    (``bucketed_table`` discipline) so a regenerated fixture rebuilds."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapstore_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    (``readers.staged``) so a regenerated fixture rebuilds."""
+
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         docs = load_table(spark, sf_dir, "documents")
         store.commit(
@@ -63,12 +50,8 @@ def _staged_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             docs.where(F.col("doc_id") % _SPLIT_MOD == 0), mode="append"
         )
         store.compact(spark)
-        # commit point for the CACHE (the store's own commits are already
-        # atomic): _SUCCESS + fingerprint marker, after all three versions
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged(sf_dir, "snapstore", build))
 
 
 def _version_stats(df: DataFrame, version: int) -> DataFrame:
@@ -179,20 +162,14 @@ def _merge_changes(docs: DataFrame) -> DataFrame:
 def _staged_merge_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     """Per-fixture merge demo store: v1 = full corpus, v2 = MERGE of the
     deterministic changes batch. Fingerprint-gated like ``_staged_store``."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"mergestore_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         docs = load_table(spark, sf_dir, "documents")
         store.commit(docs, mode="overwrite")
         store.merge(spark, _merge_changes(docs), keys=["doc_id"])
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged(sf_dir, "mergestore", build))
 
 
 def storage_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,20 +239,12 @@ def _staged_range_store(
     stats — the shape a daily ingest naturally produces (each commit
     covers a key span), which is exactly when manifest-stats pruning
     pays. Returns the store and the fixture's max doc_id."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"rangestore_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        store = SnapshotStore(base)
-        _commit_range_clustered(
-            spark, store, load_table(spark, sf_dir, "documents")
-        )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    store = SnapshotStore(base)
+
+    def build(base: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        _commit_range_clustered(spark, SnapshotStore(base), docs)
+
+    store = SnapshotStore(staged(sf_dir, "rangestore", build))
     # cache hit costs zero table scans: the fixture's max doc_id is already
     # in the manifest as the members' doc_id [min,max] stats
     stats = store.manifest(store.latest_version()).get("stats", {})
@@ -338,12 +307,8 @@ def _staged_pruned_merge_store(
     chars to the rest of the quartile (lang inherited through the NULL
     column), insert one ``lang='yy'`` row per ``doc_id % 13 == 0``
     source row at ``doc_id + 20_000_000``."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"prunemerge_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         docs = load_table(spark, sf_dir, "documents")
         step = _commit_range_clustered(spark, store, docs)
@@ -374,10 +339,8 @@ def _staged_pruned_merge_store(
             keys=["doc_id"],
             prune=True,
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged(sf_dir, "prunemerge", build))
 
 
 def storage_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,10 +414,8 @@ def _staged_spell_vocab(spark: SparkSession, sf_dir: str) -> str:
     amortized across every suggestion query, which then costs only the
     L+1 variant probes of its own query terms; fingerprint-gated like
     all derived copies."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"spellvocab_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(path, fprint):
+
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         (
             tokens_of(docs)
@@ -469,8 +430,8 @@ def _staged_spell_vocab(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        mark_derived_cache(path, fprint)
-    return path
+
+    return staged(sf_dir, "spellvocab", build)
 
 
 def search_spell_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,20 +22,12 @@ centroid index (``array_position`` picks the first minimum).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_of
 from ..operators.pq import pq_lowest_id_codebooks, pq_topk_fused
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import fixture_fingerprint, load_table, staged
 from .round8c_queries import _DELETES_SQL
 
 #: PQ geometry for the 64-dim fixture: 8 subspaces x 8 dims, 16 centroids
@@ -179,10 +171,8 @@ def _staged_spell_vocab2(spark: SparkSession, sf_dir: str) -> str:
     same build-once-with-the-corpus discipline as the distance-1 index
     (``round8c_queries._staged_spell_vocab``); ~1 + L + C(L,2) variants
     per vocabulary term, the classic SymSpell space-for-probes trade."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"spellvocab2_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(path, fprint):
+
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         (
             tokens_of(docs)
@@ -197,8 +187,8 @@ def _staged_spell_vocab2(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        mark_derived_cache(path, fprint)
-    return path
+
+    return staged(sf_dir, "spellvocab2", build)
 
 
 def search_spell_suggest_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,17 +437,10 @@ def _staged_zorder_store(spark: SparkSession, sf_dir: str) -> str:
     [min, max] zkey envelope is tight, so a 2-D box query prunes files
     through ONE column's stats. Fingerprint-gated like all derived
     copies."""
-    import shutil
-
     from ..functions.zorder import zorder_key2
     from ..sources.snapshots import SnapshotStore
 
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"zorderstore_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
         )
@@ -494,16 +477,8 @@ def _staged_zorder_store(spark: SparkSession, sf_dir: str) -> str:
                 )
         finally:
             z.unpersist()
-        # commit point for the CACHE (the store's commits are already
-        # atomic): derived_cache_ok requires a _SUCCESS at base, which a
-        # SnapshotStore never writes itself — without it this store
-        # restaged on EVERY invocation (measured r13: 5.6-13 s of the
-        # query's 4.3 s bench entry was a silent rebuild of an identical
-        # store; the read path itself is 0.3 s warm)
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return base
+
+    return staged(sf_dir, "zorderstore", build)
 
 
 def _zkey_py(x: int, y: int, bits: int = _Z_BITS) -> int:

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators.index import build_index
 from ..operators.search import bm25_scores, parse_query
-from ..sources.readers import read_documents
+from ..sources.readers import read_documents, staged
 
 FLAGSHIP_QUERY = "spark join window"
 
@@ -112,18 +112,19 @@ def q_bm25_search_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     (offline), search from the materialized tables (online) — term
     predicates push down to the index scan instead of re-tokenizing the
     corpus per query."""
-    import os
-    import tempfile
-
     from ..operators.index import load_materialized_index, materialize_index
     from ..operators.search import bm25_search
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"bm25_index_{sf_dir.strip('/').replace('/', '_')}"
-    )
-    if not os.path.exists(os.path.join(out, "corpus_info")):
-        materialize_index(build_index(read_documents(spark, sf_dir)), out)
-    idx = load_materialized_index(spark, out)
+    def build(path: str) -> None:
+        index = build_index(read_documents(spark, sf_dir))
+        try:
+            materialize_index(index, path)
+        finally:
+            # a cached relation left behind would also answer the NEXT
+            # build's identical read plan after an in-place rewrite
+            index.unpersist()
+
+    idx = load_materialized_index(spark, staged(sf_dir, "bm25_index", build))
     ranked = bm25_search(idx, FLAGSHIP_QUERY, deterministic_ties=True)
     return ranked.select(
         "doc_id", "doc_title", F.round("doc_rank", 6).alias("doc_rank")

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.readers import load_table
+from ..sources.readers import load_table, staged
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -164,32 +164,21 @@ FROM best GROUP BY dist ORDER BY dist
 
 
 def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from ..sources.readers import (
-        derived_cache_ok,
-        fixture_fingerprint,
-        mark_derived_cache,
-    )
     from .graph_queries import _copurchase_edges
 
-    register_views(spark, sf_dir)
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"adj_rec_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(path, fprint):
+    def build(path: str) -> None:
         edges = _copurchase_edges(spark, sf_dir)
         adj = edges.select("u", "v").unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
         adj.write.mode("overwrite").parquet(path)
-        mark_derived_cache(path, fprint)
+
+    register_views(spark, sf_dir)
+    path = staged(sf_dir, "adj_rec", build)
     spark.read.parquet(path).createOrReplaceTempView("copurchase_adj")
     return spark.sql(_RECURSION_OVER_VIEW)
-
 
 
 # One text, two engines: GROUP BY ALL (Spark 3.4+/DuckDB dialect sugar that

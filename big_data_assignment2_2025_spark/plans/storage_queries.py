@@ -20,17 +20,11 @@ shuffle-free plan shapes are asserted in ``tests/test_storage.py``.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged
 
 _N_BUCKETS = 8
 
@@ -52,37 +46,33 @@ def bucketed_table(
     within-bucket order, so bucket-key sort-merge joins skip the per-task
     sort too and row-group min/max stats stay tight on the key.
 
-    Validity is NOT just ``tableExists``: with a persistent metastore the
-    catalog entry can outlive the /tmp data files (or point at data built
-    from an older fixture), so the data path must also carry a committed
-    fixture-fingerprint marker; on any mismatch the table is dropped and
-    rewritten.
-
-    A FRESH session whose catalog merely lacks the entry must NOT rewrite
-    fingerprint-valid data: the files are shared under /tmp, and a
-    rewrite renames every part file under a concurrent reader that has
-    the old listing cached (the round-11 A/B bench hit exactly this —
-    the tag-tree subprocess clobbered the HEAD session's bucketed table
-    mid-pass). Registration is a metadata-only DDL over the existing
-    bucketed files.
+    The staged data directory is the cache; the catalog entry, named
+    after it, is only a view of it. The name encodes the FULL bucket
+    spec: registering a path under a different spec would let Spark skip
+    shuffles against mismatched files (silent wrong join results). A
+    rebuild drops and rewrites the entry. A session whose catalog
+    lacks the entry while the data is current registers it with a
+    metadata-only DDL and never rewrites the files: they are shared
+    under /tmp, and a rewrite renames every part file under a
+    concurrent reader that has the old listing cached.
     """
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"{table}_bkt{n_buckets}_{tag}"
-    # the path must encode the FULL bucket spec, not just the table: the
-    # register-without-rewrite branch below declares CLUSTERED BY (key)
-    # INTO n_buckets BUCKETS over whatever files sit here, and a caller
-    # with a different spec registering the same path would let Spark
-    # skip shuffles against mismatched files — silent wrong join results
-    # (ADVICE r12)
-    path = os.path.join(
-        tempfile.gettempdir(), f"bkt_{tag}", f"{table}_{key}_{n_buckets}"
-    )
-    fprint = fixture_fingerprint(sf_dir)
-    if spark.catalog.tableExists(name) and derived_cache_ok(path, fprint):
-        return spark.table(name)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if derived_cache_ok(path, fprint):
-        # data is current — register, never rewrite (see docstring)
+
+    def build(path: str) -> None:
+        name = os.path.basename(path)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            load_table(spark, sf_dir, table)
+            .write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(n_buckets, key)
+            .sortBy(key)
+            .option("path", path)
+            .saveAsTable(name)
+        )
+
+    path = staged(sf_dir, f"bkt_{table}_{key}_{n_buckets}", build)
+    name = os.path.basename(path)
+    if not spark.catalog.tableExists(name):
         schema = spark.read.parquet(path).schema
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
@@ -92,17 +82,6 @@ def bucketed_table(
             f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
             f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
         )
-        return spark.table(name)
-    (
-        load_table(spark, sf_dir, table)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .saveAsTable(name)
-    )
-    mark_derived_cache(path, fprint)
     return spark.table(name)
 
 
@@ -186,14 +165,13 @@ def partitioned_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     why doc_id-like keys get bucketing (above) instead."""
     from ..sources.sinks import write_partitioned
 
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"docs_bylang_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(path, fprint):
-        write_partitioned(
-            load_table(spark, sf_dir, "documents"), path, ["lang"]
-        )
-        mark_derived_cache(path, fprint)
+    path = staged(
+        sf_dir,
+        "docs_bylang",
+        lambda p: write_partitioned(
+            load_table(spark, sf_dir, "documents"), p, ["lang"]
+        ),
+    )
     back = spark.read.parquet(path)
     return (
         back.where(F.col("lang") == "en")
@@ -218,12 +196,9 @@ def _staged_evolving_orders(spark: SparkSession, sf_dir: str) -> str:
     """Two parquet 'writer vintages' of orders under one root — v1 files
     (pre-1998) were written WITHOUT o_orderpriority and before o_channel
     existed; v2 files carry the full schema plus the new column. The
-    schema-drift reality of any long-lived 100 TB table; cache is
-    fingerprint-gated like every derived copy."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    root = os.path.join(tempfile.gettempdir(), f"evolving_{tag}", "orders")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(root, fprint):
+    schema-drift reality of any long-lived 100 TB table."""
+
+    def build(root: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         cut = F.lit("1998-01-01").cast("timestamp")
         (
@@ -244,11 +219,8 @@ def _staged_evolving_orders(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(root, "v2"))
         )
-        import pathlib
 
-        pathlib.Path(os.path.join(root, "_SUCCESS")).touch()
-        mark_derived_cache(root, fprint)
-    return root
+    return staged(sf_dir, "evolving_orders", build)
 
 
 def orders_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

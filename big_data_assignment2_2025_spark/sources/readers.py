@@ -14,6 +14,11 @@ from the parquet reader instead of CQL partition keys.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,13 +48,10 @@ CORPUS_SCHEMA = T.StructType(
 def fixture_fingerprint(sf_dir: str) -> str:
     """Content-version tag for a fixture directory: sizes + mtimes of every
     ``*.parquet`` entry (recursing one level into directory datasets),
-    hashed. Folded into every derived-data cache marker (``adj_rec_*``,
-    ``docs_bylang_*``, ``bkt_*`` tables) so a fixture regenerated IN PLACE
-    at the same path invalidates the caches instead of silently serving
-    stale derived data — the same discipline as ``tools/scale_probe.py``'s
-    BUILD_TAG marker."""
+    hashed. ``staged`` folds it into every derived-data cache marker, so a
+    fixture regenerated IN PLACE at the same path invalidates the caches
+    instead of silently serving stale derived data."""
     import hashlib
-    import os
 
     parts = []
     for name in sorted(os.listdir(sf_dir)):
@@ -66,33 +68,48 @@ def fixture_fingerprint(sf_dir: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
 
 
+def scratch_dir(sf_dir: str, name: str) -> str:
+    """``<tmp>/<name>_<sf tag>``: the one place per-fixture scratch and
+    derived data live, so two fixtures never share a directory."""
+    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
+    return os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
+
+
 _CACHE_MARKER = "_FIXTURE_TAG"
 
 
-def derived_cache_ok(path: str, tag: str) -> bool:
-    """True iff a derived-parquet cache at ``path`` was committed
-    (``_SUCCESS``) AND was built from the fixture state ``tag`` — stale or
-    half-written caches read as invalid and get rebuilt."""
-    import os
-
+def _cache_ok(path: str, fprint: str) -> bool:
     try:
         with open(os.path.join(path, _CACHE_MARKER)) as fh:
             return (
                 os.path.exists(os.path.join(path, "_SUCCESS"))
-                and fh.read() == tag
+                and fh.read() == fprint
             )
     except OSError:
         return False
 
 
-def mark_derived_cache(path: str, tag: str) -> None:
-    """Write the fixture tag AFTER the parquet job commits: the marker is
-    the cache's commit point, so an interrupted or concurrent writer can at
-    worst cause a redundant rebuild, never a stale read."""
-    import os
+def staged(sf_dir: str, name: str, build: Callable[[str], object]) -> str:
+    """Data derived from a fixture, built once and read many times (the
+    index-offline/search-online split applied to every staged copy).
 
-    with open(os.path.join(path, _CACHE_MARKER), "w") as fh:
-        fh.write(tag)
+    Returns ``scratch_dir(sf_dir, name)``. When that directory is not
+    committed for the fixture's current ``fixture_fingerprint`` it is
+    emptied, ``build(path)`` fills it, then ``_SUCCESS`` and the
+    fingerprint marker commit it — marker last, so an interrupted or
+    failed build (or a concurrent writer) can at worst cause a redundant
+    rebuild, never a stale read. Put a recipe version in ``name`` when a
+    builder's output changes: the fingerprint cannot see code changes."""
+    path = scratch_dir(sf_dir, name)
+    fprint = fixture_fingerprint(sf_dir)
+    if not _cache_ok(path, fprint):
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        build(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+        with open(os.path.join(path, _CACHE_MARKER), "w") as fh:
+            fh.write(fprint)
+    return path
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

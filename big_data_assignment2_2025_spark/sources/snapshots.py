@@ -1583,11 +1583,12 @@ class SnapshotStore:
     ) -> None:
         """Fill ``bucket_cache`` for EVERY (probe value, partition
         transform) pair the member walk could need, in ONE engine job
-        (r14, ADVICE): ``_bucket_of``/``_canon_temporal`` are memoized
-        per value, so a batch of point probes against a bucket- or
-        month/day-partitioned store previously paid one 1-row job per
-        distinct probe value. Values travel as data rows (fixed codegen
-        shape — the ``blooms.probe_hashes_many`` lesson); the per-value
+        per Python kind of probe value (r14, ADVICE):
+        ``_bucket_of``/``_canon_temporal`` are memoized per value, so a
+        batch of point probes against a bucket- or month/day-partitioned
+        store previously paid one 1-row job per distinct probe value.
+        Values travel as data rows (fixed codegen shape — the
+        ``blooms.probe_hashes_many`` lesson); the per-value
         ``uncastable`` flag preserves the None-means-conservative
         contract."""
         ns: set[int] = set()
@@ -1614,9 +1615,6 @@ class SnapshotStore:
         ]
         if not (ns or trs) or not need:
             return
-        df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(need)], ["i", "v"]
-        )
         cast = F.col("v").cast(dt)
         sel = [F.col("i"), cast.isNull().alias("u")]
         for n in sorted(ns):
@@ -1627,12 +1625,21 @@ class SnapshotStore:
         for tr in sorted(trs):
             fmt = "yyyy-MM" if tr == "month" else "yyyy-MM-dd"
             sel.append(F.date_format(cast, fmt).alias(f"t_{tr}"))
-        for r in df.select(*sel).collect():
-            v = need[r["i"]]
-            for n in ns:
-                bucket_cache[(repr(v), n)] = None if r["u"] else r[f"b{n}"]
-            for tr in trs:
-                bucket_cache[(repr(v), tr)] = r[f"t_{tr}"]
+        # one job per Python kind: a column of mixed kinds (a date next to
+        # its string spelling) fails createDataFrame's schema inference
+        by_kind: dict[type, list] = {}
+        for v in need:
+            by_kind.setdefault(type(v), []).append(v)
+        for group in by_kind.values():
+            df = spark.createDataFrame(list(enumerate(group)), ["i", "v"])
+            for r in df.select(*sel).collect():
+                v = group[r["i"]]
+                for n in ns:
+                    bucket_cache[(repr(v), n)] = (
+                        None if r["u"] else r[f"b{n}"]
+                    )
+                for tr in trs:
+                    bucket_cache[(repr(v), tr)] = r[f"t_{tr}"]
 
     def planned_members_point(
         self, spark: SparkSession, col: str, value, version: int | None = None

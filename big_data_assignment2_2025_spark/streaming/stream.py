@@ -17,12 +17,16 @@ aggregation, watermark, and sink contract stay identical.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+from ..sources.readers import staged
 
 
 #: state-store partition count for the replay drains. The number of state
@@ -61,52 +65,35 @@ class _state_partitions:
 
 def _stage_dir(sf_dir: str) -> str:
     """File streams consume *directories*; the fixture dir mixes ten tables.
-    Stage a per-sf temp dir of symlinks to the events data: driver
-    fixtures ship ONE parquet file (one link); derived fixtures
-    (tools/build_sf10x.py) are Spark-written DIRECTORIES whose part
-    files must be linked individually — a directory symlink is invisible
-    to the non-recursive file-stream source (r11: every streaming query
-    silently drained 0 rows at the 10x fixture)."""
-    staged = os.path.join(
-        tempfile.gettempdir(), f"events_stream_{sf_dir.strip('/').replace('/', '_')}"
-    )
-    os.makedirs(staged, exist_ok=True)
-    src = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(src):
-        want = sorted(
-            n for n in os.listdir(src) if n.endswith(".parquet")
-        )
-        done = os.path.join(staged, "_LINKED")
-        # the tag carries the staging RECIPE version too — a recipe
-        # change (symlinks -> mtime-ordered copies) must restage
-        tag = "mtime-v2\n" + "\n".join(want)
-        if not (os.path.exists(done) and open(done).read() == tag):
-            import shutil
-            import time as _time
+    Stage a per-fixture dir holding only the events data: the standard
+    fixtures ship ONE parquet file (one symlink); derived fixtures
+    (tools/build_sf10x.py) are Spark-written DIRECTORIES whose part files
+    must be staged individually — a directory symlink is invisible to the
+    non-recursive file-stream source (r11: every streaming query silently
+    drained 0 rows at the 10x fixture)."""
 
-            for n in os.listdir(staged):
-                p = os.path.join(staged, n)
-                if n == "_LINKED" or n.endswith(".parquet"):
-                    os.unlink(p)
-            # COPIES with strictly increasing mtimes, not symlinks: the
-            # file-stream source orders files by MODIFICATION TIME, and
-            # one write job stamps every part file identically — ties
-            # consume in arbitrary order, which violates the watermark's
-            # bounded-disorder contract for the ts-range-partitioned
-            # fixture (late-drop flakes at 10x). Part index == ts range
-            # == mtime order makes consumption deterministic.
-            base = _time.time() - 2 * len(want)
-            for i, n in enumerate(want):
-                dst = os.path.join(staged, f"part-{i:05d}.parquet")
-                shutil.copyfile(os.path.join(src, n), dst)
-                os.utime(dst, (base + i, base + i))
-            with open(done, "w") as fh:
-                fh.write(tag)
-        return staged
-    link = os.path.join(staged, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return staged
+    def build(staged_dir: str) -> None:
+        src = os.path.join(sf_dir, "events.parquet")
+        if not os.path.isdir(src):
+            os.symlink(src, os.path.join(staged_dir, "events.parquet"))
+            return
+        # COPIES with strictly increasing mtimes, not symlinks: the
+        # file-stream source orders files by MODIFICATION TIME, and one
+        # write job stamps every part file identically — ties consume in
+        # arbitrary order, which violates the watermark's bounded-disorder
+        # contract for the ts-range-partitioned fixture (late-drop flakes
+        # at 10x). Part index == ts range == mtime order makes consumption
+        # deterministic.
+        want = sorted(n for n in os.listdir(src) if n.endswith(".parquet"))
+        base = time.time() - 2 * len(want)
+        for i, n in enumerate(want):
+            dst = os.path.join(staged_dir, f"part-{i:05d}.parquet")
+            shutil.copyfile(os.path.join(src, n), dst)
+            os.utime(dst, (base + i, base + i))
+
+    # the recipe version (mtime-ordered copies) is part of the name: the
+    # fixture fingerprint cannot see a change to this builder
+    return staged(sf_dir, "events_stream_mtime2", build)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,8 +196,6 @@ def _drain_many_to_memory(
             for _, _, q in started:
                 q.awaitTermination()
     finally:
-        import shutil
-
         for _, ckpt, _ in started:
             shutil.rmtree(ckpt, ignore_errors=True)
     return [spark.table(name) for name, _, _ in started]
@@ -594,8 +579,6 @@ def run_streaming_snapshot_sink(
     txn map (carried on every publish). ``source`` injects a multi-file
     stream in tests to exercise several batches + a simulated replay."""
     from big_data_assignment2_2025_spark.sources.snapshots import SnapshotStore
-
-    import shutil
 
     ev = source if source is not None else read_events_stream(spark, sf_dir)
     rows = ev.select(

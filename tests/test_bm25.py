@@ -115,3 +115,54 @@ def test_case_insensitive_query(index):
     a = {(r.doc_id): r.doc_rank for r in _run(index, "FOOTBALL")}
     b = {(r.doc_id): r.doc_rank for r in _run(index, "football")}
     assert a == b
+
+
+def test_materialized_search_follows_fixture_rewrite(spark, tmp_path):
+    """The materialized BM25 index is staged per fixture fingerprint: a
+    documents table rewritten IN PLACE must be re-indexed, not served
+    from the index built over the old text."""
+    import os
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_assignment2_2025_spark.plans import ORACLES, QUERIES
+    from big_data_assignment2_2025_spark.sources.readers import scratch_dir
+    from tests.conftest import SF_SMALL
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMALL, sf)
+    docs_path = os.path.join(sf, "documents.parquet")
+    os.chmod(docs_path, 0o644)
+    name = "bm25_search_materialized"
+
+    def check():
+        got = QUERIES[name](spark, sf).collect()
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{docs_path}')"
+        )
+        want = con.execute(ORACLES[name]).fetchall()
+        assert [tuple(r)[:2] for r in got] == [r[:2] for r in want]
+        assert [r[2] for r in got] == pytest.approx(
+            [r[2] for r in want], abs=1e-5
+        )
+        return got
+
+    try:
+        before = check()
+        # rotate every document's text onto the next doc_id
+        t = pq.read_table(docs_path)
+        text = t.column("text").to_pylist()
+        t = t.set_column(
+            t.schema.get_field_index("text"), "text",
+            pa.array(text[1:] + text[:1], pa.string()),
+        )
+        pq.write_table(t, docs_path)
+        after = check()
+        assert after != before
+    finally:
+        shutil.rmtree(scratch_dir(sf, "bm25_index"), ignore_errors=True)

@@ -326,3 +326,31 @@ def test_month_prune_canonicalizes_coercible_probes(spark, tmp_path):
     # of lexically mis-pruning the 1995-03 member
     lo, hi = "1995-3-01", "1995-4-01"
     assert st.read_where(spark, "ts", lo, hi).count() == 3
+
+
+def test_mixed_kind_point_probes_prefill_per_kind(spark, tmp_path):
+    """ADVICE r14: the one-job prefill put every probe value in ONE
+    createDataFrame column, so a batch mixing Python kinds Spark cannot
+    merge (a date next to a datetime) failed schema inference. Each kind
+    now prefills in its own job, and every spelling of the same day
+    plans the same member."""
+    import datetime
+
+    st = SnapshotStore(str(tmp_path))
+    rows = [
+        (i, datetime.datetime(2024, 1, d, 12))
+        for i, d in enumerate([3, 5, 5, 9], start=1)
+    ]
+    df = spark.createDataFrame(rows, "id int, ts timestamp")
+    st.commit(df.limit(0), mode="overwrite")
+    st.set_partition_spec([("ts", "day")])
+    st.commit(df, mode="append")
+    probes = [
+        datetime.date(2024, 1, 5),
+        datetime.datetime(2024, 1, 5, 12),
+        "2024-01-05 12:00:00",
+    ]
+    planned = st.planned_members_points(spark, "ts", probes)
+    assert planned[0] == planned[1] == planned[2]
+    assert len(planned[0]) == 2  # the empty v1 member + the 2024-01-05 day
+    assert st.read_point(spark, "ts", probes[1]).count() == 2

@@ -79,3 +79,42 @@ def test_pq_topk_deterministic_across_runs(spark):
     a = sorted(map(tuple, pq_topk(codes, queries, codebooks, k=K, shortlist=10 * K, corpus=emb).collect()))
     b = sorted(map(tuple, pq_topk(codes, queries, codebooks, k=K, shortlist=10 * K, corpus=emb).collect()))
     assert a == b
+
+
+def test_encode_np_rejects_non_finite_components():
+    """The fused path's numpy encode must fail loudly on NaN/inf: NaN
+    argmins differently from Catalyst's array_min, so it would silently
+    diverge from pq_encode."""
+    import pytest
+
+    from big_data_assignment2_2025_spark.operators.pq import _encode_np
+
+    books = np.arange(16, dtype=np.float64).reshape(2, 4, 2)
+    X = np.ones((3, 4))
+    assert _encode_np(X, books).shape == (3, 2)
+    for bad in (np.nan, np.inf):
+        X[1, 2] = bad
+        with pytest.raises(ValueError, match="finite"):
+            _encode_np(X, books)
+
+
+def test_fused_topk_drops_vectors_with_null_elements(spark):
+    """A corpus row holding a NULL element cannot be encoded; the fused
+    path filters it out like a NULL vector instead of encoding it."""
+    from big_data_assignment2_2025_spark.operators.pq import pq_topk_fused
+
+    rng = np.random.default_rng(7)
+    books = rng.normal(size=(2, 4, 2))
+    vecs = rng.normal(size=(8, 4)).tolist()
+    rows = [(i, v) for i, v in enumerate(vecs)]
+    rows.append((8, [0.1, None, 0.2, 0.3]))
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    )
+    queries = corpus.where(F.col("vec_id") < 2)
+    got = pq_topk_fused(corpus, queries, books, k=8).collect()
+    want = pq_topk_fused(
+        corpus.where(F.col("vec_id") != 8), queries, books, k=8
+    ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert 8 not in {r["neighbor_id"] for r in got}

@@ -396,23 +396,20 @@ def test_initial_snapshot_baseline_serves_full_state(spark, sf_dir, tmp_path):
 
 def test_streaming_snapshot_source_cache_validates(spark, sf_dir):
     """ADVICE r11: the staged store must leave a valid derived cache —
-    without the _SUCCESS touch, derived_cache_ok never returned True and
-    the 3-commit store was rebuilt on every invocation."""
+    without a _SUCCESS marker the 3-commit store was rebuilt on every
+    invocation."""
     import os
-    import tempfile
 
     from big_data_assignment2_2025_spark.plans.streaming_queries import (
         streaming_snapshot_source,
     )
-    from big_data_assignment2_2025_spark.sources.readers import (
-        derived_cache_ok,
-        fixture_fingerprint,
-    )
+    from big_data_assignment2_2025_spark.sources.readers import staged
+
+    def no_rebuild(path):
+        raise AssertionError(f"committed store {path} was rebuilt")
 
     streaming_snapshot_source(spark, sf_dir).collect()
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapsrc_{tag}")
-    assert derived_cache_ok(base, fixture_fingerprint(sf_dir))
+    base = staged(sf_dir, "snapsrc", no_rebuild)
     # and a second invocation reuses the store: no manifest mtime change
     mdir = os.path.join(base, "_manifests")
     before = {n: os.path.getmtime(os.path.join(mdir, n))

@@ -294,34 +294,86 @@ def test_compact_parquet_refuses_partitioned_root(spark, tmp_path):
 
 
 def test_derived_cache_invalidation(tmp_path):
-    """fixture_fingerprint must change when a fixture file is regenerated
-    in place, and derived_cache_ok must reject missing-marker, stale-tag
-    and uncommitted (_SUCCESS-less) caches."""
+    """``staged`` builds once per fixture state: a second call reuses the
+    committed copy, and it rebuilds after the fixture is regenerated in
+    place, when the ``_SUCCESS`` commit marker is missing, and after a
+    build that raised — never serving a stale or half-written copy."""
+    import shutil
+
+    import pytest
+
     from big_data_assignment2_2025_spark.sources.readers import (
-        derived_cache_ok,
-        fixture_fingerprint,
-        mark_derived_cache,
+        scratch_dir,
+        staged,
     )
 
     fix = tmp_path / "fix"
     fix.mkdir()
     (fix / "customer.parquet").write_bytes(b"v1-bytes")
-    tag1 = fixture_fingerprint(str(fix))
+    calls = []
 
-    cache = tmp_path / "derived"
-    cache.mkdir()
-    assert not derived_cache_ok(str(cache), tag1)  # no marker yet
-    (cache / "_SUCCESS").write_text("")
-    assert not derived_cache_ok(str(cache), tag1)  # marker still missing
-    mark_derived_cache(str(cache), tag1)
-    assert derived_cache_ok(str(cache), tag1)
+    def build(path):
+        calls.append(path)
+        with open(os.path.join(path, "part-0"), "w") as fh:
+            fh.write(str(len(calls)))
 
-    # regenerate the fixture in place -> new tag -> cache invalid
-    os.utime(fix / "customer.parquet", ns=(1, 1))
-    tag2 = fixture_fingerprint(str(fix))
-    assert tag2 != tag1
-    assert not derived_cache_ok(str(cache), tag2)
+    def failing(path):
+        open(os.path.join(path, "partial"), "w").close()
+        raise RuntimeError("build failed")
 
-    # uncommitted cache (marker but no _SUCCESS) is invalid too
-    (cache / "_SUCCESS").unlink()
-    assert not derived_cache_ok(str(cache), tag1)
+    path = scratch_dir(str(fix), "cachetest")
+    try:
+        assert staged(str(fix), "cachetest", build) == path
+        staged(str(fix), "cachetest", build)
+        assert len(calls) == 1
+
+        # regenerate the fixture in place -> new fingerprint -> rebuild
+        os.utime(fix / "customer.parquet", ns=(1, 1))
+        staged(str(fix), "cachetest", build)
+        staged(str(fix), "cachetest", build)
+        assert len(calls) == 2
+
+        # uncommitted copy (no _SUCCESS) is rebuilt
+        os.remove(os.path.join(path, "_SUCCESS"))
+        staged(str(fix), "cachetest", build)
+        assert len(calls) == 3
+
+        # a build that raises leaves no valid cache: the next call
+        # rebuilds into an emptied directory
+        os.utime(fix / "customer.parquet", ns=(2, 2))
+        with pytest.raises(RuntimeError):
+            staged(str(fix), "cachetest", failing)
+        staged(str(fix), "cachetest", build)
+        assert len(calls) == 4
+        assert sorted(os.listdir(path)) == [
+            "_FIXTURE_TAG", "_SUCCESS", "part-0"
+        ]
+        with open(os.path.join(path, "part-0")) as fh:
+            assert fh.read() == "4"
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def test_one_way_to_stage_derived_data():
+    """Staging derived data has one home, ``sources/readers.staged``:
+    elsewhere the package writes no cache marker or ``_SUCCESS`` by hand
+    and builds no temp-dir path or fixture tag of its own."""
+    import pathlib
+    import re
+
+    pkg = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "big_data_assignment2_2025_spark"
+    )
+    pat = re.compile(
+        r"derived_cache_ok|mark_derived_cache|tempfile\.gettempdir\(\)"
+        r"|sf_dir\.strip\(|[\"']_SUCCESS[\"']"
+    )
+    hits = [
+        f"{p.relative_to(pkg)}:{n}: {line.strip()}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.relative_to(pkg).as_posix() != "sources/readers.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert hits == []

@@ -6,6 +6,8 @@ actually eliminated.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from big_data_assignment2_2025_spark.plans.storage_queries import (
@@ -13,6 +15,7 @@ from big_data_assignment2_2025_spark.plans.storage_queries import (
     bucketed_join_colocated,
     bucketed_table,
 )
+from big_data_assignment2_2025_spark.sources.readers import scratch_dir
 from tests.conftest import SF_SMALL
 
 
@@ -97,8 +100,7 @@ def test_analyze_table_populates_catalog_stats(spark):
     # catalog tables (unlike temp views) can carry ANALYZE statistics —
     # the input Catalyst's size estimates and join planning consume
     bucketed_table(spark, SF_SMALL, "orders", "o_custkey")
-    tag = SF_SMALL.strip("/").replace("/", "_").replace(".", "_")
-    name = f"orders_bkt8_{tag}"
+    name = os.path.basename(scratch_dir(SF_SMALL, "bkt_orders_o_custkey_8"))
     spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
     stats = {
         r["col_name"]: r["data_type"]
