@@ -208,7 +208,9 @@ def cmd_search(args) -> int:
     for r in rows:  # reference TSV contract: doc_id \t doc_title \t doc_rank
         print(f"{r['doc_id']}\t{r['doc_title']}\t{r['doc_rank']}")
     if args.out:
-        write_tsv(result, args.out)
+        # the rows already collected, not ``result`` (which would re-run
+        # the scan, joins and aggregate)
+        write_tsv(spark.createDataFrame(rows, result.schema), args.out)
         print(f"wrote {len(rows)} rows to {args.out}", file=sys.stderr)
     return 0
 

@@ -20,15 +20,16 @@ Scale design (100 TB corpus, 1000 executors):
   (``app/index.sh:53-73`` reads the corpus twice).
 - Output tables are plain parquet; `(corpus_name, term)` point lookups
   (the Cassandra partition key, ``app/cassandra/schema.cql:9,18``) become
-  parquet predicate pushdown / row-group skipping. Callers writing huge
-  indexes should ``write_index_table`` with ``partitionBy("corpus_name")``
-  and sort within partitions by ``term`` to maximize skipping.
+  parquet predicate pushdown / row-group skipping: ``materialize_index``
+  partitions ``term_freq`` by ``corpus_name`` and sorts it by ``term``
+  within partitions.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,13 +48,6 @@ class InvertedIndex:
     doc_info: DataFrame       # doc_id, doc_title, doc_length
     corpus_info: DataFrame    # corpus_name, doc_n, total_doc_length
 
-    def cache(self) -> "InvertedIndex":
-        self.term_freq.cache()
-        self.term_doc_freq.cache()
-        self.doc_info.cache()
-        self.corpus_info.cache()
-        return self
-
     def unpersist(self) -> "InvertedIndex":
         for df in (self.term_freq, self.term_doc_freq, self.doc_info, self.corpus_info):
             df.unpersist()
@@ -69,19 +63,15 @@ def _valid_docs(corpus: DataFrame) -> DataFrame:
     )
 
 
-def build_index(
-    corpus: DataFrame,
-    corpus_name: str = WHOLE_CORPUS,
-    share_term_freq: bool = True,
-) -> InvertedIndex:
+def build_index(corpus: DataFrame, corpus_name: str = WHOLE_CORPUS) -> InvertedIndex:
     """corpus(doc_id, doc_title, text) -> the four index tables.
 
     One shuffle (the term_freq groupBy); everything else derives from
     term_freq without touching the raw text again.
 
-    ``share_term_freq`` persists the term_freq relation (MEMORY_AND_DISK):
-    a consumer that references several index tables in ONE plan (e.g. the
-    ad-hoc BM25 search joins tf + vocab + doc_info + corpus stats) would
+    The term_freq relation is persisted (MEMORY_AND_DISK): a consumer that
+    references several index tables in ONE plan (e.g. the ad-hoc BM25
+    search joins tf + vocab + doc_info + corpus stats) would
     otherwise re-run the tokenize+shuffle subtree once PER TABLE — the
     per-branch pushed filters make the four exchanges non-identical, so
     Catalyst's ReuseExchange cannot dedup them (verified: 4x ``Generate
@@ -104,10 +94,7 @@ def build_index(
         .withColumn("corpus_name", F.lit(corpus_name))
         .select("term", "corpus_name", "doc_id", "doc_title", "term_frequency")
     )
-    if share_term_freq:
-        from pyspark import StorageLevel
-
-        term_freq = term_freq.persist(StorageLevel.MEMORY_AND_DISK)
+    term_freq = term_freq.persist(StorageLevel.MEMORY_AND_DISK)
 
     # term_freq is unique per (term, doc) => row count per term == #docs
     # containing the term (the mapper1.py:20 per-doc dedup, for free).
@@ -123,13 +110,12 @@ def build_index(
     doc_info = term_freq.groupBy("doc_id", "doc_title").agg(
         F.sum("term_frequency").cast("int").alias("doc_length")
     )
-    if share_term_freq:
-        # doc_info (and the scalar corpus stats derived from it) are read by
-        # EVERY search over an ad-hoc index; without their own persist each
-        # query re-aggregates the full cached term_freq relation per run
-        # (one corpus-wide shuffle per search). doc_info is one row per
-        # document — at any scale it is the small side.
-        doc_info = doc_info.persist(StorageLevel.MEMORY_AND_DISK)
+    # doc_info (and the scalar corpus stats derived from it) are read by
+    # EVERY search over an ad-hoc index; without their own persist each
+    # query re-aggregates the full cached term_freq relation per run
+    # (one corpus-wide shuffle per search). doc_info is one row per
+    # document — at any scale it is the small side.
+    doc_info = doc_info.persist(StorageLevel.MEMORY_AND_DISK)
 
     corpus_info = doc_info.agg(
         F.count("*").cast("int").alias("doc_n"),
@@ -137,9 +123,8 @@ def build_index(
     ).select(
         F.lit(corpus_name).alias("corpus_name"), "doc_n", "total_doc_length"
     )
-    if share_term_freq:
-        # one cached row instead of a full doc_info pass per search
-        corpus_info = corpus_info.persist(StorageLevel.MEMORY_AND_DISK)
+    # one cached row instead of a full doc_info pass per search
+    corpus_info = corpus_info.persist(StorageLevel.MEMORY_AND_DISK)
 
     return InvertedIndex(term_freq, term_doc_freq, doc_info, corpus_info)
 

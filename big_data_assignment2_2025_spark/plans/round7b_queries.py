@@ -49,9 +49,9 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..operators.index import build_index
-from ..operators.search import bm25_scores, parse_query
+from ..operators.search import bm25_scores, doc_scores, parse_query, tfidf_scores, top_k
 from ..sources.readers import load_table, read_documents
-from .search_queries import FLAGSHIP_QUERY, _TOKENS_CTE
+from .search_queries import FLAGSHIP_QUERY, _TOKENS_CTE, rounded
 
 # --------------------------------------------------------------------------
 # 1. Chunked-bitmap exact distinct
@@ -257,17 +257,12 @@ def _ranked_list(scored: DataFrame, rank_name: str) -> DataFrame:
     Ranking over the ROUNDED score (ties split by doc_id) is what makes
     the rank assignment engine-stable: raw float sums can differ in the
     last ulp between engines, and a rank is a discontinuous function of
-    the score order. Depth-k selection happens FIRST via orderBy+limit
+    the score order. Depth-k selection happens FIRST via ``top_k``
     (TakeOrderedAndProject — per-partition heaps, never a global sort);
     the row_number window then runs over the LIMIT-bounded 20-row frame,
     so the unpartitioned window is driver-trivial at any corpus size."""
-    rounded = scored.select(
-        "doc_id", "doc_title", F.round("rank_raw", 6).alias("score")
-    )
-    top = rounded.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(
-        _RRF_DEPTH
-    )
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    top = top_k(rounded(doc_scores(scored)), _RRF_DEPTH)
+    w = Window.orderBy(F.col("doc_rank").desc(), F.col("doc_id").asc())
     return top.withColumn("r", F.row_number().over(w)).select(
         "doc_id", "doc_title", F.col("r").alias(rank_name)
     )
@@ -284,36 +279,10 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition row_number window is over <= |query terms' postings| rows
     already reduced to doc grain; at 100 TB depth-k selection would ride
     the same distributed top-k as ``topk_orders``."""
-    terms = parse_query(FLAGSHIP_QUERY)
     index = build_index(read_documents(spark, sf_dir))
-    bm25 = (
-        bm25_scores(index, terms)
-        .groupBy("doc_id", "doc_title")
-        .agg(F.sum("bm25").alias("rank_raw"))
-    )
-    tf = index.term_freq.where(
-        (F.col("corpus_name") == "whole_corpus") & F.col("term").isin(terms)
-    )
-    vocab = index.term_doc_freq.where(
-        (F.col("corpus_name") == "whole_corpus") & F.col("term").isin(terms)
-    )
-    stats = index.corpus_info.select("doc_n")
-    tfidf = (
-        tf.join(F.broadcast(vocab), ["term", "corpus_name"])
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "w",
-            F.col("term_frequency").cast("double")
-            * F.log(
-                F.col("doc_n").cast("double")
-                / F.col("doc_frequency").cast("double")
-            ),
-        )
-        .groupBy("doc_id", "doc_title")
-        .agg(F.sum("w").alias("rank_raw"))
-    )
-    a = _ranked_list(bm25, "r_bm25")
-    b = _ranked_list(tfidf, "r_tfidf")
+    term_pred = F.col("term").isin(parse_query(FLAGSHIP_QUERY))
+    a = _ranked_list(bm25_scores(index, term_pred), "r_bm25")
+    b = _ranked_list(tfidf_scores(index, term_pred), "r_tfidf")
     fused = (
         a.join(b, ["doc_id", "doc_title"], "full_outer")
         .withColumn(

@@ -35,7 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import load_table
+from ..operators.index import build_index
+from ..operators.search import bm25_scores, doc_scores, parse_query, postings, top_k
+from ..sources.readers import load_table, read_documents
+from .search_queries import _TOKENS_CTE, rounded
 
 # --------------------------------------------------------------------------
 # 1. Cohort retention
@@ -333,30 +336,10 @@ def bm25_search_excluding(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join's build side is exactly df("window") rows, and at 100 TB it
     broadcasts when the posting list is small or shuffles only matching
     doc ids when it is not (AQE decides)."""
-    from ..operators.index import build_index
-    from ..operators.search import bm25_scores, parse_query
-    from ..sources.readers import read_documents
-
     index = build_index(read_documents(spark, sf_dir))
-    scored = bm25_scores(index, parse_query(_EXCL_QUERY))
-    excl = index.term_freq.where(
-        (F.col("corpus_name") == "whole_corpus")
-        & (F.col("term") == _EXCL_TERM)
-    ).select("doc_id")
-    ranked = (
-        scored.join(excl, "doc_id", "left_anti")
-        .groupBy("doc_id", "doc_title")
-        .agg(F.sum("bm25").alias("rank_raw"))
-    )
-    return (
-        ranked.orderBy(F.col("rank_raw").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select(
-            F.col("doc_id").cast("int").alias("doc_id"),
-            "doc_title",
-            F.round("rank_raw", 6).alias("doc_rank"),
-        )
-    )
+    scored = bm25_scores(index, F.col("term").isin(parse_query(_EXCL_QUERY)))
+    excl = postings(index, F.col("term") == _EXCL_TERM).select("doc_id")
+    return rounded(top_k(doc_scores(scored.join(excl, "doc_id", "left_anti"))))
 
 
 def bm25_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,53 +351,13 @@ def bm25_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     index the prefix becomes a pushed range scan, so cost tracks the
     expanded posting volume. Per-doc aggregation and top-k are unchanged
     from the exact-term path."""
-    from ..operators.index import build_index
-    from ..operators.search import bm25_expr
-    from ..sources.readers import read_documents
-
     index = build_index(read_documents(spark, sf_dir))
-    tf = index.term_freq.where(
-        (F.col("corpus_name") == "whole_corpus")
-        & F.col("term").startswith(_PREFIX)
-    )
-    vocab = index.term_doc_freq.where(
-        (F.col("corpus_name") == "whole_corpus")
-        & F.col("term").startswith(_PREFIX)
-    )
-    stats = index.corpus_info.select("doc_n", "total_doc_length")
-    scored = (
-        tf.join(F.broadcast(vocab), ["term", "corpus_name"])
-        .join(index.doc_info, ["doc_id", "doc_title"])
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "bm25",
-            bm25_expr(
-                F.col("term_frequency"),
-                F.col("doc_frequency"),
-                F.col("doc_length"),
-                F.col("doc_n"),
-                F.col("total_doc_length"),
-            ),
-        )
-    )
-    ranked = scored.groupBy("doc_id", "doc_title").agg(
-        F.sum("bm25").alias("rank_raw")
-    )
-    return (
-        ranked.orderBy(F.col("rank_raw").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select(
-            F.col("doc_id").cast("int").alias("doc_id"),
-            "doc_title",
-            F.round("rank_raw", 6).alias("doc_rank"),
-        )
-    )
+    scored = bm25_scores(index, F.col("term").startswith(_PREFIX))
+    return rounded(top_k(doc_scores(scored)))
 
 
 def _bm25_core_sql(term_pred: str) -> str:
     """BM25 scored-CTE body over ``_TOKENS_CTE`` with a term predicate."""
-    from .search_queries import _TOKENS_CTE
-
     return f"""
 WITH {_TOKENS_CTE},
 scored AS (
@@ -434,8 +377,6 @@ scored AS (
 
 
 def _excl_oracle() -> str:
-    from ..operators.search import parse_query
-
     terms = ", ".join(f"'{t}'" for t in parse_query(_EXCL_QUERY))
     return (
         _bm25_core_sql(f"tf.term IN ({terms})")

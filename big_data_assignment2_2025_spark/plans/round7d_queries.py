@@ -29,9 +29,9 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..operators.index import build_index
-from ..operators.search import bm25_scores, parse_query
+from ..operators.search import bm25_scores, doc_scores, parse_query, top_k
 from ..sources.readers import load_table, read_documents
-from .search_queries import FLAGSHIP_QUERY, _TOKENS_CTE
+from .search_queries import FLAGSHIP_QUERY, _TOKENS_CTE, rounded
 
 # --------------------------------------------------------------------------
 # 1. Search snippets
@@ -51,14 +51,7 @@ def search_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array_join`` codegen, no explode of the corpus."""
     terms = parse_query(FLAGSHIP_QUERY)
     index = build_index(read_documents(spark, sf_dir))
-    ranked = (
-        bm25_scores(index, terms)
-        .groupBy("doc_id", "doc_title")
-        .agg(F.sum("bm25").alias("rank_raw"))
-        .orderBy(F.col("rank_raw").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select("doc_id", "doc_title", F.round("rank_raw", 6).alias("doc_rank"))
-    )
+    ranked = rounded(top_k(doc_scores(bm25_scores(index, F.col("term").isin(terms)))))
     docs = read_documents(spark, sf_dir).select("doc_id", "text")
     hit = docs.join(F.broadcast(ranked), "doc_id").withColumn(
         "toks", tokenize(F.col("text"))

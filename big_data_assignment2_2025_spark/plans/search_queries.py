@@ -19,7 +19,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.index import build_index
-from ..operators.search import bm25_scores, parse_query
+from ..operators.search import (
+    bm25_scores,
+    bm25_search,
+    doc_scores,
+    parse_query,
+    tfidf_expr,
+    tfidf_scores,
+    top_k,
+)
 from ..sources.readers import read_documents, staged
 
 FLAGSHIP_QUERY = "spark join window"
@@ -86,19 +94,13 @@ LIMIT {k}
 """
 
 
-def _search_rounded(spark: SparkSession, sf_dir: str, query: str, k: int = 10) -> DataFrame:
-    index = build_index(read_documents(spark, sf_dir))
-    scored = bm25_scores(index, parse_query(query))
-    ranked = scored.groupBy("doc_id", "doc_title").agg(F.sum("bm25").alias("rank_raw"))
-    return (
-        ranked.orderBy(F.col("rank_raw").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select(
-            F.col("doc_id").cast("int").alias("doc_id"),
-            "doc_title",
-            F.round(F.col("rank_raw"), 6).alias("doc_rank"),
-        )
-    )
+def rounded(ranked: DataFrame) -> DataFrame:
+    """``doc_rank`` rounded to the oracles' 6 dp."""
+    return ranked.withColumn("doc_rank", F.round("doc_rank", 6))
+
+
+def _search_rounded(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
+    return rounded(bm25_search(build_index(read_documents(spark, sf_dir)), query))
 
 
 # --- queries() callables ---------------------------------------------------
@@ -113,7 +115,6 @@ def q_bm25_search_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates push down to the index scan instead of re-tokenizing the
     corpus per query."""
     from ..operators.index import load_materialized_index, materialize_index
-    from ..operators.search import bm25_search
 
     def build(path: str) -> None:
         index = build_index(read_documents(spark, sf_dir))
@@ -125,10 +126,7 @@ def q_bm25_search_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
             index.unpersist()
 
     idx = load_materialized_index(spark, staged(sf_dir, "bm25_index", build))
-    ranked = bm25_search(idx, FLAGSHIP_QUERY, deterministic_ties=True)
-    return ranked.select(
-        "doc_id", "doc_title", F.round("doc_rank", 6).alias("doc_rank")
-    )
+    return rounded(bm25_search(idx, FLAGSHIP_QUERY))
 
 
 def q_bm25_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,24 +136,11 @@ def q_bm25_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside the score sum; no second pass over the index."""
     terms = parse_query(FLAGSHIP_QUERY)
     index = build_index(read_documents(spark, sf_dir))
-    scored = bm25_scores(index, terms)
-    ranked = (
-        scored.groupBy("doc_id", "doc_title")
-        .agg(
-            F.sum("bm25").alias("rank_raw"),
-            F.countDistinct("term").alias("nt"),
-        )
-        .where(F.col("nt") == len(terms))
+    docs = doc_scores(
+        bm25_scores(index, F.col("term").isin(terms)),
+        F.countDistinct("term").alias("nt"),
     )
-    return (
-        ranked.orderBy(F.col("rank_raw").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select(
-            F.col("doc_id").cast("int").alias("doc_id"),
-            "doc_title",
-            F.round(F.col("rank_raw"), 6).alias("doc_rank"),
-        )
-    )
+    return rounded(top_k(docs.where(F.col("nt") == len(terms))))
 
 
 def _bm25_conjunctive_oracle(query: str, k: int = 10) -> str:
@@ -192,39 +177,9 @@ def q_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring function an IR engine offers beside BM25. score(d) =
     Σ_t tf(t,d) * ln(N/df(t)); identical one-shuffle plan, only the score
     expression changes (no length normalization → no doc_info join)."""
-    terms = parse_query(FLAGSHIP_QUERY)
     index = build_index(read_documents(spark, sf_dir))
-    tf = index.term_freq.where(
-        (F.col("corpus_name") == "whole_corpus") & F.col("term").isin(terms)
-    )
-    vocab = index.term_doc_freq.where(
-        (F.col("corpus_name") == "whole_corpus") & F.col("term").isin(terms)
-    )
-    stats = index.corpus_info.select("doc_n")
-    scored = (
-        tf.join(F.broadcast(vocab), ["term", "corpus_name"])
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "w",
-            F.col("term_frequency").cast("double")
-            * F.log(
-                F.col("doc_n").cast("double")
-                / F.col("doc_frequency").cast("double")
-            ),
-        )
-    )
-    ranked = scored.groupBy("doc_id", "doc_title").agg(
-        F.sum("w").alias("rank_raw")
-    )
-    return (
-        ranked.orderBy(F.col("rank_raw").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select(
-            F.col("doc_id").cast("int").alias("doc_id"),
-            "doc_title",
-            F.round("rank_raw", 6).alias("doc_rank"),
-        )
-    )
+    scored = tfidf_scores(index, F.col("term").isin(parse_query(FLAGSHIP_QUERY)))
+    return rounded(top_k(doc_scores(scored)))
 
 
 def _tfidf_oracle(query: str, k: int = 10) -> str:
@@ -274,12 +229,8 @@ def q_tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "term",
             "doc_id",
-            (
-                F.col("term_frequency").cast("double")
-                * F.log(
-                    F.col("doc_n").cast("double")
-                    / F.col("doc_frequency").cast("double")
-                )
+            tfidf_expr(
+                F.col("term_frequency"), F.col("doc_frequency"), F.col("doc_n")
             ).alias("w"),
         )
     )

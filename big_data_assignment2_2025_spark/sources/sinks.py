@@ -20,16 +20,6 @@ def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).csv(path, sep="\t")
 
 
-def write_index_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist one inverted-index table as parquet.
-
-    Replaces the Cassandra upsert sink (reference ``app/mapreduce/
-    reducer1.py:49-50``, ``reducer2.py:76-92``). Point lookups by
-    ``(corpus_name, term)`` become parquet predicate pushdown.
-    """
-    df.write.mode(mode).parquet(path)
-
-
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """JSON-lines sink — the interchange format most LLM-data tooling speaks.
     One JSON object per line, written in parallel (one file per partition)."""

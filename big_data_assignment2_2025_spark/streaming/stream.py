@@ -178,6 +178,10 @@ def _drain_many_to_memory(
     drains and kept for append drains (see ``_no_data_batches``)."""
     started = []
     try:
+        # Skipping the trailing no-data batch in update mode is safe only
+        # while no drained operator has event-time or processing-time
+        # timers (e.g. transformWithState): their expiry fires in that
+        # batch, so such a drain must keep it.
         with _state_partitions(spark), _no_data_batches(
             spark, enabled=(output_mode == "append")
         ):

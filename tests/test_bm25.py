@@ -54,11 +54,11 @@ def _python_bm25(corpus, query):
 @pytest.fixture(scope="module")
 def index(spark):
     corpus = spark.createDataFrame(CORPUS, "doc_id long, doc_title string, text string")
-    return build_index(corpus).cache()
+    return build_index(corpus)
 
 
 def _run(index, q, k=10):
-    return bm25_search(index, q, k=k, deterministic_ties=True).collect()
+    return bm25_search(index, q, k=k).collect()
 
 
 def test_single_term_scores(index):
@@ -87,10 +87,20 @@ def test_ordering_and_k(index):
 def test_term_in_every_doc_has_zero_idf(spark):
     corpus = [(i, f"t{i}", f"common word{i}") for i in range(1, 4)]
     idx = build_index(spark.createDataFrame(corpus, "doc_id long, doc_title string, text string"))
-    rows = bm25_search(idx, "common", deterministic_ties=True).collect()
+    rows = bm25_search(idx, "common").collect()
     # idf = ln(3/3) = 0 -> every score exactly 0.0, all docs still returned
     assert len(rows) == 3
     assert all(r.doc_rank == 0.0 for r in rows)
+
+
+def test_ties_break_by_doc_id_ascending(spark):
+    # 12 identical documents score the same; the top 10 are ids 1-10 in order
+    corpus = [(i, f"t{i}", "alpha beta") for i in range(12, 0, -1)]
+    corpus.append((13, "t13", "gamma"))  # keeps idf(alpha) = ln(13/12) > 0
+    idx = build_index(spark.createDataFrame(corpus, "doc_id long, doc_title string, text string"))
+    rows = bm25_search(idx, "alpha", k=10).collect()
+    assert [r.doc_id for r in rows] == list(range(1, 11))
+    assert len({r.doc_rank for r in rows}) == 1 and rows[0].doc_rank > 0
 
 
 def test_unknown_term_empty_result_with_schema(index):

@@ -38,6 +38,25 @@ def test_index_then_search_roundtrip(spark, tmp_path, capsys):
     assert {ln.split("\t")[0] for ln in out} == {"1", "3"}
 
 
+def test_search_out_writes_the_printed_rows(spark, tmp_path, capsys):
+    import glob
+
+    tsv = str(tmp_path / "corpus.tsv")
+    store = str(tmp_path / "store")
+    out_dir = str(tmp_path / "out")
+    _write_tsv(tsv)
+    assert main(["index", tsv, "--store", store]) == 0
+    capsys.readouterr()
+    assert main(["search", "football game", "--store", store, "--out", out_dir]) == 0
+    printed = capsys.readouterr().out.strip().splitlines()
+    written = []
+    for part in sorted(glob.glob(os.path.join(out_dir, "part-*"))):
+        with open(part) as fh:
+            written += fh.read().strip().splitlines()
+    assert len(printed) == 2
+    assert written == printed
+
+
 def test_reindex_accumulates_with_reference_quirk(spark, tmp_path, capsys):
     tsv = str(tmp_path / "corpus.tsv")
     store = str(tmp_path / "store")

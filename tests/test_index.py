@@ -41,7 +41,7 @@ def _brute_force(corpus):
 @pytest.fixture(scope="module")
 def index(spark):
     corpus = spark.createDataFrame(CORPUS, "doc_id long, doc_title string, text string")
-    return build_index(corpus).cache()
+    return build_index(corpus)
 
 
 def test_term_frequency(index):
@@ -128,12 +128,10 @@ def test_delete_documents_equals_build_on_remaining(spark):
     corpus = spark.createDataFrame(
         CORPUS, "doc_id long, doc_title string, text string"
     )
-    full = build_index(corpus, share_term_freq=False)
+    full = build_index(corpus)
     victims = corpus.where(F.col("doc_id").isin(1, 3)).select("doc_id")
     pruned = delete_documents(full, victims)
-    fresh = build_index(
-        corpus.where(~F.col("doc_id").isin(1, 3)), share_term_freq=False
-    )
+    fresh = build_index(corpus.where(~F.col("doc_id").isin(1, 3)))
     assert _index_tables(pruned) == _index_tables(fresh)
 
 
@@ -143,7 +141,7 @@ def test_delete_all_documents_yields_empty_index(spark):
     corpus = spark.createDataFrame(
         CORPUS, "doc_id long, doc_title string, text string"
     )
-    full = build_index(corpus, share_term_freq=False)
+    full = build_index(corpus)
     pruned = delete_documents(full, corpus.select("doc_id"))
     assert pruned.term_freq.count() == 0
     assert pruned.term_doc_freq.count() == 0
@@ -158,12 +156,10 @@ def test_idempotent_reindex_converges_to_fresh_build(spark):
     corpus = spark.createDataFrame(
         CORPUS, "doc_id long, doc_title string, text string"
     )
-    fresh = build_index(corpus, share_term_freq=False)
+    fresh = build_index(corpus)
     # accumulate the same corpus with the quirky path first (double-counts),
     # then one --rebuild pass must repair the store back to the fresh build
-    quirky = incremental_reindex(
-        build_index(corpus, share_term_freq=False), corpus
-    )
+    quirky = incremental_reindex(build_index(corpus), corpus)
     rebuilt = idempotent_reindex(quirky, corpus)
     assert _index_tables(rebuilt) == _index_tables(fresh)
     # and a second rebuild is a no-op (idempotence proper)
@@ -183,10 +179,10 @@ def test_idempotent_reindex_partial_delta(spark):
     odds = corpus.where(F.col("doc_id") % 2 == 1)
     # store already contains everything; re-index only the odd docs
     # idempotently -> still the fresh full build (no double-count of odds)
-    full = build_index(corpus, share_term_freq=False)
+    full = build_index(corpus)
     rebuilt = idempotent_reindex(full, odds)
     assert _index_tables(rebuilt) == _index_tables(
-        build_index(evens.unionByName(odds), share_term_freq=False)
+        build_index(evens.unionByName(odds))
     )
 
 
@@ -198,14 +194,12 @@ def test_idempotent_reindex_deletes_emptied_document(spark):
     corpus = spark.createDataFrame(
         CORPUS, "doc_id long, doc_title string, text string"
     )
-    full = build_index(corpus, share_term_freq=False)
+    full = build_index(corpus)
     # doc 1's text becomes blank in the updated corpus: a rebuild must
     # REMOVE it (a fresh build over the update wouldn't index it)
     updated = corpus.withColumn(
         "text", F.when(F.col("doc_id") == 1, F.lit("")).otherwise(F.col("text"))
     )
     rebuilt = idempotent_reindex(full, updated)
-    fresh = build_index(
-        corpus.where(F.col("doc_id") != 1), share_term_freq=False
-    )
+    fresh = build_index(corpus.where(F.col("doc_id") != 1))
     assert _index_tables(rebuilt) == _index_tables(fresh)

@@ -354,10 +354,9 @@ def test_derived_cache_invalidation(tmp_path):
         shutil.rmtree(path, ignore_errors=True)
 
 
-def test_one_way_to_stage_derived_data():
-    """Staging derived data has one home, ``sources/readers.staged``:
-    elsewhere the package writes no cache marker or ``_SUCCESS`` by hand
-    and builds no temp-dir path or fixture tag of its own."""
+def _package_lines_matching(pat: str, home: str) -> list[str]:
+    """``file:line: text`` of every package line outside ``home`` (a path
+    relative to the package) that matches ``pat``."""
     import pathlib
     import re
 
@@ -365,15 +364,30 @@ def test_one_way_to_stage_derived_data():
         pathlib.Path(__file__).resolve().parent.parent
         / "big_data_assignment2_2025_spark"
     )
-    pat = re.compile(
+    rx = re.compile(pat)
+    return [
+        f"{p.relative_to(pkg)}:{n}: {line.strip()}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.relative_to(pkg).as_posix() != home
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if rx.search(line)
+    ]
+
+
+def test_one_way_to_stage_derived_data():
+    """Staging derived data has one home, ``sources/readers.staged``:
+    elsewhere the package writes no cache marker or ``_SUCCESS`` by hand
+    and builds no temp-dir path or fixture tag of its own."""
+    pat = (
         r"derived_cache_ok|mark_derived_cache|tempfile\.gettempdir\(\)"
         r"|sf_dir\.strip\(|[\"']_SUCCESS[\"']"
     )
-    hits = [
-        f"{p.relative_to(pkg)}:{n}: {line.strip()}"
-        for p in sorted(pkg.rglob("*.py"))
-        if p.relative_to(pkg).as_posix() != "sources/readers.py"
-        for n, line in enumerate(p.read_text().splitlines(), 1)
-        if pat.search(line)
-    ]
-    assert hits == []
+    assert _package_lines_matching(pat, "sources/readers.py") == []
+
+
+def test_one_ranking_path():
+    """Ranked results have one home, ``operators/search.py``: elsewhere the
+    package neither orders by a raw score sum by hand nor calls the BM25
+    weight expression itself."""
+    pat = r"F\.col\(\"rank_raw\"\)\.desc\(\)|\bbm25_expr\("
+    assert _package_lines_matching(pat, "operators/search.py") == []
