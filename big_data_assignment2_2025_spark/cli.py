@@ -17,9 +17,11 @@ incremental accumulate-on-reindex quirk, the TSV result contract
     python -m big_data_assignment2_2025_spark list
 
 ``--rebuild`` and ``delete`` complete the index lifecycle the reference
-lacks (it can only accumulate): rebuild deletes the corpus' doc ids before
-accumulating so re-indexing is idempotent; both go through the same
-crash-safe stage-then-swap with startup recovery (``_recover_store``).
+lacks (it can only accumulate): rebuild replaces the corpus' documents in
+the store instead of accumulating them, so re-indexing is idempotent.
+Every store write — fresh build, ``--overwrite``, accumulate, ``--rebuild``
+and ``delete`` — goes through one crash-safe stage-then-swap
+(``_write_store``) with startup recovery (``_recover_store``).
 
 ``index`` accepts the reference's corpus shapes: a ``.tsv`` file/dir of
 ``doc_id\\tdoc_title\\ttext`` lines (``prepare_data.py:29``), a parquet
@@ -27,7 +29,8 @@ crash-safe stage-then-swap with startup recovery (``_recover_store``).
 ingest with deterministic id synthesis). Re-indexing into an existing
 store ACCUMULATES, faithfully double-counting re-indexed documents —
 the reference's read-modify-write semantics (``reducer1.py:18-24``,
-SURVEY.md A5) — unless ``--overwrite`` is given.
+SURVEY.md A5) — unless ``--overwrite`` (replace the store) or
+``--rebuild`` is given; the two are mutually exclusive.
 
 ``query``/``list`` expose the extension registry (TPC-H, dedup, ANN,
 streaming, …) so every declared operator is runnable from the shell.
@@ -75,7 +78,7 @@ def _read_corpus(spark, path: str):
 
 
 def _recover_store(store: str) -> None:
-    """Crash recovery for the stage-then-swap re-index (run before ANY
+    """Crash recovery for the stage-then-swap store write (run before ANY
     store access).  The swap is two renames — ``store -> store._old`` then
     ``store._staging -> store`` — and a crash between them leaves the only
     good index stranded in ``._old`` while the store path is gone; without
@@ -94,20 +97,30 @@ def _recover_store(store: str) -> None:
             # crashed mid-swap: the backup IS the store
             shutil.rmtree(store, ignore_errors=True)
             os.rename(backup, store)
-            print(f"recovered {store} from interrupted re-index", file=sys.stderr)
+            print(f"recovered {store} from an interrupted write", file=sys.stderr)
     shutil.rmtree(staged, ignore_errors=True)
 
 
-def _swap_store(store: str, staged: str) -> None:
-    """Replace ``store`` with ``staged`` via the rename pair that
-    ``_recover_store`` knows how to repair."""
+def _write_store(spark, store: str, index) -> list:
+    """The one write path into a store: materialize ``index`` to a sibling
+    ``._staging`` dir, then swap it in with the rename pair that
+    ``_recover_store`` knows how to repair — a crash mid-write never
+    leaves a half-new store (and parquet can't overwrite its own scan
+    input, which every update reads). Returns the new ``corpus_info``
+    rows, read back from the store."""
     import shutil
 
-    backup = store.rstrip("/") + "._old"
+    from .operators.index import materialize_index
+
+    store = store.rstrip("/")
+    staged, backup = store + "._staging", store + "._old"
+    materialize_index(index, staged)
     shutil.rmtree(backup, ignore_errors=True)
-    os.rename(store, backup)
+    if os.path.exists(store):
+        os.rename(store, backup)
     os.rename(staged, store)
     shutil.rmtree(backup, ignore_errors=True)
+    return spark.read.parquet(os.path.join(store, "corpus_info")).collect()
 
 
 def cmd_index(args) -> int:
@@ -116,37 +129,25 @@ def cmd_index(args) -> int:
         idempotent_reindex,
         incremental_reindex,
         load_materialized_index,
-        materialize_index,
     )
 
     spark = _spark("cli-index")
     _recover_store(args.store)
     corpus = _read_corpus(spark, args.corpus)
-    store_exists = os.path.exists(
-        os.path.join(args.store, "corpus_info")
-    )
-    if store_exists and not args.overwrite:
-        old = load_materialized_index(spark, args.store)
-        # parquet can't overwrite its own scan input: the tables are
-        # aggregates (vocab-sized) but still potentially large; stage to a
-        # sibling dir then swap (crash-safe via _recover_store).
-        if args.rebuild:
-            # idempotent path: delete the delta's docs first, no
-            # double-count — re-running converges to the fresh build
-            merged = idempotent_reindex(old, corpus)
-        else:
-            # reference-faithful accumulate (double-count quirk, A5)
-            merged = incremental_reindex(old, corpus)
-        staged = args.store.rstrip("/") + "._staging"
-        materialize_index(merged, staged)
-        _swap_store(args.store, staged)
-        verb = "rebuilt" if args.rebuild else "accumulated"
-        print(f"{verb} into {args.store}", file=sys.stderr)
+    if args.overwrite or not os.path.exists(os.path.join(args.store, "corpus_info")):
+        index, verb = build_index(corpus), "indexed"
+    elif args.rebuild:
+        # idempotent path: the delta's docs replace their stored versions,
+        # no double-count — re-running converges to the fresh build
+        index = idempotent_reindex(load_materialized_index(spark, args.store), corpus)
+        verb = "rebuilt"
     else:
-        materialize_index(build_index(corpus), args.store)
-        print(f"indexed into {args.store}", file=sys.stderr)
-    n = spark.read.parquet(os.path.join(args.store, "corpus_info")).collect()
-    for row in n:
+        # reference-faithful accumulate (double-count quirk, A5)
+        index = incremental_reindex(load_materialized_index(spark, args.store), corpus)
+        verb = "accumulated"
+    rows = _write_store(spark, args.store, index)
+    print(f"{verb} into {args.store}", file=sys.stderr)
+    for row in rows:
         print(
             f"corpus={row['corpus_name']} docs={row['doc_n']} "
             f"total_len={row['total_doc_length']}",
@@ -156,11 +157,7 @@ def cmd_index(args) -> int:
 
 
 def cmd_delete(args) -> int:
-    from .operators.index import (
-        delete_documents,
-        load_materialized_index,
-        materialize_index,
-    )
+    from .operators.index import delete_documents, load_materialized_index
 
     try:
         id_rows = [(int(d),) for d in args.doc_ids]
@@ -180,13 +177,7 @@ def cmd_delete(args) -> int:
         return 2
     old = load_materialized_index(spark, args.store)
     ids = spark.createDataFrame(id_rows, "doc_id int")
-    pruned = delete_documents(old, ids)
-    staged = args.store.rstrip("/") + "._staging"
-    materialize_index(pruned, staged)
-    _swap_store(args.store, staged)
-    row = spark.read.parquet(
-        os.path.join(args.store, "corpus_info")
-    ).collect()[0]
+    row = _write_store(spark, args.store, delete_documents(old, ids))[0]
     print(
         f"deleted {len(args.doc_ids)} doc id(s); corpus now "
         f"docs={row['doc_n']} total_len={row['total_doc_length']}",
@@ -249,17 +240,17 @@ def main(argv: list[str] | None = None) -> int:
     pi = sub.add_parser("index", help="build/accumulate the inverted index")
     pi.add_argument("corpus", help=".tsv corpus, parquet documents table/dir, or plain-text file")
     pi.add_argument("--store", required=True, help="index store directory (parquet)")
-    pi.add_argument(
+    mode = pi.add_mutually_exclusive_group()
+    mode.add_argument(
         "--overwrite",
         action="store_true",
         help="replace the store instead of accumulating (reference default accumulates)",
     )
-    pi.add_argument(
+    mode.add_argument(
         "--rebuild",
         action="store_true",
-        help="idempotent re-index: delete the corpus' doc ids from the store "
-        "first, then accumulate — no double-count; re-running converges to "
-        "a fresh build",
+        help="idempotent re-index: the corpus' documents replace their stored "
+        "versions — no double-count; re-running converges to a fresh build",
     )
     pi.set_defaults(fn=cmd_index)
 

@@ -9,6 +9,12 @@ Reference semantics being replicated (SURVEY.md §2.4, §3.2):
 - incremental upsert accumulation across runs (``reducer1.py:18-24``,
   ``reducer2.py:32-39``) — including its double-count-on-reindex quirk.
 
+Beyond the reference: ``delete_documents``, and ``idempotent_reindex``
+(``--rebuild``), whose delta REPLACES its stored documents. All three
+derive ``doc_frequency`` and the corpus stats from ``(term_freq,
+doc_info)`` in ONE place, ``_statistics``; only ``incremental_reindex``
+sums old and delta stats, since the reference's quirk is that sum.
+
 Scale design (100 TB corpus, 1000 executors):
 - ONE wide transformation chain with ONE shuffle on the token stream:
   ``tokens -> groupBy(term, doc_id, doc_title)``. Spark's partial
@@ -63,11 +69,47 @@ def _valid_docs(corpus: DataFrame) -> DataFrame:
     )
 
 
+def _statistics(
+    term_freq: DataFrame, doc_info: DataFrame, corpus_name: str | DataFrame
+) -> InvertedIndex:
+    """``term_doc_freq`` and ``corpus_info`` from the postings and doc
+    lengths (``reducer1.py:33-43``, ``reducer2.py:80-92``). term_freq is
+    unique per (term, doc), so rows per term == #docs containing it (the
+    ``mapper1.py:20`` dedup, for free). ``corpus_info`` carries
+    ``corpus_name`` (a name, or a relation holding the store's one name);
+    no documents give ``doc_n = total_doc_length = 0``."""
+    term_doc_freq = (
+        term_freq.groupBy("term", "corpus_name")
+        .agg(F.count("*").cast("int").alias("doc_frequency"))
+        .select("term", "corpus_name", "doc_frequency")
+    )
+    totals = doc_info.agg(
+        F.count("*").cast("int").alias("doc_n"),
+        F.coalesce(F.sum("doc_length"), F.lit(0)).cast("int").alias("total_doc_length"),
+    )
+    if isinstance(corpus_name, str):
+        corpus_info = totals.withColumn("corpus_name", F.lit(corpus_name))
+    else:
+        corpus_info = corpus_name.crossJoin(totals)
+    corpus_info = corpus_info.select("corpus_name", "doc_n", "total_doc_length")
+    return InvertedIndex(term_freq, term_doc_freq, doc_info, corpus_info)
+
+
+def _without(old: InvertedIndex, docs: DataFrame) -> list[DataFrame]:
+    """``old``'s term_freq and doc_info minus ``docs``' doc ids (anti-joins;
+    retained rows pass through, not re-aggregated)."""
+    ids = docs.select("doc_id")
+    return [
+        t.join(ids, "doc_id", "left_anti").select(*t.columns) for t in (old.term_freq, old.doc_info)
+    ]
+
+
 def build_index(corpus: DataFrame, corpus_name: str = WHOLE_CORPUS) -> InvertedIndex:
     """corpus(doc_id, doc_title, text) -> the four index tables.
 
     One shuffle (the term_freq groupBy); everything else derives from
-    term_freq without touching the raw text again.
+    term_freq without touching the raw text again. ``corpus_info`` carries
+    ``corpus_name``.
 
     The term_freq relation is persisted (MEMORY_AND_DISK): a consumer that
     references several index tables in ONE plan (e.g. the ad-hoc BM25
@@ -96,15 +138,6 @@ def build_index(corpus: DataFrame, corpus_name: str = WHOLE_CORPUS) -> InvertedI
     )
     term_freq = term_freq.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # term_freq is unique per (term, doc) => row count per term == #docs
-    # containing the term (the mapper1.py:20 per-doc dedup, for free).
-    term_doc_freq = (
-        term_freq.groupBy("term")
-        .agg(F.count("*").cast("int").alias("doc_frequency"))
-        .withColumn("corpus_name", F.lit(corpus_name))
-        .select("term", "corpus_name", "doc_frequency")
-    )
-
     # sum(term_frequency) per doc == doc_length (duplicates included),
     # reference reducer2.py:52,66-70.
     doc_info = term_freq.groupBy("doc_id", "doc_title").agg(
@@ -117,16 +150,10 @@ def build_index(corpus: DataFrame, corpus_name: str = WHOLE_CORPUS) -> InvertedI
     # document — at any scale it is the small side.
     doc_info = doc_info.persist(StorageLevel.MEMORY_AND_DISK)
 
-    corpus_info = doc_info.agg(
-        F.count("*").cast("int").alias("doc_n"),
-        F.sum("doc_length").cast("int").alias("total_doc_length"),
-    ).select(
-        F.lit(corpus_name).alias("corpus_name"), "doc_n", "total_doc_length"
-    )
+    index = _statistics(term_freq, doc_info, corpus_name)
     # one cached row instead of a full doc_info pass per search
-    corpus_info = corpus_info.persist(StorageLevel.MEMORY_AND_DISK)
-
-    return InvertedIndex(term_freq, term_doc_freq, doc_info, corpus_info)
+    index.corpus_info = index.corpus_info.persist(StorageLevel.MEMORY_AND_DISK)
+    return index
 
 
 def materialize_index(index: InvertedIndex, out_dir: str) -> None:
@@ -177,7 +204,8 @@ def incremental_reindex(
     corpus stats (``reducer2.py:32-39``) — *including* the quirk that
     re-indexing the same document double-counts it. Implemented as
     union + re-aggregate + overwrite (SURVEY.md A5), the scalable
-    equivalent of per-row CQL upserts.
+    equivalent of per-row CQL upserts; the stats are summed, not
+    re-derived, because the quirk is ``doc_n``/``doc_frequency`` adding up.
     """
     delta = build_index(delta_corpus, corpus_name)
 
@@ -220,79 +248,57 @@ def delete_documents(old: InvertedIndex, doc_ids: DataFrame) -> InvertedIndex:
     - ``term_freq`` / ``doc_info``: anti-join on ``doc_id`` — the deleted
       documents' postings and length rows vanish, everything else is
       untouched (no re-aggregation of retained rows).
-    - ``term_doc_freq`` / ``corpus_info``: RECOMPUTED from the retained
-      relations (one vocab-scale aggregation + one row). This pins
-      ``doc_frequency`` to the number of retained ``(term, doc)`` postings,
-      i.e. distinct retained docs per term — on a store that was
+    - ``term_doc_freq`` / ``corpus_info``: derived from the retained
+      relations (``_statistics``, as in ``build_index``). This pins
+      ``doc_frequency`` to the number of retained ``(term, doc)``
+      postings, i.e. distinct retained docs per term — on a store that was
       double-ACCUMULATED, deletion therefore also normalizes the inflated
       frequencies back to posting counts (terms whose every posting is
       deleted disappear entirely, no ghost df); per-posting
       ``term_frequency`` / ``doc_length`` values of untouched documents are
       preserved as stored (their source text is not available to re-read).
+    - ``corpus_info`` carries the old store's name, read lazily. The store
+      is single-corpus by construction (the reference hardcodes
+      'whole_corpus', ``app/query.py:23``; doc_info has no corpus column).
 
-    Scale: the anti-joins broadcast ``doc_ids`` when small (the common
-    delete batch) or shuffle-hash on ``doc_id`` otherwise; the df
-    recomputation is the same single groupBy that ``build_index`` already
-    performs — no corpus re-scan, everything derives from the stored
-    aggregates. That recomputation is index-sized, so DELETES SHOULD BE
-    BATCHED at large scale (amortize one vocab-scale aggregation over many
-    victims, as the CLI's multi-id ``delete`` does); a point-delete path
-    that only DECREMENTS df for the victims' terms (shuffling just the
-    deleted postings) is possible but would preserve an accumulated
-    store's inflated doc_frequency instead of normalizing it — rejected
-    so that delete semantics stay "index over the remaining docs".
+    Scale: the derivation is index-sized (no corpus re-scan), so DELETES
+    SHOULD BE BATCHED (one vocab-scale aggregation over many victims, as
+    the CLI's multi-id ``delete`` does); a point-delete that DECREMENTS df
+    for the victims' terms would keep an accumulated store's inflated
+    doc_frequency instead of normalizing it — rejected so that delete
+    semantics stay "index over the remaining docs".
     """
-    ids = doc_ids.select("doc_id").distinct()
-    term_freq = old.term_freq.join(ids, "doc_id", "left_anti").select(
-        "term", "corpus_name", "doc_id", "doc_title", "term_frequency"
-    )
-    doc_info = old.doc_info.join(ids, "doc_id", "left_anti").select(
-        "doc_id", "doc_title", "doc_length"
-    )
-    term_doc_freq = (
-        term_freq.groupBy("term", "corpus_name")
-        .agg(F.count("*").cast("int").alias("doc_frequency"))
-        .select("term", "corpus_name", "doc_frequency")
-    )
-    # The store is single-corpus by construction (the reference hardcodes
-    # 'whole_corpus', app/query.py:23, and doc_info carries no corpus
-    # column, so per-corpus doc accounting is unrepresentable in this
-    # schema); distinct() is deterministic and yields that one name.
-    corpus_name = old.corpus_info.select("corpus_name").distinct()
-    corpus_info = corpus_name.crossJoin(
-        doc_info.agg(
-            F.count("*").cast("int").alias("doc_n"),
-            F.coalesce(F.sum("doc_length"), F.lit(0))
-            .cast("int")
-            .alias("total_doc_length"),
-        )
-    ).select("corpus_name", "doc_n", "total_doc_length")
-    return InvertedIndex(term_freq, term_doc_freq, doc_info, corpus_info)
+    term_freq, doc_info = _without(old, doc_ids)
+    name = old.corpus_info.select("corpus_name").distinct()
+    return _statistics(term_freq, doc_info, name)
 
 
 def idempotent_reindex(
     old: InvertedIndex, delta_corpus: DataFrame, corpus_name: str = WHOLE_CORPUS
 ) -> InvertedIndex:
-    """Re-index a delta WITHOUT the reference's double-count quirk:
-    delete the delta's documents from the store first, then accumulate the
-    freshly built delta — so re-indexing the same corpus N times converges
-    to exactly the fresh-build index (proven by the gated
-    ``index_rebuild_idempotent`` query and ``tests/test_index.py``).
+    """Re-index a delta WITHOUT the reference's double-count quirk: the
+    delta's documents REPLACE their stored versions, so re-indexing the
+    same corpus N times converges to exactly the fresh-build index (proven
+    by the gated ``index_rebuild_idempotent`` query and
+    ``tests/test_index.py``). The store's postings and doc lengths lose the
+    delta's doc ids, so they are disjoint from the delta's and union with
+    them as they are — the store is never re-aggregated — and
+    ``_statistics`` derives the rest; ``corpus_info`` carries
+    ``corpus_name``.
 
     This is the ``--rebuild`` CLI path; the default ``index`` path keeps
     the reference's faithful accumulate semantics (``incremental_reindex``).
 
-    Deletion keys on EVERY non-null doc_id in the delta — including docs
-    whose text is now blank/whitespace: a re-shipped empty document is
-    deleted and (being invalid to index, ``mapper1.py:7-13``) not re-added,
-    so "document became empty" removes it from the store, exactly what a
+    Deletion keys on EVERY doc_id in the delta — including docs whose text
+    is now blank/whitespace: a re-shipped empty document is removed and
+    (being invalid to index, ``mapper1.py:7-13``) not re-added, so
+    "document became empty" removes it from the store, exactly what a
     fresh build over the updated corpus would produce.
     """
-    ids = (
-        delta_corpus.where(F.col("doc_id").isNotNull())
-        .select("doc_id")
-        .distinct()
-    )
-    return incremental_reindex(
-        delete_documents(old, ids), delta_corpus, corpus_name
+    delta = build_index(delta_corpus, corpus_name)
+    term_freq, doc_info = _without(old, delta_corpus)
+    return _statistics(
+        term_freq.unionByName(delta.term_freq),
+        doc_info.unionByName(delta.doc_info),
+        corpus_name,
     )

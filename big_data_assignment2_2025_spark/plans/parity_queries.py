@@ -59,10 +59,10 @@ GROUP BY term
 
 
 def index_rebuild_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Accumulate the full corpus into an index that already contains it,
-    via the IDEMPOTENT re-index path (delete-then-accumulate,
-    ``--rebuild``): the result must equal a fresh single build — no
-    double-count quirk.  The oracle is therefore the plain fresh-build
+    """Re-index the full corpus into an index that already contains it,
+    via the IDEMPOTENT re-index path (``--rebuild``: the delta's documents
+    replace their stored versions): the result must equal a fresh single
+    build — no double-count quirk.  The oracle is therefore the plain fresh-build
     doc_frequency SQL; the reference store cannot express this at all
     (``reducer1.py:18-24`` only accumulates)."""
     corpus = read_documents(spark, sf_dir)

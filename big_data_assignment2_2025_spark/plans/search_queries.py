@@ -61,7 +61,7 @@ doc_info AS (
 ),
 corpus_info AS (
   SELECT 'whole_corpus' AS corpus_name, CAST(count(*) AS INTEGER) AS doc_n,
-         CAST(sum(doc_length) AS INTEGER) AS total_doc_length
+         CAST(coalesce(sum(doc_length), 0) AS INTEGER) AS total_doc_length
   FROM doc_info
 )
 """

@@ -176,3 +176,41 @@ def test_materialized_search_follows_fixture_rewrite(spark, tmp_path):
         assert after != before
     finally:
         shutil.rmtree(scratch_dir(sf, "bm25_index"), ignore_errors=True)
+
+
+def test_tfidf_doc_similarity_matches_oracle_on_rare_terms(spark, tmp_path):
+    """The shipped fixtures draw from a 31-word vocabulary in which every
+    word is in more than 20 documents, so ``tfidf_doc_similarity``'s rare-term
+    subspace is empty there and its oracle gate compares two empty results.
+    Over 200 documents drawn Zipf-like from 155 words the tail words are
+    rare, and the query must return pairs that hash-match its DuckDB oracle."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_assignment2_2025_spark.plans.search_queries import (
+        TFIDF_DOC_SIM_SQL,
+        q_tfidf_doc_similarity,
+    )
+    from tools.oracle_check import _hash_rows
+
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(155)]
+    weights = [1.0 / (i + 1) for i in range(len(words))]
+    texts = [" ".join(rng.choices(words, weights, k=rng.randint(5, 25))) for _ in range(200)]
+    docs = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": pa.array(range(200), pa.int64()), "text": texts}), docs)
+
+    got = q_tfidf_doc_similarity(spark, str(tmp_path))
+    rows = [tuple(r) for r in got.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+    want = con.execute(TFIDF_DOC_SIM_SQL).arrow()
+    want_cols = want.schema.names
+    want_rows = [tuple(d[c] for c in want_cols) for d in want.to_pylist()]
+    assert rows
+    assert sorted(got.columns) == sorted(want_cols)
+    assert len(rows) == len(want_rows)
+    assert _hash_rows(got.columns, rows) == _hash_rows(want_cols, want_rows)

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from big_data_assignment2_2025_spark.cli import main
 
 _CORPUS = [
@@ -145,3 +147,42 @@ def test_crash_recovery_restores_stranded_backup(spark, tmp_path, capsys):
 def test_delete_rejects_non_integer_ids(tmp_path, capsys):
     assert main(["delete", "abc", "--store", str(tmp_path / "s")]) == 2
     assert "must be integers" in capsys.readouterr().err
+
+
+def _store_rows(spark, store):
+    return {
+        name: sorted(tuple(r) for r in spark.read.parquet(os.path.join(store, name)).collect())
+        for name in ("term_freq", "term_doc_freq", "doc_info", "corpus_info")
+    }
+
+
+def test_overwrite_crash_leaves_store_unchanged(spark, tmp_path, monkeypatch):
+    """``index --overwrite`` writes through the same stage-then-swap as every
+    other store write: a crash after the first table leaves the live store
+    as it was, not a new term_freq beside the old corpus_info."""
+    from big_data_assignment2_2025_spark.operators import index as index_mod
+
+    tsv = str(tmp_path / "corpus.tsv")
+    store = str(tmp_path / "store")
+    _write_tsv(tsv)
+    assert main(["index", tsv, "--store", store]) == 0
+    before = _store_rows(spark, store)
+
+    def crash_after_term_freq(index, out_dir):
+        index.term_freq.write.mode("overwrite").parquet(os.path.join(out_dir, "term_freq"))
+        raise RuntimeError("crash after term_freq")
+
+    monkeypatch.setattr(index_mod, "materialize_index", crash_after_term_freq)
+    other = str(tmp_path / "other.tsv")
+    with open(other, "w") as fh:
+        fh.write("9\tnew\tan entirely different corpus\n")
+    with pytest.raises(RuntimeError, match="crash after term_freq"):
+        main(["index", other, "--store", store, "--overwrite"])
+    assert _store_rows(spark, store) == before
+
+
+def test_overwrite_and_rebuild_are_exclusive(tmp_path, capsys):
+    with pytest.raises(SystemExit) as exc:
+        main(["index", "c.tsv", "--store", str(tmp_path / "s"), "--overwrite", "--rebuild"])
+    assert exc.value.code == 2
+    assert "not allowed with" in capsys.readouterr().err

@@ -203,3 +203,38 @@ def test_idempotent_reindex_deletes_emptied_document(spark):
     rebuilt = idempotent_reindex(full, updated)
     fresh = build_index(corpus.where(F.col("doc_id") != 1))
     assert _index_tables(rebuilt) == _index_tables(fresh)
+
+
+def test_empty_corpus_builds_zero_corpus_info(spark):
+    """An empty index reads the same on every path: a fresh build over no
+    documents gives the ``(0, 0)`` that delete-all and a rebuild down to
+    nothing give, not a NULL total length."""
+    empty = spark.createDataFrame([], "doc_id long, doc_title string, text string")
+    ci = build_index(empty).corpus_info.collect()
+    assert [tuple(r) for r in ci] == [("whole_corpus", 0, 0)]
+
+
+def test_rebuild_does_not_aggregate_the_store(spark, tmp_path):
+    """``idempotent_reindex`` passes the stored postings through an
+    anti-join: its ``term_freq`` plan aggregates only the delta, so it holds
+    as many HashAggregate nodes as the delta's own build."""
+    from big_data_assignment2_2025_spark.operators.index import (
+        idempotent_reindex,
+        load_materialized_index,
+        materialize_index,
+    )
+
+    corpus = spark.createDataFrame(CORPUS, "doc_id long, doc_title string, text string")
+    materialize_index(build_index(corpus), str(tmp_path / "store"))
+    store = load_materialized_index(spark, str(tmp_path / "store"))
+    delta = spark.createDataFrame(
+        [(2, "doc two", "the slow blue hare wakes"), (7, "doc seven", "new words here")],
+        "doc_id long, doc_title string, text string",
+    )
+
+    def aggregates(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("HashAggregate")
+
+    want = aggregates(build_index(delta).term_freq)
+    assert want > 0
+    assert aggregates(idempotent_reindex(store, delta).term_freq) == want
