@@ -33,7 +33,7 @@ Scale design (100 TB corpus, 1000 executors):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -53,6 +53,30 @@ class InvertedIndex:
     term_doc_freq: DataFrame  # term, corpus_name, doc_frequency
     doc_info: DataFrame       # doc_id, doc_title, doc_length
     corpus_info: DataFrame    # corpus_name, doc_n, total_doc_length
+    _stats: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+
+    def corpus_stats(self, corpus_name: str = WHOLE_CORPUS) -> tuple[int, int] | None:
+        """``(doc_n, total_doc_length)`` of ``corpus_name``, or None when
+        ``corpus_info`` has no row for it. One tiny job reads them the first
+        time and the result is memoized on this index (for as long as
+        ``corpus_info`` is the same relation), so searches fold them into
+        their plans as literals, like the reference's collected
+        ``lit(N)`` / ``lit(avgdl)`` (``app/query.py:112-135``). More than
+        one row for the name raises ValueError: a join on it would
+        multiply every score."""
+        hit = self._stats.get(corpus_name)
+        if hit is None or hit[0] is not self.corpus_info:
+            rows = (
+                self.corpus_info.where(F.col("corpus_name") == corpus_name)
+                .select("doc_n", "total_doc_length")
+                .collect()
+            )
+            if len(rows) > 1:
+                raise ValueError(
+                    f"corpus_info holds {len(rows)} rows for corpus {corpus_name!r}; expected one"
+                )
+            hit = self._stats[corpus_name] = (self.corpus_info, tuple(rows[0]) if rows else None)
+        return hit[1]
 
     def unpersist(self) -> "InvertedIndex":
         for df in (self.term_freq, self.term_doc_freq, self.doc_info, self.corpus_info):
@@ -113,7 +137,7 @@ def build_index(corpus: DataFrame, corpus_name: str = WHOLE_CORPUS) -> InvertedI
 
     The term_freq relation is persisted (MEMORY_AND_DISK): a consumer that
     references several index tables in ONE plan (e.g. the ad-hoc BM25
-    search joins tf + vocab + doc_info + corpus stats) would
+    search reads tf + vocab + doc_info + corpus stats) would
     otherwise re-run the tokenize+shuffle subtree once PER TABLE — the
     per-branch pushed filters make the four exchanges non-identical, so
     Catalyst's ReuseExchange cannot dedup them (verified: 4x ``Generate
@@ -143,15 +167,15 @@ def build_index(corpus: DataFrame, corpus_name: str = WHOLE_CORPUS) -> InvertedI
     doc_info = term_freq.groupBy("doc_id", "doc_title").agg(
         F.sum("term_frequency").cast("int").alias("doc_length")
     )
-    # doc_info (and the scalar corpus stats derived from it) are read by
-    # EVERY search over an ad-hoc index; without their own persist each
-    # query re-aggregates the full cached term_freq relation per run
-    # (one corpus-wide shuffle per search). doc_info is one row per
-    # document — at any scale it is the small side.
+    # doc_info is read by EVERY search over an ad-hoc index (the corpus
+    # stats derived from it once per index, ``corpus_stats``); without its
+    # own persist each query re-aggregates the full cached term_freq
+    # relation per run (one corpus-wide shuffle per search). doc_info is
+    # one row per document — at any scale it is the small side.
     doc_info = doc_info.persist(StorageLevel.MEMORY_AND_DISK)
 
     index = _statistics(term_freq, doc_info, corpus_name)
-    # one cached row instead of a full doc_info pass per search
+    # one cached row instead of a full doc_info pass per read
     index.corpus_info = index.corpus_info.persist(StorageLevel.MEMORY_AND_DISK)
     return index
 

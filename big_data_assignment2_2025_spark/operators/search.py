@@ -22,18 +22,27 @@ result is deterministic (the reference's order among ties is unspecified).
 What is deliberately NOT replicated (performance anti-patterns, SURVEY.md §4):
 the reference's 4 eager driver round-trips (``query.py:38,58,76,123``) and the
 N+1 per-term/per-doc Cassandra scans (``query.py:64-73,90-97``). Here the
-whole query is one declarative plan -> one action:
+corpus scalars are read once per index (``InvertedIndex.corpus_stats``, one
+tiny job, memoized) and folded into the plan as literals, as the reference
+folds its ``lit(N)`` / ``lit(avgdl)`` (``query.py:112-135``); the rest of the
+query is one declarative plan -> one action:
 
-  term_freq.where(corpus, term pred)      -- parquet-pushed filter
-    JOIN broadcast(term_doc_freq filtered) -- tiny: <= #query terms rows
-    JOIN doc_info                          -- inner join doubles as the
-                                              manual semi-join at query.py:61-97
-    CROSS JOIN broadcast(corpus_info)      -- the lit(N)/lit(avgdl) scalars
-    -> score column expr -> groupBy(doc) sum -> TakeOrderedAndProject(k)
+  term_freq.where(corpus AND term pred)         -- parquet-pushed filter
+    JOIN broadcast(term_doc_freq.where(same))   -- tiny: <= #query terms rows
+    JOIN doc_info                               -- inner join doubles as the
+                                                   manual semi-join at query.py:61-97
+    -> score = bm25_expr(N, total_len)          -- one expression, DOUBLE literals
+    -> groupBy(doc) sum -> TakeOrderedAndProject(k)
 
 Scale notes: the only shuffle is the final groupBy on (doc_id, doc_title),
 over rows already restricted to query terms; both dimension joins broadcast.
 Catalyst plans the top-k as TakeOrderedAndProject (no global sort).
+
+Plan-build cost: PySpark records a call site on every Column method, about a
+dozen py4j round trips each, so the weights, the sum and the output casts
+below are SQL expression text over column names and numbers. The corpus name
+and the query terms never go into that text; they reach the plan as Column
+literals (``==``, ``isin``).
 """
 
 from __future__ import annotations
@@ -53,88 +62,73 @@ def parse_query(query: str) -> list[str]:
     return sorted({w.lower() for w in query.split()})
 
 
-def _idf(df: Column, doc_n: Column) -> Column:
+def _double(x: float | None) -> str:
+    """``x`` as a SQL DOUBLE literal (a bare ``4000.0`` parses as DECIMAL)."""
+    return f"CAST({'NULL' if x is None else repr(x)} AS DOUBLE)"
+
+
+def _idf(doc_n: str) -> str:
     """The reference's simplified IDF ``ln(N/df)`` (``app/query.py:131-135``)."""
-    return F.log(doc_n.cast("double") / df.cast("double"))
+    return f"ln({doc_n} / CAST(doc_frequency AS DOUBLE))"
 
 
-def bm25_expr(tf: Column, df: Column, dl: Column, doc_n: Column, total_len: Column) -> Column:
-    """The exact score expression of reference ``app/query.py:135``."""
-    avgdl = total_len.cast("double") / doc_n.cast("double")
-    idf = _idf(df, doc_n)
-    tf_d = tf.cast("double")
-    return idf * ((K1 + 1.0) * tf_d) / (K1 * (1.0 - B + B * dl.cast("double") / avgdl) + tf_d)
+def bm25_expr(doc_n: int | None, total_doc_length: int | None) -> Column:
+    """The exact score expression of reference ``app/query.py:135`` over a
+    row's ``term_frequency``, ``doc_frequency`` and ``doc_length``."""
+    n, tf = _double(doc_n), "CAST(term_frequency AS DOUBLE)"
+    avgdl = f"({_double(total_doc_length)} / {n})"
+    return F.expr(
+        f"{_idf(n)} * ({_double(K1 + 1.0)} * {tf}) / ({_double(K1)} * ({_double(1.0 - B)}"
+        f" + {_double(B)} * CAST(doc_length AS DOUBLE) / {avgdl}) + {tf})"
+    )
 
 
-def tfidf_expr(tf: Column, df: Column, doc_n: Column) -> Column:
+def tfidf_expr(doc_n: int | None) -> Column:
     """TF-IDF weight ``tf * ln(N/df)`` with the reference's simplified IDF."""
-    return tf.cast("double") * _idf(df, doc_n)
+    return F.expr(f"CAST(term_frequency AS DOUBLE) * {_idf(_double(doc_n))}")
 
 
-def _matching(table: DataFrame, term_pred: Column, corpus_name: str) -> DataFrame:
-    return table.where((F.col("corpus_name") == corpus_name) & term_pred)
+def _matching(term_pred: Column, corpus_name: str) -> Column:
+    return (F.col("corpus_name") == corpus_name) & term_pred
 
 
 def postings(index: InvertedIndex, term_pred: Column, corpus_name: str = WHOLE_CORPUS) -> DataFrame:
     """``term_freq`` rows of ``corpus_name`` whose term matches ``term_pred``
     (``F.col("term").isin(...)``, ``startswith``, ...); both predicates
     push down to a materialized index's parquet scan."""
-    return _matching(index.term_freq, term_pred, corpus_name)
+    return index.term_freq.where(_matching(term_pred, corpus_name))
 
 
-def _weighted(index: InvertedIndex, term_pred: Column, corpus_name: str) -> DataFrame:
+def _weighted(index: InvertedIndex, term_pred: Column, corpus_name: str) -> tuple[DataFrame, tuple]:
     """Postings joined to their term's doc_frequency (broadcast: at most one
-    row per matching term)."""
-    vocab = _matching(index.term_doc_freq, term_pred, corpus_name)
-    return postings(index, term_pred, corpus_name).join(
-        F.broadcast(vocab), ["term", "corpus_name"], "inner"
-    )
-
-
-def _stats(index: InvertedIndex, corpus_name: str) -> DataFrame:
-    stats = index.corpus_info.where(F.col("corpus_name") == corpus_name)
-    return F.broadcast(stats.select("doc_n", "total_doc_length"))
+    row per matching term), and the corpus's ``(doc_n, total_doc_length)``.
+    A corpus with no documents or no ``corpus_info`` row matches nothing."""
+    stats = index.corpus_stats(corpus_name)
+    if not stats or not stats[0]:  # also keeps avgdl = 0/0 (an ANSI error) out of the plan
+        term_pred, stats = F.lit(False), (None, None)
+    match = _matching(term_pred, corpus_name)
+    vocab = F.broadcast(index.term_doc_freq.where(match))
+    return index.term_freq.where(match).join(vocab, ["term", "corpus_name"]), stats
 
 
 def bm25_scores(index: InvertedIndex, term_pred: Column, corpus_name: str = WHOLE_CORPUS) -> DataFrame:
     """Per-(term, doc) BM25 rows, weight in ``score``, for the terms matching
     ``term_pred``."""
-    return (
-        _weighted(index, term_pred, corpus_name)
-        .join(index.doc_info, ["doc_id", "doc_title"], "inner")
-        .crossJoin(_stats(index, corpus_name))
-        .withColumn(
-            "score",
-            bm25_expr(
-                F.col("term_frequency"),
-                F.col("doc_frequency"),
-                F.col("doc_length"),
-                F.col("doc_n"),
-                F.col("total_doc_length"),
-            ),
-        )
-    )
+    weighted, stats = _weighted(index, term_pred, corpus_name)
+    return weighted.join(index.doc_info, ["doc_id", "doc_title"]).withColumn("score", bm25_expr(*stats))
 
 
 def tfidf_scores(index: InvertedIndex, term_pred: Column, corpus_name: str = WHOLE_CORPUS) -> DataFrame:
     """Per-(term, doc) TF-IDF rows, weight in ``score``. No length
     normalization, so no doc_info join."""
-    return (
-        _weighted(index, term_pred, corpus_name)
-        .crossJoin(_stats(index, corpus_name))
-        .withColumn(
-            "score",
-            tfidf_expr(F.col("term_frequency"), F.col("doc_frequency"), F.col("doc_n")),
-        )
-    )
+    weighted, (doc_n, _) = _weighted(index, term_pred, corpus_name)
+    return weighted.withColumn("score", tfidf_expr(doc_n))
 
 
 def doc_scores(scored: DataFrame, *aggs: Column) -> DataFrame:
     """Sum of the per-term ``score`` per document, as ``doc_rank``; ``aggs``
     ride along in the same aggregate (e.g. a distinct-term count)."""
-    return scored.groupBy("doc_id", "doc_title").agg(
-        F.sum("score").alias("doc_rank"), *aggs
-    )
+    return scored.groupBy("doc_id", "doc_title").agg(F.expr("sum(score) AS doc_rank"), *aggs)
 
 
 def top_k(docs: DataFrame, k: int = 10) -> DataFrame:
@@ -143,12 +137,12 @@ def top_k(docs: DataFrame, k: int = 10) -> DataFrame:
     double)`` (reference ``app/query.py:40-44,143``). Catalyst plans it as
     one TakeOrderedAndProject: per-partition heaps, no global sort."""
     return (
-        docs.orderBy(F.col("doc_rank").desc(), F.col("doc_id").asc())
+        docs.orderBy(F.desc("doc_rank"), F.asc("doc_id"))
         .limit(k)
-        .select(
-            F.col("doc_id").cast("int").alias("doc_id"),
+        .selectExpr(
+            "CAST(doc_id AS INT) AS doc_id",
             "doc_title",
-            F.col("doc_rank").cast("double").alias("doc_rank"),
+            "CAST(doc_rank AS DOUBLE) AS doc_rank",
         )
     )
 
@@ -160,7 +154,8 @@ def bm25_search(
     corpus_name: str = WHOLE_CORPUS,
 ) -> DataFrame:
     """Top-k documents for a free-text query, in the ``top_k`` schema and
-    order. An empty vocabulary yields an empty frame with that schema, with
-    no eager probe (vs the ``head(1)`` at ``query.py:38``)."""
+    order. An empty vocabulary yields an empty frame with that schema; the
+    only eager work is the first search's read of the corpus scalars (vs
+    the ``head(1)`` probe on every query at ``query.py:38``)."""
     term_pred = F.col("term").isin(parse_query(query))
     return top_k(doc_scores(bm25_scores(index, term_pred, corpus_name)), k)

@@ -222,17 +222,9 @@ def q_tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("corpus_name") == "whole_corpus")
         & (F.col("doc_frequency") <= df_cap)
     ).select("term", "doc_frequency")
-    n_docs = index.corpus_info.select("doc_n")
-    w = (
-        index.term_freq.join(rare, "term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "term",
-            "doc_id",
-            tfidf_expr(
-                F.col("term_frequency"), F.col("doc_frequency"), F.col("doc_n")
-            ).alias("w"),
-        )
+    doc_n = (index.corpus_stats() or (None, None))[0]
+    w = index.term_freq.join(rare, "term").select(
+        "term", "doc_id", tfidf_expr(doc_n).alias("w")
     )
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm")

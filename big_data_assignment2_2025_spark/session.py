@@ -14,13 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on:
+    the session's local threads and default shuffle partitions."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "big_data_assignment2_2025_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))

@@ -4,9 +4,11 @@ Covers the edge cases the reference encodes (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+import itertools
 import math
 import re
 from collections import Counter
+from dataclasses import replace
 
 import pytest
 
@@ -214,3 +216,94 @@ def test_tfidf_doc_similarity_matches_oracle_on_rare_terms(spark, tmp_path):
     assert sorted(got.columns) == sorted(want_cols)
     assert len(rows) == len(want_rows)
     assert _hash_rows(got.columns, rows) == _hash_rows(want_cols, want_rows)
+
+
+APOSTROPHE_CORPUS = [
+    (1, "a1", "I don't know why we don't stop"),
+    (2, "a2", "do not stop now"),
+    (3, "a3", "Don't Panic"),
+    (4, "a4", "the weather report today"),
+    (5, "a5", "stop the game, don't stop"),
+]
+
+
+TOP_K_SCHEMA = "struct<doc_id:int,doc_title:string,doc_rank:double>"
+
+
+@pytest.fixture(scope="module")
+def apostrophe_index(spark):
+    return build_index(
+        spark.createDataFrame(APOSTROPHE_CORPUS, "doc_id long, doc_title string, text string")
+    )
+
+
+@pytest.mark.parametrize(
+    "query", ["don't", "DON'T don't Stop stop STOP", "don't x')or('1'='1 stop"]
+)
+def test_apostrophe_and_mixed_case_queries_match_python_bm25(apostrophe_index, query):
+    got = {(r.doc_id, r.doc_title): r.doc_rank for r in bm25_search(apostrophe_index, query).collect()}
+    want = _python_bm25(APOSTROPHE_CORPUS, query)
+    assert want and set(got) == set(want)
+    for key, val in want.items():
+        assert got[key] == pytest.approx(val, abs=1e-9)
+
+
+def test_all_oov_query_returns_empty_top_k_schema(index):
+    df = bm25_search(index, "zzzmissing qqq'unseen ZZZMISSING")
+    assert df.collect() == []
+    assert df.schema.simpleString() == TOP_K_SCHEMA
+
+
+def test_corpus_info_without_the_corpus_searches_empty(index):
+    no_row = replace(index, corpus_info=index.corpus_info.where("corpus_name = 'other'"))
+    for df in (bm25_search(no_row, "football"), bm25_search(index, "football", corpus_name="other")):
+        assert df.collect() == []
+        assert df.schema.simpleString() == TOP_K_SCHEMA
+
+
+def test_duplicated_corpus_info_row_raises(index):
+    # a join on the scalars would multiply every score by the row count
+    twice = replace(index, corpus_info=index.corpus_info.unionByName(index.corpus_info))
+    with pytest.raises(ValueError, match="2 rows for corpus 'whole_corpus'"):
+        bm25_search(twice, "football").collect()
+
+
+def test_empty_corpus_searches_to_empty_frame(spark):
+    idx = build_index(spark.createDataFrame([], "doc_id long, doc_title string, text string"))
+    df = bm25_search(idx, "football")
+    assert df.collect() == []
+    assert df.schema.simpleString() == TOP_K_SCHEMA
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs that ``action()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"test-bm25-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_on_a_loaded_store_runs_four_jobs(spark, tmp_path):
+    """The corpus scalars are read once per index; every later search is
+    the two broadcasts (vocabulary, doc lengths), the scan with the partial
+    aggregate, and the top-k: no corpus_info scan or broadcast per search."""
+    from big_data_assignment2_2025_spark.operators.index import (
+        load_materialized_index,
+        materialize_index,
+    )
+
+    built = build_index(spark.createDataFrame(CORPUS, "doc_id long, doc_title string, text string"))
+    materialize_index(built, str(tmp_path / "store"))
+    built.unpersist()
+    store = load_materialized_index(spark, str(tmp_path / "store"))
+    _jobs(spark, lambda: bm25_search(store, "football game").collect())
+    later = [_jobs(spark, lambda: bm25_search(store, q).collect()) for q in ("chess", "game weather")]
+    assert later == [4, 4]

@@ -43,8 +43,8 @@ def test_bm25_plan_shape(spark):
     # NB: formatted explain mentions each operator twice (tree + detail)
     # vocab + doc_info joins are broadcast
     assert plan.count("BroadcastHashJoin") >= 4
-    # the only nested-loop is the deliberate 1-row corpus-stats cross join
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
+    # the corpus stats are literals, not a nested-loop join
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
