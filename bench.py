@@ -546,9 +546,11 @@ def _time_pass(spark, sf_dir, queries, runs, want_plans=False):
     reported query time is unchanged in definition), and the full map
     records ``stage_sec = max(0, first - min)`` per query so a
     read-path regression can never hide under staging noise
-    (r12 VERDICT item 5)."""
+    (r12 VERDICT item 5). A query that leaves relations in the
+    CacheManager raises, naming the query."""
     from big_data_assignment2_2025_spark.plans import QUERIES
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     mins: dict[str, float] = {}
     rows: dict[str, int] = {}
     plans: dict[str, str] = {}
@@ -561,6 +563,10 @@ def _time_pass(spark, sf_dir, queries, runs, want_plans=False):
             df = fn(spark, sf_dir)
             n = df.count()
             dt = time.perf_counter() - t0
+            if not cache.isEmpty():
+                # the next run's identical plan would be served from it:
+                # the min would time the cache, not the query
+                raise RuntimeError(f"{name} left relations in the CacheManager")
             if i == 0:
                 firsts[name] = dt
             best = min(best, dt)

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..sources.readers import fan_out
+from .materialize import materialize, materialized
 
 
 def hash64(col: Column, bits: int = 60) -> Column:
@@ -467,34 +468,27 @@ def minhash_dedup(
 ) -> DataFrame:
     """MinHash-LSH near-dup: candidates from banded signatures, then exact
     Jaccard verification >= threshold. Returns (doc1, doc2, jaccard)."""
-    # shingles feed BOTH the signature path and the exact-verification path:
-    # persist so the tokenize+shingle projection runs once, not twice
-    sh = shingles_df(df, n=n, text_col=text_col, id_col=id_col).persist()
-    sigs = minhash_signatures(sh, num_hashes=num_hashes, id_col=id_col)
-    # persist: the candidate set feeds three consumers in jaccard_for_pairs
-    # (two distinct-doc prunes + the intersection join); without it the whole
-    # signature+banding subtree would recompute per consumer
-    cands = lsh_candidate_pairs(
-        sigs, bands=bands, rows_per_band=num_hashes // bands, id_col=id_col
-    ).persist()
-    # verify ONLY the LSH candidates (a pair sharing zero shingles yields no
-    # intersection row and cannot pass the threshold, so restricting the
-    # exact-Jaccard computation to candidates changes nothing semantically)
-    exact = jaccard_for_pairs(sh, cands, id_col=id_col)
-    result = (
-        exact.where(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", F.round("jaccard", 6).alias("jaccard"))
-        .persist()
-    )
-    # Materialize now so the corpus-scale intermediates (shingles, candidate
-    # pairs) can be unpersisted before returning — a long-lived session (the
-    # 105-query gate run) must not accumulate one cached shingle set per call.
-    # The caller is left holding only the near-dup pairs, orders of magnitude
-    # smaller than the corpus, and may unpersist the returned frame when done.
-    result.count()
-    sh.unpersist()
-    cands.unpersist()
-    return result
+    # shingles feed BOTH the signature path and the exact-verification path
+    # (bound: one row per distinct (doc, shingle)); the candidate set feeds
+    # three consumers in jaccard_for_pairs (two distinct-doc prunes + the
+    # intersection join; bound: the LSH candidate pairs). Both are computed
+    # once and freed before returning — a long-lived session must not hold
+    # one shingle set per call; the caller holds only the near-dup pairs.
+    with materialized(shingles_df(df, n=n, text_col=text_col, id_col=id_col)) as sh:
+        sigs = minhash_signatures(sh, num_hashes=num_hashes, id_col=id_col)
+        cands = lsh_candidate_pairs(
+            sigs, bands=bands, rows_per_band=num_hashes // bands, id_col=id_col
+        )
+        with materialized(cands) as cands:
+            # verify ONLY the LSH candidates (a pair sharing zero shingles
+            # yields no intersection row and cannot pass the threshold, so
+            # restricting the exact-Jaccard computation to candidates
+            # changes nothing semantically)
+            exact = jaccard_for_pairs(sh, cands, id_col=id_col)
+            return materialize(
+                exact.where(F.col("jaccard") >= threshold)
+                .select("doc1", "doc2", F.round("jaccard", 6).alias("jaccard"))
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -580,48 +574,42 @@ def simhash_pairs(
     nothing vs brute force while scaling as an inverted index on chunk
     values.
 
-    ``sigs`` is persisted here: both sides of the self-join reference it,
-    and without the persist each side re-runs the whole tokenize+aggregate
+    ``sigs`` is computed once here: both sides of the self-join reference
+    it, and otherwise each side re-runs the whole tokenize+aggregate
     signature subtree (the per-branch chunk projections differ, so
-    ReuseExchange cannot dedup them). The cached relation is one (id, long)
-    row per document — negligible at any corpus size. Lifecycle: the result
-    is materialized before returning so ``sigs`` can be unpersisted here —
-    a long registry run must not accumulate one cached signature relation
-    per invocation. The caller holds only the (small) near-dup pair set and
-    may unpersist it when done.
+    ReuseExchange cannot dedup them). Bound: one (id, long) row per
+    document. It is freed before returning; the result (the near-dup pair
+    set) is computed first.
     """
-    sigs = sigs.persist()
-    n_chunks = max_hamming + 1
-    chunk_bits = SIMHASH_BITS // n_chunks
-    mask = (1 << chunk_bits) - 1
-    chunked = sigs.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {n_chunks - 1}),"
-                f" c -> struct(c AS chunk,"
-                f" (shiftright(simhash, c * {chunk_bits}) & {mask}) AS ckey))"
-            )
-        ).alias("ck"),
-    ).select(id_col, "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
-    a = chunked.select(F.col(id_col).alias("doc1"), F.col("simhash").alias("h1"), "chunk", "ckey")
-    b = chunked.select(F.col(id_col).alias("doc2"), F.col("simhash").alias("h2"), "chunk", "ckey")
-    # hamming filter BEFORE the distinct: bit_count is a per-row codegen op,
-    # so filtering first shrinks the dedup shuffle from every chunk-collision
-    # candidate down to actual near-dup pairs (orders of magnitude at scale)
-    result = (
-        a.join(b, ["chunk", "ckey"])
-        .where(F.col("doc1") < F.col("doc2"))
-        .withColumn("hamming", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc1", "doc2", "hamming")
-        .distinct()
-        .persist()
-    )
-    result.count()
-    sigs.unpersist()
-    return result
+    with materialized(sigs) as sigs:
+        n_chunks = max_hamming + 1
+        chunk_bits = SIMHASH_BITS // n_chunks
+        mask = (1 << chunk_bits) - 1
+        chunked = sigs.select(
+            F.col(id_col),
+            "simhash",
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, {n_chunks - 1}),"
+                    f" c -> struct(c AS chunk,"
+                    f" (shiftright(simhash, c * {chunk_bits}) & {mask}) AS ckey))"
+                )
+            ).alias("ck"),
+        ).select(id_col, "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
+        a = chunked.select(F.col(id_col).alias("doc1"), F.col("simhash").alias("h1"), "chunk", "ckey")
+        b = chunked.select(F.col(id_col).alias("doc2"), F.col("simhash").alias("h2"), "chunk", "ckey")
+        # hamming filter BEFORE the distinct: bit_count is a per-row codegen op,
+        # so filtering first shrinks the dedup shuffle from every chunk-collision
+        # candidate down to actual near-dup pairs (orders of magnitude at scale)
+        result = (
+            a.join(b, ["chunk", "ckey"])
+            .where(F.col("doc1") < F.col("doc2"))
+            .withColumn("hamming", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))))
+            .where(F.col("hamming") <= max_hamming)
+            .select("doc1", "doc2", "hamming")
+            .distinct()
+        )
+        return materialize(result)
 
 
 # ---------------------------------------------------------------------------

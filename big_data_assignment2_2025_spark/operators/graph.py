@@ -33,45 +33,12 @@ Scale story (100 TB corpus, ~billions of pair edges):
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def lineage_checkpointer(
-    spark: SparkSession, checkpoint_dir: Optional[str] = None
-) -> Callable[[DataFrame], DataFrame]:
-    """Per-round lineage truncation strategy for iterative DataFrame loops.
-
-    Default (``checkpoint_dir=None``): eager ``localCheckpoint()`` —
-    blocks are held by live executors, which is the right trade on a
-    single node or when re-running the whole loop on failure is cheap.
-    Its weakness on a real cluster: losing ONE executor mid-loop discards
-    blocks with NO lineage to rebuild them, failing the job.
-
-    Reliable (``checkpoint_dir='hdfs://...'`` or ``'file:///...'``):
-    configures ``sparkContext.setCheckpointDir`` and returns eager
-    ``DataFrame.checkpoint()`` — every round is persisted to the (fault
-    tolerant) FS, so executor loss mid-peel replays from the last round,
-    not from nothing. This is the cluster deployment mode (SCALING §10);
-    costs one FS write per round, amortized over round count.
-
-    SESSION-GLOBAL side effect: ``setCheckpointDir`` is per-SparkContext.
-    Calling this repoints the dir for EVERY later ``DataFrame.checkpoint``
-    in the session, and two CONCURRENT loops passing different dirs would
-    race (last-set wins for both — the loser's rounds land in the winner's
-    dir; correctness survives, cleanup/retention policies may not). The
-    contract is therefore sequential use: each loop's ``ckpt()`` calls run
-    eagerly inside the loop body, so by the time another caller repoints
-    the dir this loop's rounds are already persisted. Concurrent loops in
-    one session must share a single dir, or use the default
-    ``localCheckpoint`` mode, which touches no global state.
-    """
-    if checkpoint_dir is None:
-        return lambda df: df.localCheckpoint()
-    spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    return lambda df: df.checkpoint(eager=True)
+from .materialize import materialize, materialized
 
 
 def connected_components(
@@ -88,57 +55,59 @@ def connected_components(
     returned (isolated documents never entered the pair list to begin with).
 
     ``checkpoint_dir`` switches per-round lineage truncation from
-    ``localCheckpoint`` to reliable FS checkpoints (see
-    ``lineage_checkpointer``) — pass it on any multi-executor cluster.
+    ``localCheckpoint`` to reliable FS checkpoints (see ``materialize``) —
+    pass it on any multi-executor cluster.
     """
-    ckpt = lineage_checkpointer(pairs.sparkSession, checkpoint_dir)
     e = pairs.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     )
-    # symmetrize once so "min over neighbors" sees both directions
-    edges = e.union(
+    # symmetrize once so "min over neighbors" sees both directions; every
+    # round reads the edge list (bound: 2x the pair count)
+    sym = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-
-    labels = ckpt(
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("node").alias("dst"), "label"), "dst"
-            )
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-            .select(F.col("src").alias("node"), "nbr_label")
+    ).distinct()
+    with materialized(sym, checkpoint_dir) as edges:
+        # labels, every round: one row per node
+        labels = materialize(
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node")),
+            checkpoint_dir,
         )
-        # the convergence flag rides the checkpointed round itself:
-        # new != old iff a neighbor label strictly undercuts ours, so
-        # ``chg`` is decided inside the round's one join and the probe
-        # below is an early-exit scan of the (already materialized)
-        # checkpoint blocks — the r12 form re-JOINED new vs old labels
-        # per round, a whole extra shuffle job whose answer was already
-        # computable in the round (r13, guide §2.4)
-        new_labels = ckpt(
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                ).alias("label"),
-                (
-                    F.col("nbr_label").isNotNull()
-                    & (F.col("nbr_label") < F.col("label"))
-                ).alias("chg"),
-            )
-        )
-        labels = new_labels.select("node", "label")
-        if new_labels.where(F.col("chg")).isEmpty():
-            break
 
-    edges.unpersist()
+        for _ in range(max_iter):
+            nbr_min = (
+                edges.join(
+                    labels.select(F.col("node").alias("dst"), "label"), "dst"
+                )
+                .groupBy("src")
+                .agg(F.min("label").alias("nbr_label"))
+                .select(F.col("src").alias("node"), "nbr_label")
+            )
+            # the convergence flag rides the checkpointed round itself:
+            # new != old iff a neighbor label strictly undercuts ours, so
+            # ``chg`` is decided inside the round's one join and the probe
+            # below is an early-exit scan of the (already materialized)
+            # checkpoint blocks — the r12 form re-JOINED new vs old labels
+            # per round, a whole extra shuffle job whose answer was already
+            # computable in the round (r13, guide §2.4)
+            new_labels = materialize(
+                labels.join(nbr_min, "node", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"), F.coalesce("nbr_label", "label")
+                    ).alias("label"),
+                    (
+                        F.col("nbr_label").isNotNull()
+                        & (F.col("nbr_label") < F.col("label"))
+                    ).alias("chg"),
+                ),
+                checkpoint_dir,
+            )
+            labels = new_labels.select("node", "label")
+            if new_labels.where(F.col("chg")).isEmpty():
+                break
+
     return labels.select("node", F.col("label").alias("component"))

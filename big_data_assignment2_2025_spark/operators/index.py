@@ -35,12 +35,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_of
 from ..sources.readers import fan_out
+from .materialize import materialize, release
 
 WHOLE_CORPUS = "whole_corpus"  # hardcoded corpus name, reference app/query.py:23
 
@@ -79,8 +79,9 @@ class InvertedIndex:
         return hit[1]
 
     def unpersist(self) -> "InvertedIndex":
-        for df in (self.term_freq, self.term_doc_freq, self.doc_info, self.corpus_info):
-            df.unpersist()
+        """Free what ``build_index`` materialized now, not at garbage
+        collection; a loaded or derived index holds nothing to free."""
+        release(self.term_freq, self.term_doc_freq, self.doc_info, self.corpus_info)
         return self
 
 
@@ -135,49 +136,41 @@ def build_index(corpus: DataFrame, corpus_name: str = WHOLE_CORPUS) -> InvertedI
     term_freq without touching the raw text again. ``corpus_info`` carries
     ``corpus_name``.
 
-    The term_freq relation is persisted (MEMORY_AND_DISK): a consumer that
-    references several index tables in ONE plan (e.g. the ad-hoc BM25
-    search reads tf + vocab + doc_info + corpus stats) would
+    ``term_freq`` and ``doc_info`` are computed here, eagerly, each once
+    (``materialize``): a consumer that references several index tables in
+    ONE plan (the ad-hoc BM25 search reads tf + vocab + doc_info) would
     otherwise re-run the tokenize+shuffle subtree once PER TABLE — the
-    per-branch pushed filters make the four exchanges non-identical, so
-    Catalyst's ReuseExchange cannot dedup them (verified: 4x ``Generate
-    explode`` in the unshared physical plan). With the persist, the corpus
-    is tokenized exactly once. Spark's CacheManager keys on the
-    canonicalized plan, so repeated ``build_index`` calls over the same
-    source share one cache entry instead of accumulating copies; callers
-    that are done with an ad-hoc index can release it via
-    ``index.unpersist()``. At 100 TB the cached relation is the aggregated
-    index (far smaller than the corpus) and spills to disk — still
-    strictly cheaper than four corpus-scale tokenize passes.
+    per-branch pushed filters make the exchanges non-identical, so
+    Catalyst's ReuseExchange cannot dedup them. A checkpoint, not a
+    persisted plan: a later ``build_index`` over the same source, after
+    its files were rewritten in place, computes from the new text instead
+    of being served this one's cached relation. The blocks die with the
+    index, or at once through ``index.unpersist()``. Bounds: ``term_freq``
+    is one row per distinct (term, doc) — the aggregated index, far
+    smaller than the corpus, and it spills to disk; ``doc_info`` is one
+    row per document. ``term_doc_freq`` and ``corpus_info`` stay lazy
+    aggregates over them (``corpus_info`` is read once per index,
+    ``corpus_stats``).
     """
     # fan_out: the tokenize+explode projection is the CPU-heavy stage; make
     # sure it isn't pinned to an under-split scan (no-op on well-split input)
     tokens = tokens_of(fan_out(_valid_docs(corpus)))
 
-    term_freq = (
+    term_freq = materialize(
         tokens.groupBy("term", "doc_id", "doc_title")
         .agg(F.count("*").cast("int").alias("term_frequency"))
         .withColumn("corpus_name", F.lit(corpus_name))
         .select("term", "corpus_name", "doc_id", "doc_title", "term_frequency")
     )
-    term_freq = term_freq.persist(StorageLevel.MEMORY_AND_DISK)
-
     # sum(term_frequency) per doc == doc_length (duplicates included),
-    # reference reducer2.py:52,66-70.
-    doc_info = term_freq.groupBy("doc_id", "doc_title").agg(
-        F.sum("term_frequency").cast("int").alias("doc_length")
+    # reference reducer2.py:52,66-70. Every search over an ad-hoc index
+    # reads doc_info; unmaterialized, each would re-aggregate term_freq.
+    doc_info = materialize(
+        term_freq.groupBy("doc_id", "doc_title").agg(
+            F.sum("term_frequency").cast("int").alias("doc_length")
+        )
     )
-    # doc_info is read by EVERY search over an ad-hoc index (the corpus
-    # stats derived from it once per index, ``corpus_stats``); without its
-    # own persist each query re-aggregates the full cached term_freq
-    # relation per run (one corpus-wide shuffle per search). doc_info is
-    # one row per document — at any scale it is the small side.
-    doc_info = doc_info.persist(StorageLevel.MEMORY_AND_DISK)
-
-    index = _statistics(term_freq, doc_info, corpus_name)
-    # one cached row instead of a full doc_info pass per read
-    index.corpus_info = index.corpus_info.persist(StorageLevel.MEMORY_AND_DISK)
-    return index
+    return _statistics(term_freq, doc_info, corpus_name)
 
 
 def materialize_index(index: InvertedIndex, out_dir: str) -> None:

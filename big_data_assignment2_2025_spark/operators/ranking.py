@@ -41,9 +41,9 @@ splits evenly. Same exactness argument — boundaries only shape balance.
 Driver-side state is bounded by ``n_buckets`` (default 32, scale to ~#cores
 or #partitions on a cluster), the same bounded-collect discipline as
 ``operators/pq.py``. The scored input (a small *dimension* aggregate by the
-operator's contract) is materialized once per call with an eager
-``localCheckpoint`` (r14): the boundary/count stats jobs and the returned
-consumer plan all read the materialized blocks, so the scoring subtree —
+operator's contract) is materialized once per call (``materialize``): the
+boundary/count stats jobs and the returned consumer plan all read the
+materialized blocks, so the scoring subtree —
 often a fact-table aggregation — runs exactly once per invocation instead
 of once per pass, and nothing is cached across invocations.
 """
@@ -55,6 +55,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .materialize import materialize
 
 
 @dataclass
@@ -146,19 +148,10 @@ def _bucketize(
                 f"__v_{s.out_col}", value_exprs[s.out_col].cast("long")
             )
 
-    # The scored input is materialized ONCE with an eager localCheckpoint
-    # (r14, guide §8 — pay the scoring pass once, move small rows after):
-    # the two bounded driver actions below AND the returned consumer plan
-    # all read the materialized blocks, where the previous scoped persist
-    # still recomputed the whole scoring subtree (often a fact-table
-    # aggregation) a second time for the final pass after its unpersist.
-    # localCheckpoint rather than persist so a later identical invocation
-    # can never be served from this one's cache (CacheManager keys on the
-    # canonical plan; checkpoint blocks die with this frame) — every
-    # invocation still computes from the parquet inputs. The materialized
-    # frame is the DIMENSION-sized scored input (the operator's
-    # documented contract), so executor storage is bounded.
-    keyed = keyed.localCheckpoint()
+    # the scored input is computed ONCE: the two bounded driver actions
+    # below AND the returned consumer plan all read it. Bound: the
+    # dimension-sized scored input (the operator's documented contract).
+    keyed = materialize(keyed)
     # 1. metric boundaries for all specs + total count in ONE job;
     # literals from here on
     probs = [i / n_buckets for i in range(1, n_buckets)]
@@ -367,13 +360,10 @@ def with_partitioned_ranks(
     keyed = df.withColumn(k, spec.asc_key.cast("long")).withColumn(
         p, F.col(partition_col).cast("string")
     )
-    # the scored input is materialized ONCE (eager localCheckpoint, r14 —
-    # same rationale as _bucketize): the two bounded driver actions
-    # (boundaries, per-(value,bucket) counts) AND the returned consumer
-    # plan all read the materialized dimension-sized blocks instead of
-    # recomputing the scoring subtree for the final pass; checkpoint
-    # blocks die with this frame, so nothing is served across invocations
-    keyed = keyed.localCheckpoint()
+    # the scored input is computed ONCE (as in _bucketize): the two bounded
+    # driver actions and the returned consumer plan read it. Bound: the
+    # dimension-sized scored input.
+    keyed = materialize(keyed)
     probs = [i / n_buckets for i in range(1, n_buckets)]
     bnds = (
         keyed.agg(

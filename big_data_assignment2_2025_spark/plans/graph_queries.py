@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize
 from ..sources.readers import load_table
 
 
@@ -77,12 +78,12 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str, min_support: int = 2) ->
         .where(F.col("support") >= min_support)
         .select("u", "v")
     )
-    # Both graph queries reference the edge list several times (degree
-    # union, the three oriented-join branches); without a persist each
-    # branch would recompute the lineitem self-join + aggregation.
-    # CacheManager dedups repeated calls by canonical plan; the edge list
-    # is orders of magnitude smaller than the fact table.
-    return edges.persist()
+    # Every graph query references the edge list several times (degree
+    # union, the oriented-join branches, the peel rounds); computed once,
+    # no branch recomputes the lineitem self-join + aggregation. Bound:
+    # distinct co-purchase pairs with support >= min_support, orders of
+    # magnitude fewer than the fact table's rows.
+    return materialize(edges)
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,7 +104,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     # orient: src = endpoint with (smaller degree, then smaller id)
-    oriented = (
+    # three join branches below read it; bound: one row per edge
+    oriented = materialize(
         edges.join(du, "u")
         .join(dv, "v")
         .select(
@@ -118,7 +120,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("e")
         )
         .select("e.src", "e.dst")
-        .persist()  # three join branches below read it
     )
     e1 = oriented.select(F.col("src").alias("x"), F.col("dst").alias("y"))
     e2 = oriented.select(F.col("src").alias("y"), F.col("dst").alias("z"))
@@ -197,22 +198,19 @@ def graph_kcore_peel(
     the graph is tree-like fuzz vs 2-core."""
     # Iterative LINEAGE discipline (same pattern as operators/graph.py:
     # connected_components): each round's frontier is cut from its history
-    # with an eager checkpoint. Mere persist() is NOT enough here —
-    # execution is cached but the LOGICAL plan still nests every prior
-    # round (~3 references per level), so Catalyst re-analyzes an
-    # exponentially growing tree on every action (measured: round-3 counts
-    # took 5.7 s on a 10-row cached frame; the checkpointed form runs the
-    # whole query in ~3 s vs ~11.6 s warm at sf0.1). checkpoint_dir=None
-    # uses localCheckpoint (single-node durability); on a real cluster
-    # pass a fault-tolerant dir so executor loss mid-peel replays from the
-    # last round, not from nothing (operators.graph.lineage_checkpointer,
-    # SCALING §10) — tested against a local file:// dir in
-    # tests/test_graph.py.
-    from ..operators.graph import lineage_checkpointer
-
-    ckpt = lineage_checkpointer(spark, checkpoint_dir)
-    edges0 = _copurchase_edges(spark, sf_dir)
-    edges = ckpt(edges0)
+    # with an eager checkpoint (``materialize``). A persisted plan is NOT
+    # enough here — execution is cached but the LOGICAL plan still nests
+    # every prior round (~3 references per level), so Catalyst re-analyzes
+    # an exponentially growing tree on every action (measured: round-3
+    # counts took 5.7 s on a 10-row cached frame; the checkpointed form
+    # runs the whole query in ~3 s vs ~11.6 s warm at sf0.1).
+    # checkpoint_dir=None uses localCheckpoint (single-node durability); on
+    # a real cluster pass a fault-tolerant dir so executor loss mid-peel
+    # replays from the last round, not from nothing (SCALING §10) — tested
+    # against a local file:// dir in tests/test_graph.py. The round-0 edge
+    # list is already materialized by _copurchase_edges. Bounds: each
+    # round's survivors, at most the edge list and its node set.
+    edges = _copurchase_edges(spark, sf_dir)
     summaries = []
     for rnd in (1, 2, 3):
         # one exploded-stack pass over the edge list, NOT a unionAll of two
@@ -224,22 +222,21 @@ def graph_kcore_peel(
         adj = edges.select(
             F.explode(F.array(F.col("u"), F.col("v"))).alias("node")
         )
-        keep = ckpt(
+        keep = materialize(
             adj.groupBy("node")
             .agg(F.count("*").alias("d"))
             .where(F.col("d") >= 2)
-            .select("node")
+            .select("node"),
+            checkpoint_dir,
         )
-        new_edges = ckpt(
+        new_edges = materialize(
             edges.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
+            .select("u", "v"),
+            checkpoint_dir,
         )
         summaries.append((rnd, keep.count(), new_edges.count()))
         edges = new_edges
-    # the shared co-purchase cache is only needed while checkpointing the
-    # round-0 edges; release it so a long registry run leaks nothing
-    edges0.unpersist()
     return spark.createDataFrame(
         summaries, "round long, n_nodes long, n_edges long"
     )
@@ -313,10 +310,10 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(edges.select(F.col("v").alias("x"), F.col("u").alias("w")))
         .repartition("w")
     )
-    # deg feeds three consumers (via filter, both score joins): persist the
-    # node-sized aggregate once instead of recomputing the union+agg subtree
-    # per consumer (CacheManager dedups repeated calls by canonical plan)
-    deg = adj.groupBy("x").agg(F.count("*").alias("d")).persist()
+    # deg feeds three consumers (via filter, both score joins): compute the
+    # node-sized aggregate once (bound: one row per node) instead of
+    # recomputing the union+agg subtree per consumer
+    deg = materialize(adj.groupBy("x").agg(F.count("*").alias("d")))
     via_ok = deg.where(F.col("d") <= _LP_VIA_CAP).select(
         F.col("x").alias("w")
     )

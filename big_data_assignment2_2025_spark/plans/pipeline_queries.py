@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..operators.dedup import shingles_df
+from ..operators.materialize import materialize
 from ..sources.readers import load_table
 
 # ---------------------------------------------------------------------------
@@ -295,19 +296,12 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree and its own exchange — the corpus was tokenized twice per
     # run (filter pushdown re-splits the branches even under a shared
     # repartition, so exchange reuse alone cannot fix it). The labeled
-    # shingle frame is therefore materialized with an eager
-    # localCheckpoint straight off the (shuffle-free) broadcast split
-    # join: both branch filters then read the materialized blocks, so
-    # the heavy projection runs once and the only data-sized exchanges
-    # left are the join's two branch shuffles (which existed before).
-    # NOT a persist(): CacheManager keys on the canonical plan and would
-    # serve a later identical invocation from this run's cache —
-    # localCheckpoint blocks die with this frame, so every invocation
-    # still computes from the parquet inputs. At scale this is the
-    # worked-example shape (guide §8): pay the heavy projection once,
-    # materialize the lightweight proxy rows, move them once. Same rows,
-    # same join, same result.
-    lab = sh.join(split, "doc_id").localCheckpoint()
+    # shingle frame is therefore computed once straight off the
+    # (shuffle-free) broadcast split join: both branch filters then read
+    # it, so the heavy projection runs once and the only data-sized
+    # exchanges left are the join's two branch shuffles (which existed
+    # before). Bound: one row per (doc, shingle).
+    lab = materialize(sh.join(split, "doc_id"))
     train = lab.where(F.col("is_train")).select(
         F.col("doc_id").alias("train_doc"), "shingle"
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..functions.text import tokenize
+from ..operators.materialize import materialize, materialized
 from ..sources.readers import load_table
 from .graph_queries import _copurchase_edges
 
@@ -477,36 +478,30 @@ def graph_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot be hash-gated). Each iteration is one shuffle-join + one hash
     aggregation on node id; the oracle unrolls the three iterations."""
     edges = _copurchase_edges(spark, sf_dir)
-    adj = edges.unionAll(
+    # every iteration reads the symmetrized adjacency (bound: 2x the edge
+    # list); it is freed before returning, once the 20-row result is computed
+    sym = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
-    nodes = deg.select(F.col("u").alias("node"), "deg")
-    r = nodes.withColumn("pr", F.lit(1000000).cast("long"))
-    for _ in range(3):
-        contrib = r.join(adj, r["node"] == adj["u"]).select(
-            F.col("v").alias("node"), F.expr("pr div deg").alias("c")
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        r = nodes.join(sums, "node", "left").select(
-            "node",
-            "deg",
-            (F.lit(150000) + F.expr("(85 * coalesce(s, 0)) div 100"))
-            .cast("long")
-            .alias("pr"),
-        )
-    # materialize the 20-row result so the symmetrized adjacency cache can be
-    # released here — a long registry run must not leak one cached edge list
-    # per invocation (the caller holds only the tiny top-k frame)
-    result = (
-        r.select("node", "pr")
-        .orderBy(F.desc("pr"), "node")
-        .limit(20)
-        .persist()
     )
-    result.count()
-    adj.unpersist()
-    return result
+    with materialized(sym) as adj:
+        deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
+        nodes = deg.select(F.col("u").alias("node"), "deg")
+        r = nodes.withColumn("pr", F.lit(1000000).cast("long"))
+        for _ in range(3):
+            contrib = r.join(adj, r["node"] == adj["u"]).select(
+                F.col("v").alias("node"), F.expr("pr div deg").alias("c")
+            )
+            sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+            r = nodes.join(sums, "node", "left").select(
+                "node",
+                "deg",
+                (F.lit(150000) + F.expr("(85 * coalesce(s, 0)) div 100"))
+                .cast("long")
+                .alias("pr"),
+            )
+        return materialize(
+            r.select("node", "pr").orderBy(F.desc("pr"), "node").limit(20)
+        )
 
 
 PAGERANK_SQL = """
@@ -867,16 +862,13 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-item aggregate, both sides of the pair self-join, and the b-side
     # re-aggregate) — planned separately, that was five lineitem scans and
     # up to five distinct shuffles per run (r14 measurement: executed plan
-    # showed 5 FileScans, 0 reused exchanges). Materialize it ONCE with an
-    # eager localCheckpoint (guide §8 — one scan + one distinct shuffle,
-    # then every consumer reads the narrow 16-byte (orderkey, partkey)
-    # blocks); checkpoint blocks die with this frame, so nothing is served
-    # across invocations.
-    li = (
+    # showed 5 FileScans, 0 reused exchanges). Computed ONCE (one scan + one
+    # distinct shuffle), every consumer reads the narrow 16-byte
+    # (orderkey, partkey) rows. Bound: distinct lineitem (order, part) pairs.
+    li = materialize(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint()
     )
     n_orders = li.select("l_orderkey").distinct().agg(
         F.count("*").alias("n_orders")

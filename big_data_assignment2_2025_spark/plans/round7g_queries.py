@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize
 from ..sources.readers import load_table
 
 #: integer scale for value micros (4 decimals)
@@ -605,7 +606,8 @@ def events_dau_rollup_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(F.to_date("ts").alias("day"), "user_id")
-    day_reg = hll_registers(base, ["day"], "user_id").persist()
+    # all three grains read it; bound: days x 512 register rows
+    day_reg = materialize(hll_registers(base, ["day"], "user_id"))
 
     epoch = F.lit("1970-01-01").cast("date")
 

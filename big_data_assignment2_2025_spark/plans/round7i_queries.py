@@ -49,6 +49,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize
 from ..sources.readers import load_table
 
 # --------------------------------------------------------------------------
@@ -68,19 +69,22 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one neighbor-key equi-join + one hash
     aggregation on the node key — the Pregel message pattern as
     DataFrame ops, shuffle O(edges) per round. Lineage is cut per round
-    (``lineage_checkpointer``), the k-core discipline, so the 3-round
-    plan never compounds."""
-    from ..operators.graph import lineage_checkpointer
+    (``materialize``), the k-core discipline, so the 3-round plan never
+    compounds."""
     from .graph_queries import _copurchase_edges
 
-    edges = _copurchase_edges(spark, sf_dir)
-    und = (
+    return _label_propagation(_copurchase_edges(spark, sf_dir)).orderBy("node")
+
+
+def _label_propagation(edges: DataFrame) -> DataFrame:
+    """``(node, label)`` after ``_LPA_ROUNDS`` min-label rounds over the
+    undirected edge list ``edges(u, v)``."""
+    # every round reads both directions; bound: 2x the edge list
+    und = materialize(
         edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .persist()
     )
     labels = und.select("node").distinct().withColumn("label", F.col("node"))
-    ckpt = lineage_checkpointer(spark)
     for _ in range(_LPA_ROUNDS):
         nbr_min = (
             und.join(
@@ -92,7 +96,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.min("nbr_label").alias("nbr_label"))
         )
-        labels = ckpt(
+        # bound: one row per node
+        labels = materialize(
             labels.join(nbr_min, "node", "left").select(
                 "node",
                 F.least(
@@ -100,7 +105,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("label"),
             )
         )
-    return labels.orderBy("node")
+    return labels
 
 
 def _lpa_oracle() -> str:
@@ -354,11 +359,11 @@ def text_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     ).where(F.col("tok") != "")
     by_doc = W.partitionBy("doc_id").orderBy("pos")
-    big = (
+    # feeds the pair counts and both margins; bound: one row per token
+    big = materialize(
         toks.withColumn("w2", F.lead("tok").over(by_doc))
         .where(F.col("w2").isNotNull())
         .select(F.col("tok").alias("w1"), "w2")
-        .persist()  # feeds the pair counts and both margins
     )
     bg = big.groupBy("w1", "w2").agg(F.count("*").alias("n_bg"))
     left = big.groupBy("w1").agg(F.count("*").alias("n_left"))

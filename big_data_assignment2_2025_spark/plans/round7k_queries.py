@@ -182,10 +182,11 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) (HUGEINT on the oracle side) and the one float op is
     the final frozen division per community cell."""
     from .graph_queries import _copurchase_edges
-    from .round7i_queries import graph_label_propagation
+    from .round7i_queries import _label_propagation
 
+    # one edge list feeds the communities and every count below
     edges = _copurchase_edges(spark, sf_dir)
-    labels = graph_label_propagation(spark, sf_dir)
+    labels = _label_propagation(edges)
     # the edge-count scalar m rides the plan as a 1-row broadcast cross
     # join instead of an eager driver count (r14, guide §2.4/§5 — no
     # driver action, one fewer job; same exact integer, same DECIMAL(38,0)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_of
+from ..operators.materialize import materialized
 from ..operators.pq import pq_lowest_id_codebooks, pq_topk_fused
 from ..sources.readers import fixture_fingerprint, load_table, staged
 from .round8c_queries import _DELETES_SQL
@@ -459,11 +460,11 @@ def _staged_zorder_store(spark: SparkSession, sf_dir: str) -> str:
         sc = _scale16_expr("l_suppkey", int(mx["s"]))
         # one materialization of the 32-term bit fold serves the zmax
         # probe and all 8 bucket writes (staging would otherwise rescan
-        # lineitem and re-evaluate the fold once per bucket)
-        z = li.withColumn(
-            "zkey", zorder_key2(pc, sc, bits=_Z_BITS)
-        ).persist()
-        try:
+        # lineitem and re-evaluate the fold once per bucket); bound: the
+        # four-column lineitem projection plus its key
+        with materialized(
+            li.withColumn("zkey", zorder_key2(pc, sc, bits=_Z_BITS))
+        ) as z:
             zmax = z.agg(F.max("zkey")).collect()[0][0]
             store = SnapshotStore(base)
             for b in range(_Z_COMMITS):
@@ -475,8 +476,6 @@ def _staged_zorder_store(spark: SparkSession, sf_dir: str) -> str:
                     mode="overwrite" if b == 0 else "append",
                     stats_cols=["zkey"],
                 )
-        finally:
-            z.unpersist()
 
     return staged(sf_dir, "zorderstore", build)
 

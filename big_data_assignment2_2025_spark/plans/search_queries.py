@@ -117,13 +117,7 @@ def q_bm25_search_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.index import load_materialized_index, materialize_index
 
     def build(path: str) -> None:
-        index = build_index(read_documents(spark, sf_dir))
-        try:
-            materialize_index(index, path)
-        finally:
-            # a cached relation left behind would also answer the NEXT
-            # build's identical read plan after an in-place rewrite
-            index.unpersist()
+        materialize_index(build_index(read_documents(spark, sf_dir)), path)
 
     idx = load_materialized_index(spark, staged(sf_dir, "bm25_index", build))
     return rounded(bm25_search(idx, FLAGSHIP_QUERY))

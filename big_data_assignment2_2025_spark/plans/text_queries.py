@@ -22,6 +22,7 @@ from ..functions.text import (
     quality_score,
     whitespace_token_count,
 )
+from ..operators.materialize import materialize
 from ..sources.readers import load_table
 
 _TOKS_CTE = """
@@ -378,15 +379,18 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    ).where(F.col("tok") != "").persist()  # feeds both uni and the bigrams
+    # toks feeds both uni and the bigrams; big feeds both the stats
+    # aggregation and the scoring join. Bound: one row per token each.
+    toks = materialize(
+        docs.select(
+            "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+        ).where(F.col("tok") != "")
+    )
     by_doc = W.partitionBy("doc_id").orderBy("pos")
-    big = (
+    big = materialize(
         toks.withColumn("w2", F.lead("tok").over(by_doc))
         .where(F.col("w2").isNotNull())
         .select("doc_id", F.col("tok").alias("w1"), "w2")
-        .persist()  # feeds both the stats aggregation and the scoring join
     )
     bg_counts = big.groupBy("w1", "w2").agg(F.count("*").alias("n_bg"))
     uni = toks.groupBy("tok").agg(F.count("*").alias("n_uni"))

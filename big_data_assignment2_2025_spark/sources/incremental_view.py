@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialized
 from .snapshots import SnapshotStore
 
 #: txn app id under which refreshes record the synced source version
@@ -181,14 +182,14 @@ class IncrementalAggView:
             .when(F.col("_change_type").isin(minus), F.lit(-1))
             .otherwise(F.lit(0))
         )
-        delta = (
-            ch.groupBy(*self.keys)
-            .agg(
+        # the change count and the fold both read delta; bound: one row
+        # per touched group
+        with materialized(
+            ch.groupBy(*self.keys).agg(
                 *self._aggs(sign),
                 F.count("*").alias("_n_change_rows"),
             )
-        ).persist()
-        try:
+        ) as delta:
             n_change = (
                 delta.agg(F.sum("_n_change_rows")).collect()[0][0] or 0
             )
@@ -218,7 +219,5 @@ class IncrementalAggView:
                 folded, mode="overwrite", stats_cols=[self.keys[0]],
                 txn=(_APP, src_v),
             )
-        finally:
-            delta.unpersist()
         return {"mode": "incremental", "v_from": last, "v_to": src_v,
                 "change_rows": int(n_change)}

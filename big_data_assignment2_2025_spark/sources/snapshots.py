@@ -113,6 +113,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.materialize import materialized
 from . import blooms
 
 _MANIFEST_DIR = "_manifests"
@@ -2365,9 +2366,9 @@ class SnapshotStore:
         either way: prior manifests keep naming the pre-merge files."""
         # merge runs several bounded probe actions over the changes batch
         # (op domain, duplicate keys, member overlap) before the join —
-        # persist so an expensive changes lineage computes once, not 4x
-        changes = changes.persist()
-        try:
+        # computed once so an expensive changes lineage runs once, not 4x
+        # (bound: the caller's change batch)
+        with materialized(changes) as changes:
             self._validate_changes(changes, keys, op_col)
             # MERGE is read-modify-write, so an OCC loss cannot be rebased
             # blindly (that would revert the interleaved commit): each
@@ -2461,8 +2462,6 @@ class SnapshotStore:
                 f"merge could not land after {_OCC_RETRIES} rebases "
                 "(sustained contention on the manifest log)"
             )
-        finally:
-            changes.unpersist()
 
     @staticmethod
     def _validate_changes(
@@ -2641,10 +2640,11 @@ class SnapshotStore:
                     )
                 ]
                 cond = cond & (F.col(col) >= lo) & (F.col(col) < hi)
-            matches = self._live_with_pos(spark, doc, members).where(
-                cond
-            ).persist()
-            try:
+            # the emptiness probe, the DV write, the hit counts and the CDF
+            # write all read the matches (bound: the rows being deleted)
+            with materialized(
+                self._live_with_pos(spark, doc, members).where(cond)
+            ) as matches:
                 if not matches.limit(1).count():
                     return prev  # no-op: nothing deleted, nothing published
                 version = prev + 1
@@ -2683,8 +2683,6 @@ class SnapshotStore:
                     return version
                 except FileExistsError:
                     continue  # rebase: recompute against the new latest
-            finally:
-                matches.unpersist()
         raise SnapshotConflictError(
             f"delete_where could not land after {_OCC_RETRIES} rebases "
             "(sustained contention on the manifest log)"
@@ -2758,10 +2756,10 @@ class SnapshotStore:
                     )
                 ]
                 this_cond = cond & (F.col(col) >= lo) & (F.col(col) < hi)
-            matches = self._live_with_pos(spark, doc, members).where(
-                this_cond
-            ).persist()
-            try:
+            # bound: the rows being updated
+            with materialized(
+                self._live_with_pos(spark, doc, members).where(this_cond)
+            ) as matches:
                 if not matches.limit(1).count():
                     return prev  # no-op: nothing matched, nothing published
                 version = prev + 1
@@ -2834,8 +2832,6 @@ class SnapshotStore:
                     return version
                 except FileExistsError:
                     continue  # rebase: recompute against the new latest
-            finally:
-                matches.unpersist()
         raise SnapshotConflictError(
             f"update_where could not land after {_OCC_RETRIES} rebases "
             "(sustained contention on the manifest log)"
@@ -2863,8 +2859,8 @@ class SnapshotStore:
         Prefer this for frequent small MERGEs over huge members (the
         Delta/Iceberg MoR sweet spot); prefer copy-on-write when changes
         touch a large fraction of rows or reads dominate writes."""
-        changes = changes.persist()
-        try:
+        # bound: the caller's change batch
+        with materialized(changes) as changes:
             self._validate_changes(changes, keys, op_col)
             has_upserts = (
                 changes.where(F.col(op_col) == "upsert").limit(1).count()
@@ -2890,8 +2886,10 @@ class SnapshotStore:
                     else None
                 )
                 scan = split[0] if split is not None else doc["members"]
-                cur_pos = self._live_with_pos(spark, doc, scan).persist()
-                try:
+                # bound: the live rows of the members that may hold a key
+                with materialized(
+                    self._live_with_pos(spark, doc, scan)
+                ) as cur_pos:
                     version = prev + 1
                     # mask every current row whose key has a change row
                     # (upsert -> replaced, delete -> dropped)
@@ -2986,14 +2984,10 @@ class SnapshotStore:
                         return version
                     except FileExistsError:
                         continue  # rebase: recompute against new latest
-                finally:
-                    cur_pos.unpersist()
             raise SnapshotConflictError(
                 f"merge_on_read could not land after {_OCC_RETRIES} "
                 "rebases (sustained contention on the manifest log)"
             )
-        finally:
-            changes.unpersist()
 
     @staticmethod
     def _change_rows(

@@ -133,6 +133,19 @@ def test_materialized_search_follows_fixture_rewrite(spark, tmp_path):
     """The materialized BM25 index is staged per fixture fingerprint: a
     documents table rewritten IN PLACE must be re-indexed, not served
     from the index built over the old text."""
+    _follows_fixture_rewrite(spark, tmp_path, "bm25_search_materialized")
+
+
+def test_adhoc_search_follows_fixture_rewrite(spark, tmp_path):
+    """The ad-hoc search indexes the documents per call: after an in-place
+    rewrite it must not be answered from the previous call's index."""
+    _follows_fixture_rewrite(spark, tmp_path, "bm25_search")
+
+
+def _follows_fixture_rewrite(spark, tmp_path, name):
+    """Run registry query ``name`` on a copy of the small fixture, rotate
+    every document's text onto the next doc_id in place, run it again;
+    both answers must match DuckDB over the file as it is then."""
     import os
     import shutil
 
@@ -148,7 +161,6 @@ def test_materialized_search_follows_fixture_rewrite(spark, tmp_path):
     shutil.copytree(SF_SMALL, sf)
     docs_path = os.path.join(sf, "documents.parquet")
     os.chmod(docs_path, 0o644)
-    name = "bm25_search_materialized"
 
     def check():
         got = QUERIES[name](spark, sf).collect()

@@ -216,8 +216,8 @@ def test_empty_corpus_builds_zero_corpus_info(spark):
 
 def test_rebuild_does_not_aggregate_the_store(spark, tmp_path):
     """``idempotent_reindex`` passes the stored postings through an
-    anti-join: its ``term_freq`` plan aggregates only the delta, so it holds
-    as many HashAggregate nodes as the delta's own build."""
+    anti-join: its ``term_freq`` plan scans the store's parquet and holds no
+    aggregation (the delta's own build was computed by ``build_index``)."""
     from big_data_assignment2_2025_spark.operators.index import (
         idempotent_reindex,
         load_materialized_index,
@@ -232,9 +232,6 @@ def test_rebuild_does_not_aggregate_the_store(spark, tmp_path):
         "doc_id long, doc_title string, text string",
     )
 
-    def aggregates(df):
-        return df._jdf.queryExecution().executedPlan().toString().count("HashAggregate")
-
-    want = aggregates(build_index(delta).term_freq)
-    assert want > 0
-    assert aggregates(idempotent_reindex(store, delta).term_freq) == want
+    rebuilt = idempotent_reindex(store, delta).term_freq
+    assert any(f"{tmp_path / 'store' / 'term_freq'}/" in f for f in rebuilt.inputFiles())
+    assert "HashAggregate" not in rebuilt._jdf.queryExecution().executedPlan().toString()

@@ -31,6 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from big_data_assignment2_2025_spark.session import default_cpus
+
 MEM = os.environ.get("SPARK_GRAFT_MEM", "2g")
 
 #: the heaviest probe cases: the widest shuffle (inverted-index pair join),
@@ -44,7 +46,7 @@ CASES = [
 
 
 def _session() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("mem_probe")

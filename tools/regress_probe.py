@@ -113,6 +113,9 @@ def main() -> None:
             continue
         times, rows, df = [], -1, None
         for _ in range(n_runs):
+            # an older tree's query may leave cached relations that would
+            # serve its next run; HEAD's bench refuses such a query
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             rows = df.count()

@@ -43,12 +43,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from big_data_assignment2_2025_spark.session import default_cpus
+
 SRC = "/root/testdata/sf0.1"
 HOT = "__hot_boilerplate_shingle__"
 
 
 def _session() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("skew_probe")
