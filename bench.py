@@ -332,7 +332,7 @@ LINE_PIN = [
     "sql_lateral_topk", "text_collocations_llr", "search_phrase_match",
     "embedding_neardup", "events_rolling_dau_approx",
     "embedding_semdedup_scaled", "pipeline_clean_corpus",
-    "embedding_semdedup",
+    "embedding_semdedup", "heavy_hitter_terms", "training_mix_sample",
     # NOTE: the pinned set is exactly the r13 stdout-line set (what
     # PERF_r14 will diff against); the budget does not fit more alongside
     # the A/B block. Queries outside the pin (e.g. the 7 r13
@@ -344,6 +344,13 @@ LINE_PIN = [
 def _dumps(obj) -> str:
     """Compact JSON (no separator whitespace) — the line budget is hard."""
     return json.dumps(obj, separators=(",", ":"))
+
+
+def _line_secs(t: float) -> float:
+    """A per-query time as the line carries it: two decimals below 10 s,
+    one below 100 s, whole seconds above (three significant digits; the
+    full map keeps every timing)."""
+    return round(t, 2) if t < 10 else round(t, 1) if t < 100 else float(round(t))
 
 
 def summary_line(
@@ -382,14 +389,14 @@ def summary_line(
         reverse=True,
     )
     for name in pinned:
-        summary["queries"][name] = round(timings[name], 2)
+        summary["queries"][name] = _line_secs(timings[name])
     # pinned overflow safety valve: drop fastest pinned entries until fit
     while len(_dumps(summary)) > LINE_BUDGET and summary["queries"]:
         drop = min(summary["queries"], key=lambda k: summary["queries"][k])
         del summary["queries"][drop]
     truncated = len(summary["queries"]) < len(pinned)
     for name in rest:
-        summary["queries"][name] = round(timings[name], 2)
+        summary["queries"][name] = _line_secs(timings[name])
         if len(_dumps(summary)) > LINE_BUDGET:
             del summary["queries"][name]
             truncated = True

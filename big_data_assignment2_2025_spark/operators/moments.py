@@ -155,7 +155,7 @@ def _eig2(a: float, b: float, c: float) -> tuple[float, float, float, float]:
     expression ORDER is frozen, so any engine replaying the identical
     expression tree on identical input doubles produces bit-identical
     eigenvectors — this function is the literal mirror of the PCA2_SQL
-    oracle's CTE chain (plans/round5_queries.py); change them TOGETHER.
+    oracle's CTE chain (plans/similarity_queries.py); change them TOGETHER.
     Sign fix: the largest-|component| of each eigenvector is positive
     (ties by taking the x component), so the arbitrary +-v ambiguity
     can't flip between engines."""
@@ -219,7 +219,7 @@ def pca2_project(
 def _det3(a11, a12, a13, a21, a22, a23, a31, a32, a33) -> float:
     """3x3 determinant by first-row cofactor expansion in a FROZEN
     operation order — the literal mirror of RIDGE2_SQL's ``w`` CTE
-    (plans/round5_queries.py); change them together."""
+    (plans/similarity_queries.py); change them together."""
     return (
         a11 * (a22 * a33 - a23 * a32)
         - a12 * (a21 * a33 - a23 * a31)

@@ -32,7 +32,7 @@ exact L2 brute force in tests/test_pq.py (k-means codebooks aren't
 SQL-replayable — same discipline as ivf_kmeans_topk and the MLlib
 MinHashLSH cross-check). The full encode→ADC→top-k chain is additionally
 HASH-GATED through a deterministic-codebook twin
-(``pq_lowest_id_codebooks`` + plans/round9_queries.py ``ann_pq_topk`` /
+(``pq_lowest_id_codebooks`` + plans/similarity_queries.py ``ann_pq_topk`` /
 ``ann_pq_rerank``), whose DuckDB oracle replays codebooks, codes, lookup
 tables and ranking from the parquet table alone.
 """
@@ -116,14 +116,6 @@ def pq_lowest_id_codebooks(
     return np.stack(
         [sample[:, j * d_sub : (j + 1) * d_sub] for j in range(m)]
     )
-
-
-def _centroid_literal(cents: np.ndarray) -> str:
-    """SQL literal array<array<double>> for one subspace's centroids."""
-    rows = ",".join(
-        "array(" + ",".join(repr(float(x)) for x in c) + ")" for c in cents
-    )
-    return f"array({rows})"
 
 
 def pq_encode(

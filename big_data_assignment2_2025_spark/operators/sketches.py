@@ -446,7 +446,7 @@ def bloom_bitmap(df: DataFrame, key_col: str) -> DataFrame:
     key count, probe-side membership is two broadcast-join lookups inside
     codegen, and the price is a DETERMINISTIC false-positive set (same
     hash → same fps on every engine, which is what lets Bloom-pruned
-    queries hash-gate — see ``plans/round7_queries.py``). ``bit_or`` is
+    queries hash-gate — see ``plans/sketches_queries.py``). ``bit_or`` is
     associative/commutative/idempotent, so bitmap construction is
     map-side partial and bitmaps from different shards/days merge by
     ``bit_or`` just like HLL registers merge by ``max``."""

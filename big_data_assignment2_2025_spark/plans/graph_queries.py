@@ -1,7 +1,8 @@
-"""Graph analytics over the co-purchase graph (round 2): triangle counting
-and degree distribution — the classic relational-graph workloads a
-training-data platform runs on entity/co-occurrence graphs (link farms,
-citation rings, near-dup clusters).
+"""Graph analytics over the co-purchase graph: triangle counting, degree
+distribution, k-core, link prediction, BFS, PageRank, label propagation
+and modularity — the relational-graph workloads a training-data platform
+runs on entity/co-occurrence graphs (link farms, citation rings, near-dup
+clusters).
 
 Graph = part co-purchase edges: two parts are adjacent iff they appear in
 >= 2 common orders (the support threshold keeps the fixture graph sparse,
@@ -32,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.materialize import materialize
+from ..operators.materialize import materialize, materialized
 from ..sources.readers import load_table
 
 
@@ -383,11 +384,365 @@ LIMIT 20
 """
 
 
+# ---------------------------------------------------------------------------
+# BFS (k-hop reachability)
+# ---------------------------------------------------------------------------
+
+def graph_bfs_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Node counts by BFS distance (≤3 hops) from the smallest node of the
+    co-purchase graph — bounded-depth reachability, the building block of
+    neighborhood sampling. Three join+min-reaggregate rounds over the edge
+    list (the iterative min-label pattern of dedup_cluster_components with a
+    fixed depth); all integers. The oracle unrolls the same three rounds as
+    CTEs."""
+    edges = _copurchase_edges(spark, sf_dir)
+    adj = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    dist = (
+        edges.agg(F.min("u").alias("node"))
+        .withColumn("dist", F.lit(0).cast("long"))
+    )
+    for i in (1, 2, 3):
+        frontier = (
+            dist.join(adj, dist["node"] == adj["u"])
+            .select(F.col("v").alias("node"), F.lit(i).cast("long").alias("dist"))
+        )
+        dist = (
+            dist.unionByName(frontier)
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"))
+        )
+    return dist.groupBy("dist").agg(F.count("*").alias("n_nodes")).orderBy("dist")
+
+
+BFS_SQL = """
+WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+edges AS (
+  SELECT a.l_partkey AS u, b.l_partkey AS v
+  FROM li a JOIN li b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY u, v HAVING COUNT(*) >= 2),
+adj AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
+d0 AS (SELECT MIN(u) AS node, 0 AS dist FROM edges),
+d1 AS (SELECT node, MIN(dist) AS dist FROM (
+         SELECT node, dist FROM d0
+         UNION ALL
+         SELECT a.v AS node, 1 AS dist FROM d0 JOIN adj a ON a.u = d0.node)
+       GROUP BY node),
+d2 AS (SELECT node, MIN(dist) AS dist FROM (
+         SELECT node, dist FROM d1
+         UNION ALL
+         SELECT a.v AS node, 2 AS dist FROM d1 JOIN adj a ON a.u = d1.node)
+       GROUP BY node),
+d3 AS (SELECT node, MIN(dist) AS dist FROM (
+         SELECT node, dist FROM d2
+         UNION ALL
+         SELECT a.v AS node, 3 AS dist FROM d2 JOIN adj a ON a.u = d2.node)
+       GROUP BY node)
+SELECT CAST(dist AS BIGINT) AS dist, CAST(COUNT(*) AS BIGINT) AS n_nodes
+FROM d3 GROUP BY dist ORDER BY dist
+"""
+
+
+# ---------------------------------------------------------------------------
+# Fixed-point PageRank
+# ---------------------------------------------------------------------------
+
+def graph_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 co-purchase nodes by 3-iteration PageRank (damping 0.85) in
+    INTEGER fixed-point: ranks are micro-units (start 1,000,000); each iteration
+    is r' = 150000 + (85 · Σ floor(r_u / deg_u)) div 100 — floor division
+    everywhere, so the result is bit-exact at any parallelism and on any
+    engine (float PageRank is order-dependent in the contribution sum and
+    cannot be hash-gated). Each iteration is one shuffle-join + one hash
+    aggregation on node id; the oracle unrolls the three iterations."""
+    edges = _copurchase_edges(spark, sf_dir)
+    # every iteration reads the symmetrized adjacency (bound: 2x the edge
+    # list); it is freed before returning, once the 20-row result is computed
+    sym = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    with materialized(sym) as adj:
+        deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
+        nodes = deg.select(F.col("u").alias("node"), "deg")
+        r = nodes.withColumn("pr", F.lit(1000000).cast("long"))
+        for _ in range(3):
+            contrib = r.join(adj, r["node"] == adj["u"]).select(
+                F.col("v").alias("node"), F.expr("pr div deg").alias("c")
+            )
+            sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+            r = nodes.join(sums, "node", "left").select(
+                "node",
+                "deg",
+                (F.lit(150000) + F.expr("(85 * coalesce(s, 0)) div 100"))
+                .cast("long")
+                .alias("pr"),
+            )
+        return materialize(
+            r.select("node", "pr").orderBy(F.desc("pr"), "node").limit(20)
+        )
+
+
+PAGERANK_SQL = """
+WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+edges AS (
+  SELECT a.l_partkey AS u, b.l_partkey AS v
+  FROM li a JOIN li b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY u, v HAVING COUNT(*) >= 2),
+adj AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
+deg AS (SELECT u AS node, COUNT(*) AS deg FROM adj GROUP BY u),
+r0 AS (SELECT node, deg, CAST(1000000 AS BIGINT) AS pr FROM deg),
+s1 AS (SELECT a.v AS node, SUM(r.pr // r.deg) AS s
+       FROM r0 r JOIN adj a ON a.u = r.node GROUP BY a.v),
+r1 AS (SELECT d.node, d.deg,
+              CAST(150000 + (85 * COALESCE(s.s, 0)) // 100 AS BIGINT) AS pr
+       FROM deg d LEFT JOIN s1 s ON s.node = d.node),
+s2 AS (SELECT a.v AS node, SUM(r.pr // r.deg) AS s
+       FROM r1 r JOIN adj a ON a.u = r.node GROUP BY a.v),
+r2 AS (SELECT d.node, d.deg,
+              CAST(150000 + (85 * COALESCE(s.s, 0)) // 100 AS BIGINT) AS pr
+       FROM deg d LEFT JOIN s2 s ON s.node = d.node),
+s3 AS (SELECT a.v AS node, SUM(r.pr // r.deg) AS s
+       FROM r2 r JOIN adj a ON a.u = r.node GROUP BY a.v),
+r3 AS (SELECT d.node, d.deg,
+              CAST(150000 + (85 * COALESCE(s.s, 0)) // 100 AS BIGINT) AS pr
+       FROM deg d LEFT JOIN s3 s ON s.node = d.node)
+SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 20
+"""
+
+
+# --------------------------------------------------------------------------
+# Label propagation (3 synchronous min-label rounds)
+# --------------------------------------------------------------------------
+
+#: synchronous propagation rounds; label(node) = min id within _LPA_ROUNDS hops
+_LPA_ROUNDS = 3
+
+
+# label propagation (``graph_label_propagation``): 3 synchronous
+# rounds of min-label propagation over the co-purchase graph — the
+# community-seeding primitive behind GraphX/Pregel LPA and the HashMin
+# connected-components family. Synchronous min-propagation has a clean
+# closed form (after k rounds each node holds the min node id within k
+# hops), so the iterative DataFrame loop is oracle-checkable by a k-step
+# join expansion in plain SQL — the same "iterate on the engine, verify
+# by unrolling" discipline as graph_kcore_peel.
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Min-label propagation on the co-purchase graph: every node starts
+    labeled with its own id; each round it takes the min of its own and
+    its neighbors' labels. Three rounds — the bounded community-seeding
+    pass (full convergence is ``dedup_cluster_components``' job).
+
+    Scale: each round is one neighbor-key equi-join + one hash
+    aggregation on the node key — the Pregel message pattern as
+    DataFrame ops, shuffle O(edges) per round. Lineage is cut per round
+    (``materialize``), the k-core discipline, so the 3-round plan never
+    compounds."""
+
+    return _label_propagation(_copurchase_edges(spark, sf_dir)).orderBy("node")
+
+
+def _label_propagation(edges: DataFrame) -> DataFrame:
+    """``(node, label)`` after ``_LPA_ROUNDS`` min-label rounds over the
+    undirected edge list ``edges(u, v)``."""
+    # every round reads both directions; bound: 2x the edge list
+    und = materialize(
+        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
+        .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
+    )
+    labels = und.select("node").distinct().withColumn("label", F.col("node"))
+    for _ in range(_LPA_ROUNDS):
+        nbr_min = (
+            und.join(
+                labels.select(
+                    F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
+                ),
+                "nbr",
+            )
+            .groupBy("node")
+            .agg(F.min("nbr_label").alias("nbr_label"))
+        )
+        # bound: one row per node
+        labels = materialize(
+            labels.join(nbr_min, "node", "left").select(
+                "node",
+                F.least(
+                    F.col("label"), F.coalesce("nbr_label", "label")
+                ).alias("label"),
+            )
+        )
+    return labels
+
+
+def _lpa_oracle() -> str:
+    """Unroll the synchronous rounds as chained CTEs: l{k} = min over
+    self + neighbors of l{k-1}. Same edges CTE as every graph oracle."""
+    # Every CTE is MATERIALIZED: round k references round k-1 TWICE
+    # (self + neighbor side), so DuckDB's default inlining re-expands
+    # the chain exponentially — the r11 10x sweep measured >55 GB of
+    # oracle-side spill. Materialized, each round evaluates once and
+    # the working set stays O(edges) per round (bounded-intermediate
+    # rewrite, r11 verdict item 2).
+    steps = []
+    for k in range(1, _LPA_ROUNDS + 1):
+        prev = f"l{k - 1}"
+        steps.append(
+            f"""l{k} AS MATERIALIZED (
+  SELECT n.node, LEAST(n.label, MIN(p.label)) AS label
+  FROM {prev} n
+  JOIN und e ON e.node = n.node
+  JOIN {prev} p ON p.node = e.nbr
+  GROUP BY n.node, n.label)"""
+        )
+    return f"""
+WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+edges AS MATERIALIZED (
+  SELECT a.l_partkey AS u, b.l_partkey AS v
+  FROM li a JOIN li b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY u, v
+  HAVING COUNT(*) >= 2),
+und AS MATERIALIZED (SELECT u AS node, v AS nbr FROM edges
+        UNION ALL SELECT v AS node, u AS nbr FROM edges),
+l0 AS MATERIALIZED (SELECT DISTINCT node, node AS label FROM und),
+{",".join(steps)}
+SELECT node, label FROM l{_LPA_ROUNDS} ORDER BY node
+"""
+
+
+# --------------------------------------------------------------------------
+# Modularity of the LPA communities
+# --------------------------------------------------------------------------
+
+# community modularity (``graph_modularity``): Newman modularity
+# contributions of the label-propagation communities on the co-purchase
+# graph — per community c: node count, intra-community edges L_c,
+# degree mass D_c, and the contribution q_c = L_c/m − (D_c/2m)².
+# Exactness: q_c = (4m·L_c − D_c²) / (4m²) has an EXACT integer
+# numerator/denominator, carried in int128 (DECIMAL(38,0) on Spark,
+# HUGEINT on DuckDB) so the only float op is one frozen division per
+# community cell. The standard "did the clustering find structure"
+# check riding on ``graph_label_propagation``'s labels.
+def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-community Newman modularity contributions for the 3-round
+    min-label communities: q_c = (4m·L_c − D_c²) / (4m²) with the
+    numerator/denominator exact int128 — m and the degree masses exceed
+    int64 squared at cluster scale, so the products are carried in
+    DECIMAL(38,0) (HUGEINT on the oracle side) and the one float op is
+    the final frozen division per community cell."""
+
+    # one edge list feeds the communities and every count below
+    edges = _copurchase_edges(spark, sf_dir)
+    labels = _label_propagation(edges)
+    # the edge-count scalar m rides the plan as a 1-row broadcast cross
+    # join instead of an eager driver count (r14, guide §2.4/§5 — no
+    # driver action, one fewer job; same exact integer, same DECIMAL(38,0)
+    # products, same frozen final division)
+    m_row = edges.agg(F.count("*").cast("long").alias("m"))
+    lab_u = labels.select(F.col("node").alias("u"), F.col("label").alias("lab_u"))
+    lab_v = labels.select(F.col("node").alias("v"), F.col("label").alias("lab_v"))
+    tagged = edges.join(lab_u, "u").join(lab_v, "v")
+    intra = (
+        tagged.where(F.col("lab_u") == F.col("lab_v"))
+        .groupBy(F.col("lab_u").alias("label"))
+        .agg(F.count("*").cast("long").alias("l_intra"))
+    )
+    und = edges.select(F.col("u").alias("node")).unionAll(
+        edges.select(F.col("v").alias("node"))
+    )
+    deg = und.groupBy("node").agg(F.count("*").cast("long").alias("degree"))
+    dmass = (
+        deg.join(labels, "node")
+        .groupBy("label")
+        .agg(
+            F.count("*").cast("long").alias("n_nodes"),
+            F.sum("degree").cast("long").alias("d_sum"),
+        )
+    )
+    cells = (
+        dmass.join(intra, "label", "left")
+        .crossJoin(F.broadcast(m_row))
+        .select(
+            "label",
+            "n_nodes",
+            F.coalesce("l_intra", F.lit(0).cast("long")).alias("l_intra"),
+            "d_sum",
+            "m",
+        )
+    )
+    return (
+        cells.select(
+            "label",
+            "n_nodes",
+            "l_intra",
+            "d_sum",
+            F.expr(
+                "CAST(floor(CAST("
+                "  CAST(4 AS DECIMAL(38,0)) * m * l_intra"
+                "  - CAST(d_sum AS DECIMAL(38,0)) * d_sum"
+                " AS DOUBLE) / CAST("
+                "  CAST(4 AS DECIMAL(38,0)) * m * m"
+                " AS DOUBLE) * 1000000 + 0.5) AS BIGINT)"
+            ).alias("q_micros"),
+        )
+        .orderBy("label")
+    )
+
+
+def _modularity_oracle() -> str:
+
+    lpa = _lpa_oracle()
+    # reuse the unrolled LPA CTE chain: strip its final SELECT, keep WITH
+    body = lpa[: lpa.rindex("SELECT node, label FROM")].rstrip().rstrip(",")
+    final_tbl = lpa[lpa.rindex("FROM l") :].split()[1]
+    return f"""{body},
+labels AS MATERIALIZED (SELECT node, label FROM {final_tbl}),
+m AS MATERIALIZED (SELECT COUNT(*) AS m FROM edges),
+tagged AS (
+  SELECT e.u, e.v, lu.label AS lab_u, lv.label AS lab_v
+  FROM edges e
+  JOIN labels lu ON lu.node = e.u
+  JOIN labels lv ON lv.node = e.v
+),
+intra AS (
+  SELECT lab_u AS label, CAST(COUNT(*) AS BIGINT) AS l_intra
+  FROM tagged WHERE lab_u = lab_v GROUP BY 1
+),
+deg AS (
+  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM und GROUP BY node
+),
+dmass AS (
+  SELECT l.label, CAST(COUNT(*) AS BIGINT) AS n_nodes,
+         CAST(SUM(d.degree) AS BIGINT) AS d_sum
+  FROM deg d JOIN labels l ON l.node = d.node
+  GROUP BY l.label
+)
+SELECT dm.label, dm.n_nodes,
+       COALESCE(i.l_intra, 0) AS l_intra, dm.d_sum,
+       CAST(floor(CAST(
+         CAST(4 AS HUGEINT) * m.m * COALESCE(i.l_intra, 0)
+         - CAST(dm.d_sum AS HUGEINT) * dm.d_sum
+       AS DOUBLE) / CAST(
+         CAST(4 AS HUGEINT) * m.m * m.m
+       AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q_micros
+FROM dmass dm
+LEFT JOIN intra i ON i.label = dm.label
+CROSS JOIN m
+ORDER BY dm.label
+"""
+
+
 QUERIES = {
     "graph_triangle_count": graph_triangle_count,
     "graph_degree_distribution": graph_degree_distribution,
     "graph_kcore_peel": graph_kcore_peel,
     "graph_link_prediction": graph_link_prediction,
+    "graph_bfs_3hop": graph_bfs_3hop,
+    "graph_pagerank_topk": graph_pagerank_topk,
+    "graph_label_propagation": graph_label_propagation,
+    "graph_modularity": graph_modularity,
 }
 
 ORACLES = {
@@ -395,4 +750,8 @@ ORACLES = {
     "graph_degree_distribution": DEGREE_SQL,
     "graph_kcore_peel": KCORE_SQL,
     "graph_link_prediction": LINK_PREDICTION_SQL,
+    "graph_bfs_3hop": BFS_SQL,
+    "graph_pagerank_topk": PAGERANK_SQL,
+    "graph_label_propagation": _lpa_oracle(),
+    "graph_modularity": _modularity_oracle(),
 }

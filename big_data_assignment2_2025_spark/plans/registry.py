@@ -6,6 +6,9 @@ Every operator from SURVEY.md §2 that is implemented has a named entry in
 semantics are SQL-expressible, a matching DuckDB oracle in ``ORACLES``.
 Column names are aliased identically on both sides (the driver's comparison
 sorts columns by name before hashing).
+
+Queries live in one module per domain; a name declared by two modules is
+refused at import time rather than silently shadowed.
 """
 
 from __future__ import annotations
@@ -15,92 +18,59 @@ from . import (
     events_queries,
     graph_queries,
     multimodal_queries,
-    parity_queries,
-    pipeline2_queries,
-    pipeline_queries,
     relational,
-    relational2,
-    relational3,
-    round3_queries,
-    round3b_queries,
-    round4_queries,
-    round5_queries,
-    round7_queries,
-    round7b_queries,
-    round7c_queries,
-    round7d_queries,
-    round7e_queries,
-    round7f_queries,
-    round7g_queries,
-    round7h_queries,
-    round7i_queries,
-    round7j_queries,
-    round7k_queries,
-    round8_queries,
-    round8c_queries,
-    round9_queries,
-    round10_queries,
-    round11_queries,
-    round12_queries,
-    round13_queries,
-    round13b_queries,
     search_queries,
     similarity_queries,
+    sketches_queries,
+    snapshot_queries,
     sql_queries,
     storage_queries,
     streaming_queries,
     temporal_queries,
     text_queries,
+    timeseries_queries,
+    tpch_queries,
 )
 
 _MODULES = [
     search_queries,
+    tpch_queries,
     relational,
-    relational2,
-    relational3,
+    sql_queries,
     dedup_queries,
-    graph_queries,
     similarity_queries,
     text_queries,
+    graph_queries,
     events_queries,
+    timeseries_queries,
+    sketches_queries,
+    temporal_queries,
     streaming_queries,
     multimodal_queries,
-    pipeline_queries,
-    pipeline2_queries,
-    temporal_queries,
-    parity_queries,
-    sql_queries,
-    round3_queries,
-    round3b_queries,
-    round4_queries,
-    round5_queries,
-    round7_queries,
-    round7b_queries,
-    round7c_queries,
-    round7d_queries,
-    round7e_queries,
-    round7f_queries,
-    round7g_queries,
-    round7h_queries,
-    round7i_queries,
-    round7j_queries,
-    round7k_queries,
-    round8_queries,
-    round8c_queries,
-    round9_queries,
-    round10_queries,
-    round11_queries,
-    round12_queries,
-    round13_queries,
-    round13b_queries,
     storage_queries,
+    snapshot_queries,
 ]
 
-QUERIES = {}
-ORACLES = {}
-for _m in _MODULES:
-    QUERIES.update(_m.QUERIES)
-    ORACLES.update(getattr(_m, "ORACLES", {}))
+
+def _merge(modules, attr: str) -> dict:
+    """Union of every module's ``attr`` dict; a name two modules declare
+    raises, naming the name and both modules."""
+    merged, origin = {}, {}
+    for m in modules:
+        for name, value in getattr(m, attr, {}).items():
+            if name in origin:
+                raise ValueError(
+                    f"{attr} name {name!r} is declared in both "
+                    f"{origin[name]} and {m.__name__}"
+                )
+            merged[name] = value
+            origin[name] = m.__name__
+    return merged
+
+
+QUERIES = _merge(_MODULES, "QUERIES")
+ORACLES = _merge(_MODULES, "ORACLES")
+
 
 #: FIXTURE-SCALE BASELINE queries -> their measured-linear scale-path twin.
 #: A baseline entry is exact and oracle-stable at the shipped fixtures but

@@ -1,7 +1,9 @@
-"""Relational operator surface over the TPC-H-ish synthetic tables
-(SURVEY.md §7 step 3): filters/projections, every join flavor, hash
+"""Relational operator surface and analytics over the TPC-H-ish synthetic
+tables (SURVEY.md §7 step 3): filters/projections, every join flavor, hash
 aggregations, distinct, set ops, sort/limit/top-k, grouping sets/rollup/
-cube, pivot/unpivot, window functions, subquery patterns.
+cube, pivot/unpivot, window functions, subquery patterns, and the
+composite analytics built from them (segmentation, profiling and audits,
+sampling, change capture and view refresh, privacy checks).
 
 Everything is stock DataFrame API — Catalyst supplies pushdown, pruning,
 join selection (broadcast hints added where a side is provably small) and
@@ -14,192 +16,21 @@ Float determinism contract (applies to every oracle-checked query here):
   Spark and DuckDB.
 - ``l_quantity`` is integral-valued, so plain double sums are exact.
 - Orderings that feed LIMIT carry a full tie-break key set.
+- Hashing is md5-derived (portable); every DuckDB integer SUM is
+  CAST(... AS BIGINT).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import math
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
+from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize
 from ..sources.readers import load_table
-
-
-def _dec(col, p=12, s=2):
-    return F.col(col).cast(f"decimal({p},{s})")
-
-
-# ---------------------------------------------------------------------------
-# Aggregation pipelines
-# ---------------------------------------------------------------------------
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan-heavy filter + 8-agg groupBy (SURVEY.md A1-A7
-    analogue on the synthetic star schema).
-
-    Money aggregates are carried as EXACT integer sums (cents for the
-    base price, the natural 1e-4/1e-6 fixed-point for the discount/tax
-    products) and converted to one frozen double division at the end.
-    The previous spelling summed exact DECIMALs and cast the SUM to
-    double — but the two engines round that decimal->double conversion
-    differently on 1-ulp boundary values, which the r11 10x oracle
-    sweep caught on sum_charge (invisible at sf0.1: smaller sums, a
-    boundary value never materialized). Integer sums never hit a
-    conversion boundary: qty/count values are exact in double, and each
-    money column is ONE bigint->double division on both engines.
-
-    Overflow headroom (ADVICE r12): the e4/e6 fixed-point rows are
-    ~1e9/~1e11 each, so a single BIGINT sum would wrap at roughly
-    sf>=1500 / sf>=100 (Spark wraps silently non-ANSI; DuckDB promotes
-    to HUGEINT then errors on the cast back — the engines diverge
-    exactly where a bigger sweep would land next). Each of those sums
-    is therefore split PER ROW into (value div scale, value mod scale)
-    and summed as two small BIGINTs — hi <= ~1.5e5/row, lo < scale —
-    recombined as ONE int->double add + divide at the end. Both partial
-    sums stay exactly representable in double far past sf100k, and the
-    recombination is the same two IEEE ops on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # exact per-row fixed-point: cents, then the discount/tax products
-    # stay integral at scale 1e-4 / 1e-6 (cents x cents)
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
-    tax_c = F.round(F.col("l_tax") * 100).cast("long")
-    disc_price_e4 = price_c * (100 - disc_c)          # scale 1e-4
-    charge_e6 = disc_price_e4 * (100 + tax_c)          # scale 1e-6
-    # per-row hi/lo split: (x - x % s) / s is exactly integral, and the
-    # double division is exact (multiple of s, < 2^53)
-    dp_lo = disc_price_e4 % 10000
-    dp_hi = ((disc_price_e4 - dp_lo) / 10000).cast("long")
-    ch_lo = charge_e6 % 1000000
-    ch_hi = ((charge_e6 - ch_lo) / 1000000).cast("long")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            (F.sum(price_c) / 100.0).alias("sum_base_price"),
-            (F.sum(dp_hi) + F.sum(dp_lo) / 10000.0).alias("sum_disc_price"),
-            (F.sum(ch_hi) + F.sum(ch_lo) / 1000000.0).alias("sum_charge"),
-            (F.sum("l_quantity") / F.count("*")).alias("avg_qty"),
-            (F.sum(price_c) / (F.count("*") * 100.0)).alias("avg_price"),
-            (F.sum(disc_c) / (F.count("*") * 100.0)).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-Q1_SQL = """
-WITH li AS (
-  SELECT l_returnflag, l_linestatus, l_quantity,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
-         CAST(round(l_discount * 100) AS BIGINT) AS disc_c,
-         CAST(round(l_tax * 100) AS BIGINT) AS tax_c
-  FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'),
-fx AS (
-  SELECT l_returnflag, l_linestatus, l_quantity, price_c, disc_c,
-         price_c * (100 - disc_c) AS dp_e4,
-         price_c * (100 - disc_c) * (100 + tax_c) AS ch_e6
-  FROM li)
-SELECT l_returnflag, l_linestatus,
-       SUM(l_quantity) AS sum_qty,
-       CAST(SUM(price_c) AS BIGINT) / 100.0 AS sum_base_price,
-       CAST(SUM(dp_e4 // 10000) AS BIGINT)
-         + CAST(SUM(dp_e4 % 10000) AS BIGINT) / 10000.0 AS sum_disc_price,
-       CAST(SUM(ch_e6 // 1000000) AS BIGINT)
-         + CAST(SUM(ch_e6 % 1000000) AS BIGINT) / 1000000.0 AS sum_charge,
-       SUM(l_quantity) / COUNT(*) AS avg_qty,
-       CAST(SUM(price_c) AS BIGINT) / (COUNT(*) * 100.0) AS avg_price,
-       CAST(SUM(disc_c) AS BIGINT) / (COUNT(*) * 100.0) AS avg_disc,
-       COUNT(*) AS count_order
-FROM fx
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join + agg + top-10 (TakeOrderedAndProject). Revenue ranked on
-    the exact decimal sum; tie-broken by orderkey."""
-    cust = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("2000-03-15").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1997-03-15").cast("timestamp")
-    )
-    revenue = F.sum(
-        _dec("l_extendedprice") * (F.lit(1).cast("decimal(4,2)") - _dec("l_discount", 4, 2))
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(revenue.alias("rev_dec"))
-        .orderBy(F.col("rev_dec").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.col("rev_dec").cast("double").alias("revenue"),
-            "o_orderdate",
-            "o_orderpriority",
-        )
-    )
-
-
-Q3_SQL = """
-SELECT l_orderkey,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-       o_orderdate, o_orderpriority
-FROM customer
-JOIN orders   ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '2000-03-15'
-  AND l_shipdate  > TIMESTAMP '1997-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) DESC,
-         l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """6-way star join: dims broadcast, facts shuffle once (TPC-H Q5 shape)."""
-    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = load_table(spark, sf_dir, "nation")
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    revenue = F.sum(
-        _dec("l_extendedprice") * (F.lit(1).cast("decimal(4,2)") - _dec("l_discount", 4, 2))
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .where(cust.c_nationkey == supp.s_nationkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(revenue.cast("double").alias("revenue"))
-    )
-
-
-Q5_SQL = """
-SELECT n_name,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE c_nationkey = s_nationkey AND r_name = 'ASIA'
-GROUP BY n_name
-"""
+from .tpch_queries import _dec
 
 
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,121 +474,6 @@ FROM part
 # Scalar function surface
 # ---------------------------------------------------------------------------
 
-def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load_table(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        F.upper("p_name").alias("name_upper"),
-        F.length("p_name").alias("name_len"),
-        F.substring("p_type", 1, 5).alias("type_prefix"),
-        F.concat_ws("|", "p_brand", "p_type").alias("brand_type"),
-        F.regexp_extract("p_brand", r"#(\d+)", 1).cast("int").alias("brand_num"),
-        F.lpad(F.col("p_size").cast("string"), 4, "0").alias("size_padded"),
-        F.replace(F.col("p_type"), F.lit(" "), F.lit("_")).alias("type_snake"),
-    )
-
-
-STRING_SQL = """
-SELECT p_partkey,
-       UPPER(p_name) AS name_upper,
-       LENGTH(p_name) AS name_len,
-       SUBSTRING(p_type, 1, 5) AS type_prefix,
-       CONCAT_WS('|', p_brand, p_type) AS brand_type,
-       CAST(regexp_extract(p_brand, '#(\\d+)', 1) AS INTEGER) AS brand_num,
-       LPAD(CAST(p_size AS VARCHAR), 4, '0') AS size_padded,
-       REPLACE(p_type, ' ', '_') AS type_snake
-FROM part
-"""
-
-
-def date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") <= 500)
-    return orders.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("order_year"),
-        F.month("o_orderdate").alias("order_month"),
-        F.dayofmonth("o_orderdate").alias("order_day"),
-        F.quarter("o_orderdate").alias("order_quarter"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("month_start"),
-        F.datediff(F.lit("2001-01-01").cast("date"), F.col("o_orderdate").cast("date")).alias("days_to_2001"),
-        F.date_add(F.col("o_orderdate").cast("date"), 30).alias("due_date"),
-        F.date_format("o_orderdate", "yyyy-MM").alias("year_month"),
-    )
-
-
-DATE_SQL = """
-SELECT o_orderkey,
-       CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS order_year,
-       CAST(EXTRACT(month FROM o_orderdate) AS INTEGER) AS order_month,
-       CAST(EXTRACT(day FROM o_orderdate) AS INTEGER) AS order_day,
-       CAST(EXTRACT(quarter FROM o_orderdate) AS INTEGER) AS order_quarter,
-       CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
-       CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2001-01-01') AS INTEGER) AS days_to_2001,
-       CAST(o_orderdate AS DATE) + 30 AS due_date,
-       strftime(o_orderdate, '%Y-%m') AS year_month
-FROM orders WHERE o_orderkey <= 500
-"""
-
-
-def math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        F.abs("c_acctbal").alias("abs_bal"),
-        F.floor("c_acctbal").cast("long").alias("floor_bal"),
-        F.ceil("c_acctbal").cast("long").alias("ceil_bal"),
-        F.round(F.sqrt(F.abs("c_acctbal")), 6).alias("sqrt_bal"),
-        F.round(F.log(F.abs(F.col("c_acctbal")) + 1.0), 6).alias("ln_bal"),
-        # x*x, not pow(x,2): IEEE multiply is correctly rounded on every
-        # engine, while Java Math.pow vs libm pow differ by 1 ulp on ~1e-3
-        # of inputs (16/15k customers at sf0.1)
-        (F.col("c_acctbal") * F.col("c_acctbal")).alias("bal_sq"),
-        F.greatest(F.col("c_acctbal"), F.lit(0.0)).alias("bal_pos"),
-        F.sign("c_acctbal").alias("bal_sign"),
-    )
-
-
-MATH_SQL = """
-SELECT c_custkey,
-       ABS(c_acctbal) AS abs_bal,
-       CAST(FLOOR(c_acctbal) AS BIGINT) AS floor_bal,
-       CAST(CEIL(c_acctbal) AS BIGINT) AS ceil_bal,
-       ROUND(SQRT(ABS(c_acctbal)), 6) AS sqrt_bal,
-       ROUND(LN(ABS(c_acctbal) + 1.0), 6) AS ln_bal,
-       c_acctbal * c_acctbal AS bal_sq,
-       GREATEST(c_acctbal, 0.0) AS bal_pos,
-       CAST(SIGN(c_acctbal) AS DOUBLE) AS bal_sign
-FROM customer
-"""
-
-
-def case_when_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        F.when(F.col("c_acctbal") < 0, "debtor")
-        .when(F.col("c_acctbal") < 1000, "low")
-        .when(F.col("c_acctbal") < 5000, "mid")
-        .otherwise("high")
-        .alias("bal_band"),
-        F.coalesce(
-            F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")), F.lit("(default)")
-        ).alias("segment_or_default"),
-        F.col("c_acctbal").isNull().cast("int").alias("bal_is_null"),
-    )
-
-
-CASE_SQL = """
-SELECT c_custkey,
-       CASE WHEN c_acctbal < 0 THEN 'debtor'
-            WHEN c_acctbal < 1000 THEN 'low'
-            WHEN c_acctbal < 5000 THEN 'mid'
-            ELSE 'high' END AS bal_band,
-       COALESCE(NULLIF(c_mktsegment, 'BUILDING'), '(default)') AS segment_or_default,
-       CAST(c_acctbal IS NULL AS INTEGER) AS bal_is_null
-FROM customer
-"""
-
 
 def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles/median per group (Spark ``percentile`` == DuckDB
@@ -894,44 +610,6 @@ SELECT c_custkey, c_mktsegment,
        round(CUME_DIST() OVER w, 6) AS bal_cume_dist
 FROM customer
 WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC)
-"""
-
-
-def array_hof_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order array functions over the embedding column — transform,
-    filter, aggregate (left fold), slice — all JVM-side codegen expressions,
-    zero UDFs. Float math stays portable because both engines fold
-    left-to-right over the same double-cast elements (and results are
-    rounded to 6)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    return emb.select(
-        "vec_id",
-        F.size("embedding").alias("dim"),
-        F.round(
-            F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x), 6
-        ).alias("vec_sum"),
-        F.round(
-            F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x), 6
-        ).alias("vec_sumsq"),
-        F.size(F.filter(v, lambda x: x > 0)).alias("n_positive"),
-        F.round(
-            F.aggregate(F.slice(v, 1, 8), F.lit(0.0), lambda a, x: a + x), 6
-        ).alias("head8_sum"),
-    )
-
-
-ARRAY_HOF_SQL = """
-WITH v AS (
-  SELECT vec_id, len(embedding) AS dim,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd
-  FROM embeddings)
-SELECT vec_id, dim,
-       round(list_reduce(list_prepend(0.0, vd), (a, x) -> a + x), 6) AS vec_sum,
-       round(list_reduce(list_prepend(0.0, vd), (a, x) -> a + x * x), 6) AS vec_sumsq,
-       len(list_filter(vd, x -> x > 0)) AS n_positive,
-       round(list_reduce(list_prepend(0.0, vd[1:8]), (a, x) -> a + x), 6) AS head8_sum
-FROM v
 """
 
 
@@ -1284,8 +962,1409 @@ FROM per_cust
 """
 
 
+# ---------------------------------------------------------------------------
+# Slowly-changing-dimension (type 2) history build
+# ---------------------------------------------------------------------------
+
+def scd2_order_price_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD2 interval build: each customer's order stream becomes a validity
+    history — every order's totalprice is the customer's 'state' from its
+    orderdate until the next order (NULL = still current). lead() over the
+    customer partition is the whole algorithm; at warehouse scale this is
+    the standard one-shuffle dimension-history derivation (no per-row
+    merge loop)."""
+    orders = load_table(spark, sf_dir, "orders")
+    by_cust = W.partitionBy("o_custkey").orderBy("valid_from", "o_orderkey")
+    return orders.select(
+        "o_custkey",
+        "o_orderkey",
+        "o_totalprice",
+        F.col("o_orderdate").alias("valid_from"),
+    ).withColumn("valid_to", F.lead("valid_from").over(by_cust))
+
+
+SCD2_PRICE_SQL = """
+SELECT o_custkey, o_orderkey, o_totalprice,
+       o_orderdate AS valid_from,
+       LEAD(o_orderdate) OVER (PARTITION BY o_custkey
+                               ORDER BY o_orderdate, o_orderkey) AS valid_to
+FROM orders
+"""
+
+
+# ---------------------------------------------------------------------------
+# Exact-moment linear regression
+# ---------------------------------------------------------------------------
+
+def stats_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OLS slope/intercept of extendedprice (cents) on quantity per return
+    flag, from EXACT integer moment sums — the same order-insensitive
+    pattern as stats_corr (native regr_slope/regr_intercept are float
+    accumulations that cannot hash-match a serial engine). One map-side
+    combinable aggregation; the float formula runs the identical IEEE op
+    sequence on both engines."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag",
+        F.col("l_quantity").cast("long").alias("x"),
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
+    )
+    d = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    m = li.groupBy("l_returnflag").agg(
+        F.count("*").cast("decimal(38,0)").alias("n"),
+        F.sum(d("x")).alias("sx"),
+        F.sum(d("y")).alias("sy"),
+        F.sum(d("x") * d("y")).alias("sxy"),
+        F.sum(d("x") * d("x")).alias("sx2"),
+    )
+    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    den = (F.col("n") * F.col("sx2") - F.col("sx") * F.col("sx")).cast("double")
+    slope = num / den
+    intercept = (
+        F.col("sy").cast("double") - slope * F.col("sx").cast("double")
+    ) / F.col("n").cast("double")
+    return m.select(
+        "l_returnflag",
+        F.col("n").cast("long").alias("n_rows"),
+        F.round(slope, 6).alias("slope_cents_per_qty"),
+        F.round(intercept, 6).alias("intercept_cents"),
+    )
+
+
+STATS_LINREG_SQL = """
+WITH s AS (
+  SELECT l_returnflag,
+         CAST(l_quantity AS BIGINT) AS x,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+  FROM lineitem),
+m AS (
+  SELECT l_returnflag,
+         CAST(COUNT(*) AS HUGEINT) AS n,
+         SUM(CAST(x AS HUGEINT)) AS sx,
+         SUM(CAST(y AS HUGEINT)) AS sy,
+         SUM(CAST(x AS HUGEINT) * y) AS sxy,
+         SUM(CAST(x AS HUGEINT) * x) AS sx2
+  FROM s GROUP BY l_returnflag)
+SELECT l_returnflag,
+       CAST(n AS BIGINT) AS n_rows,
+       round(CAST(n * sxy - sx * sy AS DOUBLE)
+             / CAST(n * sx2 - sx * sx AS DOUBLE), 6) AS slope_cents_per_qty,
+       round((CAST(sy AS DOUBLE)
+              - (CAST(n * sxy - sx * sy AS DOUBLE)
+                 / CAST(n * sx2 - sx * sx AS DOUBLE)) * CAST(sx AS DOUBLE))
+             / CAST(n AS DOUBLE), 6) AS intercept_cents
+FROM m
+ORDER BY l_returnflag
+"""
+
+
+# ---------------------------------------------------------------------------
+# Deterministic mode
+# ---------------------------------------------------------------------------
+
+def mode_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Modal order priority per status. Native mode() is tie-arbitrary in
+    both engines, so this computes it deterministically: count per value,
+    rank by (count DESC, value ASC), keep rank 1 — the portable mode."""
+    orders = load_table(spark, sf_dir, "orders")
+    counts = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
+        F.count("*").alias("n")
+    )
+    w = W.partitionBy("o_orderstatus").orderBy(F.desc("n"), F.asc("o_orderpriority"))
+    return (
+        counts.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select(
+            "o_orderstatus",
+            F.col("o_orderpriority").alias("modal_priority"),
+            F.col("n").alias("n_orders"),
+        )
+        .orderBy("o_orderstatus")
+    )
+
+
+MODE_SQL = """
+WITH c AS (SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
+           FROM orders GROUP BY o_orderstatus, o_orderpriority),
+r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderstatus
+                                   ORDER BY n DESC, o_orderpriority ASC) AS rn
+      FROM c)
+SELECT o_orderstatus, o_orderpriority AS modal_priority, n AS n_orders
+FROM r WHERE rn = 1
+ORDER BY o_orderstatus
+"""
+
+
+# ---------------------------------------------------------------------------
+# Snapshot diff (CDC-style table compare)
+# ---------------------------------------------------------------------------
+
+def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Row-level diff of two table snapshots — the reconciliation step of
+    every replication/backfill pipeline. Old and new snapshots are derived
+    deterministically from the orders fixture (disjoint key-suffix deletes
+    and inserts, a price bump on every 5th key), then FULL OUTER joined on
+    the key and classified insert / delete / update; unchanged rows are
+    dropped BEFORE the sort so the output scales with the churn, not the
+    table. One co-partitioned shuffle on the key at any scale."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    old = orders.where(F.col("o_orderkey") % 10 != 3)
+    new = orders.where(F.col("o_orderkey") % 10 != 7).select(
+        "o_orderkey",
+        F.when(
+            F.col("o_orderkey") % 5 == 0, F.col("cents") + 100
+        ).otherwise(F.col("cents")).alias("cents"),
+    )
+    o = old.select(
+        F.col("o_orderkey").alias("k"), F.col("cents").alias("old_cents")
+    )
+    n = new.select(
+        F.col("o_orderkey").alias("k"), F.col("cents").alias("new_cents")
+    )
+    diff = o.join(n, "k", "full_outer").select(
+        F.col("k").alias("o_orderkey"),
+        F.when(F.col("old_cents").isNull(), F.lit("insert"))
+        .when(F.col("new_cents").isNull(), F.lit("delete"))
+        .when(F.col("old_cents") != F.col("new_cents"), F.lit("update"))
+        .otherwise(F.lit("same"))
+        .alias("action"),
+        "old_cents",
+        "new_cents",
+    )
+    return diff.where(F.col("action") != "same").orderBy("o_orderkey")
+
+
+SNAPSHOT_DIFF_SQL = """
+WITH base AS (
+  SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+  FROM orders),
+old AS (SELECT * FROM base WHERE o_orderkey % 10 <> 3),
+new AS (
+  SELECT o_orderkey,
+         CASE WHEN o_orderkey % 5 = 0 THEN cents + 100 ELSE cents END AS cents
+  FROM base WHERE o_orderkey % 10 <> 7),
+diff AS (
+  SELECT COALESCE(old.o_orderkey, new.o_orderkey) AS o_orderkey,
+         CASE WHEN old.o_orderkey IS NULL THEN 'insert'
+              WHEN new.o_orderkey IS NULL THEN 'delete'
+              WHEN old.cents <> new.cents THEN 'update'
+              ELSE 'same' END AS action,
+         old.cents AS old_cents, new.cents AS new_cents
+  FROM old FULL OUTER JOIN new ON old.o_orderkey = new.o_orderkey)
+SELECT o_orderkey, action, old_cents, new_cents
+FROM diff WHERE action <> 'same'
+ORDER BY o_orderkey
+"""
+
+
+# ---------------------------------------------------------------------------
+# Incremental aggregate refresh (materialized-view maintenance)
+# ---------------------------------------------------------------------------
+
+def incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Refresh a materialized monthly-revenue aggregate with a delta batch
+    WITHOUT rescanning history: new_agg = re-aggregate(old_agg ∪ agg(delta)).
+    The 'old' materialization covers orders before 2001; the delta is the
+    2001+ tail. Because SUM and COUNT are decomposable, unioning the small
+    aggregate with the aggregated delta and re-summing per group is exact —
+    the oracle recomputes from ALL rows and must hash-match. This is the
+    generic form of the index builder's incremental_reindex (SURVEY.md A5):
+    at 100 TB the refresh touches only the delta partition plus the tiny
+    aggregate table."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    cut = F.lit("2001-01-01").cast("date")
+    base_agg = (
+        orders.where(F.col("month") < cut)
+        .groupBy("month")
+        .agg(F.sum("cents").alias("rev_cents"), F.count("*").alias("n_orders"))
+    )
+    delta_agg = (
+        orders.where(F.col("month") >= cut)
+        .groupBy("month")
+        .agg(F.sum("cents").alias("rev_cents"), F.count("*").alias("n_orders"))
+    )
+    return (
+        base_agg.unionByName(delta_agg)
+        .groupBy("month")
+        .agg(
+            F.sum("rev_cents").alias("rev_cents"),
+            F.sum("n_orders").alias("n_orders"),
+        )
+        .orderBy("month")
+    )
+
+
+INCREMENTAL_AGG_SQL = """
+SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         AS rev_cents,
+       COUNT(*) AS n_orders
+FROM orders
+GROUP BY month
+ORDER BY month
+"""
+
+
+def revenue_share_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Percent-of-total via FULL-PARTITION window frames (no ORDER BY): each
+    nation's share of its region's revenue and of global revenue, computed
+    from ONE aggregate + two unordered window sums — the ratio-to-report
+    pattern. Sums are exact integer cents so the division is deterministic;
+    the windows ride the tiny per-nation aggregate, never the fact table."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    per_nation = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .groupBy("r_name", "n_name")
+        .agg(
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
+                "rev_cents"
+            )
+        )
+    )
+    by_region = W.partitionBy("r_name")
+    overall = W.partitionBy()
+    return per_nation.select(
+        "r_name",
+        "n_name",
+        "rev_cents",
+        F.round(
+            F.col("rev_cents") / F.sum("rev_cents").over(by_region), 6
+        ).alias("region_share"),
+        F.round(
+            F.col("rev_cents") / F.sum("rev_cents").over(overall), 6
+        ).alias("global_share"),
+    ).orderBy("r_name", "n_name")
+
+
+REVENUE_SHARE_SQL = """
+WITH per_nation AS (
+  SELECT r_name, n_name,
+         CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           AS rev_cents
+  FROM lineitem
+  JOIN orders   ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation   ON c_nationkey = n_nationkey
+  JOIN region   ON n_regionkey = r_regionkey
+  GROUP BY r_name, n_name)
+SELECT r_name, n_name, rev_cents,
+       round(rev_cents / CAST(SUM(rev_cents) OVER (PARTITION BY r_name)
+                              AS BIGINT), 6) AS region_share,
+       round(rev_cents / CAST(SUM(rev_cents) OVER () AS BIGINT), 6)
+         AS global_share
+FROM per_nation
+ORDER BY r_name, n_name
+"""
+
+
+# ---------------------------------------------------------------------------
+# Skyline (Pareto frontier)
+# ---------------------------------------------------------------------------
+
+def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pareto frontier of parts: minimize retail price, maximize size. A part
+    is dominated iff some other part is no worse on both axes and strictly
+    better on one.
+
+    Scale shape: the naive formulation is a quadratic NOT-EXISTS self-join
+    (the oracle uses it — obviously correct, fine at 60k rows). Here the
+    skyline is computed from a per-size aggregate instead: a part survives
+    iff it is the cheapest at its size AND strictly cheaper than every
+    larger size's minimum. That turns an O(n²) join into one hash aggregate
+    over the fact table plus a window over the size DOMAIN (tens of rows,
+    broadcast back) — the distributive skyline trick that survives 100 TB
+    because nothing quadratic ever touches the big table.
+    """
+    part = load_table(spark, sf_dir, "part")
+    p = part.select(
+        "p_partkey",
+        "p_size",
+        F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents"),
+    )
+    by_size = p.groupBy("p_size").agg(F.min("price_cents").alias("min_at_size"))
+    # suffix-min over strictly larger sizes; the window spans only the size
+    # domain (|distinct sizes| rows), not the part table
+    w = W.orderBy(F.desc("p_size")).rowsBetween(W.unboundedPreceding, -1)
+    suffix = by_size.withColumn("min_above", F.min("min_at_size").over(w))
+    return (
+        p.join(F.broadcast(suffix), "p_size")
+        .where(
+            (F.col("price_cents") == F.col("min_at_size"))
+            & (
+                F.col("min_above").isNull()
+                | (F.col("min_above") > F.col("price_cents"))
+            )
+        )
+        .select("p_partkey", "p_size", "price_cents")
+    )
+
+
+SKYLINE_SQL = """
+SELECT p.p_partkey, p.p_size,
+       CAST(round(p.p_retailprice * 100) AS BIGINT) AS price_cents
+FROM part p
+WHERE NOT EXISTS (
+  SELECT 1 FROM part q
+  WHERE round(q.p_retailprice * 100) <= round(p.p_retailprice * 100)
+    AND q.p_size >= p.p_size
+    AND (round(q.p_retailprice * 100) < round(p.p_retailprice * 100)
+         OR q.p_size > p.p_size))
+"""
+
+
+# ---------------------------------------------------------------------------
+# Weighted median
+# ---------------------------------------------------------------------------
+
+def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantity-weighted median of extended price per return flag: the
+    smallest price whose RANGE-cumulative weight reaches half the total.
+    RANGE frames make tied prices contribute as one block, so the answer is
+    a pure function of (price, weight) pairs — no interpolation, no float
+    quantile machinery (cf. percentile_stats for the unweighted family)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    rows = li.select(
+        "l_returnflag",
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        F.round("l_quantity").cast("long").alias("wt"),
+    )
+    w_cum = (
+        W.partitionBy("l_returnflag")
+        .orderBy("cents")
+        .rangeBetween(W.unboundedPreceding, 0)
+    )
+    w_all = W.partitionBy("l_returnflag")
+    x = rows.select(
+        "l_returnflag",
+        "cents",
+        F.sum("wt").over(w_cum).alias("cumw"),
+        F.sum("wt").over(w_all).alias("total"),
+    )
+    return x.groupBy("l_returnflag").agg(
+        F.min(F.when(2 * F.col("cumw") >= F.col("total"), F.col("cents"))).alias(
+            "weighted_median_cents"
+        ),
+        F.max("total").alias("total_weight"),
+    )
+
+
+WEIGHTED_MEDIAN_SQL = """
+WITH rows_ AS (
+  SELECT l_returnflag,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+         CAST(round(l_quantity) AS BIGINT) AS wt
+  FROM lineitem),
+x AS (
+  SELECT l_returnflag, cents,
+         SUM(wt) OVER (PARTITION BY l_returnflag ORDER BY cents
+                       RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cumw,
+         SUM(wt) OVER (PARTITION BY l_returnflag) AS total
+  FROM rows_)
+SELECT l_returnflag,
+       CAST(MIN(CASE WHEN 2 * cumw >= total THEN cents END) AS BIGINT)
+         AS weighted_median_cents,
+       CAST(MAX(total) AS BIGINT) AS total_weight
+FROM x GROUP BY l_returnflag
+"""
+
+
+# ---------------------------------------------------------------------------
+# Association rules (confidence / lift)
+# ---------------------------------------------------------------------------
+
+def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed 2-item association rules a→b over order baskets with
+    support ≥ 2: confidence = P(b|a), lift = confidence / P(b) — the rule
+    mining step after basket_part_pairs' co-occurrence counts. All counts
+    are integers; the two ratios are single correctly-rounded divisions.
+    Shape: one bounded basket self-join for pair supports + per-item
+    aggregates joined back. The item frames are NOT hint-broadcast: they are
+    one row per distinct part — a frame that grows with scale factor, so the
+    size decision belongs to AQE (broadcast when small, shuffle join on the
+    part key otherwise); only the 1-row n_orders scalar keeps its hint."""
+    # The distinct basket projection feeds FIVE consumers (n_orders, the
+    # per-item aggregate, both sides of the pair self-join, and the b-side
+    # re-aggregate) — planned separately, that was five lineitem scans and
+    # up to five distinct shuffles per run (r14 measurement: executed plan
+    # showed 5 FileScans, 0 reused exchanges). Computed ONCE (one scan + one
+    # distinct shuffle), every consumer reads the narrow 16-byte
+    # (orderkey, partkey) rows. Bound: distinct lineitem (order, part) pairs.
+    li = materialize(
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    n_orders = li.select("l_orderkey").distinct().agg(
+        F.count("*").alias("n_orders")
+    )
+    item = li.groupBy(F.col("l_partkey").alias("a")).agg(
+        F.count("*").alias("a_orders")
+    )
+    x = li.select("l_orderkey", F.col("l_partkey").alias("a"))
+    y = li.select("l_orderkey", F.col("l_partkey").alias("b"))
+    pairs = (
+        x.join(y, "l_orderkey")
+        .where(F.col("a") != F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("support"))
+        .where(F.col("support") >= 2)
+    )
+    b_item = item.select(
+        F.col("a").alias("b"), F.col("a_orders").alias("b_orders")
+    )
+    return (
+        pairs.join(item, "a")
+        .join(b_item, "b")
+        .crossJoin(F.broadcast(n_orders))
+        .select(
+            "a",
+            "b",
+            "support",
+            F.round(F.col("support") / F.col("a_orders"), 6).alias("confidence"),
+            F.round(
+                (F.col("support") / F.col("a_orders"))
+                / (F.col("b_orders") / F.col("n_orders")),
+                6,
+            ).alias("lift"),
+        )
+    )
+
+
+ASSOCIATION_SQL = """
+WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM li),
+item AS (SELECT l_partkey AS a, COUNT(*) AS a_orders FROM li GROUP BY 1),
+pairs AS (
+  SELECT x.l_partkey AS a, y.l_partkey AS b, COUNT(*) AS support
+  FROM li x JOIN li y
+    ON x.l_orderkey = y.l_orderkey AND x.l_partkey <> y.l_partkey
+  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
+SELECT p.a, p.b, CAST(p.support AS BIGINT) AS support,
+       round(p.support / ia.a_orders, 6) AS confidence,
+       round((p.support / ia.a_orders) / (ib.a_orders / n.n_orders), 6)
+         AS lift
+FROM pairs p
+JOIN item ia ON ia.a = p.a
+JOIN item ib ON ib.a = p.b
+CROSS JOIN n
+"""
+
+
+# ---------------------------------------------------------------------------
+# Pareto concentration (80/20)
+# ---------------------------------------------------------------------------
+
+def customer_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue concentration: how many top customers cover ≥80% of total
+    order revenue, and the share of the customer base they represent. A
+    cumulative-sum prefix over the per-customer AGGREGATE (never the fact
+    table), then one scalar readout — the Pareto/ABC analysis shape.
+    Deterministic: cents cumsum is exact, ordering tie-broken by custkey,
+    and the two output ratios are single rounded divisions.
+
+    Scale shape (round 4): the global rank + running sum come from
+    ``operators.ranking.with_global_rank_cumsum`` — the two-phase
+    range-partitioned prefix sum (per-bucket totals folded into literal
+    offsets + a bucket-partitioned window cumsum) this docstring used to
+    only describe. No single-partition sort; bit-identical to the window
+    form the oracle still uses."""
+    from ..operators.ranking import NtileSpec, with_global_rank_cumsum
+
+    orders = load_table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+    )
+    ranked = with_global_rank_cumsum(
+        per_cust,
+        NtileSpec(
+            "pareto",
+            -F.col("cents"),
+            [F.desc("cents"), F.col("o_custkey").asc()],
+            sub_key=F.col("o_custkey"),
+        ),
+        value=F.col("cents"),
+        rank_col="rn",
+        cumsum_col="cum_cents",
+    ).select("o_custkey", "cents", "cum_cents", "rn")
+    totals = per_cust.agg(
+        F.sum("cents").alias("total_cents"), F.count("*").alias("n_cust")
+    )
+    hit = (
+        ranked.crossJoin(F.broadcast(totals))
+        .where(5 * F.col("cum_cents") >= 4 * F.col("total_cents"))
+        .agg(
+            F.min("rn").alias("n_top_customers"),
+            F.max("n_cust").alias("n_customers"),
+        )
+    )
+    return hit.select(
+        "n_top_customers",
+        "n_customers",
+        F.round(F.col("n_top_customers") / F.col("n_customers"), 6).alias(
+            "top_frac"
+        ),
+    )
+
+
+PARETO_SQL = """
+WITH per_cust AS (
+  SELECT o_custkey,
+         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS cents
+  FROM orders GROUP BY o_custkey),
+ranked AS (
+  SELECT o_custkey, cents,
+         SUM(cents) OVER (ORDER BY cents DESC, o_custkey
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cum_cents,
+         row_number() OVER (ORDER BY cents DESC, o_custkey) AS rn
+  FROM per_cust),
+totals AS (
+  SELECT CAST(SUM(cents) AS BIGINT) AS total_cents, COUNT(*) AS n_cust
+  FROM per_cust)
+SELECT CAST(MIN(rn) AS BIGINT) AS n_top_customers,
+       CAST(MAX(n_cust) AS BIGINT) AS n_customers,
+       round(MIN(rn) / MAX(n_cust), 6) AS top_frac
+FROM ranked CROSS JOIN totals
+WHERE 5 * cum_cents >= 4 * total_cents
+"""
+
+
+def orders_quarter_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue ROLLUP over the (year, quarter) time hierarchy — subtotal
+    rows per year and a grand total in one aggregation pass (no re-scan per
+    level; Spark expands grouping sets map-side). Cents-exact."""
+    orders = load_table(spark, sf_dir, "orders")
+    base = orders.select(
+        F.year("o_orderdate").alias("yr"),
+        F.quarter("o_orderdate").alias("qtr"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    return (
+        base.rollup("yr", "qtr")
+        .agg(
+            # grouping() must be computed inside the rollup aggregate
+            F.grouping("yr").cast("int").alias("g_yr"),
+            F.grouping("qtr").cast("int").alias("g_qtr"),
+            F.count("*").alias("n_orders"),
+            F.sum("cents").alias("rev_cents"),
+        )
+        .select("yr", "qtr", "g_yr", "g_qtr", "n_orders", "rev_cents")
+    )
+
+
+QUARTER_ROLLUP_SQL = """
+SELECT year(o_orderdate) AS yr, quarter(o_orderdate) AS qtr,
+       CAST(GROUPING(year(o_orderdate)) AS INTEGER) AS g_yr,
+       CAST(GROUPING(quarter(o_orderdate)) AS INTEGER) AS g_qtr,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         AS rev_cents
+FROM orders
+GROUP BY ROLLUP (year(o_orderdate), quarter(o_orderdate))
+"""
+
+
+def user_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lifetime-value decile segmentation: users bucketed into 10 spend
+    deciles (purchase cents, positional deciles over a fully tie-broken
+    order), then per-decile totals — the monetization report shape. The
+    decile is deterministic because the ORDER BY is a total order (cents
+    desc, user_id) over the per-user aggregate.
+
+    Scale shape: NTILE-exact deciles WITHOUT the global single-partition
+    sort, via ``operators.ranking.with_global_ntiles`` (literal range-bucket
+    boundaries -> partitioned row_number + literal offsets -> positional
+    tile formula). The oracle keeps plain NTILE; results are bit-identical."""
+    from ..operators.ranking import NtileSpec, with_global_ntiles
+
+    ev = load_table(spark, sf_dir, "events")
+    per_user = (
+        ev.where(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+        )
+    )
+    deciled = with_global_ntiles(
+        per_user,
+        [
+            NtileSpec(
+                "decile",
+                -F.col("cents"),
+                [F.desc("cents"), F.col("user_id").asc()],
+            )
+        ],
+        n_tiles=10,
+    )
+    return (
+        deciled.groupBy("decile")
+        .agg(
+            F.count("*").alias("n_users"),
+            F.sum("cents").alias("decile_cents"),
+            F.min("cents").alias("min_cents"),
+            F.max("cents").alias("max_cents"),
+        )
+        .orderBy("decile")
+    )
+
+
+LTV_DECILES_SQL = """
+WITH per_user AS (
+  SELECT user_id,
+         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+  FROM events WHERE event_type = 'purchase' GROUP BY user_id),
+deciled AS (
+  SELECT user_id, cents,
+         ntile(10) OVER (ORDER BY cents DESC, user_id) AS decile
+  FROM per_user)
+SELECT CAST(decile AS INTEGER) AS decile,
+       CAST(COUNT(*) AS BIGINT) AS n_users,
+       CAST(SUM(cents) AS BIGINT) AS decile_cents,
+       CAST(MIN(cents) AS BIGINT) AS min_cents,
+       CAST(MAX(cents) AS BIGINT) AS max_cents
+FROM deciled GROUP BY decile ORDER BY decile
+"""
+
+
+def orders_page_two(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Keyless pagination: page 2 of the order book (rows 11-20 by price
+    desc) via ORDER BY + OFFSET + LIMIT — deterministic because the sort is
+    a total order (price cents desc, key). Spark plans offset+limit as a
+    single TakeOrdered of offset+limit rows, so the cost is the page
+    horizon, not the table. (Real pagination at depth uses keyset
+    predicates — `WHERE (cents, key) < last_seen` — which this total order
+    makes possible; OFFSET is the operator-parity shape.)"""
+    orders = load_table(spark, sf_dir, "orders")
+    ranked = orders.select(
+        "o_orderkey",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    ).orderBy(F.desc("cents"), "o_orderkey")
+    return ranked.offset(10).limit(10)
+
+
+PAGE_TWO_SQL = """
+SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+FROM orders
+ORDER BY cents DESC, o_orderkey
+LIMIT 10 OFFSET 10
+"""
+
+
+# order-independent table checksum (``table_checksum_xor``): the
+# cross-cluster reconciliation primitive — bit_xor of a 60-bit digest of
+# each row's canonical string, grouped. XOR is commutative, so the result
+# is independent of partitioning/ordering and two clusters can compare
+# per-group fingerprints without moving data. 60 bits (15 hex chars) keeps
+# the value inside a signed BIGINT on both engines.
+def table_checksum_xor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order-independent per-group fingerprint of ``lineitem``: each row is
+    rendered to a canonical string (decimals fixed to 2 places, dates to
+    ISO — the one encoding both engines print identically), digested to a
+    60-bit integer (15 hex chars of md5 — fits signed BIGINT), and XOR-folded
+    per ``l_returnflag``. XOR commutes, so the fingerprint is invariant to
+    partitioning, task order, and shuffle nondeterminism — two clusters
+    compare ``(group, n_rows, checksum)`` triples instead of rows. This is
+    the anti-entropy/reconciliation primitive for replicated 100 TB tables."""
+    li = load_table(spark, sf_dir, "lineitem")
+    canon = F.concat_ws(
+        "|",
+        F.col("l_orderkey"),
+        F.col("l_linenumber"),
+        F.col("l_quantity").cast("decimal(18,2)"),
+        F.col("l_extendedprice").cast("decimal(18,2)"),
+        F.col("l_discount").cast("decimal(18,2)"),
+        F.col("l_returnflag"),
+        F.col("l_linestatus"),
+        F.date_format("l_shipdate", "yyyy-MM-dd"),
+    )
+    digest60 = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
+    return (
+        li.select("l_returnflag", digest60.alias("d"))
+        .groupBy("l_returnflag")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.expr("bit_xor(d)").alias("checksum"),
+        )
+    )
+
+
+CHECKSUM_SQL = """
+SELECT l_returnflag,
+       COUNT(*) AS n_rows,
+       bit_xor(('0x' || substr(md5(concat_ws('|',
+           l_orderkey,
+           l_linenumber,
+           CAST(l_quantity AS DECIMAL(18,2)),
+           CAST(l_extendedprice AS DECIMAL(18,2)),
+           CAST(l_discount AS DECIMAL(18,2)),
+           l_returnflag,
+           l_linestatus,
+           strftime(l_shipdate, '%Y-%m-%d'))), 1, 15))::BIGINT) AS checksum
+FROM lineitem
+GROUP BY l_returnflag
+"""
+
+
+def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Referential-integrity audit across the star schema: one row per
+    foreign key with child row count and orphan count. Each check is one
+    left join against the DISTINCT parent key (AQE broadcasts the key
+    projections that fit) + one partial-aggregating pass — no scalar
+    cross joins, no driver-side counts. The cross-table data-quality
+    gate a 100 TB warehouse runs after every load."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+
+    def check(name, child, child_key, parent, parent_key):
+        pk = parent.select(F.col(parent_key).alias("__k")).distinct().withColumn(
+            "__hit", F.lit(1)
+        )
+        j = child.select(F.col(child_key).alias("__k")).join(pk, "__k", "left")
+        return j.agg(
+            F.lit(name).alias("fk"),
+            F.count("*").alias("n_child"),
+            F.sum(F.when(F.col("__hit").isNull(), 1).otherwise(0)).alias(
+                "n_orphans"
+            ),
+        )
+
+    checks = [
+        check("lineitem.l_orderkey->orders", li, "l_orderkey", orders, "o_orderkey"),
+        check("orders.o_custkey->customer", orders, "o_custkey", cust, "c_custkey"),
+        check("customer.c_nationkey->nation", cust, "c_nationkey", nation, "n_nationkey"),
+    ]
+    out = checks[0]
+    for c in checks[1:]:
+        out = out.unionAll(c)
+    return out
+
+
+FK_AUDIT_SQL = """
+SELECT 'lineitem.l_orderkey->orders' AS fk,
+       COUNT(*) AS n_child,
+       CAST(SUM(CASE WHEN p.__k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
+FROM lineitem c
+LEFT JOIN (SELECT DISTINCT o_orderkey AS __k FROM orders) p ON c.l_orderkey = p.__k
+UNION ALL
+SELECT 'orders.o_custkey->customer',
+       COUNT(*),
+       CAST(SUM(CASE WHEN p.__k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+FROM orders c
+LEFT JOIN (SELECT DISTINCT c_custkey AS __k FROM customer) p ON c.o_custkey = p.__k
+UNION ALL
+SELECT 'customer.c_nationkey->nation',
+       COUNT(*),
+       CAST(SUM(CASE WHEN p.__k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+FROM customer c
+LEFT JOIN (SELECT DISTINCT n_nationkey AS __k FROM nation) p ON c.c_nationkey = p.__k
+"""
+
+
+# --------------------------------------------------------------------------
+# Incremental view maintenance (partial-agg refresh)
+# --------------------------------------------------------------------------
+
+#: Everything before the split is the "materialized" base state; at or
+#: after it is the delta batch. Orders span 1995..2001, so the delta is
+#: the last ~1.6 years — a realistic refresh ratio.
+_IVM_SPLIT = "2000-01-01"
+
+
+# incremental view maintenance (``ivm_orders_agg_refresh``):
+# refresh a per-customer (count, sum) aggregate from a materialized
+# partial-aggregate state plus a delta batch — re-aggregating compacted
+# partials UNIONed with delta rows, never rescanning the base fact
+# table. count/sum decompose over partials (the same mergeability that
+# powers every sketch in SCALING §13); the oracle recomputes from
+# scratch to prove refresh == full recompute.
+def ivm_orders_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Refresh per-customer (order_count, total_cents) from materialized
+    partials + a delta batch, without rescanning the base facts.
+
+    count and sum are MERGEABLE: the refreshed view is
+    re-agg(partials ∪ delta-partials). Here the base partials are built
+    once (in production they'd be read back from the materialized store —
+    the plan after the union is identical either way) and the delta scan
+    is predicate-pushed to ``o_orderdate >= split``. At 100 TB the
+    refresh shuffles |customers| + |delta| rows instead of |base facts|
+    — the same partial-agg mergeability that makes every sketch in
+    SCALING §13 distributable. Money stays in exact integer cents until
+    output. Oracle recomputes the view from scratch: refresh must equal
+    full recompute."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey",
+        "o_orderdate",
+        F.round(F.col("o_totalprice").cast("double") * 100).cast("long").alias(
+            "cents"
+        ),
+    )
+    split = F.lit(_IVM_SPLIT).cast("date")
+    base = orders.where(F.col("o_orderdate") < split)
+    delta = orders.where(F.col("o_orderdate") >= split)
+
+    def partials(df: DataFrame) -> DataFrame:
+        return df.groupBy("o_custkey").agg(
+            F.count("*").alias("cnt"), F.sum("cents").alias("total_cents")
+        )
+
+    refreshed = (
+        partials(base)
+        .unionAll(partials(delta))
+        .groupBy("o_custkey")
+        .agg(
+            F.sum("cnt").cast("long").alias("order_count"),
+            F.sum("total_cents").cast("long").alias("total_cents"),
+        )
+    )
+    return refreshed.orderBy("o_custkey")
+
+
+IVM_REFRESH_SQL = """
+SELECT o_custkey,
+       CAST(count(*) AS BIGINT) AS order_count,
+       CAST(sum(CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT)) AS BIGINT)
+         AS total_cents
+FROM orders
+GROUP BY o_custkey
+ORDER BY o_custkey
+"""
+
+
+# --------------------------------------------------------------------------
+# Deterministic per-group sample
+# --------------------------------------------------------------------------
+
+_GROUP_SAMPLE_K = 5
+
+
+def orders_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reproducible k-per-group sample: 5 orders per market segment by
+    md5-hash priority — the per-stratum companion of the global
+    ``corpus_hash_sample`` / weighted priority sampler.
+
+    The priority is a pure function of the key (52 bits of md5), so the
+    sample is stable across runs, engines, and partitionings — the
+    property that makes pipeline reruns and A/B eval sets reproducible.
+    One broadcast join (customer dim → segment) + one PARTITIONED window
+    (row_number per segment over hash order): no global sort, no driver
+    collect; per-group state at 100 TB is the k-row heap Spark keeps per
+    window partition."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+    )
+    pri = F.conv(
+        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 13), 16, 10
+    ).cast("long")
+    w = Window.partitionBy("c_mktsegment").orderBy(
+        F.col("priority").asc(), F.col("o_orderkey").asc()
+    )
+    return (
+        orders.join(F.broadcast(cust), "o_custkey")
+        .withColumn("priority", pri)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= _GROUP_SAMPLE_K)
+        .select(
+            "c_mktsegment",
+            F.col("rn").cast("int").alias("rn"),
+            "o_orderkey",
+            "priority",
+        )
+        .orderBy("c_mktsegment", "rn")
+    )
+
+
+GROUP_SAMPLE_SQL = f"""
+WITH pri AS (
+  SELECT c.c_mktsegment, o.o_orderkey,
+         ('0x' || substr(md5(CAST(o.o_orderkey AS VARCHAR)), 1, 13))::BIGINT
+           AS priority
+  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+),
+ranked AS (
+  SELECT c_mktsegment, o_orderkey, priority,
+         row_number() OVER (PARTITION BY c_mktsegment
+                            ORDER BY priority ASC, o_orderkey ASC) AS rn
+  FROM pri
+)
+SELECT c_mktsegment, CAST(rn AS INTEGER) AS rn, o_orderkey, priority
+FROM ranked WHERE rn <= {_GROUP_SAMPLE_K}
+ORDER BY c_mktsegment, rn
+"""
+
+
+# --------------------------------------------------------------------------
+# CDC snapshot diff
+# --------------------------------------------------------------------------
+
+_CDC_SPLIT = "2000-01-01"
+
+
+def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Change-data-capture between two table snapshots: emit one row per
+    INSERT / UPDATE / DELETE with old and new values.
+
+    Snapshots are derived deterministically from ``orders`` (A = the full
+    pre-2000 state; B = today's state, where every 13th pre-2000 key has
+    been deleted, post-2000 keys inserted, and every 7th open order's
+    price touched up), then diffed with ONE
+    hash-partitioned full outer join on the primary key — the change
+    feed a lakehouse derives when the source system has no native CDC.
+    Unchanged rows are dropped AFTER the join by column compare; at
+    100 TB the standard refinement is comparing a persisted per-row
+    digest instead of N columns (same join shape, narrower shuffle), and
+    partition-level pruning skips partitions whose aggregate checksum
+    (``table_checksum``'s partial) is unchanged. Money is exact integer
+    cents end to end."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_orderdate",
+        F.round(F.col("o_totalprice").cast("double") * 100).cast("long").alias(
+            "cents"
+        ),
+    )
+    split = F.lit(_CDC_SPLIT).cast("date")
+    snap_a = orders.where(F.col("o_orderdate") < split).select(
+        "o_orderkey", "o_custkey", F.col("cents").alias("cents_a")
+    )
+    snap_b = (
+        orders.where(
+            (F.col("o_orderdate") >= split) | (F.col("o_orderkey") % 13 != 0)
+        )
+        .withColumn(
+            "cents_b",
+            F.when(
+                (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 7 == 0),
+                F.col("cents") + F.lit(100),
+            ).otherwise(F.col("cents")),
+        )
+        .select("o_orderkey", "o_custkey", "cents_b")
+    )
+    diff = snap_a.join(snap_b, ["o_orderkey", "o_custkey"], "full_outer")
+    return (
+        diff.withColumn(
+            "change_type",
+            F.when(F.col("cents_a").isNull(), F.lit("insert"))
+            .when(F.col("cents_b").isNull(), F.lit("delete"))
+            .when(F.col("cents_a") != F.col("cents_b"), F.lit("update")),
+        )
+        .where(F.col("change_type").isNotNull())
+        .select("o_orderkey", "o_custkey", "change_type", "cents_a", "cents_b")
+        .orderBy("o_orderkey")
+    )
+
+
+CDC_DIFF_SQL = f"""
+WITH base AS (
+  SELECT o_orderkey, o_custkey, o_orderstatus, o_orderdate,
+         CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT) AS cents
+  FROM orders
+),
+snap_a AS (
+  SELECT o_orderkey, o_custkey, cents AS cents_a
+  FROM base
+  WHERE o_orderdate < DATE '{_CDC_SPLIT}'
+),
+snap_b AS (
+  SELECT o_orderkey, o_custkey,
+         CASE WHEN o_orderstatus = 'O' AND o_orderkey % 7 = 0
+              THEN cents + 100 ELSE cents END AS cents_b
+  FROM base
+  WHERE o_orderdate >= DATE '{_CDC_SPLIT}' OR o_orderkey % 13 != 0
+)
+SELECT o_orderkey, o_custkey,
+       CASE WHEN cents_a IS NULL THEN 'insert'
+            WHEN cents_b IS NULL THEN 'delete'
+            WHEN cents_a != cents_b THEN 'update' END AS change_type,
+       cents_a, cents_b
+FROM snap_a FULL OUTER JOIN snap_b USING (o_orderkey, o_custkey)
+WHERE (cents_a IS NULL) OR (cents_b IS NULL) OR (cents_a != cents_b)
+ORDER BY o_orderkey
+"""
+
+
+# --------------------------------------------------------------------------
+# Salted skew join
+# --------------------------------------------------------------------------
+
+#: salt fan-out: a hot key's rows spread over this many join tasks
+_N_SALTS = 8
+
+
+# salted fact⋈dim join (``skew_join_salted``): the classic hot-key
+# mitigation for a shuffled join — a fact table whose join key is heavily
+# skewed hashes ALL of a hot key's rows to one reducer; salting splits each
+# key into B sub-keys on the fact side and REPLICATES each dim row across
+# all B salts, so a hot key's probe work spreads over B tasks. AQE's
+# skew-join splitting (on by default) handles moderate skew at runtime by
+# splitting oversized partitions, but it only splits the STREAM side of a
+# sort-merge join — when one key alone exceeds executor memory or the dim
+# is too big to broadcast, the explicit salt is the deterministic fix. The
+# DuckDB oracle is the plain unsalted join, so the gate proves the salted
+# spelling is a pure physical rewrite (dim replication is a bounded ×B
+# projection of the SMALL side — never of the fact).
+def skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events ⋈ customer on ``user_id = c_custkey`` with an explicit
+    ×8 salt, aggregated per market segment.
+
+    Fact side: a deterministic row-level salt (``pmod(hash(event_id), 8)``
+    — content-derived, no RNG state, stable across retries). Dim side:
+    each customer row is replicated across all 8 salts via a bounded
+    ``explode`` (a projection — no shuffle; the replication factor applies
+    to the SMALL side only). The join keys on ``(user_id, _salt)``, so the
+    hottest user's probe rows land on 8 different reducers instead of 1;
+    the ``SHUFFLE_MERGE`` hint pins the shuffled path the salt is for (a
+    broadcast join has no reducer to skew — when the dim fits in memory,
+    broadcast and skip the salt entirely).
+
+    Every fact row carries exactly one salt and its dim match exists at
+    exactly that salt, so the salted join EQUALS the plain join — which is
+    what the unsalted DuckDB oracle gates."""
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
+    fact = ev.withColumn(
+        "_salt", F.pmod(F.hash("event_id"), F.lit(_N_SALTS))
+    )
+    dim = (
+        load_table(spark, sf_dir, "customer")
+        .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
+        .withColumn(
+            "_salt", F.explode(F.array(*[F.lit(i) for i in range(_N_SALTS)]))
+        )
+    )
+    joined = fact.join(dim.hint("SHUFFLE_MERGE"), ["user_id", "_salt"])
+    return (
+        joined.groupBy("c_mktsegment")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+        .orderBy("c_mktsegment")
+    )
+
+
+SKEW_JOIN_SALTED_SQL = """
+SELECT c.c_mktsegment,
+       count(*) AS n_events,
+       count(DISTINCT e.user_id) AS n_users,
+       round(sum(e.value), 4) AS total_value
+FROM events e JOIN customer c ON e.user_id = c.c_custkey
+GROUP BY c.c_mktsegment
+ORDER BY c.c_mktsegment
+"""
+
+
+# --------------------------------------------------------------------------
+# k-anonymity audit
+# --------------------------------------------------------------------------
+
+_K_ANON = 5
+
+
+# k-anonymity audit (``customer_k_anonymity_audit``): group sizes of
+# the quasi-identifier tuple (mktsegment, nationkey) with a k=5 flag —
+# the governance readout that decides whether an export needs
+# suppression. One aggregate; the violating-class list is the output.
+def customer_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equivalence-class sizes of the quasi-identifier (mktsegment,
+    nationkey), flagged below k=5 — the export-governance readout."""
+    cust = load_table(spark, sf_dir, "customer")
+    return (
+        cust.groupBy("c_mktsegment", "c_nationkey")
+        .agg(F.count("*").cast("long").alias("class_size"))
+        .withColumn(
+            "violates_k", F.when(F.col("class_size") < _K_ANON, 1).otherwise(0).cast("int")
+        )
+        .orderBy("c_mktsegment", "c_nationkey")
+    )
+
+
+K_ANONYMITY_SQL = f"""
+SELECT c_mktsegment, c_nationkey,
+       CAST(count(*) AS BIGINT) AS class_size,
+       CAST(CASE WHEN count(*) < {_K_ANON} THEN 1 ELSE 0 END AS INTEGER)
+         AS violates_k
+FROM customer
+GROUP BY c_mktsegment, c_nationkey
+ORDER BY c_mktsegment, c_nationkey
+"""
+
+
+# --------------------------------------------------------------------------
+# Benford leading-digit audit
+# --------------------------------------------------------------------------
+
+#: Benford expected share per leading digit, frozen in Python and embedded
+#: as identical repr-literals in both engines' expressions.
+_BENFORD_P = {d: math.log10(1.0 + 1.0 / d) for d in range(1, 10)}
+
+_DIGIT_EXPR = (
+    "CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT) AS STRING), 1, 1)"
+    " AS INT)"
+)
+
+_EXPECTED_CASE = (
+    # CAST each branch literal: DuckDB parses bare decimal literals as
+    # DECIMAL (Spark as DOUBLE); the cast pins both engines to the same
+    # IEEE double before any arithmetic touches the value.
+    "CASE digit "
+    + " ".join(
+        f"WHEN {d} THEN CAST({_BENFORD_P[d]!r} AS DOUBLE)" for d in range(1, 10)
+    )
+    + " END"
+)
+
+
+# Benford audit (``orders_benford_audit``): leading-digit
+# distribution of order totals vs Benford's law with per-digit
+# chi-square contributions — the fraud/data-entry forensic screen. The
+# expected shares are literal constants (log10(1+1/d) frozen in Python,
+# embedded in both engines' expressions), so each of the 9 bounded cells
+# is one frozen float chain over exact integer counts.
+def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Leading-digit census of o_totalprice against Benford's law: per
+    digit, the observed count/share, the expected share, and the
+    chi-square contribution ((obs − N·p)²/(N·p), micro-rounded). One
+    hash aggregation to 9 cells + a 1-row total scalar; every float op
+    runs on the bounded cell frame."""
+    orders = load_table(spark, sf_dir, "orders").where(
+        F.col("o_totalprice") >= 1.0
+    )
+    digits = orders.select(F.expr(_DIGIT_EXPR).alias("digit"))
+    counts = digits.groupBy("digit").agg(F.count("*").cast("long").alias("n"))
+    total = digits.agg(F.count("*").alias("n_total"))  # 1-row scalar
+    return (
+        counts.crossJoin(F.broadcast(total))
+        .select(
+            "digit",
+            "n",
+            F.expr(f"round({_EXPECTED_CASE}, 6)").alias("expected_share"),
+            F.expr(
+                "round(CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE), 6)"
+            ).alias("obs_share"),
+            F.expr(
+                f"CAST(floor("
+                f"  pow(CAST(n AS DOUBLE) - CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}), 2)"
+                f"  / (CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}))"
+                f"  * 1000000 + 0.5) AS BIGINT)"
+            ).alias("chi2_micros"),
+        )
+        .orderBy("digit")
+    )
+
+
+BENFORD_SQL = f"""
+WITH digits AS (
+  SELECT {_DIGIT_EXPR} AS digit
+  FROM orders WHERE o_totalprice >= 1.0
+),
+counts AS (
+  SELECT digit, CAST(count(*) AS BIGINT) AS n FROM digits GROUP BY digit
+),
+total AS (SELECT count(*) AS n_total FROM digits)
+SELECT digit, n,
+       round({_EXPECTED_CASE}, 6) AS expected_share,
+       round(CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS obs_share,
+       CAST(floor(
+         pow(CAST(n AS DOUBLE) - CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}), 2)
+         / (CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}))
+         * 1000000 + 0.5) AS BIGINT) AS chi2_micros
+FROM counts CROSS JOIN total
+ORDER BY digit
+"""
+
+
+# --------------------------------------------------------------------------
+# l-diversity audit
+# --------------------------------------------------------------------------
+
+#: minimum distinct sensitive values per quasi-identifier class
+_L_DIVERSITY = 3
+
+
+# l-diversity audit (``customer_l_diversity``): for each
+# quasi-identifier class (mktsegment, nationkey), how many DISTINCT
+# sensitive values (order priorities) its members expose — k-anonymity's
+# companion check (a large class whose members all share one sensitive
+# value still leaks it).
+def customer_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For each quasi-identifier class (mktsegment, nationkey): member
+    count and the number of DISTINCT sensitive values (order priorities)
+    the class exposes, flagged when below l=3. Classes whose members
+    placed no orders expose nothing (l=0) and are flagged too. Two hash
+    aggregations + one class-key join; the sensitive side reduces to the
+    class key before joining."""
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("c_custkey"), "o_orderpriority"
+    )
+    classes = cust.groupBy("c_mktsegment", "c_nationkey").agg(
+        F.count("*").cast("long").alias("class_size")
+    )
+    sens = (
+        cust.select("c_custkey", "c_mktsegment", "c_nationkey")
+        .join(orders, "c_custkey")
+        .groupBy("c_mktsegment", "c_nationkey")
+        .agg(F.countDistinct("o_orderpriority").cast("long").alias("l_distinct"))
+    )
+    return (
+        classes.join(sens, ["c_mktsegment", "c_nationkey"], "left")
+        .select(
+            "c_mktsegment",
+            "c_nationkey",
+            "class_size",
+            F.coalesce("l_distinct", F.lit(0).cast("long")).alias("l_distinct"),
+            F.when(
+                F.coalesce("l_distinct", F.lit(0)) < _L_DIVERSITY, 1
+            )
+            .otherwise(0)
+            .cast("int")
+            .alias("violates_l"),
+        )
+        .orderBy("c_mktsegment", "c_nationkey")
+    )
+
+
+L_DIVERSITY_SQL = f"""
+WITH classes AS (
+  SELECT c_mktsegment, c_nationkey, CAST(count(*) AS BIGINT) AS class_size
+  FROM customer GROUP BY 1, 2
+),
+sens AS (
+  SELECT c.c_mktsegment, c.c_nationkey,
+         CAST(count(DISTINCT o.o_orderpriority) AS BIGINT) AS l_distinct
+  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
+  GROUP BY 1, 2
+)
+SELECT cl.c_mktsegment, cl.c_nationkey, cl.class_size,
+       COALESCE(s.l_distinct, 0) AS l_distinct,
+       CAST(CASE WHEN COALESCE(s.l_distinct, 0) < {_L_DIVERSITY}
+                 THEN 1 ELSE 0 END AS INTEGER) AS violates_l
+FROM classes cl
+LEFT JOIN sens s
+  ON s.c_mktsegment = cl.c_mktsegment AND s.c_nationkey = cl.c_nationkey
+ORDER BY cl.c_mktsegment, cl.c_nationkey
+"""
+
+
+# --------------------------------------------------------------------------
+# SCD Type-2 history build
+# --------------------------------------------------------------------------
+
+# SCD Type-2 history (``orders_scd2_history``): the slowly-changing-
+# dimension build — collapse each customer's order-status stream into
+# versioned [valid_from, valid_to) rows with an is_current flag, run
+# detection via lag≠current + cumulative sum, deterministic
+# (o_orderdate, o_orderkey) ordering. The warehouse-history companion
+# to merge_upsert/snapshot_diff/latest_state.
+def orders_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Slowly-changing-dimension (Type 2) build over each customer's
+    order-status stream: consecutive same-status runs collapse to one
+    versioned row with [valid_from, valid_to) and an is_current flag.
+    Run detection = lag≠current + running sum; ordering is the
+    deterministic (o_orderdate, o_orderkey). Customer-partitioned
+    windows + one customer-keyed aggregation — parallel at any scale."""
+    o = load_table(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    chg = o.select(
+        "o_custkey",
+        "o_orderstatus",
+        "o_orderdate",
+        F.when(
+            F.lag("o_orderstatus").over(w).isNull()
+            | (F.lag("o_orderstatus").over(w) != F.col("o_orderstatus")),
+            1,
+        )
+        .otherwise(0)
+        .alias("chg"),
+        "o_orderkey",
+    )
+    runs = chg.select(
+        "o_custkey",
+        "o_orderstatus",
+        "o_orderdate",
+        F.sum("chg")
+        .over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .cast("long")
+        .alias("version"),
+    )
+    collapsed = runs.groupBy("o_custkey", "version", "o_orderstatus").agg(
+        F.min("o_orderdate").alias("valid_from"),
+        F.count("*").cast("long").alias("n_orders"),
+    )
+    w2 = Window.partitionBy("o_custkey").orderBy("version")
+    return (
+        collapsed.select(
+            "o_custkey",
+            "version",
+            "o_orderstatus",
+            "valid_from",
+            F.lead("valid_from").over(w2).alias("valid_to"),
+            "n_orders",
+        )
+        .withColumn(
+            "is_current",
+            F.when(F.col("valid_to").isNull(), 1).otherwise(0).cast("int"),
+        )
+        .orderBy("o_custkey", "version")
+    )
+
+
+SCD2_STATUS_SQL = """
+WITH chg AS (
+  SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
+         CASE WHEN LAG(o_orderstatus) OVER w IS NULL
+                OR LAG(o_orderstatus) OVER w <> o_orderstatus
+              THEN 1 ELSE 0 END AS chg
+  FROM orders
+  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+),
+runs AS (
+  SELECT o_custkey, o_orderstatus, o_orderdate,
+         CAST(SUM(chg) OVER (PARTITION BY o_custkey
+                             ORDER BY o_orderdate, o_orderkey
+                             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
+  FROM chg
+),
+collapsed AS (
+  SELECT o_custkey, version, o_orderstatus,
+         MIN(o_orderdate) AS valid_from,
+         CAST(count(*) AS BIGINT) AS n_orders
+  FROM runs GROUP BY 1, 2, 3
+)
+SELECT o_custkey, version, o_orderstatus, valid_from,
+       LEAD(valid_from) OVER (PARTITION BY o_custkey ORDER BY version)
+         AS valid_to,
+       n_orders,
+       CAST(CASE WHEN LEAD(valid_from) OVER (PARTITION BY o_custkey
+                                             ORDER BY version) IS NULL
+                 THEN 1 ELSE 0 END AS INTEGER) AS is_current
+FROM collapsed
+ORDER BY o_custkey, version
+"""
+
+
 QUERIES = {
-    "array_hof_funcs": array_hof_funcs,
     "basket_part_pairs": basket_part_pairs,
     "division_full_coverage": division_full_coverage,
     "rfm_segmentation": rfm_segmentation,
@@ -1296,9 +2375,6 @@ QUERIES = {
     "window_distribution": window_distribution,
     "merge_upsert_orders": merge_upsert_orders,
     "percentile_stats": percentile_stats,
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_region_revenue": q5_region_revenue,
     "agg_distinct": agg_distinct,
     "having_filter": having_filter,
     "rollup_agg": rollup_agg,
@@ -1322,14 +2398,32 @@ QUERIES = {
     "window_running_sum": window_running_sum,
     "window_lag_lead": window_lag_lead,
     "window_rank_dense": window_rank_dense,
-    "string_funcs": string_funcs,
-    "date_funcs": date_funcs,
-    "math_funcs": math_funcs,
-    "case_when_null": case_when_null,
+    "scd2_order_price_history": scd2_order_price_history,
+    "stats_linreg": stats_linreg,
+    "mode_priority_by_status": mode_priority_by_status,
+    "snapshot_diff": snapshot_diff,
+    "incremental_agg_refresh": incremental_agg_refresh,
+    "revenue_share_window": revenue_share_window,
+    "skyline_parts": skyline_parts,
+    "weighted_median_price": weighted_median_price,
+    "association_rules": association_rules,
+    "customer_pareto_8020": customer_pareto_8020,
+    "orders_page_two": orders_page_two,
+    "orders_quarter_rollup": orders_quarter_rollup,
+    "user_ltv_deciles": user_ltv_deciles,
+    "fk_integrity_audit": fk_integrity_audit,
+    "table_checksum_xor": table_checksum_xor,
+    "ivm_orders_agg_refresh": ivm_orders_agg_refresh,
+    "orders_group_sample": orders_group_sample,
+    "snapshot_diff_cdc": snapshot_diff_cdc,
+    "skew_join_salted": skew_join_salted,
+    "customer_k_anonymity_audit": customer_k_anonymity_audit,
+    "orders_benford_audit": orders_benford_audit,
+    "customer_l_diversity": customer_l_diversity,
+    "orders_scd2_history": orders_scd2_history,
 }
 
 ORACLES = {
-    "array_hof_funcs": ARRAY_HOF_SQL,
     "basket_part_pairs": BASKET_SQL,
     "division_full_coverage": DIVISION_SQL,
     "rfm_segmentation": RFM_SQL,
@@ -1340,9 +2434,6 @@ ORACLES = {
     "window_distribution": WINDOW_DISTRIBUTION_SQL,
     "merge_upsert_orders": MERGE_UPSERT_SQL,
     "percentile_stats": PERCENTILE_SQL,
-    "q1_pricing_summary": Q1_SQL,
-    "q3_shipping_priority": Q3_SQL,
-    "q5_region_revenue": Q5_SQL,
     "agg_distinct": AGG_DISTINCT_SQL,
     "having_filter": HAVING_SQL,
     "rollup_agg": ROLLUP_SQL,
@@ -1366,8 +2457,27 @@ ORACLES = {
     "window_running_sum": WINDOW_RUNNING_SQL,
     "window_lag_lead": WINDOW_LAG_SQL,
     "window_rank_dense": WINDOW_RANK_SQL,
-    "string_funcs": STRING_SQL,
-    "date_funcs": DATE_SQL,
-    "math_funcs": MATH_SQL,
-    "case_when_null": CASE_SQL,
+    "scd2_order_price_history": SCD2_PRICE_SQL,
+    "stats_linreg": STATS_LINREG_SQL,
+    "mode_priority_by_status": MODE_SQL,
+    "snapshot_diff": SNAPSHOT_DIFF_SQL,
+    "incremental_agg_refresh": INCREMENTAL_AGG_SQL,
+    "revenue_share_window": REVENUE_SHARE_SQL,
+    "skyline_parts": SKYLINE_SQL,
+    "weighted_median_price": WEIGHTED_MEDIAN_SQL,
+    "association_rules": ASSOCIATION_SQL,
+    "customer_pareto_8020": PARETO_SQL,
+    "orders_page_two": PAGE_TWO_SQL,
+    "orders_quarter_rollup": QUARTER_ROLLUP_SQL,
+    "user_ltv_deciles": LTV_DECILES_SQL,
+    "fk_integrity_audit": FK_AUDIT_SQL,
+    "table_checksum_xor": CHECKSUM_SQL,
+    "ivm_orders_agg_refresh": IVM_REFRESH_SQL,
+    "orders_group_sample": GROUP_SAMPLE_SQL,
+    "snapshot_diff_cdc": CDC_DIFF_SQL,
+    "skew_join_salted": SKEW_JOIN_SALTED_SQL,
+    "customer_k_anonymity_audit": K_ANONYMITY_SQL,
+    "orders_benford_audit": BENFORD_SQL,
+    "customer_l_diversity": L_DIVERSITY_SQL,
+    "orders_scd2_history": SCD2_STATUS_SQL,
 }

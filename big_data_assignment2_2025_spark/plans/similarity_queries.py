@@ -1,5 +1,6 @@
-"""Declared queries for similarity search (operators/similarity.py) with
-DuckDB oracles computing the same cosine/LSH math in SQL.
+"""Declared queries for similarity search and embedding analytics
+(operators/similarity.py, operators/pq.py, operators/moments.py) with
+DuckDB oracles computing the same cosine/LSH/quantization math in SQL.
 
 Cosines are rounded to 6 decimals BEFORE ranking on both sides: double
 accumulation order differs between engines, and ranking on the rounded
@@ -9,15 +10,21 @@ value keeps the top-k cut deterministic (ties broken by neighbor id).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.moments import gram_matrix, pca2_project, ridge2_fit_predict
+from ..operators.pq import pq_lowest_id_codebooks, pq_topk_fused
 from ..operators.similarity import (
+    TARGET_CELL_ROWS,
     brute_force_topk,
     cosine_neardup_pairs,
     ivf_topk,
     lsh_bucketed_topk,
+    semantic_dedup,
 )
-from ..sources.readers import load_table
+from ..sources.readers import fixture_fingerprint, load_table
+
 
 # dot/norm on doubles; embeddings are FLOAT[] so cast element-wise (exact).
 #: engine-parity-critical rounded-cosine SQL with QV/CV operand
@@ -483,6 +490,680 @@ FROM ranked WHERE rank <= 5
 """
 
 
+# ---------------------------------------------------------------------------
+# Embedding outliers vs per-label centroids (posexplode-relational)
+# ---------------------------------------------------------------------------
+
+def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 farthest vectors from their label centroid, per label — the
+    mislabeled-example sweep of an embedding-QA pipeline, done fully
+    relationally: posexplode to (vec, dim, value) rows, centroid = per
+    (label, dim) mean, distance = exact BIGINT sum of squared micro-unit
+    deltas. At 100 TB the (label, dim) centroid table is tiny (labels x
+    dims) and broadcasts back into the per-vector distance aggregation;
+    the only big shuffle keys on vec_id, which is unique → skew-free.
+
+    Floats are quantized to integer micros (round(val * 1e6)) BEFORE any
+    arithmetic: 1e6 has a 5^6 factor, so no float input can land exactly on
+    a .5 tie, making the rounding — and every downstream integer sum —
+    bit-identical across engines."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    pe = emb.select(
+        "vec_id", "label", F.posexplode("embedding").alias("dim", "val")
+    )
+    m = pe.select(
+        "vec_id",
+        "label",
+        "dim",
+        F.round(F.col("val").cast("double") * 1e6).cast("long").alias("micros"),
+    )
+    cent = m.groupBy("label", "dim").agg(
+        F.round(F.sum("micros").cast("double") / F.count("*"))
+        .cast("long")
+        .alias("c_micros")
+    )
+    delta = F.col("micros") - F.col("c_micros")
+    d2 = (
+        m.join(F.broadcast(cent), ["label", "dim"])
+        .groupBy("vec_id", "label")
+        .agg(F.sum(delta * delta).alias("d2"))
+    )
+    rk = W.partitionBy("label").orderBy(F.desc("d2"), "vec_id")
+    return (
+        d2.withColumn("rnk", F.row_number().over(rk))
+        .where(F.col("rnk") <= 3)
+        .select("label", "vec_id", "d2", "rnk")
+        .orderBy("label", "rnk")
+    )
+
+
+EMBEDDING_OUTLIERS_SQL = """
+WITH pe AS (
+  SELECT vec_id, label,
+         generate_subscripts(embedding, 1) - 1 AS dim,
+         unnest(embedding) AS val
+  FROM embeddings),
+m AS (
+  SELECT vec_id, label, dim,
+         CAST(round(CAST(val AS DOUBLE) * 1e6) AS BIGINT) AS micros
+  FROM pe),
+cent AS (
+  SELECT label, dim,
+         CAST(round(CAST(SUM(micros) AS DOUBLE) / COUNT(*)) AS BIGINT)
+           AS c_micros
+  FROM m GROUP BY label, dim),
+d2 AS (
+  SELECT vec_id, m.label,
+         CAST(SUM((micros - c_micros) * (micros - c_micros)) AS BIGINT) AS d2
+  FROM m JOIN cent ON m.label = cent.label AND m.dim = cent.dim
+  GROUP BY vec_id, m.label),
+r AS (
+  SELECT label, vec_id, d2,
+         ROW_NUMBER() OVER (PARTITION BY label
+                            ORDER BY d2 DESC, vec_id) AS rnk
+  FROM d2)
+SELECT label, vec_id, d2, rnk FROM r WHERE rnk <= 3
+ORDER BY label, rnk
+"""
+
+
+def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact integer Gram matrix of the 64-dim embedding corpus via
+    ``operators.moments.gram_matrix``: one vectorized numpy partial per
+    Arrow batch (BLAS ``M.T @ M``), d(d+1)/2 = 2,080 partial entries per
+    batch on the wire instead of 2,080 rows PER VECTOR — shuffle is
+    O(batches x d^2), independent of corpus size. The moment matrix is
+    the one-pass sufficient statistic for PCA/ridge/whitening; the oracle
+    spells the same sums via the naive explode."""
+    emb = load_table(spark, sf_dir, "embeddings").where(
+        F.col("embedding").isNotNull()
+    )
+    return gram_matrix(emb, "embedding")
+
+
+def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Principal-component scores per embedding, HASH-GATED (r6 verdict
+    task 5): the 2-feature closed-form member of the PCA family
+    (``operators.moments.pca2_project`` — exact integer moment entries,
+    frozen-order IEEE eigensystem, sign-fixed eigenvectors, micro-rounded
+    BIGINT scores), which PCA2_SQL replays bit for bit in DuckDB. The
+    general-d LAPACK path (``pca_project``, 64 dims) stays the engine API
+    for real corpora and keeps its invariant tests — eigh is the one step
+    no SQL oracle can reproduce exactly."""
+    emb = load_table(spark, sf_dir, "embeddings").where(
+        F.col("embedding").isNotNull()
+    )
+    return pca2_project(emb, "embedding")
+
+
+def embedding_ridge_label(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ridge fit of ``label`` scored over the corpus, HASH-GATED (r6
+    verdict task 5): the 2-feature closed-form member of the ridge family
+    (``operators.moments.ridge2_fit_predict`` — augmented exact-integer
+    Gram statistics, Cramer 3x3 solve in a frozen cofactor order,
+    micro-rounded BIGINT predictions), which RIDGE2_SQL replays bit for
+    bit in DuckDB. The general-d LAPACK path (``ridge_fit_predict``,
+    65x65 system) stays the engine API and keeps its fit-quality tests —
+    the large solve is the one step no SQL oracle reproduces exactly."""
+    emb = load_table(spark, sf_dir, "embeddings").where(
+        F.col("embedding").isNotNull() & F.col("label").isNotNull()
+    )
+    return ridge2_fit_predict(emb, "embedding", "label")
+
+
+GRAM_SQL = """
+WITH idx AS (SELECT CAST(k AS INTEGER) + 1 AS i FROM range(64) t(k)),
+pairs AS (SELECT a.i AS i, b.i AS j FROM idx a JOIN idx b ON a.i <= b.i)
+SELECT p.i, p.j,
+       CAST(SUM(CAST(round(embedding[p.i] * 1e6) AS BIGINT)
+                * CAST(round(embedding[p.j] * 1e6) AS BIGINT)) AS BIGINT) AS s
+FROM embeddings, pairs p
+WHERE embedding IS NOT NULL
+GROUP BY p.i, p.j
+"""
+
+
+# Literal SQL mirror of operators.moments._eig2 + pca2_project: identical
+# IEEE exact-rounded ops in the identical order on identical doubles ->
+# bit-identical eigenvectors and micro-rounded scores. Change together.
+PCA2_SQL = """
+WITH g AS (
+  SELECT CAST(CAST(SUM(x1*x1) AS BIGINT) AS DOUBLE) AS a,
+         CAST(CAST(SUM(x1*x2) AS BIGINT) AS DOUBLE) AS b,
+         CAST(CAST(SUM(x2*x2) AS BIGINT) AS DOUBLE) AS c
+  FROM (
+    SELECT CAST(round(CAST(embedding[1] AS DOUBLE) * 1e6) AS BIGINT) AS x1,
+           CAST(round(CAST(embedding[2] AS DOUBLE) * 1e6) AS BIGINT) AS x2
+    FROM embeddings WHERE embedding IS NOT NULL
+  )
+),
+eig AS (
+  SELECT a, b, c,
+         ((a + c) + sqrt((a - c)*(a - c) + 4.0*(b*b))) / 2.0 AS l1
+  FROM g
+),
+u AS (
+  SELECT CASE WHEN b <> 0.0 THEN b WHEN a >= c THEN 1.0 ELSE 0.0 END AS ux,
+         CASE WHEN b <> 0.0 THEN l1 - a WHEN a >= c THEN 0.0 ELSE 1.0 END AS uy
+  FROM eig
+),
+v AS (
+  SELECT ux / sqrt(ux*ux + uy*uy) AS vx0,
+         uy / sqrt(ux*ux + uy*uy) AS vy0
+  FROM u
+),
+s1 AS (
+  SELECT CASE WHEN (CASE WHEN abs(vx0) >= abs(vy0) THEN vx0 ELSE vy0 END) < 0.0
+              THEN -vx0 ELSE vx0 END AS v1x,
+         CASE WHEN (CASE WHEN abs(vx0) >= abs(vy0) THEN vx0 ELSE vy0 END) < 0.0
+              THEN -vy0 ELSE vy0 END AS v1y
+  FROM v
+),
+s2 AS (
+  SELECT v1x, v1y,
+         CASE WHEN (CASE WHEN abs(-v1y) >= abs(v1x) THEN -v1y ELSE v1x END) < 0.0
+              THEN v1y ELSE -v1y END AS v2x,
+         CASE WHEN (CASE WHEN abs(-v1y) >= abs(v1x) THEN -v1y ELSE v1x END) < 0.0
+              THEN -v1x ELSE v1x END AS v2y
+  FROM s1
+)
+SELECT e.vec_id, e.label,
+       CAST(round((s2.v1x * CAST(e.embedding[1] AS DOUBLE)
+                   + s2.v1y * CAST(e.embedding[2] AS DOUBLE)) * 1e6) AS BIGINT)
+         AS pc1_micros,
+       CAST(round((s2.v2x * CAST(e.embedding[1] AS DOUBLE)
+                   + s2.v2y * CAST(e.embedding[2] AS DOUBLE)) * 1e6) AS BIGINT)
+         AS pc2_micros
+FROM embeddings e, s2
+WHERE e.embedding IS NOT NULL
+"""
+
+
+# Literal SQL mirror of operators.moments._det3 + ridge2_fit_predict:
+# Cramer's rule with a frozen cofactor-expansion order over exact-integer
+# augmented-Gram statistics. Change together.
+RIDGE2_SQL = """
+WITH m0 AS (
+  SELECT CAST(round(CAST(embedding[1] AS DOUBLE) * 1e6) AS BIGINT) AS x1,
+         CAST(round(CAST(embedding[2] AS DOUBLE) * 1e6) AS BIGINT) AS x2,
+         CAST(1000000 AS BIGINT) AS xc,
+         CAST(round(CAST(label AS DOUBLE) * 1e6) AS BIGINT) AS xy
+  FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL
+),
+g AS (
+  SELECT CAST(CAST(SUM(x1*x1) AS BIGINT) AS DOUBLE)/1e12 + 0.001 AS m11,
+         CAST(CAST(SUM(x1*x2) AS BIGINT) AS DOUBLE)/1e12 AS m12,
+         CAST(CAST(SUM(x1*xc) AS BIGINT) AS DOUBLE)/1e12 AS m13,
+         CAST(CAST(SUM(x2*x2) AS BIGINT) AS DOUBLE)/1e12 + 0.001 AS m22,
+         CAST(CAST(SUM(x2*xc) AS BIGINT) AS DOUBLE)/1e12 AS m23,
+         CAST(CAST(SUM(xc*xc) AS BIGINT) AS DOUBLE)/1e12 AS m33,
+         CAST(CAST(SUM(x1*xy) AS BIGINT) AS DOUBLE)/1e12 AS r1,
+         CAST(CAST(SUM(x2*xy) AS BIGINT) AS DOUBLE)/1e12 AS r2,
+         CAST(CAST(SUM(xc*xy) AS BIGINT) AS DOUBLE)/1e12 AS r3
+  FROM m0
+),
+w AS (
+  SELECT (m11*(m22*m33 - m23*m23) - m12*(m12*m33 - m23*m13)
+          + m13*(m12*m23 - m22*m13)) AS det,
+         (r1*(m22*m33 - m23*m23) - m12*(r2*m33 - m23*r3)
+          + m13*(r2*m23 - m22*r3)) AS d1,
+         (m11*(r2*m33 - m23*r3) - r1*(m12*m33 - m23*m13)
+          + m13*(m12*r3 - r2*m13)) AS d2,
+         (m11*(m22*r3 - r2*m23) - m12*(m12*r3 - r2*m13)
+          + r1*(m12*m23 - m22*m13)) AS d3
+  FROM g
+),
+coef AS (SELECT d1/det AS w1, d2/det AS w2, d3/det AS w0 FROM w)
+SELECT e.vec_id, e.label,
+       CAST(round(((c.w1 * CAST(e.embedding[1] AS DOUBLE)
+                    + c.w2 * CAST(e.embedding[2] AS DOUBLE)) + c.w0) * 1e6)
+            AS BIGINT) AS pred_micros
+FROM embeddings e, coef c
+WHERE e.embedding IS NOT NULL AND e.label IS NOT NULL
+"""
+
+
+# --------------------------------------------------------------------------
+# int8 scalar quantization of embeddings
+# --------------------------------------------------------------------------
+
+def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric per-vector int8 scalar quantization of the embedding
+    column — the 4x-compression storage format ANN services serve from
+    (code_i = floor(x_i * 127 / max|x| + 0.5)).
+
+    All array math stays in JVM higher-order functions (``transform`` /
+    ``aggregate``) — no Python, no explode shuffle: the scan is the only
+    job. Codes are INTEGERS from a frozen IEEE expression over the raw
+    floats (``floor(x+0.5)`` rounding — engine-unambiguous, unlike
+    half-even ``round``), so the whole code vector is cross-engine exact;
+    the output carries integer checksums of the codes rather than the
+    array itself to keep the hash gate on scalar columns. At 100 TB this
+    runs as a one-pass mapper feeding the PQ/IVF build
+    (``operators/pq.py``), which consumes the same quantized geometry."""
+    emb = load_table(spark, sf_dir, "embeddings").where(
+        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
+    )
+    x = F.transform(F.col("embedding"), lambda v: v.cast("double"))
+    m = F.array_max(F.transform(x, lambda v: F.abs(v)))
+    codes = F.transform(
+        x, lambda v: F.floor(v * F.lit(127.0) / F.col("m") + F.lit(0.5)).cast("long")
+    )
+    q = (
+        emb.withColumn("m", m)
+        .where(F.col("m") > 0)
+        .withColumn("codes", codes)
+    )
+    dot = F.aggregate(
+        F.zip_with(F.col("codes"), F.col("codes"), lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    s = F.aggregate(F.col("codes"), F.lit(0).cast("long"), lambda acc, v: acc + v)
+    return q.select(
+        "vec_id",
+        F.round(F.col("m") * 1e6).cast("long").alias("scale_micro"),
+        s.alias("code_sum"),
+        dot.alias("code_sq_sum"),
+        F.array_min("codes").cast("long").alias("code_min"),
+        F.array_max("codes").cast("long").alias("code_max"),
+    ).orderBy("vec_id")
+
+
+INT8_QUANT_SQL = """
+WITH base AS (
+  SELECT vec_id,
+         list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
+  FROM embeddings
+  WHERE embedding IS NOT NULL AND len(embedding) > 0
+),
+scaled AS (
+  SELECT vec_id, x,
+         list_max(list_transform(x, v -> abs(v))) AS m
+  FROM base
+),
+coded AS (
+  SELECT vec_id, m,
+         list_transform(x, v -> CAST(floor(v * 127.0 / m + 0.5) AS BIGINT)) AS codes
+  FROM scaled
+  WHERE m > 0
+)
+SELECT vec_id,
+       CAST(round(m * 1e6) AS BIGINT) AS scale_micro,
+       CAST(list_sum(codes) AS BIGINT) AS code_sum,
+       CAST(list_sum(list_transform(codes, c -> c * c)) AS BIGINT) AS code_sq_sum,
+       CAST(list_min(codes) AS BIGINT) AS code_min,
+       CAST(list_max(codes) AS BIGINT) AS code_max
+FROM coded
+ORDER BY vec_id
+"""
+
+
+def _cos(qv: str, cv: str) -> str:
+    return COSINE_SQL_TEMPLATE.replace("QV", qv).replace("CV", cv)
+
+
+# semantic dedup (``embedding_semdedup``): SemDeDup (Abbas et al.
+# 2023) re-expressed on the deterministic IVF quantizer — cluster the
+# embedding space into cells, drop within-cell vectors whose cosine to a
+# lower-id cellmate clears the threshold. Complements
+# ``embedding_neardup`` (label-blocked pairs) by *discovering* the
+# blocking from geometry, which is the production shape when no cheap
+# block key exists: the cluster step is what bounds the pair space at
+# 100 TB.
+def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup over the embedding corpus: 8 deterministic centroid
+    cells, within-cell cosine >= 0.4 to a lower-id cellmate marks a
+    semantic duplicate. Full-corpus verdict row per vector."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return semantic_dedup(emb, n_cells=8, threshold=0.4)
+
+
+SEMDEDUP_SQL = f"""
+WITH cents AS (
+  SELECT vec_id AS cell, embedding AS cent FROM embeddings ORDER BY vec_id LIMIT 8),
+assign AS (
+  SELECT vec_id, cv, cell FROM (
+    SELECT e.vec_id, e.embedding AS cv, ct.cell,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+             {_cos('ct.cent', 'e.embedding')} DESC, ct.cell ASC) AS r
+    FROM embeddings e CROSS JOIN cents ct) WHERE r <= 1),
+dup_counts AS (
+  SELECT a.cell, b.vec_id, COUNT(*) AS n_dup_lower
+  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
+  WHERE {_cos('a.cv', 'b.cv')} >= 0.4
+  GROUP BY a.cell, b.vec_id)
+SELECT s.cell, s.vec_id,
+       CAST(COALESCE(d.n_dup_lower, 0) AS BIGINT) AS n_dup_lower,
+       CAST(CASE WHEN d.n_dup_lower IS NULL THEN 1 ELSE 0 END AS INTEGER) AS kept
+FROM assign s LEFT JOIN dup_counts d ON s.cell = d.cell AND s.vec_id = d.vec_id
+"""
+
+
+#: PQ geometry for the 64-dim fixture: 8 subspaces x 8 dims, 16 centroids
+_M, _K_CENTS, _D_SUB = 8, 16, 8
+#: Hamming-family-style shortlist for the IVFADC-style exact rerank
+_PQ_SHORTLIST = 32
+
+#: codebooks are TRAINING ARTIFACTS (tiny driver constants, built once per
+#: corpus in production); memoize per fixture fingerprint so repeated
+#: bench/oracle invocations don't re-run the lowest-id collect job
+_BOOKS_CACHE: dict = {}
+
+
+def _pq_books(spark: SparkSession, sf_dir: str):
+    key = fixture_fingerprint(sf_dir)
+    if key not in _BOOKS_CACHE:
+        emb = load_table(spark, sf_dir, "embeddings")
+        _BOOKS_CACHE[key] = pq_lowest_id_codebooks(
+            emb, m=_M, k=_K_CENTS
+        )
+    return _BOOKS_CACHE[key]
+
+
+# PQ was the one ANN family without a CORRECTNESS entry (the trained
+# codebooks of ``pq_train_codebooks`` aren't SQL-replayable). These queries
+# run the SAME production operators — ``pq_encode``'s Catalyst argmin
+# encoding and ``pq_topk``'s Arrow-batched ADC scan / exact rerank — over a
+# deterministic-codebook twin (``pq_lowest_id_codebooks``: per-subspace
+# centroids are the subvectors of the 16 lowest-id corpus vectors, the
+# ``ivf_topk`` trick), so DuckDB can reconstruct codebooks, codes, lookup
+# tables and the ranked result from the parquet table alone.
+#
+# Engine-parity rules (same discipline as plans/similarity_queries.py):
+# every distance is an IEEE-double chain over CAST-to-double floats; ADC
+# distances are rounded to 6 decimals BEFORE ranking on both sides (double
+# accumulation order differs between numpy's unrolled reduction and
+# DuckDB's list_sum fold); all ranking ties break by neighbor id. The
+# encode argmin compares full-precision subspace distances computed by the
+# identical (a-b)*(a-b) left-fold on both engines, with ties to the lowest
+# centroid index (``array_position`` picks the first minimum).
+def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ADC top-5 neighbors (approximate L2) for query vectors vec_id < 5
+    over 8x16 lowest-id-codebook product quantization. Encode + ADC run
+    fused in one Arrow pass (``pq_topk_fused``, r13): bit-identical to
+    ``pq_encode`` + ``pq_topk`` and ~2x faster — the Catalyst encode's
+    interpreted HOF lambdas were the cost, not the arithmetic."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    books = _pq_books(spark, sf_dir)
+    queries = emb.where(F.col("vec_id") < 5)
+    return pq_topk_fused(emb, queries, books, k=5)
+
+
+def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVFADC-style two-stage retrieval: 32-candidate ADC shortlist over
+    the 8-byte PQ codes, exact-L2 rerank of only those candidates against
+    the float vectors — the production read path where the full-precision
+    table is probed per shortlist row, never scanned."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    books = _pq_books(spark, sf_dir)
+    queries = emb.where(F.col("vec_id") < 5)
+    return pq_topk_fused(
+        emb, queries, books, k=5, shortlist=_PQ_SHORTLIST, rerank_corpus=emb
+    )
+
+
+# Shared oracle CTEs: cents = lowest-id codebooks; cdist = every
+# (vector, subspace, centroid) squared L2 over the subvector (the same
+# left-fold (a-b)*(a-b) chain as pq_encode's Catalyst expression); codes =
+# per-(vector, subspace) argmin with ties to the lowest centroid index;
+# adc = LUT-summed approximate distances, rounded before ranking.
+_PQ_CTES = f"""
+cents AS (
+  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS cv
+  FROM embeddings ORDER BY vec_id LIMIT {_K_CENTS}),
+sub AS (SELECT unnest(range({_M})) AS j),
+cdist AS (
+  SELECT e.vec_id, s.j, c.cidx,
+         list_sum(list_transform(range(1, {_D_SUB} + 1), i ->
+           (CAST(c.cv[CAST(s.j * {_D_SUB} + i AS INTEGER)] AS DOUBLE)
+            - CAST(e.embedding[CAST(s.j * {_D_SUB} + i AS INTEGER)] AS DOUBLE))
+           * (CAST(c.cv[CAST(s.j * {_D_SUB} + i AS INTEGER)] AS DOUBLE)
+              - CAST(e.embedding[CAST(s.j * {_D_SUB} + i AS INTEGER)] AS DOUBLE))
+         )) AS d2
+  FROM embeddings e CROSS JOIN sub s CROSS JOIN cents c),
+codes AS (
+  SELECT vec_id, j, cidx FROM (
+    SELECT vec_id, j, cidx,
+           ROW_NUMBER() OVER (PARTITION BY vec_id, j
+                              ORDER BY d2 ASC, cidx ASC) AS r
+    FROM cdist) t WHERE r = 1),
+adc AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         round(SUM(q.d2), 6) AS approx_d2
+  FROM codes c
+  JOIN cdist q ON q.j = c.j AND q.cidx = c.cidx AND q.vec_id < 5
+  WHERE c.vec_id <> q.vec_id
+  GROUP BY 1, 2),
+adc_ranked AS (
+  SELECT query_id, neighbor_id, approx_d2,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY approx_d2 ASC, neighbor_id ASC) AS rank
+  FROM adc)
+"""
+
+ANN_PQ_TOPK_SQL = f"""
+WITH {_PQ_CTES}
+SELECT query_id, neighbor_id, approx_d2, CAST(rank AS INTEGER) AS rank
+FROM adc_ranked WHERE rank <= 5
+"""
+
+ANN_PQ_RERANK_SQL = f"""
+WITH {_PQ_CTES},
+shortlist AS (
+  SELECT query_id, neighbor_id FROM adc_ranked
+  WHERE rank <= {_PQ_SHORTLIST}),
+rer AS (
+  SELECT s.query_id, s.neighbor_id,
+         round(list_sum(list_transform(range(1, len(eq.embedding) + 1), i ->
+           (CAST(eq.embedding[CAST(i AS INTEGER)] AS DOUBLE)
+            - CAST(ec.embedding[CAST(i AS INTEGER)] AS DOUBLE))
+           * (CAST(eq.embedding[CAST(i AS INTEGER)] AS DOUBLE)
+              - CAST(ec.embedding[CAST(i AS INTEGER)] AS DOUBLE))
+         )), 6) AS exact_d2
+  FROM shortlist s
+  JOIN embeddings eq ON eq.vec_id = s.query_id
+  JOIN embeddings ec ON ec.vec_id = s.neighbor_id),
+reranked AS (
+  SELECT query_id, neighbor_id, exact_d2,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY exact_d2 ASC, neighbor_id ASC) AS rank
+  FROM rer)
+SELECT query_id, neighbor_id, exact_d2, CAST(rank AS INTEGER) AS rank
+FROM reranked WHERE rank <= 5
+"""
+
+
+# --------------------------------------------------------------------------
+# SQ8 scalar-quantized ANN — the int8 compression rung between the binary
+# sign signatures (32x smaller, coarse) and PQ codes (32x, trained)
+# --------------------------------------------------------------------------
+
+#: quantization levels: symmetric int8, q in [-127, 127]
+_SQ8_LEVELS = 127
+
+
+def _sq8_quantized(emb: DataFrame) -> DataFrame:
+    """(vec_id, q array<int>, qnorm2 bigint): per-vector symmetric int8
+    quantization — scale = max|x| / 127, code = floor(x/scale + 0.5)
+    (explicit floor-half-up, identical IEEE chain in DuckDB, no
+    engine-specific round()). The scale cancels out of the cosine, so
+    scored distances are INTEGER dot products over int8 codes divided by
+    integer norms: exact cross-engine, and the scan reads 4x less than
+    fp32 — the standard FAISS SQ8 trade (quantization error only,
+    no training)."""
+    x = "CAST(e AS DOUBLE)"
+    scale = (
+        f"greatest(aggregate(embedding, CAST(0 AS DOUBLE),"
+        f" (a, e) -> greatest(a, abs({x}))), CAST(1e-12 AS DOUBLE))"
+        f" / {_SQ8_LEVELS}"
+    )
+    # scale and q are HOISTED into their own columns (r13): inlining the
+    # scale aggregate into the quantize lambda made the interpreted HOF
+    # path re-run it per ELEMENT (64x64 evals/row), and inlining q into
+    # the norm re-ran the quantize transform — hoisted, each evaluates
+    # once per row (measured 1.1 -> 0.7 s on the sf0.1 noop, identical
+    # values row for row; the IEEE chain per element is unchanged)
+    return (
+        emb.withColumn("_scale", F.expr(scale))
+        .withColumn(
+            "q",
+            F.expr(
+                f"transform(embedding, e -> CAST(floor({x} / _scale"
+                f" + 0.5D) AS INT))"
+            ),
+        )
+        .withColumn(
+            "qnorm2",
+            F.expr("aggregate(q, 0L, (a, c) -> a + CAST(c AS BIGINT) * c)"),
+        )
+        .select("vec_id", "q", "qnorm2")
+    )
+
+
+def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate cosine top-5 for query vectors vec_id < 5 over int8
+    scalar-quantized embeddings: integer dot product of the codes over
+    the integer norms (per-vector scales cancel), rounded to 6 decimals
+    before ranking, ties by neighbor id."""
+    from pyspark.sql import Window
+
+    emb = load_table(spark, sf_dir, "embeddings").where(
+        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
+    )
+    sq = _sq8_quantized(emb)
+    qs = sq.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("q").alias("qq"),
+        F.col("qnorm2").alias("qn"),
+    )
+    dot = F.expr(
+        "aggregate(zip_with(qq, q, (a, b) -> CAST(a AS BIGINT) * b),"
+        " 0L, (acc, x) -> acc + x)"
+    )
+    scored = (
+        sq.join(F.broadcast(qs))
+        .where(F.col("query_id") != F.col("vec_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(
+                dot
+                / (
+                    F.sqrt(F.col("qn").cast("double"))
+                    * F.sqrt(F.col("qnorm2").cast("double"))
+                ),
+                6,
+            ).alias("cosine_q"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_q"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 5)
+        .select(
+            "query_id", "neighbor_id", "cosine_q",
+            F.col("rank").cast("int").alias("rank"),
+        )
+    )
+
+
+_SQ8_SCALE_SQL = (
+    f"greatest(list_max(list_transform(embedding,"
+    f" e -> abs(CAST(e AS DOUBLE)))), CAST(1e-12 AS DOUBLE))"
+    f" / {_SQ8_LEVELS}"
+)
+_SQ8_Q_SQL = (
+    f"list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE)"
+    f" / ({_SQ8_SCALE_SQL}) + 0.5) AS INTEGER))"
+)
+
+ANN_SQ8_SQL = f"""
+WITH e AS (
+  SELECT vec_id, embedding FROM embeddings
+  WHERE embedding IS NOT NULL AND len(embedding) > 0
+),
+sq AS (
+  SELECT vec_id, {_SQ8_Q_SQL} AS q FROM e
+),
+sqn AS (
+  SELECT vec_id, q,
+         list_sum(list_transform(q, c -> CAST(c AS BIGINT) * c)) AS qnorm2
+  FROM sq
+),
+qs AS (SELECT vec_id AS query_id, q AS qq, qnorm2 AS qn
+       FROM sqn WHERE vec_id < 5),
+scored AS (
+  SELECT qs.query_id, c.vec_id AS neighbor_id,
+         round(
+           list_sum(list_transform(range(1, len(c.q) + 1),
+             i -> CAST(qs.qq[CAST(i AS INTEGER)] AS BIGINT)
+                  * c.q[CAST(i AS INTEGER)]))
+           / (sqrt(CAST(qs.qn AS DOUBLE)) * sqrt(CAST(c.qnorm2 AS DOUBLE))),
+           6) AS cosine_q
+  FROM sqn c CROSS JOIN qs
+  WHERE qs.query_id <> c.vec_id
+),
+ranked AS (
+  SELECT query_id, neighbor_id, cosine_q,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
+  FROM scored)
+SELECT query_id, neighbor_id, cosine_q, CAST(rank AS INTEGER) AS rank
+FROM ranked WHERE rank <= 5
+"""
+
+
+# scale-aware SemDeDup (``embedding_semdedup_scaled``): the r9 probe
+# measured 10.01x (quadratic) within-cell pair growth at a 10x corpus
+# with the fixed 8-cell quantizer, and ~10x (linear) with k scaled to the
+# corpus — SemDeDup's own regime (Abbas et al. 2023 use k ∝ n, e.g. 50k
+# clusters on LAION-440M). ``semantic_dedup`` now derives
+# ``k = ceil(n / 50)`` by default; this gate pins that derivation
+# cross-engine at every fixture (k=10 at 500 vectors, k=40 at 2000).
+# The fixed-k twin ``embedding_semdedup`` stays as the oracle-stable
+# baseline-tier query.
+def embedding_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup with the scale-aware quantizer: n_cells derived from the
+    corpus count (k = ceil(n / 50)), within-cell cosine >= 0.4 to a
+    lower-id cellmate marks a semantic duplicate. This is the production
+    default — fixed k makes within-cell pairs quadratic in the corpus
+    (measured in tools/scale_probe.py); scaling k with n keeps them
+    linear."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return semantic_dedup(emb, n_cells=None, threshold=0.4)
+
+
+SEMDEDUP_SCALED_SQL = f"""
+WITH params AS (
+  SELECT GREATEST(1, CAST(CEIL(COUNT(*) / {TARGET_CELL_ROWS}.0) AS BIGINT)) AS k
+  FROM embeddings),
+cents AS (
+  SELECT vec_id AS cell, embedding AS cent
+  FROM (SELECT vec_id, embedding,
+               ROW_NUMBER() OVER (ORDER BY vec_id) AS r
+        FROM embeddings), params
+  WHERE r <= params.k),
+assign AS (
+  SELECT vec_id, cv, cell FROM (
+    SELECT e.vec_id, e.embedding AS cv, ct.cell,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+             {_cos('ct.cent', 'e.embedding')} DESC, ct.cell ASC) AS r
+    FROM embeddings e CROSS JOIN cents ct) WHERE r <= 1),
+dup_counts AS (
+  SELECT a.cell, b.vec_id, COUNT(*) AS n_dup_lower
+  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
+  WHERE {_cos('a.cv', 'b.cv')} >= 0.4
+  GROUP BY a.cell, b.vec_id)
+SELECT s.cell, s.vec_id,
+       CAST(COALESCE(d.n_dup_lower, 0) AS BIGINT) AS n_dup_lower,
+       CAST(CASE WHEN d.n_dup_lower IS NULL THEN 1 ELSE 0 END AS INTEGER) AS kept
+FROM assign s LEFT JOIN dup_counts d ON s.cell = d.cell AND s.vec_id = d.vec_id
+"""
+
+
 QUERIES = {
     "knn_classify": knn_classify,
     "ann_bruteforce_topk": ann_bruteforce_topk,
@@ -491,6 +1172,16 @@ QUERIES = {
     "embedding_neardup": embedding_neardup,
     "embedding_binary_hamming_topk": embedding_binary_hamming_topk,
     "ann_hamming_rerank": ann_hamming_rerank,
+    "embedding_outliers": embedding_outliers,
+    "embedding_gram_matrix": embedding_gram_matrix,
+    "embedding_pca_project": embedding_pca_project,
+    "embedding_ridge_label": embedding_ridge_label,
+    "embedding_int8_quantize": embedding_int8_quantize,
+    "embedding_semdedup": embedding_semdedup,
+    "ann_pq_topk": ann_pq_topk,
+    "ann_pq_rerank": ann_pq_rerank,
+    "ann_sq8_topk": ann_sq8_topk,
+    "embedding_semdedup_scaled": embedding_semdedup_scaled,
 }
 
 ORACLES = {
@@ -501,4 +1192,14 @@ ORACLES = {
     "embedding_neardup": EMBEDDING_NEARDUP_SQL,
     "embedding_binary_hamming_topk": EMBEDDING_BINARY_HAMMING_SQL,
     "ann_hamming_rerank": ANN_HAMMING_RERANK_SQL,
+    "embedding_outliers": EMBEDDING_OUTLIERS_SQL,
+    "embedding_gram_matrix": GRAM_SQL,
+    "embedding_pca_project": PCA2_SQL,
+    "embedding_ridge_label": RIDGE2_SQL,
+    "embedding_int8_quantize": INT8_QUANT_SQL,
+    "embedding_semdedup": SEMDEDUP_SQL,
+    "ann_pq_topk": ANN_PQ_TOPK_SQL,
+    "ann_pq_rerank": ANN_PQ_RERANK_SQL,
+    "ann_sq8_topk": ANN_SQ8_SQL,
+    "embedding_semdedup_scaled": SEMDEDUP_SCALED_SQL,
 }

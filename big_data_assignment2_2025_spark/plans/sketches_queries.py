@@ -1,50 +1,142 @@
-"""Round-7 queries: deterministic-sketch observability surfaces.
+"""Deterministic sketches and column statistics: HyperLogLog distinct
+counts and rollups, count-min frequencies, KMV set algebra, chunked
+bitmaps, fixed-bin histogram quantiles, heavy hitters, weighted sampling,
+bloom-filter pruning (operators/sketches.py), and the column profiles a
+planner or data-quality monitor keeps (most-common values, null and range
+audits, observed metrics, entropy).
 
-The round-7 theme is sketches whose STATE is engine-reproducible
-(SCALING §13) — the HLL rolling-DAU twins live with their families
-(``plans/round5_queries.py``, ``plans/streaming_queries.py``); this
-module holds the rest of the deterministic-sketch surface:
-
-- **histogram quantiles** (``events_value_quantiles_hist``): per-type
-  p50/p90/p99 of ``events.value`` via the mergeable fixed-range
-  histogram of ``operators/sketches.py hist_quantile_sketch`` — integer
-  bin counts that combine map-side (each task emits <= groups x 256
-  rows whatever the event volume), quantile recovery by integer
-  cumulative-count inversion, error bounded by one bin width. The
-  monitoring shape a 100 TB pipeline runs hourly, where the exact
-  rank-based path (``operators/ranking.py``) would re-rank the world.
-- **rolling quantiles** (``events_rolling_quantiles_hist``): 7-day
-  sliding p50/p99 by ADDING day histograms over a bounded count fan-out
-  — exact quantiles don't decompose over sliding windows; counts do.
-- **HLL set algebra** (``events_audience_overlap_hll``): distinct-user
-  union by per-bucket register max, intersection by inclusion-exclusion
-  on the micro-rounded estimates — audience overlap without ever
-  shuffling a user set.
-- **one-scan profiling** (``lineitem_distinct_profile_hll``): per-column
-  approx distinct via a stack unpivot feeding per-column registers.
-- **Bloom semi-join pruning** (``orders_bloom_prune``): 4 KB bit_or
-  bitmap build, literal-map codegen probe with zero joins/exchanges on
-  the fact side, deterministic false-positive set.
-
-No counterpart in the reference (index+query only); LLM-pipeline
-extension per SURVEY.md §7.6, hash-gated against a literal DuckDB
-mirror (integer algebra + frozen-order IEEE tails only).
+Each sketch's STATE is engine-reproducible (SCALING §13): hashes are
+md5-derived, registers and counters are integer algebra, and the estimate
+is a frozen-order IEEE tail, so each query hash-gates against a literal
+DuckDB mirror. The streaming twins live in plans/streaming_queries.py and
+share these oracles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens_of
+from ..operators.materialize import materialize
 from ..operators.sketches import (
     bloom_bitmap,
     bloom_probe_flag,
+    heavy_hitters,
     hist_quantile_sketch,
     hll_estimate,
     hll_merge,
     hll_registers,
+    weighted_priority_sample,
 )
 from ..sources.readers import load_table
+from .search_queries import _oracle_tokens
+
+
+def heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact heavy hitters over the token stream WITHOUT shuffling the full
+    vocabulary: ``operators.sketches.heavy_hitters`` (freqItems candidate
+    pass -> one exact verification aggregate whose group key folds
+    non-candidates into a NULL bucket, so counts AND the grand total come
+    from the same scan). The result is bit-equal to the full
+    ``GROUP BY ... HAVING`` oracle, but the only keys that ever shuffle
+    are the <=1/support candidates (+1 bucket) — at 100 TB the difference
+    between shuffling a 1e9-term vocabulary and ~100 keys."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    toks = tokens_of(docs.select("text"))
+    return heavy_hitters(toks, "term", support=0.01)
+
+
+HEAVY_HITTERS_SQL = f"""
+WITH tok AS (
+  SELECT unnest({_oracle_tokens()}) AS term
+  FROM documents WHERE text IS NOT NULL
+),
+tot AS (SELECT COUNT(*) AS n_total FROM tok)
+SELECT term, COUNT(*) AS cnt, (SELECT n_total FROM tot) AS n_total
+FROM tok
+GROUP BY term
+HAVING COUNT(*) > 0.01 * (SELECT n_total FROM tot)
+"""
+
+
+def events_rolling_dau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HLL-sketch twin of ``events_rolling_dau``, built on the
+    DETERMINISTIC HyperLogLog of ``operators/sketches.py`` (md5-carved
+    52-bit hash, 512 registers) instead of Spark's engine-opaque
+    ``approx_count_distinct`` — same HLL++ family, but the registers are
+    reproducible from the data alone, so the query is value-verifiable
+    cross-engine (hash-gated oracle) where the built-in never could be.
+
+    This is the decomposable path for EXTREME scale, and the plan shows
+    it: facts reduce to per-day registers FIRST (map-side-partial max,
+    <= days x 512 rows out of the scan — independent of user count),
+    the bounded 7-day fan-out then replicates REGISTERS, not users, and
+    the window merge is another partial max. Total shuffle is
+    O(days x 512) rows whatever the event volume — compare the exact
+    twin's 7 x daily-active rows. Emits the raw estimator plus the
+    (v_empty, reg_sum) sketch state; the ln-based small-range correction
+    is a driver-side post-step (see ``hll_estimate``). Days observed only
+    through NULL user_ids carry an empty window sketch and are emitted by
+    neither engine (the raw estimator is degenerate on an empty sketch)."""
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(F.to_date("ts").alias("day"), "user_id")
+    day_reg = hll_registers(base, ["day"], "user_id")
+    fan = day_reg.select(
+        F.explode(F.sequence(F.col("day"), F.date_add(F.col("day"), 6))).alias(
+            "win_day"
+        ),
+        "bucket",
+        "r",
+    )
+    observed = ev.select(F.to_date("ts").alias("win_day")).distinct()
+    win_reg = hll_merge(fan.join(observed, "win_day"), ["win_day"])
+    return hll_estimate(win_reg, ["win_day"], out_col="dau7_hll_micro").select(
+        F.col("win_day").alias("day"), "v_empty", "reg_sum", "dau7_hll_micro"
+    )
+
+
+# Literal SQL mirror of hll_registers/hll_merge/hll_estimate: same 52-bit
+# md5 hash, same integer register algebra, same frozen-order IEEE estimate
+# chain (((alpha * m) * m) * 2^44 / S) * 1e6 — bit-identical by
+# construction (operators/sketches.py docstrings).
+HLL_ROLLING_DAU_SQL = """
+WITH h AS (
+  SELECT CAST(ts AS DATE) AS day,
+         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS hv
+  FROM events WHERE user_id IS NOT NULL
+),
+br AS (
+  SELECT day, hv % 512 AS bucket,
+         CASE WHEN (hv >> 9) = 0 THEN 44
+              ELSE 44 - length(bin(hv >> 9)) END AS rho
+  FROM h
+),
+day_reg AS (SELECT day, bucket, MAX(rho) AS r FROM br GROUP BY day, bucket),
+fan AS (
+  SELECT day + CAST(t.k AS INTEGER) AS win_day, bucket, r
+  FROM day_reg, range(7) t(k)
+),
+obs AS (SELECT DISTINCT CAST(ts AS DATE) AS win_day FROM events),
+win_reg AS (
+  SELECT f.win_day, f.bucket, MAX(f.r) AS r
+  FROM fan f JOIN obs USING (win_day)
+  GROUP BY f.win_day, f.bucket
+),
+agg AS (
+  SELECT win_day,
+         CAST(512 - COUNT(*) AS BIGINT) AS v_empty,
+         CAST(CAST(SUM(CAST(1 AS BIGINT) << (44 - r)) AS BIGINT)
+              + (512 - COUNT(*)) * 17592186044416 AS BIGINT) AS reg_sum
+  FROM win_reg GROUP BY win_day
+)
+SELECT win_day AS day, v_empty, reg_sum,
+       CAST(round((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
+                  * 17592186044416.0 / CAST(reg_sum AS DOUBLE) * 1000000.0)
+            AS BIGINT) AS dau7_hll_micro
+FROM agg
+"""
+
 
 #: events.value sits in (0, ~500]; the sketch domain is the fixed range
 #: [0, 512) at micro precision — 256 bins of exactly 2.0 units. Values
@@ -56,6 +148,14 @@ VALUE_BINS = 256
 VALUE_PERCENTS = [50, 90, 99]
 
 
+# histogram quantiles (``events_value_quantiles_hist``): per-type
+# p50/p90/p99 of ``events.value`` via the mergeable fixed-range
+# histogram of ``operators/sketches.py hist_quantile_sketch`` — integer
+# bin counts that combine map-side (each task emits <= groups x 256
+# rows whatever the event volume), quantile recovery by integer
+# cumulative-count inversion, error bounded by one bin width. The
+# monitoring shape a 100 TB pipeline runs hourly, where the exact
+# rank-based path (``operators/ranking.py``) would re-rank the world.
 def events_value_quantiles_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type p50/p90/p99 of ``value`` from the mergeable
     histogram sketch (see module docstring)."""
@@ -109,6 +209,10 @@ FROM cand GROUP BY event_type, p_pct, n
 """
 
 
+# HLL set algebra (``events_audience_overlap_hll``): distinct-user
+# union by per-bucket register max, intersection by inclusion-exclusion
+# on the micro-rounded estimates — audience overlap without ever
+# shuffling a user set.
 def events_audience_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience set algebra WITHOUT moving user sets: how many distinct
     users viewed, purchased, did either, did both — from per-segment HLL
@@ -221,42 +325,9 @@ FROM est
 """
 
 
-# Per-day variant of the histogram-quantile mirror — the oracle for the
-# STREAMING twin (streaming/stream.py run_streaming_value_quantiles): the
-# update-log reconciliation (max per (day, bin)) recovers exactly these
-# batch counts, so one SQL serves the incremental deployment.
-DAILY_HIST_QUANTILES_SQL = """
-WITH b AS (
-  SELECT CAST(ts AS DATE) AS day,
-         (least(greatest(CAST(round(value * 1e6) AS BIGINT), 0), 511999999)
-          - 0) // 2000000 AS bin
-  FROM events WHERE value IS NOT NULL
-),
-counts AS (
-  SELECT day, bin, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM b GROUP BY day, bin
-),
-cum AS (
-  SELECT day, bin, cnt,
-         CAST(SUM(cnt) OVER (PARTITION BY day ORDER BY bin
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS cum
-  FROM counts
-),
-tot AS (SELECT day, CAST(SUM(cnt) AS BIGINT) AS n FROM counts GROUP BY day),
-cand AS (
-  SELECT c.day, CAST(p.p_pct AS BIGINT) AS p_pct, t.n, c.bin
-  FROM cum c
-  JOIN tot t USING (day)
-  CROSS JOIN (VALUES (50), (90), (99)) p(p_pct)
-  WHERE c.cum >= (t.n * p.p_pct + 99) // 100
-)
-SELECT day, p_pct, n, MIN(bin) AS qbin,
-       CAST(MIN(bin) * 2000000 + 0 AS BIGINT) AS q_lo_micro
-FROM cand GROUP BY day, p_pct, n
-"""
-
-
+# rolling quantiles (``events_rolling_quantiles_hist``): 7-day
+# sliding p50/p99 by ADDING day histograms over a bounded count fan-out
+# — exact quantiles don't decompose over sliding windows; counts do.
 def events_rolling_quantiles_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day p50/p99 of ``value`` per day — the quantile analog
     of the rolling-DAU pair, and the reason the histogram sketch earns
@@ -351,6 +422,9 @@ FROM cand GROUP BY win_day, p_pct, n
 """
 
 
+# Bloom semi-join pruning (``orders_bloom_prune``): 4 KB bit_or
+# bitmap build, literal-map codegen probe with zero joins/exchanges on
+# the fact side, deterministic false-positive set.
 def orders_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter semi-join pruning readout: how many orders rows a
     4 KB broadcast bitmap keeps versus the exact semi-join against
@@ -454,6 +528,8 @@ PROFILE_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_returnflag",
                 "l_linestatus"]
 
 
+# one-scan profiling (``lineitem_distinct_profile_hll``): per-column
+# approx distinct via a stack unpivot feeding per-column registers.
 def lineitem_distinct_profile_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-scan data profiling: approximate distinct-value count for five
     lineitem columns from a SINGLE pass — the table-profiling tool a
@@ -775,63 +851,514 @@ FROM c
 """
 
 
-# Per-day variant of the Count-Min mirror — the oracle for the STREAMING
-# twin (streaming/stream.py run_streaming_user_freq_cms): counters are
-# additive integers, so the update-log reconciliation (max per
-# (day, row, bucket)) recovers exactly these batch counters, and the
-# deterministic md5 positions make the estimates bit-identical. A day
-# exists iff it produced at least one counter row (non-NULL-user event) —
-# observedness from counter existence, mirrored by the DISTINCT day scan.
-DAILY_CMS_SQL = """
+# --------------------------------------------------------------------------
+# Chunked-bitmap exact distinct
+# --------------------------------------------------------------------------
+
+#: 32-bit words: the widest shift that stays clear of BIGINT sign-bit
+#: overflow on every engine (DuckDB raises on ``1::BIGINT << 63``).
+_WORD_BITS = 32
+
+
+def bitmap_distinct_agg(
+    df: DataFrame, group_cols: list, id_col: str
+) -> DataFrame:
+    """Exact distinct count of non-negative ``id_col`` per group via
+    chunked 32-bit bitmap words: (group, ``id DIV 32``) → ``bit_or`` of
+    ``1 << (id % 32)`` → sum of ``bit_count``. Both aggregates combine
+    map-side; the only data-sized shuffle carries ≤ groups x
+    ceil(id_universe/32) 8-byte words. Returns (group_cols..., dau,
+    words_touched)."""
+    words = (
+        df.select(
+            *group_cols,
+            F.expr(f"{id_col} DIV {_WORD_BITS}").alias("bucket"),
+            F.expr(
+                f"shiftleft(CAST(1 AS BIGINT), CAST(pmod({id_col}, {_WORD_BITS}) AS INT))"
+            ).alias("bit"),
+        )
+        .groupBy(*group_cols, "bucket")
+        .agg(F.bit_or("bit").alias("word"))
+    )
+    return words.groupBy(*group_cols).agg(
+        F.sum(F.bit_count("word")).cast("long").alias("dau"),
+        F.count("*").cast("long").alias("words_touched"),
+    )
+
+
+# chunked-bitmap exact distinct (``events_bitmap_daily_users``):
+# exact per-day distinct users via 32-bit bitmap words (``bit_or`` of
+# ``1 << (user_id % 32)`` grouped by ``user_id DIV 32``) — the
+# ClickHouse/Doris "bitmap" aggregate rebuilt from public integer
+# primitives. ``bit_or`` combines map-side, so the shuffle carries at
+# most days x occupied-words rows (8 bytes each) regardless of event
+# volume — the EXACT counterpart to the HLL sketch family
+# (``operators/sketches.py``): HLL when 2% error is fine, bitmaps when
+# the id space is dense and exactness is required.
+def events_bitmap_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact distinct users per day via chunked bitmap words.
+
+    Each user occupies one bit of word ``user_id DIV 32``; ``bit_or``
+    unions bitmaps and is a partial aggregate, so every map task emits at
+    most one 8-byte word per (day, bucket) before the shuffle — at 100 TB
+    the shuffle is days x ceil(id_universe/32) words, independent of the
+    event count, and the per-group state is a single BIGINT (vs
+    ``collect_set``'s unbounded set). ``bit_count`` then reads the exact
+    cardinality straight off the words. Dense-id exact counterpart of the
+    HLL path (``events_rolling_dau_approx``)."""
+    ev = load_table(spark, sf_dir, "events").where(
+        F.col("user_id").isNotNull() & (F.col("user_id") >= 0)
+    )
+    return bitmap_distinct_agg(
+        ev.select(F.to_date("ts").alias("day"), "user_id"), ["day"], "user_id"
+    ).orderBy("day")
+
+
+BITMAP_DAU_SQL = f"""
+WITH words AS (
+  SELECT CAST(ts AS DATE) AS day,
+         user_id // {_WORD_BITS} AS bucket,
+         bit_or(CAST(1 AS BIGINT) << CAST(user_id % {_WORD_BITS} AS INT)) AS word
+  FROM events
+  WHERE user_id IS NOT NULL AND user_id >= 0
+  GROUP BY 1, 2
+)
+SELECT day,
+       CAST(sum(bit_count(word)) AS BIGINT) AS dau,
+       CAST(count(*) AS BIGINT) AS words_touched
+FROM words
+GROUP BY day
+ORDER BY day
+"""
+
+
+# --------------------------------------------------------------------------
+# MCV column stats
+# --------------------------------------------------------------------------
+
+#: the low-cardinality lineitem columns an optimizer keeps MCVs for
+_MCV_COLS = {
+    "l_returnflag": "l_returnflag",
+    "l_linestatus": "l_linestatus",
+    # DOUBLE in the fixture but integral-valued; the BIGINT cast keeps the
+    # string rendering engine-identical ("23", not "23.0" vs "23.0")
+    "l_quantity": "CAST(l_quantity AS BIGINT)",
+}
+_MCV_K = 5
+
+
+# MCV column stats (``lineitem_mcv_stats``): the optimizer-style
+# most-common-values summary (top-5 values + frequency fraction per
+# column) for the low-cardinality lineitem columns, via one stacked
+# unpivot scan → (column, value) counts → per-column top-k window. The
+# ANALYZE-statistics shape: selectivity estimation at 100 TB needs MCVs
+# precisely when values are skewed, and the per-column partitioned
+# window is WindowGroupLimit-pruned so only k rows per column cross the
+# final exchange.
+def lineitem_mcv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-5 most-common values per column with frequency fractions —
+    the ANALYZE-style MCV statistics a cost-based optimizer consults for
+    selectivity on skewed columns.
+
+    One scan feeds a stacked unpivot (columns x rows projection — no
+    shuffle), one (column, value) count aggregate (map-side partial; the
+    shuffle carries at most columns x distinct-values rows), and a
+    per-column top-k window that WindowGroupLimit prunes to k rows per
+    task per column before the window exchange. The total-row count
+    rides the same scan via a grouping on the column name only."""
+    li = load_table(spark, sf_dir, "lineitem")
+    stacked = li.select(
+        F.expr(
+            "stack({n}, {args}) AS (col_name, val)".format(
+                n=len(_MCV_COLS),
+                args=", ".join(
+                    f"'{name}', CAST({expr} AS STRING)"
+                    for name, expr in _MCV_COLS.items()
+                ),
+            )
+        )
+    )
+    counts = stacked.groupBy("col_name", "val").agg(
+        F.count("*").cast("long").alias("n")
+    )
+    totals = counts.groupBy("col_name").agg(
+        F.sum("n").cast("long").alias("total")
+    )
+    w = Window.partitionBy("col_name").orderBy(
+        F.col("n").desc(), F.col("val").asc()
+    )
+    return (
+        counts.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= _MCV_K)
+        .join(F.broadcast(totals), "col_name")
+        .select(
+            "col_name",
+            F.col("rank").cast("int").alias("rank"),
+            "val",
+            "n",
+            F.round(
+                F.col("n").cast("double") / F.col("total").cast("double"), 6
+            ).alias("freq"),
+        )
+        .orderBy("col_name", "rank")
+    )
+
+
+MCV_STATS_SQL = f"""
+WITH stacked AS (
+  {" UNION ALL ".join(
+      f"SELECT '{name}' AS col_name, CAST({expr} AS VARCHAR) AS val FROM lineitem"
+      for name, expr in _MCV_COLS.items()
+  )}
+),
+counts AS (
+  SELECT col_name, val, CAST(count(*) AS BIGINT) AS n
+  FROM stacked GROUP BY 1, 2
+),
+totals AS (
+  SELECT col_name, CAST(sum(n) AS BIGINT) AS total FROM counts GROUP BY 1
+),
+ranked AS (
+  SELECT col_name, val, n,
+         row_number() OVER (PARTITION BY col_name
+                            ORDER BY n DESC, val ASC) AS rank
+  FROM counts
+)
+SELECT r.col_name, CAST(r.rank AS INTEGER) AS rank, r.val, r.n,
+       round(CAST(r.n AS DOUBLE) / CAST(t.total AS DOUBLE), 6) AS freq
+FROM ranked r JOIN totals t USING (col_name)
+WHERE r.rank <= {_MCV_K}
+ORDER BY col_name, rank
+"""
+
+
+# --------------------------------------------------------------------------
+# HLL rollup across time grains (continuous-aggregate pattern)
+# --------------------------------------------------------------------------
+
+def events_dau_rollup_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct-user estimates at DAY, WEEK, and MONTH grain from ONE
+    per-day register table — the continuous-aggregate pattern: because
+    HLL merge is per-bucket max (associative, commutative, idempotent),
+    the finest-grain sketch re-aggregates to every coarser grain without
+    touching the fact table again. At 100 TB the day-register table is
+    O(days x 512) rows total; each rollup is a register-max groupBy over
+    it — compare three separate COUNT(DISTINCT) passes, each a full-fact
+    shuffle. Week boundaries are epoch-day arithmetic (engine-neutral),
+    month via date_trunc. Same deterministic register algebra as the
+    rolling-DAU family, so all three grains hash-gate."""
+    from ..operators.sketches import hll_estimate, hll_merge, hll_registers
+
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(F.to_date("ts").alias("day"), "user_id")
+    # all three grains read it; bound: days x 512 register rows
+    day_reg = materialize(hll_registers(base, ["day"], "user_id"))
+
+    epoch = F.lit("1970-01-01").cast("date")
+
+    def grain(df, period_col, label):
+        reg = hll_merge(
+            df.select(period_col.alias("period_start"), "bucket", "r"),
+            ["period_start"],
+        )
+        est = hll_estimate(reg, ["period_start"], out_col="dau_hll_micro")
+        return est.select(
+            F.lit(label).alias("grain"),
+            "period_start",
+            "v_empty",
+            "reg_sum",
+            "dau_hll_micro",
+        )
+
+    day_g = grain(day_reg, F.col("day"), "day")
+    week_g = grain(
+        day_reg,
+        F.date_add(
+            epoch,
+            (F.floor(F.datediff(F.col("day"), epoch) / 7) * 7).cast("int"),
+        ),
+        "week",
+    )
+    month_g = grain(day_reg, F.trunc(F.col("day"), "month"), "month")
+    return day_g.unionAll(week_g).unionAll(month_g).orderBy(
+        "grain", "period_start"
+    )
+
+
+DAU_ROLLUP_HLL_SQL = """
 WITH h AS (
   SELECT CAST(ts AS DATE) AS day,
-         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS h1,
-         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 14, 13))::BIGINT AS h2
+         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS hv
   FROM events WHERE user_id IS NOT NULL
 ),
-counters AS (
-  SELECT day, CAST(t.k AS BIGINT) AS row,
-         (h1 + CAST(t.k AS BIGINT) * h2) % 1024 AS bucket,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM h, range(3) t(k)
-  GROUP BY day, CAST(t.k AS BIGINT), (h1 + CAST(t.k AS BIGINT) * h2) % 1024
+br AS (
+  SELECT day, hv % 512 AS bucket,
+         CASE WHEN (hv >> 9) = 0 THEN 44
+              ELSE 44 - length(bin(hv >> 9)) END AS rho
+  FROM h
 ),
-watch AS (
-  SELECT CAST(t.k + 1 AS BIGINT) AS user_id,
-         ('0x' || substr(md5(CAST(t.k + 1 AS VARCHAR)), 1, 13))::BIGINT AS h1,
-         ('0x' || substr(md5(CAST(t.k + 1 AS VARCHAR)), 14, 13))::BIGINT AS h2
-  FROM range(10) t(k)
+day_reg AS (SELECT day, bucket, MAX(rho) AS r FROM br GROUP BY day, bucket),
+grains AS (
+  SELECT 'day' AS grain, day AS period_start, bucket, r FROM day_reg
+  UNION ALL
+  SELECT 'week',
+         DATE '1970-01-01'
+           + CAST(((day - DATE '1970-01-01') // 7) * 7 AS INTEGER),
+         bucket, r
+  FROM day_reg
+  UNION ALL
+  SELECT 'month', CAST(date_trunc('month', day) AS DATE), bucket, r
+  FROM day_reg
 ),
-days AS (SELECT DISTINCT day FROM counters),
-est AS (
-  SELECT d.day, w.user_id,
-         least(
-           COALESCE(c0.cnt, 0),
-           COALESCE(c1.cnt, 0),
-           COALESCE(c2.cnt, 0)
-         ) AS est_cnt
-  FROM days d CROSS JOIN watch w
-  LEFT JOIN counters c0
-    ON c0.day = d.day AND c0.row = 0 AND c0.bucket = (w.h1 + 0 * w.h2) % 1024
-  LEFT JOIN counters c1
-    ON c1.day = d.day AND c1.row = 1 AND c1.bucket = (w.h1 + 1 * w.h2) % 1024
-  LEFT JOIN counters c2
-    ON c2.day = d.day AND c2.row = 2 AND c2.bucket = (w.h1 + 2 * w.h2) % 1024
+merged AS (
+  SELECT grain, period_start, bucket, MAX(r) AS r
+  FROM grains GROUP BY 1, 2, 3
 ),
-tc AS (
-  SELECT CAST(ts AS DATE) AS day, user_id,
-         CAST(COUNT(*) AS BIGINT) AS true_cnt
-  FROM events
-  WHERE user_id IN (1, 2, 3, 4, 5, 6, 7, 8, 9, 10)
-  GROUP BY CAST(ts AS DATE), user_id
+agg AS (
+  SELECT grain, period_start,
+         CAST(512 - COUNT(*) AS BIGINT) AS v_empty,
+         CAST(CAST(SUM(CAST(1 AS BIGINT) << (44 - r)) AS BIGINT)
+              + (512 - COUNT(*)) * 17592186044416 AS BIGINT) AS reg_sum
+  FROM merged GROUP BY 1, 2
 )
-SELECT e.day, e.user_id, CAST(e.est_cnt AS BIGINT) AS est_cnt,
-       COALESCE(t.true_cnt, 0) AS true_cnt
-FROM est e LEFT JOIN tc t USING (day, user_id)
+SELECT grain, period_start, v_empty, reg_sum,
+       CAST(round((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
+                  * 17592186044416.0 / CAST(reg_sum AS DOUBLE) * 1000000.0)
+            AS BIGINT) AS dau_hll_micro
+FROM agg
+ORDER BY grain, period_start
+"""
+
+
+
+# ---------------------------------------------------------------------------
+# Data profiling (constraint audit)
+# ---------------------------------------------------------------------------
+
+
+def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column-profile audit over orders: one row per profiled column with
+    row/null/distinct counts and min/max (stringified on exact types only —
+    cross-engine float formatting is not stable, int/varchar is). The three
+    per-column aggregates run as one job; each is a map-side-combinable
+    single pass, the union is metadata-only."""
+    orders = load_table(spark, sf_dir, "orders")
+
+    def profile(col: str) -> DataFrame:
+        return orders.agg(
+            F.lit(col).alias("col_name"),
+            F.count("*").alias("n_rows"),
+            F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias("n_nulls"),
+            F.countDistinct(col).alias("n_distinct"),
+            F.min(col).cast("string").alias("min_val"),
+            F.max(col).cast("string").alias("max_val"),
+        )
+
+    return (
+        profile("o_orderstatus")
+        .unionByName(profile("o_orderpriority"))
+        .unionByName(profile("o_custkey"))
+    )
+
+
+DATA_PROFILE_SQL = """
+SELECT 'o_orderstatus' AS col_name, COUNT(*) AS n_rows,
+       CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_nulls,
+       COUNT(DISTINCT o_orderstatus) AS n_distinct,
+       CAST(MIN(o_orderstatus) AS VARCHAR) AS min_val,
+       CAST(MAX(o_orderstatus) AS VARCHAR) AS max_val
+FROM orders
+UNION ALL
+SELECT 'o_orderpriority', COUNT(*),
+       CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+       COUNT(DISTINCT o_orderpriority),
+       CAST(MIN(o_orderpriority) AS VARCHAR), CAST(MAX(o_orderpriority) AS VARCHAR)
+FROM orders
+UNION ALL
+SELECT 'o_custkey', COUNT(*),
+       CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+       COUNT(DISTINCT o_custkey),
+       CAST(MIN(o_custkey) AS VARCHAR), CAST(MAX(o_custkey) AS VARCHAR)
+FROM orders
+"""
+
+
+def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Length-biased deterministic document sample: 100 docs with the
+    smallest ``hash52(doc_id)/n_chars`` priority (longer docs likelier).
+    Top-k compiles to TakeOrderedAndProject — per-partition heaps, no
+    global sort — and the priority needs no RNG/seed: any engine replays
+    the identical sample from the data alone."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
+    # priority is bit-identical cross-engine (two exact IEEE divisions of
+    # hash-derived integers) — no rounding, unlike order-dependent float sums
+    return weighted_priority_sample(docs, "doc_id", "n_chars", 100)
+
+
+WEIGHTED_SAMPLE_SQL = """
+SELECT doc_id, n_chars,
+       (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
+        / 4503599627370496.0) / n_chars AS priority
+FROM documents
+WHERE n_chars > 0
+ORDER BY priority ASC, doc_id ASC
+LIMIT 100
+"""
+
+
+# --------------------------------------------------------------------------
+# Observed metrics (single-pass data-quality telemetry)
+# --------------------------------------------------------------------------
+
+
+def observed_profile(spark: SparkSession, sf_dir: str):
+    """(result DataFrame, Observation) — the observation rides the same
+    scan as the aggregate; Observation.get is valid after any action on
+    the returned frame. Metrics are counts/extrema only (deterministic;
+    a float SUM metric would be partial-order-dependent)."""
+    orders = load_table(spark, sf_dir, "orders")
+    obs = Observation()
+    watched = orders.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_if(F.col("o_custkey").isNull()).alias("n_null_cust"),
+        F.min("o_orderdate").alias("min_date"),
+        F.max("o_orderdate").alias("max_date"),
+    )
+    result = (
+        watched.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n_orders"),
+            # exact integer-cents sum, ONE frozen division: a raw double
+            # SUM's 4th decimal is partial-order-dependent once the total
+            # nears 1e11 (the r11 10x oracle sweep caught exactly that)
+            (
+                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+                / F.lit(100.0)
+            ).alias("revenue"),
+        )
+        .orderBy("o_orderstatus")
+    )
+    return result, obs
+
+
+# observed metrics (``orders_observed_profile``): ``DataFrame.observe``
+# attaches named aggregate metrics to an existing plan — data-quality
+# telemetry (row counts, null rates, extrema) computed IN the same pass as
+# the query, zero extra scans. At 100 TB this is the difference between
+# free pipeline observability and doubling the read bill; the query result
+# is oracle-gated as usual, and the test asserts the observed metrics
+# against independent recomputation.
+def orders_observed_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-status order profile with observe()-attached quality metrics
+    (row count, null-FK count, date extrema) computed in the SAME pass —
+    the zero-extra-scan pipeline-telemetry pattern."""
+    result, _ = observed_profile(spark, sf_dir)
+    return result
+
+
+ORDERS_OBSERVED_PROFILE_SQL = """
+SELECT o_orderstatus,
+       count(*) AS n_orders,
+       SUM(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS revenue
+FROM orders
+GROUP BY o_orderstatus
+ORDER BY o_orderstatus
+"""
+
+
+# --------------------------------------------------------------------------
+# Column entropy profile (information-theoretic feature audit)
+# --------------------------------------------------------------------------
+
+
+#: integer scale for per-value n·ln(n) terms
+_ENT_SCALE = 1_000_000
+
+
+_ENT_COLS = ["p_brand", "p_type", "p_size"]
+
+
+def part_attribute_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shannon entropy (nats) of each part attribute — the profiling
+    number behind "is this column informative or near-constant", used for
+    feature selection and partition-key choice.
+
+    H = ln(N) − Σ n_v·ln(n_v)/N needs a float SUM over values — which is
+    order-dependent and would break the hash gate. The fix is the repo's
+    integerize-the-terms discipline: each value's n·ln(n) term is frozen
+    to an integer micro-nat (floor(x·1e6 + 0.5)) BEFORE aggregation, so
+    the sum is a BIGINT (exact in any order) and the only float chain is
+    one ln and two divisions per OUTPUT row. norm_entropy divides by the
+    ln of the distinct count (the column's maximum possible entropy).
+    One stack projection + two small aggregates; at 100 TB the value
+    histogram per column is the only shuffle, bounded by the columns'
+    cardinality."""
+    part = load_table(spark, sf_dir, "part")
+    stacked = part.select(
+        F.expr(
+            "stack({}, {})".format(
+                len(_ENT_COLS),
+                ", ".join(f"'{c}', CAST({c} AS STRING)" for c in _ENT_COLS),
+            )
+        ).alias("column", "val")
+    )
+    counts = stacked.groupBy("column", "val").agg(F.count("*").alias("n_v"))
+    per_col = counts.groupBy("column").agg(
+        F.sum("n_v").alias("n_rows"),
+        F.count("*").alias("n_values"),
+        F.sum(
+            F.expr(
+                f"CAST(floor(n_v * ln(n_v) * {_ENT_SCALE} + 0.5) AS BIGINT)"
+            )
+        ).alias("s_micro"),
+    )
+    n = F.col("n_rows").cast("double")
+    entropy = F.log(n) - F.col("s_micro") / n / F.lit(float(_ENT_SCALE))
+    return per_col.select(
+        "column",
+        "n_rows",
+        "n_values",
+        F.round(entropy, 6).alias("entropy_nats"),
+        F.round(
+            entropy / F.log(F.col("n_values").cast("double")), 6
+        ).alias("norm_entropy"),
+    ).orderBy("column")
+
+
+PART_ENTROPY_SQL = f"""
+WITH stacked AS (
+  SELECT 'p_brand' AS "column", CAST(p_brand AS VARCHAR) AS val FROM part
+  UNION ALL
+  SELECT 'p_type', CAST(p_type AS VARCHAR) FROM part
+  UNION ALL
+  SELECT 'p_size', CAST(p_size AS VARCHAR) FROM part
+),
+counts AS (
+  SELECT "column", val, count(*) AS n_v FROM stacked GROUP BY 1, 2
+),
+per_col AS (
+  SELECT "column",
+         CAST(SUM(n_v) AS BIGINT) AS n_rows,
+         COUNT(*) AS n_values,
+         SUM(CAST(floor(n_v * ln(n_v) * {_ENT_SCALE} + 0.5) AS BIGINT)) AS s_micro
+  FROM counts GROUP BY 1
+)
+SELECT "column", n_rows, n_values,
+       round(ln(CAST(n_rows AS DOUBLE))
+             - s_micro / CAST(n_rows AS DOUBLE) / {float(_ENT_SCALE)}, 6) AS entropy_nats,
+       round((ln(CAST(n_rows AS DOUBLE))
+              - s_micro / CAST(n_rows AS DOUBLE) / {float(_ENT_SCALE)})
+             / ln(CAST(n_values AS DOUBLE)), 6) AS norm_entropy
+FROM per_col
+ORDER BY "column"
 """
 
 
 QUERIES = {
+    "events_rolling_dau_approx": events_rolling_dau_approx,
+    "heavy_hitter_terms": heavy_hitter_terms,
     "events_value_quantiles_hist": events_value_quantiles_hist,
     "events_audience_overlap_hll": events_audience_overlap_hll,
     "orders_bloom_prune": orders_bloom_prune,
@@ -839,9 +1366,18 @@ QUERIES = {
     "lineitem_distinct_profile_hll": lineitem_distinct_profile_hll,
     "events_user_freq_cms": events_user_freq_cms,
     "events_audience_diff_kmv": events_audience_diff_kmv,
+    "events_bitmap_daily_users": events_bitmap_daily_users,
+    "lineitem_mcv_stats": lineitem_mcv_stats,
+    "events_dau_rollup_hll": events_dau_rollup_hll,
+    "data_profile_orders": data_profile_orders,
+    "sample_weighted_priority": sample_weighted_priority,
+    "orders_observed_profile": orders_observed_profile,
+    "part_attribute_entropy": part_attribute_entropy,
 }
 
 ORACLES = {
+    "events_rolling_dau_approx": HLL_ROLLING_DAU_SQL,
+    "heavy_hitter_terms": HEAVY_HITTERS_SQL,
     "events_user_freq_cms": CMS_USER_FREQ_SQL,
     "events_audience_diff_kmv": AUDIENCE_DIFF_KMV_SQL,
     "lineitem_distinct_profile_hll": DISTINCT_PROFILE_SQL,
@@ -849,4 +1385,11 @@ ORACLES = {
     "events_rolling_quantiles_hist": ROLLING_HIST_QUANTILES_SQL,
     "events_value_quantiles_hist": HIST_QUANTILES_SQL,
     "events_audience_overlap_hll": AUDIENCE_OVERLAP_SQL,
+    "events_bitmap_daily_users": BITMAP_DAU_SQL,
+    "lineitem_mcv_stats": MCV_STATS_SQL,
+    "events_dau_rollup_hll": DAU_ROLLUP_HLL_SQL,
+    "data_profile_orders": DATA_PROFILE_SQL,
+    "sample_weighted_priority": WEIGHTED_SAMPLE_SQL,
+    "orders_observed_profile": ORDERS_OBSERVED_PROFILE_SQL,
+    "part_attribute_entropy": PART_ENTROPY_SQL,
 }

@@ -30,24 +30,22 @@ from ..streaming import (
     run_streaming_rolling_dau,
     run_streaming_rolling_dau_hll,
     run_streaming_sessions,
-    run_streaming_value_quantiles,
     run_streaming_sliding_window,
     run_streaming_stateful_counter,
     run_streaming_static_join,
     run_streaming_stream_join,
     run_streaming_stream_join_left,
     run_streaming_user_freq_cms,
+    run_streaming_value_quantiles,
 )
 from .events_queries import (
     EVENTS_HOURLY_SQL,
     EVENTS_LATEST_STATE_SQL,
+    EVENTS_PATTERN_MATCH_SQL,
     EVENTS_SLIDING_SQL,
 )
-from .round5_queries import HLL_ROLLING_DAU_SQL, OHLC_SQL, ROLLING_DAU_SQL
-from .round7g_queries import EWMA_ANOMALY_SQL
-from .round7_queries import DAILY_CMS_SQL, DAILY_HIST_QUANTILES_SQL
-from .round7b_queries import BITMAP_DAU_SQL
-from .round7f_queries import EVENTS_PATTERN_MATCH_SQL
+from .sketches_queries import BITMAP_DAU_SQL, HLL_ROLLING_DAU_SQL
+from .timeseries_queries import EWMA_ANOMALY_SQL, OHLC_SQL, ROLLING_DAU_SQL
 
 
 def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,6 +353,98 @@ SELECT user_id, us AS last_ts_us, event_type AS last_event_type,
        value_cents AS last_value_cents
 FROM r WHERE rn = 1
 ORDER BY user_id
+"""
+
+
+# Per-day variant of the histogram-quantile mirror — the oracle for the
+# STREAMING twin (streaming/stream.py run_streaming_value_quantiles): the
+# update-log reconciliation (max per (day, bin)) recovers exactly these
+# batch counts, so one SQL serves the incremental deployment.
+DAILY_HIST_QUANTILES_SQL = """
+WITH b AS (
+  SELECT CAST(ts AS DATE) AS day,
+         (least(greatest(CAST(round(value * 1e6) AS BIGINT), 0), 511999999)
+          - 0) // 2000000 AS bin
+  FROM events WHERE value IS NOT NULL
+),
+counts AS (
+  SELECT day, bin, CAST(COUNT(*) AS BIGINT) AS cnt
+  FROM b GROUP BY day, bin
+),
+cum AS (
+  SELECT day, bin, cnt,
+         CAST(SUM(cnt) OVER (PARTITION BY day ORDER BY bin
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+           AS cum
+  FROM counts
+),
+tot AS (SELECT day, CAST(SUM(cnt) AS BIGINT) AS n FROM counts GROUP BY day),
+cand AS (
+  SELECT c.day, CAST(p.p_pct AS BIGINT) AS p_pct, t.n, c.bin
+  FROM cum c
+  JOIN tot t USING (day)
+  CROSS JOIN (VALUES (50), (90), (99)) p(p_pct)
+  WHERE c.cum >= (t.n * p.p_pct + 99) // 100
+)
+SELECT day, p_pct, n, MIN(bin) AS qbin,
+       CAST(MIN(bin) * 2000000 + 0 AS BIGINT) AS q_lo_micro
+FROM cand GROUP BY day, p_pct, n
+"""
+
+
+# Per-day variant of the Count-Min mirror — the oracle for the STREAMING
+# twin (streaming/stream.py run_streaming_user_freq_cms): counters are
+# additive integers, so the update-log reconciliation (max per
+# (day, row, bucket)) recovers exactly these batch counters, and the
+# deterministic md5 positions make the estimates bit-identical. A day
+# exists iff it produced at least one counter row (non-NULL-user event) —
+# observedness from counter existence, mirrored by the DISTINCT day scan.
+DAILY_CMS_SQL = """
+WITH h AS (
+  SELECT CAST(ts AS DATE) AS day,
+         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS h1,
+         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 14, 13))::BIGINT AS h2
+  FROM events WHERE user_id IS NOT NULL
+),
+counters AS (
+  SELECT day, CAST(t.k AS BIGINT) AS row,
+         (h1 + CAST(t.k AS BIGINT) * h2) % 1024 AS bucket,
+         CAST(COUNT(*) AS BIGINT) AS cnt
+  FROM h, range(3) t(k)
+  GROUP BY day, CAST(t.k AS BIGINT), (h1 + CAST(t.k AS BIGINT) * h2) % 1024
+),
+watch AS (
+  SELECT CAST(t.k + 1 AS BIGINT) AS user_id,
+         ('0x' || substr(md5(CAST(t.k + 1 AS VARCHAR)), 1, 13))::BIGINT AS h1,
+         ('0x' || substr(md5(CAST(t.k + 1 AS VARCHAR)), 14, 13))::BIGINT AS h2
+  FROM range(10) t(k)
+),
+days AS (SELECT DISTINCT day FROM counters),
+est AS (
+  SELECT d.day, w.user_id,
+         least(
+           COALESCE(c0.cnt, 0),
+           COALESCE(c1.cnt, 0),
+           COALESCE(c2.cnt, 0)
+         ) AS est_cnt
+  FROM days d CROSS JOIN watch w
+  LEFT JOIN counters c0
+    ON c0.day = d.day AND c0.row = 0 AND c0.bucket = (w.h1 + 0 * w.h2) % 1024
+  LEFT JOIN counters c1
+    ON c1.day = d.day AND c1.row = 1 AND c1.bucket = (w.h1 + 1 * w.h2) % 1024
+  LEFT JOIN counters c2
+    ON c2.day = d.day AND c2.row = 2 AND c2.bucket = (w.h1 + 2 * w.h2) % 1024
+),
+tc AS (
+  SELECT CAST(ts AS DATE) AS day, user_id,
+         CAST(COUNT(*) AS BIGINT) AS true_cnt
+  FROM events
+  WHERE user_id IN (1, 2, 3, 4, 5, 6, 7, 8, 9, 10)
+  GROUP BY CAST(ts AS DATE), user_id
+)
+SELECT e.day, e.user_id, CAST(e.est_cnt AS BIGINT) AS est_cnt,
+       COALESCE(t.true_cnt, 0) AS true_cnt
+FROM est e LEFT JOIN tc t USING (day, user_id)
 """
 
 

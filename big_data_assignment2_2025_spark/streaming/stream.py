@@ -228,14 +228,14 @@ def run_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming OHLC bars — the incremental twin of
-    plans.round5_queries.events_ohlc_bars (same oracle SQL): min_by/max_by
+    plans.timeseries_queries.events_ohlc_bars (same oracle SQL): min_by/max_by
     on the zero-padded composite key run as STATEFUL streaming aggregates
     (declarative aggregate functions, so the state per (event_type, day)
     group is one small struct per agg — never the group's rows). Complete
     output mode; final state must equal the batch aggregation bit for
     bit."""
     ev = read_events_stream(spark, sf_dir).where(F.col("value").isNotNull())
-    from big_data_assignment2_2025_spark.plans.round5_queries import _ord_key
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import _ord_key
 
     key = _ord_key(F.unix_micros("ts"), F.col("event_id"))
     agg = ev.groupBy(
@@ -865,7 +865,7 @@ def reconcile_dau_updates(dau1_rows: DataFrame, dau7_rows: DataFrame) -> DataFra
 
 def run_streaming_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental rolling 7-day distinct DAU — the streaming twin of
-    plans.round5_queries.events_rolling_dau (same ROLLING_DAU_SQL oracle;
+    plans.timeseries_queries.events_rolling_dau (same ROLLING_DAU_SQL oracle;
     SURVEY §9.9).
 
     Two single-stateful-op streams over native event-time windows (see
@@ -967,7 +967,7 @@ def reconcile_dau_hll_updates(
 
 def run_streaming_rolling_dau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental rolling 7-day DAU by deterministic HyperLogLog — the
-    streaming twin of ``plans.round5_queries.events_rolling_dau_approx``
+    streaming twin of ``plans.sketches_queries.events_rolling_dau_approx``
     (same HLL_ROLLING_DAU_SQL oracle) and the long-running deployment
     shape for rolling distinct at extreme scale: per-window state is 512
     integers, not a user set (see ``rolling_dau_hll_streams``). Both
@@ -984,7 +984,7 @@ def run_streaming_rolling_dau_hll(spark: SparkSession, sf_dir: str) -> DataFrame
 def run_streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the histogram quantile sketch: per-day
     p50/p90/p99 of ``value`` maintained incrementally
-    (plans.round7_queries.DAILY_HIST_QUANTILES_SQL oracle).
+    (plans.streaming_queries.DAILY_HIST_QUANTILES_SQL oracle).
 
     The stateless ``hist_bin_expr`` projection feeds ONE stateful op —
     ``count(*)`` per (1-day tumbling window, bin) — whose state is at
@@ -996,7 +996,7 @@ def run_streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     (``hist_quantiles_from_counts``) runs batch-side on the final counts,
     exactly as it would on summed shard partials."""
     from ..operators.sketches import hist_bin_expr, hist_quantiles_from_counts
-    from ..plans.round7_queries import (
+    from ..plans.sketches_queries import (
         VALUE_BINS,
         VALUE_HI_MICRO,
         VALUE_LO_MICRO,
@@ -1027,7 +1027,7 @@ def run_streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
 def run_streaming_user_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the Count-Min watchlist monitor: per-day
     frequency estimates for a fixed user watchlist maintained
-    incrementally (plans.round7_queries.DAILY_CMS_SQL oracle).
+    incrementally (plans.streaming_queries.DAILY_CMS_SQL oracle).
 
     Two bounded-state stateful ops, the live abuse/rate-monitoring shape:
 
@@ -1049,7 +1049,7 @@ def run_streaming_user_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= days x 3 x 1024 counter table) runs batch-side on the reconciled
     counters via ``cms_estimate_for_keys(by=["day"])``."""
     from ..operators.sketches import _cms_positions, cms_estimate_for_keys
-    from ..plans.round7_queries import CMS_WATCH_USERS
+    from ..plans.sketches_queries import CMS_WATCH_USERS
 
     ev = read_events_stream(spark, sf_dir)
     proj = ev.where(F.col("user_id").isNotNull()).select(
@@ -1100,7 +1100,7 @@ def run_streaming_user_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_streaming_bitmap_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the chunked-bitmap exact distinct
-    (plans.round7b_queries.events_bitmap_daily_users, same BITMAP_DAU_SQL
+    (plans.sketches_queries.events_bitmap_daily_users, same BITMAP_DAU_SQL
     oracle): exact per-day distinct users maintained incrementally.
 
     One stateful op: ``bit_or`` of ``1 << (user_id % 32)`` per (1-day
@@ -1145,7 +1145,7 @@ def run_streaming_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful op — SUM + COUNT per 1-day tumbling event-time window under
     the 2-hour watermark — and the EWMA control-chart scoring runs
     batch-side on the reconciled daily frame through the EXACT code the
-    batch query uses (``plans.round7g_queries.ewma_score_daily``), so
+    batch query uses (``plans.timeseries_queries.ewma_score_daily``), so
     the two paths cannot diverge.
 
     State is two numbers per open window — bounded whatever the event
@@ -1180,7 +1180,7 @@ def ewma_daily_agg(ev: DataFrame) -> DataFrame:
 def ewma_finalize(rows: DataFrame) -> DataFrame:
     """Reconcile the update log (sum at the highest monotone row count
     per day) and run the shared batch EWMA scorer."""
-    from ..plans.round7g_queries import ewma_score_daily
+    from ..plans.timeseries_queries import ewma_score_daily
 
     daily = rows.groupBy("day").agg(F.expr("max_by(v_us, nrows)").alias("v_us"))
     return ewma_score_daily(daily)

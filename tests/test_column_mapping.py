@@ -2,7 +2,7 @@
 name`` re-expressed): ``rename_column`` / ``drop_column`` are
 METADATA-ONLY — physical (in-file) names never change; the manifest's
 logical->physical map redirects scans and writes. Cross-engine gate:
-``storage_column_mapping`` in plans/round13_queries.py."""
+``storage_column_mapping`` in plans/snapshot_queries.py."""
 
 from __future__ import annotations
 

@@ -2,7 +2,7 @@
 size-binned rewrite of undersized members only — Delta OPTIMIZE /
 Iceberg rewrite_data_files with a size filter, the operational verb for
 streaming-ingest file sprawl. Cross-engine gate:
-``storage_compact_small`` in plans/round12_queries.py."""
+``storage_compact_small`` in plans/snapshot_queries.py."""
 
 from __future__ import annotations
 

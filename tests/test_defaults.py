@@ -3,7 +3,7 @@ defaults re-expressed): ``add_column(name, dtype, default=v)`` records
 which members predate the column; reads backfill exactly those with the
 value — genuine NULLs written later stay NULL — and rewrites
 materialize the value and drop the entry. Cross-engine gate:
-``storage_default_column`` in plans/round12_queries.py."""
+``storage_default_column`` in plans/snapshot_queries.py."""
 
 from __future__ import annotations
 

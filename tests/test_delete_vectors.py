@@ -6,7 +6,7 @@ row addresses.
 
 Invariants pinned here (the cross-engine hash gates are
 ``storage_delete_vectors`` / ``storage_merge_on_read`` in
-plans/round11_queries.py):
+plans/snapshot_queries.py):
 - a delete publishes an UNCHANGED member list (no data rewrite),
 - reads mask exactly the deleted positions; time travel sees them,
 - merge_on_read is row-for-row equivalent to the copy-on-write merge,

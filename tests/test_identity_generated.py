@@ -4,7 +4,7 @@ re-expressed): engine-owned values, assigned/computed at every write —
 unique monotone-past-watermark ids with gaps allowed (no shuffle, no
 global sort), expressions materialized on commit/update/merge
 post-images. Cross-engine gate: ``storage_identity_column`` in
-plans/round13_queries.py."""
+plans/snapshot_queries.py."""
 
 from __future__ import annotations
 

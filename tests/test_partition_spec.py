@@ -5,7 +5,7 @@ a spec change, and pruning is a superset filter correctness never
 depends on.
 
 The cross-engine hash gate lives in ``storage_partition_evolution``
-(plans/round10_queries.py); these tests pin the mechanics the gate can't
+(plans/snapshot_queries.py); these tests pin the mechanics the gate can't
 see: mixed-spec merge/compact, month/bucket transforms, the small-files
 guard, and spec survival across overwrite.
 """

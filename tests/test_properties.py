@@ -213,7 +213,7 @@ def test_ohlc_argmin_key_resolves_timestamp_ties_exactly(spark, rows):
     df = spark.createDataFrame(
         data, "event_type string, ts timestamp, event_id long, value double"
     )
-    from big_data_assignment2_2025_spark.plans.round5_queries import _ord_key
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import _ord_key
 
     key = _ord_key(F.unix_micros("ts"), F.col("event_id"))
     got = {

@@ -3,7 +3,7 @@ TABLE ... TO VERSION`` / ``CREATE TABLE ... SHALLOW CLONE``
 re-expressed): both metadata-only — a restore is one more manifest
 naming the old state, a clone is a v1 manifest referencing the source's
 directories by absolute path. Cross-engine gates: ``storage_restore``,
-``storage_clone_shallow`` in plans/round13_queries.py."""
+``storage_clone_shallow`` in plans/snapshot_queries.py."""
 
 from __future__ import annotations
 

@@ -1,4 +1,4 @@
-"""Invariant tests for the round-10 tranche (plans/round10_queries.py):
+"""Invariant tests for the round-10 tranche (plans/similarity_queries.py):
 scale-aware SemDeDup.
 
 The hash-gate against DuckDB lives in the driver/oracle_check; these
@@ -15,7 +15,7 @@ from big_data_assignment2_2025_spark.operators.similarity import (
     TARGET_CELL_ROWS,
     semantic_dedup,
 )
-from big_data_assignment2_2025_spark.plans.round10_queries import (
+from big_data_assignment2_2025_spark.plans.similarity_queries import (
     embedding_semdedup_scaled,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table

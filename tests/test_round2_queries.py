@@ -1,5 +1,6 @@
-"""Round-2 query families: TPC-H tranche 2 (plans/relational2.py) and the
-training-pipeline operators (plans/pipeline_queries.py) — value sanity,
+"""Round-2 query families: TPC-H tranche 2 (plans/tpch_queries.py) and the
+training-pipeline operators (plans/text_queries.py, dedup_queries.py,
+events_queries.py, timeseries_queries.py, relational.py) — value sanity,
 cross-operator invariants, and physical-plan audits in the style of
 tests/test_plans.py."""
 
@@ -19,7 +20,7 @@ def _plan(spark, name: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# relational2: values
+# TPC-H tranche 2: values
 # ---------------------------------------------------------------------------
 
 

@@ -1,4 +1,7 @@
-"""Unit tests for the round-3 tranche (plans/round3_queries.py): golden
+"""Unit tests for the round-3 tranche (skyline and weighted median in
+plans/relational.py, interval merge and islands in plans/temporal_queries.py,
+PageRank and BFS in plans/graph_queries.py, gap-fill in
+plans/timeseries_queries.py): golden
 checks on handcrafted inputs for the operators whose correctness is easy to
 get subtly wrong (skyline dominance ties, interval-merge boundary touching,
 islands runs, fixed-point PageRank), plus plan-shape assertions for the
@@ -10,7 +13,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans import round3_queries as r3
+from big_data_assignment2_2025_spark.plans.graph_queries import (
+    graph_bfs_3hop,
+    graph_pagerank_topk,
+)
+from big_data_assignment2_2025_spark.plans.relational import (
+    skyline_parts,
+    weighted_median_price,
+)
+from big_data_assignment2_2025_spark.plans.temporal_queries import (
+    interval_merge_coverage,
+    islands_active_days,
+)
+from big_data_assignment2_2025_spark.plans.timeseries_queries import (
+    orders_daily_gapfill,
+)
 
 
 def _skyline_of(spark, rows):
@@ -57,7 +74,7 @@ def test_skyline_dominance_and_ties(spark):
 
 def test_skyline_plan_is_not_quadratic(spark, sf_dir):
     plan = (
-        r3.skyline_parts(spark, sf_dir)
+        skyline_parts(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -80,12 +97,12 @@ def test_interval_merge_golden(spark, monkeypatch):
     ]
     ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
     monkeypatch.setattr(
-        "big_data_assignment2_2025_spark.plans.round3_queries.load_table",
+        "big_data_assignment2_2025_spark.plans.temporal_queries.load_table",
         lambda s, d, n: ev,
     )
     got = {
         r.user_id: (r.n_blocks, r.covered_us)
-        for r in r3.interval_merge_coverage(spark, "ignored").collect()
+        for r in interval_merge_coverage(spark, "ignored").collect()
     }
     # user 1: block [0, 60m] (s == prev_end merges: `>` strictly opens new)
     # + block [5h, 5h30m] => 90 min covered total
@@ -105,12 +122,12 @@ def test_islands_golden(spark, monkeypatch):
     ]
     ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
     monkeypatch.setattr(
-        "big_data_assignment2_2025_spark.plans.round3_queries.load_table",
+        "big_data_assignment2_2025_spark.plans.temporal_queries.load_table",
         lambda s, d_, n: ev,
     )
     got = {
         r.user_id: (r.n_islands, r.longest_streak)
-        for r in r3.islands_active_days(spark, "ignored").collect()
+        for r in islands_active_days(spark, "ignored").collect()
     }
     assert got[1] == (2, 3)
     assert got[2] == (1, 1)
@@ -154,7 +171,7 @@ def test_pagerank_fixed_point_star_graph(spark, monkeypatch):
     r = {n: 1000000 for n in deg}
     for _ in range(3):
         r = step(r, deg)
-    got = {row.node: row.pr for row in r3.graph_pagerank_topk(spark, "ignored").collect()}
+    got = {row.node: row.pr for row in graph_pagerank_topk(spark, "ignored").collect()}
     assert got == r
     assert max(got, key=lambda n: (got[n], -n)) == 100
 
@@ -173,13 +190,13 @@ def test_bfs_3hop_path_graph(spark, monkeypatch):
         "big_data_assignment2_2025_spark.plans.graph_queries.load_table",
         lambda s, d, n: li,
     )
-    got = {r_.dist: r_.n_nodes for r_ in r3.graph_bfs_3hop(spark, "ignored").collect()}
+    got = {r_.dist: r_.n_nodes for r_ in graph_bfs_3hop(spark, "ignored").collect()}
     assert got == {0: 1, 1: 1, 2: 1, 3: 1}
 
 
 def test_gapfill_calendar_broadcasts(spark, sf_dir):
     plan = (
-        r3.orders_daily_gapfill(spark, sf_dir)
+        orders_daily_gapfill(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -202,10 +219,10 @@ def test_weighted_median_golden(spark, monkeypatch):
         rows, "l_returnflag string, l_extendedprice double, l_quantity double"
     )
     monkeypatch.setattr(
-        "big_data_assignment2_2025_spark.plans.round3_queries.load_table",
+        "big_data_assignment2_2025_spark.plans.relational.load_table",
         lambda s, d, n: li,
     )
-    row = r3.weighted_median_price(spark, "ignored").collect()[0]
+    row = weighted_median_price(spark, "ignored").collect()[0]
     assert (row.weighted_median_cents, row.total_weight) == (200, 4)
 
 

@@ -5,13 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round3_queries import graph_bfs_3hop
-from big_data_assignment2_2025_spark.plans.round4_queries import (
-    training_shuffle_shards,
-    udaf_trimmed_mean,
-)
+from big_data_assignment2_2025_spark.plans.graph_queries import graph_bfs_3hop
+from big_data_assignment2_2025_spark.plans.text_queries import training_shuffle_shards
 from big_data_assignment2_2025_spark.plans.sql_queries import (
     sql_recursive_reachability,
+    udaf_trimmed_mean,
 )
 from tests.conftest import SF_SMALL
 

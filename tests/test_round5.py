@@ -8,12 +8,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round5_queries import (
-    corpus_divergence_kl,
-    dedup_incremental_batch,
-    events_ohlc_bars,
-    table_checksum_xor,
-)
+from big_data_assignment2_2025_spark.plans.text_queries import corpus_divergence_kl
+from big_data_assignment2_2025_spark.plans.dedup_queries import dedup_incremental_batch
+from big_data_assignment2_2025_spark.plans.timeseries_queries import events_ohlc_bars
+from big_data_assignment2_2025_spark.plans.relational import table_checksum_xor
 from big_data_assignment2_2025_spark.sources.readers import load_table
 from tests.conftest import SF_SMALL
 
@@ -101,7 +99,7 @@ def test_kl_terms_are_finite_and_probabilities_normalize(spark):
 
 
 def test_rolling_dau_dominates_daily_and_is_windowed(spark):
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import (
         events_rolling_dau,
     )
 
@@ -118,9 +116,7 @@ def test_rolling_dau_dominates_daily_and_is_windowed(spark):
 
 
 def test_fk_audit_is_clean_on_consistent_fixture(spark):
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
-        fk_integrity_audit,
-    )
+    from big_data_assignment2_2025_spark.plans.relational import fk_integrity_audit
 
     rows = {r["fk"]: (r["n_child"], r["n_orphans"]) for r in
             fk_integrity_audit(spark, SF_SMALL).collect()}
@@ -148,8 +144,10 @@ def _hll_corrected(row, m=512):
 
 
 def test_rolling_dau_approx_tracks_exact_within_rsd(spark):
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import (
         events_rolling_dau,
+    )
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_rolling_dau_approx,
     )
 
@@ -172,7 +170,7 @@ def test_hll_registers_match_python_simulation(spark):
     cross-engine oracle possible at all."""
     import hashlib
 
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_rolling_dau_approx,
     )
 
@@ -215,7 +213,7 @@ def test_hll_registers_match_python_simulation(spark):
 
 
 def test_arrow_grouped_map_is_arrow_not_pandas(spark):
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
+    from big_data_assignment2_2025_spark.plans.events_queries import (
         events_type_stats_arrow,
     )
 
@@ -246,7 +244,7 @@ def test_sketch_operators_survive_degenerate_inputs(spark):
 
 def test_gram_matrix_partition_invariant_and_diagonal_positive(spark):
     from big_data_assignment2_2025_spark.operators.moments import gram_matrix
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
+    from big_data_assignment2_2025_spark.plans.similarity_queries import (
         embedding_gram_matrix,
     )
 
@@ -386,7 +384,7 @@ def test_ord_key_orders_pre_epoch_timestamps_correctly(spark):
     (EPOCH_MICROS_BIAS) is non-negative for any year-1+ timestamp."""
     import datetime
 
-    from big_data_assignment2_2025_spark.plans.round5_queries import _ord_key
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import _ord_key
 
     data = [
         ("t", datetime.datetime(1969, 12, 30, 12, 0, 0), 1, 1.0),  # earliest

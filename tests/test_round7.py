@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from big_data_assignment2_2025_spark.operators.sketches import (
     hist_quantile_sketch,
 )
-from big_data_assignment2_2025_spark.plans.round7_queries import (
+from big_data_assignment2_2025_spark.plans.sketches_queries import (
     VALUE_BINS,
     VALUE_HI_MICRO,
     VALUE_LO_MICRO,
@@ -94,7 +94,7 @@ def test_rolling_hist_quantile_contains_window_order_statistic(spark):
     trailing window union — proving the count-addition merge recovers the
     window's true distribution (exact quantiles cannot compose this way;
     additive counts can)."""
-    from big_data_assignment2_2025_spark.plans.round7_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_rolling_quantiles_hist,
     )
 
@@ -129,7 +129,7 @@ def test_audience_overlap_tracks_exact_sets(spark):
     exact audience sets within sketch tolerance — each estimate's rsd is
     ~4.6% (p=9), and the intersection inherits error proportional to the
     UNION size (the documented caveat), so the band is on the union."""
-    from big_data_assignment2_2025_spark.plans.round7_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_audience_overlap_hll,
     )
 
@@ -250,7 +250,7 @@ def test_distinct_profile_tracks_exact_per_column(spark):
     exact)."""
     import math
 
-    from big_data_assignment2_2025_spark.plans.round7_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         PROFILE_COLS,
         lineitem_distinct_profile_hll,
     )
@@ -363,9 +363,7 @@ def test_streaming_cms_bit_identical_to_batch_daily_sketch(spark):
         cms_counters,
         cms_estimate_for_keys,
     )
-    from big_data_assignment2_2025_spark.plans.round7_queries import (
-        CMS_WATCH_USERS,
-    )
+    from big_data_assignment2_2025_spark.plans.sketches_queries import CMS_WATCH_USERS
     from big_data_assignment2_2025_spark.streaming.stream import (
         run_streaming_user_freq_cms,
     )
@@ -418,7 +416,7 @@ def test_kmv_audience_exact_when_distinct_below_k(spark):
     """With fewer than k=256 distinct users per segment the samples are
     COMPLETE, so every estimate must equal the exact set-op answer times
     1e6 — including the set differences HLL cannot produce at all."""
-    from big_data_assignment2_2025_spark.plans.round7_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_audience_diff_kmv,
     )
 
@@ -455,7 +453,7 @@ def test_kmv_audience_accuracy_at_truncating_scale(spark):
     rsd ~ 1/sqrt(k-1) of the UNION size (intersection/difference error
     scales with the union for theta sketches, like HLL's
     inclusion-exclusion)."""
-    from big_data_assignment2_2025_spark.plans.round7_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_audience_diff_kmv,
     )
 

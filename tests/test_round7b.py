@@ -1,4 +1,5 @@
-"""Invariant tests for the round-7b tranche (plans/round7b_queries.py):
+"""Invariant tests for the round-7b tranche (plans/sketches_queries.py,
+plans/timeseries_queries.py, plans/search_queries.py, plans/relational.py):
 chunked-bitmap exact distinct, gap-fill interpolation, RRF fusion,
 positional phrase search, incremental view maintenance.
 
@@ -13,16 +14,24 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7b_queries import (
+from big_data_assignment2_2025_spark.plans.search_queries import (
     _PHRASE,
+    search_phrase_match,
+    search_rrf_fusion,
+)
+from big_data_assignment2_2025_spark.plans.similarity_queries import (
     embedding_int8_quantize,
+)
+from big_data_assignment2_2025_spark.plans.sketches_queries import (
     events_bitmap_daily_users,
+)
+from big_data_assignment2_2025_spark.plans.timeseries_queries import (
     events_gap_fill_interpolate,
+)
+from big_data_assignment2_2025_spark.plans.relational import (
     ivm_orders_agg_refresh,
     orders_group_sample,
-    search_phrase_match,
     snapshot_diff_cdc,
-    search_rrf_fusion,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table
 

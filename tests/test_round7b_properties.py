@@ -14,9 +14,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7b_queries import (
-    bitmap_distinct_agg,
-)
+from big_data_assignment2_2025_spark.plans.sketches_queries import bitmap_distinct_agg
 
 _SETTINGS = settings(
     max_examples=12,

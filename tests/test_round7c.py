@@ -1,16 +1,19 @@
-"""Invariant tests for the round-7c tranche (plans/round7c_queries.py):
-cohort retention, last-touch attribution, MCV column stats."""
+"""Invariant tests for the round-7c tranche (plans/events_queries.py,
+plans/sketches_queries.py, plans/search_queries.py): cohort retention,
+last-touch attribution, MCV column stats, prefix and negated search."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7c_queries import (
+from big_data_assignment2_2025_spark.plans.events_queries import (
     _ATTRIB_DAYS,
-    _MCV_COLS,
-    _MCV_K,
     events_attribution_last_touch,
     events_cohort_retention,
+)
+from big_data_assignment2_2025_spark.plans.sketches_queries import (
+    _MCV_COLS,
+    _MCV_K,
     lineitem_mcv_stats,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table
@@ -111,7 +114,7 @@ def test_mcv_topk_shape_and_counts(spark, sf_dir):
 
 
 def test_bm25_exclusion_drops_docs_with_excluded_term(spark, sf_dir):
-    from big_data_assignment2_2025_spark.plans.round7c_queries import (
+    from big_data_assignment2_2025_spark.plans.search_queries import (
         _EXCL_TERM,
         bm25_search_excluding,
     )
@@ -134,7 +137,7 @@ def test_bm25_exclusion_drops_docs_with_excluded_term(spark, sf_dir):
 def test_bm25_prefix_expands_only_prefix_terms(spark, sf_dir):
     """Every doc in the prefix result must contain at least one token
     starting with the prefix; scores are positive and sorted."""
-    from big_data_assignment2_2025_spark.plans.round7c_queries import (
+    from big_data_assignment2_2025_spark.plans.search_queries import (
         _PREFIX,
         bm25_prefix_search,
     )
@@ -197,12 +200,8 @@ def test_stream_join_left_holds_back_tail_clicks(spark, sf_dir):
 
 def test_snippets_contain_query_terms(spark, sf_dir):
     from big_data_assignment2_2025_spark.operators.search import parse_query
-    from big_data_assignment2_2025_spark.plans.round7d_queries import (
-        search_snippets,
-    )
-    from big_data_assignment2_2025_spark.plans.search_queries import (
-        FLAGSHIP_QUERY,
-    )
+    from big_data_assignment2_2025_spark.plans.search_queries import search_snippets
+    from big_data_assignment2_2025_spark.plans.search_queries import FLAGSHIP_QUERY
 
     terms = set(parse_query(FLAGSHIP_QUERY))
     rows = search_snippets(spark, sf_dir).collect()
@@ -214,7 +213,7 @@ def test_snippets_contain_query_terms(spark, sf_dir):
 
 
 def test_band_join_blocked_equals_naive_and_probes_less(spark, sf_dir):
-    from big_data_assignment2_2025_spark.plans.round7d_queries import (
+    from big_data_assignment2_2025_spark.plans.temporal_queries import (
         _BAND_US,
         events_band_join_grid,
     )

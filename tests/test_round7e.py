@@ -7,16 +7,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.events_queries import (
-    events_latest_state,
-)
-from big_data_assignment2_2025_spark.plans.round7e_queries import (
+from big_data_assignment2_2025_spark.plans.events_queries import events_latest_state
+from big_data_assignment2_2025_spark.plans.storage_queries import (
     _staged_range_orders,
     manifest_for,
     orders_manifest_skipping,
-    skew_join_salted,
-    text_bpe_merge_pairs,
 )
+from big_data_assignment2_2025_spark.plans.relational import skew_join_salted
+from big_data_assignment2_2025_spark.plans.text_queries import text_bpe_merge_pairs
 from big_data_assignment2_2025_spark.plans.streaming_queries import (
     streaming_latest_state,
 )

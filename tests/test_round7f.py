@@ -6,11 +6,9 @@ import re
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7f_queries import (
-    dedup_containment,
-    events_pattern_match,
-    observed_profile,
-)
+from big_data_assignment2_2025_spark.plans.dedup_queries import dedup_containment
+from big_data_assignment2_2025_spark.plans.events_queries import events_pattern_match
+from big_data_assignment2_2025_spark.plans.sketches_queries import observed_profile
 from big_data_assignment2_2025_spark.sources.readers import load_table
 
 

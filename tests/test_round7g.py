@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from big_data_assignment2_2025_spark.plans.round7g_queries import (
+from big_data_assignment2_2025_spark.plans.timeseries_queries import (
     events_seasonal_decompose,
 )
 
@@ -36,7 +36,7 @@ def test_decompose_is_run_deterministic(spark, sf_dir):
 
 
 def test_ewma_baseline_matches_python(spark, sf_dir):
-    from big_data_assignment2_2025_spark.plans.round7g_queries import (
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import (
         _EWMA_LAGS,
         _SCALE,
         events_ewma_anomaly,
@@ -77,9 +77,7 @@ def test_ewma_baseline_matches_python(spark, sf_dir):
 def test_langid_confusion_shares_sum_to_one(spark, sf_dir):
     from collections import defaultdict
 
-    from big_data_assignment2_2025_spark.plans.round7g_queries import (
-        docs_langid_confusion,
-    )
+    from big_data_assignment2_2025_spark.plans.text_queries import docs_langid_confusion
 
     rows = docs_langid_confusion(spark, sf_dir).collect()
     assert len(rows) > 0
@@ -95,12 +93,8 @@ def test_top_paths_counts_match_sequences(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from big_data_assignment2_2025_spark.plans.round7f_queries import (
-        user_day_sequences,
-    )
-    from big_data_assignment2_2025_spark.plans.round7g_queries import (
-        events_top_paths,
-    )
+    from big_data_assignment2_2025_spark.plans.events_queries import user_day_sequences
+    from big_data_assignment2_2025_spark.plans.events_queries import events_top_paths
     from big_data_assignment2_2025_spark.sources.readers import load_table
 
     got = [
@@ -119,7 +113,7 @@ def test_entropy_matches_python(spark, sf_dir):
     import math
     from collections import Counter
 
-    from big_data_assignment2_2025_spark.plans.round7g_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         _ENT_COLS,
         _ENT_SCALE,
         part_attribute_entropy,
@@ -166,7 +160,7 @@ def test_linear_attribution_conserves_value(spark, sf_dir):
     per-day credit == sum of v_micros over purchases with >= 1 touch."""
     from pyspark.sql import functions as F
 
-    from big_data_assignment2_2025_spark.plans.round7g_queries import (
+    from big_data_assignment2_2025_spark.plans.events_queries import (
         _LIN_BAND_US,
         events_attribution_linear,
     )
@@ -205,7 +199,7 @@ def test_linear_attribution_conserves_value(spark, sf_dir):
 
 
 def test_streaming_pattern_match_equals_batch(spark, sf_dir):
-    from big_data_assignment2_2025_spark.plans.round7f_queries import (
+    from big_data_assignment2_2025_spark.plans.events_queries import (
         events_pattern_match,
     )
     from big_data_assignment2_2025_spark.plans.streaming_queries import (
@@ -226,7 +220,7 @@ def test_streaming_pattern_match_equals_batch(spark, sf_dir):
 def test_cumulative_users_is_monotone_and_final_total(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from big_data_assignment2_2025_spark.plans.round7g_queries import (
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import (
         events_cumulative_users,
     )
     from big_data_assignment2_2025_spark.sources.readers import load_table
@@ -252,7 +246,7 @@ def test_dau_rollup_grains_are_consistent(spark, sf_dir):
     grains partition the same day set."""
     from collections import defaultdict
 
-    from big_data_assignment2_2025_spark.plans.round7g_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_dau_rollup_hll,
     )
 

@@ -4,10 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7h_queries import (
-    customer_k_anonymity_audit,
+from big_data_assignment2_2025_spark.plans.relational import customer_k_anonymity_audit
+from big_data_assignment2_2025_spark.plans.events_queries import (
     events_day_churn,
     events_segment_pmi,
+)
+from big_data_assignment2_2025_spark.plans.timeseries_queries import (
     orders_revenue_drawdown,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table
@@ -90,7 +92,7 @@ def test_segment_pmi_matches_python(spark, sf_dir):
 def test_rolling_slope_matches_python(spark, sf_dir):
     import math
 
-    from big_data_assignment2_2025_spark.plans.round7h_queries import (
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import (
         events_rolling_slope,
     )
 

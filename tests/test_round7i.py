@@ -1,4 +1,6 @@
-"""Invariant tests for the round-7i tranche (plans/round7i_queries.py):
+"""Invariant tests for the round-7i tranche (plans/graph_queries.py,
+plans/timeseries_queries.py, plans/relational.py, plans/text_queries.py,
+plans/events_queries.py):
 min-label propagation, CUSUM changepoint, Benford audit, collocation LLR,
 seeded noisy-count release, l-diversity — plus the streaming EWMA twin.
 
@@ -14,24 +16,26 @@ import math
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.graph_queries import (
-    _copurchase_edges,
-)
-from big_data_assignment2_2025_spark.plans.round7g_queries import (
-    events_ewma_anomaly,
-)
-from big_data_assignment2_2025_spark.plans.round7i_queries import (
-    _BENFORD_P,
+from big_data_assignment2_2025_spark.plans.events_queries import (
     _DP_B,
     _DP_SEED,
-    _L_DIVERSITY,
-    _LPA_ROUNDS,
-    customer_l_diversity,
-    events_changepoint_cusum,
     events_dp_noisy_counts,
+)
+from big_data_assignment2_2025_spark.plans.graph_queries import (
+    _LPA_ROUNDS,
+    _copurchase_edges,
     graph_label_propagation,
+)
+from big_data_assignment2_2025_spark.plans.relational import (
+    _BENFORD_P,
+    _L_DIVERSITY,
+    customer_l_diversity,
     orders_benford_audit,
-    text_collocations_llr,
+)
+from big_data_assignment2_2025_spark.plans.text_queries import text_collocations_llr
+from big_data_assignment2_2025_spark.plans.timeseries_queries import (
+    events_changepoint_cusum,
+    events_ewma_anomaly,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table
 

@@ -1,4 +1,5 @@
-"""Invariant tests for the round-7j tranche (plans/round7j_queries.py):
+"""Invariant tests for the round-7j tranche (plans/events_queries.py,
+plans/timeseries_queries.py, plans/temporal_queries.py, plans/relational.py):
 Markov transitions, daily ACF, median/MAD anomaly, TWAP, interval merge,
 SCD Type-2 history.
 
@@ -14,16 +15,20 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7j_queries import (
+from big_data_assignment2_2025_spark.plans.temporal_queries import (
     _INTERVAL_US,
+    events_interval_merge,
+)
+from big_data_assignment2_2025_spark.plans.timeseries_queries import (
     _MAD_K10K,
     events_acf_daily,
-    events_interval_merge,
     events_mad_anomaly,
-    events_markov_transitions,
     events_twap_daily,
-    orders_scd2_history,
 )
+from big_data_assignment2_2025_spark.plans.events_queries import (
+    events_markov_transitions,
+)
+from big_data_assignment2_2025_spark.plans.relational import orders_scd2_history
 from big_data_assignment2_2025_spark.sources.readers import load_table
 
 

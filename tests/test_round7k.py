@@ -1,5 +1,5 @@
-"""Invariant tests for the round-7k tranche (plans/round7k_queries.py):
-Kaplan-Meier survival and LPA-community modularity.
+"""Invariant tests for the round-7k tranche (plans/events_queries.py,
+plans/graph_queries.py): Kaplan-Meier survival and LPA-community modularity.
 
 The hash-gate against DuckDB lives in the driver/oracle_check; these
 tests pin the semantic invariants (Python re-derivations on the small
@@ -13,14 +13,10 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
+from big_data_assignment2_2025_spark.plans.events_queries import events_survival_km
 from big_data_assignment2_2025_spark.plans.graph_queries import (
     _copurchase_edges,
-)
-from big_data_assignment2_2025_spark.plans.round7i_queries import (
     graph_label_propagation,
-)
-from big_data_assignment2_2025_spark.plans.round7k_queries import (
-    events_survival_km,
     graph_modularity,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table

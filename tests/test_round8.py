@@ -1,4 +1,5 @@
-"""Invariant tests for the round-8 tranche (plans/round8_queries.py):
+"""Invariant tests for the round-8 tranche (plans/similarity_queries.py,
+plans/dedup_queries.py):
 SemDeDup semantic dedup and content-defined exact-substring dedup.
 
 The hash-gate against DuckDB lives in the driver/oracle_check; these
@@ -13,10 +14,10 @@ from pyspark.sql import functions as F
 
 from big_data_assignment2_2025_spark.operators.dedup import char_anchor_pairs
 from big_data_assignment2_2025_spark.operators.similarity import semantic_dedup
-from big_data_assignment2_2025_spark.plans.round8_queries import (
+from big_data_assignment2_2025_spark.plans.dedup_queries import (
     docs_exact_substring_dedup,
-    embedding_semdedup,
 )
+from big_data_assignment2_2025_spark.plans.similarity_queries import embedding_semdedup
 from big_data_assignment2_2025_spark.sources.readers import load_table
 
 
@@ -172,9 +173,7 @@ def test_winnowing_identical_short_docs_pair(spark):
 def test_winnowing_fixture_pairs_share_real_runs(spark, sf_dir):
     """Fixture pairs from the winnowing query genuinely share a verbatim
     40-char run (value-join soundness, md5 collisions aside)."""
-    from big_data_assignment2_2025_spark.plans.round8_queries import (
-        docs_winnowing_dedup,
-    )
+    from big_data_assignment2_2025_spark.plans.dedup_queries import docs_winnowing_dedup
 
     pairs = docs_winnowing_dedup(spark, sf_dir).collect()
     assert pairs

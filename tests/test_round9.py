@@ -1,5 +1,5 @@
 """Round-9 gated PQ family: deterministic lowest-id codebooks, Catalyst
-encode, ADC top-k and IVFADC-style exact rerank (plans/round9_queries.py).
+encode, ADC top-k and IVFADC-style exact rerank (plans/similarity_queries.py).
 The DuckDB oracle is the primary gate; these tests pin the pieces the
 oracle can't see — codebook construction, code domain, and that the
 reranked distances are the TRUE L2 distances."""
@@ -15,7 +15,7 @@ from big_data_assignment2_2025_spark.operators.pq import (
     pq_lowest_id_codebooks,
     pq_topk,
 )
-from big_data_assignment2_2025_spark.plans.round9_queries import (
+from big_data_assignment2_2025_spark.plans.similarity_queries import (
     _K_CENTS,
     _M,
     ann_pq_rerank,
@@ -106,7 +106,7 @@ def test_sq8_codes_in_range_and_recall(spark, sf_dir):
     from big_data_assignment2_2025_spark.operators.similarity import (
         brute_force_topk,
     )
-    from big_data_assignment2_2025_spark.plans.round9_queries import (
+    from big_data_assignment2_2025_spark.plans.similarity_queries import (
         _sq8_quantized,
         ann_sq8_topk,
     )

@@ -137,7 +137,9 @@ def test_weighted_sample_biases_toward_heavy_rows(spark):
 def test_ohlc_window_variant_matches_aggregate_form(spark):
     # the shuffle_report A/B comparator must be semantically identical to
     # the gated aggregate form, or the byte comparison is meaningless
-    from big_data_assignment2_2025_spark.plans.round5_queries import events_ohlc_bars
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import (
+        events_ohlc_bars,
+    )
     from tools.shuffle_report import _ohlc_window_variant
 
     key = ["event_type", "day"]

@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round8c_queries import (
+from big_data_assignment2_2025_spark.plans.snapshot_queries import (
     _N_RANGE_COMMITS,
     _staged_pruned_merge_store,
     storage_snapshot_diff,

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from big_data_assignment2_2025_spark.functions.text import tokens_of
-from big_data_assignment2_2025_spark.plans.round8c_queries import (
+from big_data_assignment2_2025_spark.plans.search_queries import (
     _DELETES_SQL,
     _TYPO_QUERIES,
     search_spell_suggest,

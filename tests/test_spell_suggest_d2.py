@@ -1,4 +1,4 @@
-"""SymSpell deletes-2 blocking (plans/round9_queries.py): completeness vs
+"""SymSpell deletes-2 blocking (plans/search_queries.py): completeness vs
 the naive levenshtein<=2 cross join, and the probe-count reduction that
 justifies indexing the two-deletion neighborhood."""
 
@@ -8,7 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from big_data_assignment2_2025_spark.functions.text import tokens_of
-from big_data_assignment2_2025_spark.plans.round9_queries import (
+from big_data_assignment2_2025_spark.plans.search_queries import (
     _DELETES2_SQL,
     _TYPO2_QUERIES,
     search_spell_suggest_d2,

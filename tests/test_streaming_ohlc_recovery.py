@@ -31,7 +31,7 @@ def _run_to_completion(spark, src, ckpt, out):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    from big_data_assignment2_2025_spark.plans.round5_queries import _ord_key
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import _ord_key
 
     key = _ord_key(F.unix_micros("ts"), F.col("event_id"))
     agg = stream.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(

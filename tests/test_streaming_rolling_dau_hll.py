@@ -212,7 +212,7 @@ def test_null_user_day_observed_but_contributes_no_registers(spark):
 
 
 def test_streaming_twin_is_bit_identical_to_batch_twin(spark):
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_rolling_dau_approx,
     )
     from big_data_assignment2_2025_spark.streaming.stream import (

@@ -10,7 +10,7 @@ import random
 from pyspark.sql import functions as F
 
 from big_data_assignment2_2025_spark.functions.zorder import zorder_key2
-from big_data_assignment2_2025_spark.plans.round9_queries import (
+from big_data_assignment2_2025_spark.plans.storage_queries import (
     _staged_zorder_store,
     _zkey_py,
     storage_zorder_box_read,

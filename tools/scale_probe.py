@@ -506,8 +506,10 @@ def dau_sketch_probe(spark, sf_dir: str = SRC) -> dict:
     BOTH registry queries against it unmodified."""
     import time as _t
 
-    from big_data_assignment2_2025_spark.plans.round5_queries import (
+    from big_data_assignment2_2025_spark.plans.timeseries_queries import (
         events_rolling_dau,
+    )
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_rolling_dau_approx,
     )
     from tools.shuffle_report import _total_shuffle
@@ -576,7 +578,7 @@ def cms_sketch_probe(spark, sf_dir: str = SRC) -> dict:
     unmodified next to the naive exact aggregate."""
     import time as _t
 
-    from big_data_assignment2_2025_spark.plans.round7_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_user_freq_cms,
     )
     from tools.shuffle_report import _total_shuffle
@@ -652,7 +654,7 @@ def bitmap_sketch_probe(spark, sf_dir: str = SRC) -> dict:
         hll_estimate,
         hll_registers,
     )
-    from big_data_assignment2_2025_spark.plans.round7b_queries import (
+    from big_data_assignment2_2025_spark.plans.sketches_queries import (
         events_bitmap_daily_users,
     )
     from tools.shuffle_report import _total_shuffle

@@ -358,7 +358,7 @@ def _attribution_rangejoin_variant(spark: SparkSession, sf_dir: str) -> DataFram
     """The naive last-touch attribution: purchases x clicks range
     self-join on (user, ts window) — per-user fan-out is clicks x
     purchases, the quadratic shape the single window pass avoids."""
-    from big_data_assignment2_2025_spark.plans.round7c_queries import _ATTRIB_DAYS
+    from big_data_assignment2_2025_spark.plans.events_queries import _ATTRIB_DAYS
 
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     p = ev.where(F.col("event_type") == "purchase").select(
