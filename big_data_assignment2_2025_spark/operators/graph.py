@@ -38,7 +38,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import materialize, materialized
+from .materialize import materialize, materialized, release
 
 
 def connected_components(
@@ -68,8 +68,9 @@ def connected_components(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     with materialized(sym, checkpoint_dir) as edges:
-        # labels, every round: one row per node
-        labels = materialize(
+        # labels, every round: one row per node. ``cur`` is the round's
+        # checkpoint, freed once the next round is computed from it
+        cur = labels = materialize(
             edges.select(F.col("src").alias("node"))
             .distinct()
             .withColumn("label", F.col("node")),
@@ -106,7 +107,8 @@ def connected_components(
                 ),
                 checkpoint_dir,
             )
-            labels = new_labels.select("node", "label")
+            release(cur)
+            cur, labels = new_labels, new_labels.select("node", "label")
             if new_labels.where(F.col("chg")).isEmpty():
                 break
 

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.materialize import materialize, materialized
+from ..operators.materialize import materialize, materialized, release
 from ..sources.readers import load_table
 
 
@@ -237,7 +237,11 @@ def graph_kcore_peel(
             checkpoint_dir,
         )
         summaries.append((rnd, keep.count(), new_edges.count()))
+        # the counts are on the driver: this round's survivors and the
+        # edge list it peeled are dead
+        release(keep, edges)
         edges = new_edges
+    release(edges)
     return spark.createDataFrame(
         summaries, "round long, n_nodes long, n_edges long"
     )
@@ -565,7 +569,7 @@ def _label_propagation(edges: DataFrame) -> DataFrame:
             .agg(F.min("nbr_label").alias("nbr_label"))
         )
         # bound: one row per node
-        labels = materialize(
+        new_labels = materialize(
             labels.join(nbr_min, "node", "left").select(
                 "node",
                 F.least(
@@ -573,6 +577,12 @@ def _label_propagation(edges: DataFrame) -> DataFrame:
                 ).alias("label"),
             )
         )
+        # the previous round's checkpoint is dead now (round 0's labels
+        # are a plan over ``und``, which release leaves alone); the
+        # caller's ``edges`` stay, graph_modularity reads them again
+        release(labels)
+        labels = new_labels
+    release(und)
     return labels
 
 

@@ -71,10 +71,19 @@ from pyspark.sql.types import StructField, StructType
 
 FORMAT_NAME = "snapshotstream"
 
-#: mirror of ``snapshots._READER_VERSION`` — keep in sync (this module
-#: must stay light for executor import; equality is test-pinned in
-#: tests/test_protocol_version.py)
+#: reader generations this code understands (Delta's protocol
+#: ``minReaderVersion`` re-expressed): 1 = base manifests, 2 = deletion
+#: vectors, 3 = initial defaults + CHECK constraints, 4 = column
+#: mapping (rename/drop) + identity/generated columns. A manifest
+#: stamped with a HIGHER requirement refuses loudly on open — an old
+#: reader silently ignoring ``deletes``/``defaults``/``column_mapping``
+#: keys would serve wrong rows, the worst failure class a store can
+#: have. Declared here, not in ``snapshots.py``, because this module must
+#: stay light for executor import; the store imports it.
 _READER_VERSION = 4
+
+#: the store's version log: ``_manifests/v{N:08d}.json``, one per version
+_MANIFEST_DIR = "_manifests"
 
 
 def _read_file_backfilled(
@@ -215,26 +224,29 @@ def _member_file_partitions(
     return out
 
 
+def _manifest_path(path: str, version: int) -> str:
+    return os.path.join(path, _MANIFEST_DIR, f"v{version:08d}.json")
+
+
 def _list_versions(path: str) -> list[int]:
-    """Committed versions under ``path``, ascending — the Spark-free
-    mirror of ``SnapshotStore.versions()`` (this module must stay
-    importable on executors without session machinery)."""
-    d = os.path.join(path, "_manifests")
+    """Committed versions under ``path``, ascending. Listing the manifest
+    directory is the only directory scan of a store, bounded by commit
+    count."""
     return sorted(
         int(n[1:-5])
-        for n in os.listdir(d)
+        for n in os.listdir(os.path.join(path, _MANIFEST_DIR))
         if n.startswith("v") and n.endswith(".json")
     )
 
 
-def _load_manifest(path: str, version: int) -> dict:
-    with open(
-        os.path.join(path, "_manifests", f"v{version:08d}.json")
-    ) as fh:
+def _load_manifest(path: str, version: int, error=ValueError) -> dict:
+    """Manifest ``version`` of the store at ``path``; raises ``error`` when
+    its ``min_reader_version`` is newer than ``_READER_VERSION``."""
+    with open(_manifest_path(path, version)) as fh:
         doc = json.load(fh)
     need = int(doc.get("min_reader_version", 1))
     if need > _READER_VERSION:
-        raise ValueError(
+        raise error(
             f"manifest v{version} requires reader protocol {need} but "
             f"this reader understands {_READER_VERSION}: a newer writer "
             "recorded table features this generation would silently "

@@ -27,6 +27,16 @@ Design (the public Delta/Iceberg insight, re-expressed minimally):
   same version number loses with ``FileExistsError``, which is exactly
   optimistic concurrency control; the loser re-reads latest and retries
   one version up.
+- **One commit path.** Every publishing verb lands through
+  ``SnapshotStore._land``: read the latest manifest, run the verb's
+  attempt on it, publish the result with ``_publish`` (the only manifest
+  writer, which stamps ``min_reader_version``). The attempt derives the
+  next manifest with ``_next_doc``, which carries every table-level key
+  the verb does not set; a verb that rewrites members writes, re-stats
+  and swaps them with ``_replace_members``. A lost race rebases (run the
+  attempt again on the new latest, at most ``_OCC_RETRIES`` times),
+  except for the rewrite verbs, whose files copy one specific version:
+  they raise ``SnapshotConflictError``.
 - **Append is O(new data).** An append commit writes only the new rows'
   directory; its manifest is the previous member list plus one entry.
   ``diff(v_from, v_to)`` reads ONLY the member directories added in
@@ -115,8 +125,14 @@ from pyspark.sql.types import (
 
 from ..operators.materialize import materialized
 from . import blooms
+from .snapshot_source import (
+    _MANIFEST_DIR,
+    _READER_VERSION,  # noqa: F401  (the store's protocol, re-exported)
+    _list_versions,
+    _load_manifest,
+    _manifest_path,
+)
 
-_MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
 #: bounded optimistic-concurrency retries before a writer gives up
@@ -130,17 +146,6 @@ _BUCKET_RE = re.compile(r"^bucket\[(\d+)\]$")
 
 #: Hive's directory name for a NULL partition value
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-#: reader generations this code understands (Delta's protocol
-#: ``minReaderVersion`` re-expressed): 1 = base manifests, 2 = deletion
-#: vectors, 3 = initial defaults + CHECK constraints, 4 = column
-#: mapping (rename/drop) + identity/generated columns. A manifest
-#: stamped with a HIGHER requirement refuses loudly on open — an old
-#: reader silently ignoring ``deletes``/``defaults``/``column_mapping``
-#: keys would serve wrong rows, the worst failure class a store can
-#: have. ``sources/snapshot_source.py`` mirrors this constant (test-
-#: pinned in tests/test_protocol_version.py).
-_READER_VERSION = 4
 
 #: canonical ISO lexical prefix (zero-padded yyyy-MM…) — the only string
 #: form whose lexical order agrees with temporal order, and so the only
@@ -187,35 +192,19 @@ class SnapshotStore:
     # -- version resolution -------------------------------------------------
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(
-            self.base_dir, _MANIFEST_DIR, f"v{version:08d}.json"
-        )
+        return _manifest_path(self.base_dir, version)
 
     def versions(self) -> list[int]:
         """Committed versions, ascending. Listing ``_manifests/`` is the
         only directory scan in the store, bounded by commit count."""
-        out = []
-        for name in os.listdir(os.path.join(self.base_dir, _MANIFEST_DIR)):
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
+        return _list_versions(self.base_dir)
 
     def latest_version(self) -> int | None:
         vs = self.versions()
         return vs[-1] if vs else None
 
     def manifest(self, version: int) -> dict:
-        with open(self._manifest_path(version)) as fh:
-            doc = json.load(fh)
-        need = int(doc.get("min_reader_version", 1))
-        if need > _READER_VERSION:
-            raise ProtocolVersionError(
-                f"manifest v{version} requires reader protocol {need} but "
-                f"this reader understands {_READER_VERSION}: a newer "
-                "writer recorded table features this generation would "
-                "silently mis-read (wrong rows). Upgrade the reader."
-            )
-        return doc
+        return _load_manifest(self.base_dir, version, ProtocolVersionError)
 
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY (Delta) / ``snapshots`` (Iceberg) as a list
@@ -451,11 +440,8 @@ class SnapshotStore:
                     f"default {default!r} is not castable to column type "
                     f"{dtype.simpleString()}: {e}"
                 ) from None
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("add_column() on an empty store")
-            doc = self.manifest(prev)
+
+        def attempt(prev, doc):
             if doc.get("schema") is None:
                 raise ValueError(
                     "add_column() needs a schema-tracking manifest; commit "
@@ -476,31 +462,13 @@ class SnapshotStore:
                     "value": default,
                     "members": list(doc["members"]),
                 }
-            version = prev + 1
-            try:
-                self._publish(
-                    version,
-                    {"version": version, "mode": "alter",
-                     "members": list(doc["members"]), "added": [],
-                     "stats": dict(doc.get("stats", {})),
-                     "partitions": dict(doc.get("partitions", {})),
-                     "deletes": dict(doc.get("deletes", {})),
-                     "deletes_rows": dict(doc.get("deletes_rows", {})),
-                     "partition_spec": doc.get("partition_spec"),
-                     "txns": dict(doc.get("txns", {})),
-                     "constraints": dict(doc.get("constraints", {})),
-                     "defaults": new_defaults,
-                     "column_mapping": mapping,
-                     "schema": new_schema.jsonValue(),
-                     "schema_version": doc.get("schema_version", 1) + 1},
-                )
-                return version
-            except FileExistsError:
-                continue  # rebase: re-read latest, retry one version up
-        raise SnapshotConflictError(
-            f"add_column could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+            return self._next_doc(
+                doc, "alter", defaults=new_defaults, column_mapping=mapping,
+                schema=new_schema.jsonValue(),
+                schema_version=doc.get("schema_version", 1) + 1,
+            )
+
+        return self._land("add_column", attempt)
 
     def rename_column(self, old: str, new: str) -> int:
         """Rename a column WITHOUT rewriting any data file (Delta column
@@ -517,11 +485,8 @@ class SnapshotStore:
         re-add the rule under the new name)."""
         if old == new:
             raise ValueError("rename_column: old and new are the same")
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("rename_column() on an empty store")
-            doc = self.manifest(prev)
+
+        def attempt(prev, doc):
             if doc.get("schema") is None:
                 raise ValueError(
                     "rename_column() needs a schema-tracking manifest"
@@ -550,73 +515,45 @@ class SnapshotStore:
                 # renaming back to the exact physical name un-maps
                 mapping[new] = phys
             ren = lambda c: new if c == old else c  # noqa: E731
-            new_schema = StructType(
-                [
-                    StructField(ren(f.name), f.dataType, True)
-                    for f in schema.fields
-                ]
-            )
-            stats = {
-                m: {ren(c): v for c, v in s.items()}
-                for m, s in doc.get("stats", {}).items()
-            }
-            parts = {
-                m: {
-                    **e,
-                    "fields": [
-                        {**fld, "source": ren(fld["source"])}
-                        for fld in e.get("fields", [])
-                    ],
-                }
-                for m, e in doc.get("partitions", {}).items()
-            }
-            spec = doc.get("partition_spec")
-            if spec:
-                spec = {
-                    **spec,
+
+            def renamed(key: str) -> dict:
+                return {ren(c): v for c, v in (doc.get(key) or {}).items()}
+
+            def sources_renamed(entry: dict) -> dict:
+                return {
+                    **entry,
                     "fields": [
                         {**f, "source": ren(f["source"])}
-                        for f in spec.get("fields", [])
+                        for f in entry.get("fields", [])
                     ],
                 }
-            defaults = {
-                ren(c): v for c, v in (doc.get("defaults") or {}).items()
-            }
-            identity = {
-                ren(c): v for c, v in (doc.get("identity") or {}).items()
-            }
-            generated = {
-                ren(c): v for c, v in (doc.get("generated") or {}).items()
-            }
-            version = prev + 1
-            try:
-                self._publish(
-                    version,
-                    {"version": version, "mode": "alter",
-                     "members": list(doc["members"]), "added": [],
-                     "stats": stats, "partitions": parts,
-                     "deletes": dict(doc.get("deletes", {})),
-                     "deletes_rows": dict(doc.get("deletes_rows", {})),
-                     "partition_spec": spec,
-                     "txns": dict(doc.get("txns", {})),
-                     "constraints": dict(doc.get("constraints", {})),
-                     "defaults": defaults,
-                     "column_mapping": mapping,
-                     "identity": identity,
-                     "generated": generated,
-                     "retired_physical": list(
-                         doc.get("retired_physical") or []
-                     ),
-                     "schema": new_schema.jsonValue(),
-                     "schema_version": doc.get("schema_version", 1) + 1},
-                )
-                return version
-            except FileExistsError:
-                continue
-        raise SnapshotConflictError(
-            f"rename_column could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+
+            spec = doc.get("partition_spec")
+            return self._next_doc(
+                doc, "alter", all_ddl=True,
+                stats={
+                    m: {ren(c): v for c, v in st.items()}
+                    for m, st in doc.get("stats", {}).items()
+                },
+                partitions={
+                    m: sources_renamed(e)
+                    for m, e in doc.get("partitions", {}).items()
+                },
+                partition_spec=sources_renamed(spec) if spec else spec,
+                defaults=renamed("defaults"),
+                column_mapping=mapping,
+                identity=renamed("identity"),
+                generated=renamed("generated"),
+                schema=StructType(
+                    [
+                        StructField(ren(f.name), f.dataType, True)
+                        for f in schema.fields
+                    ]
+                ).jsonValue(),
+                schema_version=doc.get("schema_version", 1) + 1,
+            )
+
+        return self._land("rename_column", attempt)
 
     def drop_column(self, name: str) -> int:
         """Drop a column WITHOUT rewriting any data file: a schema-only
@@ -627,11 +564,8 @@ class SnapshotStore:
         pre-drop versions still shows the column. Refuses when a CHECK
         constraint, the partition spec, or a generated expression
         references it."""
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("drop_column() on an empty store")
-            doc = self.manifest(prev)
+
+        def attempt(prev, doc):
             if doc.get("schema") is None:
                 raise ValueError(
                     "drop_column() needs a schema-tracking manifest"
@@ -664,56 +598,30 @@ class SnapshotStore:
             retired = list(doc.get("retired_physical") or [])
             if phys not in retired:
                 retired.append(phys)
-            new_schema = StructType(
-                [f for f in schema.fields if f.name != name]
+
+            def without(key: str) -> dict:
+                return {
+                    c: v for c, v in (doc.get(key) or {}).items() if c != name
+                }
+
+            return self._next_doc(
+                doc, "alter",
+                stats={
+                    m: {c: v for c, v in st.items() if c != name}
+                    for m, st in doc.get("stats", {}).items()
+                },
+                defaults=without("defaults"),
+                column_mapping=mapping,
+                identity=without("identity"),
+                generated=without("generated"),
+                retired_physical=retired,
+                schema=StructType(
+                    [f for f in schema.fields if f.name != name]
+                ).jsonValue(),
+                schema_version=doc.get("schema_version", 1) + 1,
             )
-            stats = {
-                m: {c: v for c, v in s.items() if c != name}
-                for m, s in doc.get("stats", {}).items()
-            }
-            defaults = {
-                c: v
-                for c, v in (doc.get("defaults") or {}).items()
-                if c != name
-            }
-            identity = {
-                c: v
-                for c, v in (doc.get("identity") or {}).items()
-                if c != name
-            }
-            generated = {
-                c: v
-                for c, v in (doc.get("generated") or {}).items()
-                if c != name
-            }
-            version = prev + 1
-            try:
-                self._publish(
-                    version,
-                    {"version": version, "mode": "alter",
-                     "members": list(doc["members"]), "added": [],
-                     "stats": stats,
-                     "partitions": dict(doc.get("partitions", {})),
-                     "deletes": dict(doc.get("deletes", {})),
-                     "deletes_rows": dict(doc.get("deletes_rows", {})),
-                     "partition_spec": doc.get("partition_spec"),
-                     "txns": dict(doc.get("txns", {})),
-                     "constraints": dict(doc.get("constraints", {})),
-                     "defaults": defaults,
-                     "column_mapping": mapping,
-                     "identity": identity,
-                     "generated": generated,
-                     "retired_physical": retired,
-                     "schema": new_schema.jsonValue(),
-                     "schema_version": doc.get("schema_version", 1) + 1},
-                )
-                return version
-            except FileExistsError:
-                continue
-        raise SnapshotConflictError(
-            f"drop_column could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+
+        return self._land("drop_column", attempt)
 
     def add_identity_column(
         self, spark: SparkSession, name: str, start: int = 1, step: int = 1
@@ -731,91 +639,11 @@ class SnapshotStore:
         equivalent) — like every rewrite verb it is not rebaseable."""
         if step == 0:
             raise ValueError("identity step must be nonzero")
-        prev = self.latest_version()
-        if prev is None:
-            raise ValueError("add_identity_column() on an empty store")
-        doc = self.manifest(prev)
-        if doc.get("schema") is None:
-            raise ValueError(
-                "add_identity_column() needs a schema-tracking manifest"
-            )
-        schema = StructType.fromJson(doc["schema"])
-        if name in schema.fieldNames():
-            raise ValueError(f"column {name!r} already exists")
-        phys, mapping = self._fresh_physical(name, doc)
-        new_schema = StructType(
-            list(schema.fields) + [StructField(name, LongType(), True)]
-        )
-        identity = dict(doc.get("identity") or {})
         entry = {"start": start, "step": step, "watermark": start - step}
-        version = prev + 1
-        if not doc["members"]:
-            identity[name] = entry
-            try:
-                self._publish(version, self._alter_doc(
-                    doc, version, new_schema, identity=identity,
-                    column_mapping=mapping,
-                ))
-                return version
-            except FileExistsError:
-                raise SnapshotConflictError(
-                    f"add_identity_column lost the race for v{version}; "
-                    "re-run against the new latest"
-                ) from None
-        # materializing rewrite: logical rows + assigned ids, re-laid-out
-        # under the current spec (DVs applied and dropped, like compact)
-        out = self._identity_assign(
-            self._read_members(spark, doc, doc["members"]), name, entry
+        return self._add_engine_column(
+            spark, "add_identity_column", name, LongType(), "identity", entry,
+            lambda df: self._identity_assign(df, name, entry),
         )
-        written = self._write_under_spec(
-            out, doc.get("partition_spec"),
-            mapping={**mapping} if mapping else None,
-        )
-        identity[name] = self._advance_watermark(
-            spark, entry, [d for d, _ in written],
-            mapping.get(name, name) if mapping else name,
-        )
-        stat_cols = sorted(
-            {c for s in doc.get("stats", {}).values() for c in s}
-        )
-        stats = (
-            self._members_stats(
-                spark, [d for d, _ in written], stat_cols
-            )
-            if stat_cols
-            else {}
-        )
-        try:
-            self._publish(
-                version,
-                {"version": version, "mode": "alter",
-                 "members": [d for d, _ in written],
-                 "added": [d for d, _ in written],
-                 "rewrote": list(doc["members"]),
-                 "stats": stats,
-                 "partitions": {
-                     d: e for d, e in written if e is not None
-                 },
-                 "partition_spec": doc.get("partition_spec"),
-                 "txns": dict(doc.get("txns", {})),
-                 "constraints": dict(doc.get("constraints", {})),
-                 "defaults": {},  # the rewrite materialized them
-                 "column_mapping": mapping,
-                 "identity": identity,
-                 "generated": dict(doc.get("generated") or {}),
-                 "retired_physical": list(
-                     doc.get("retired_physical") or []
-                 ),
-                 "schema": new_schema.jsonValue(),
-                 "schema_version": doc.get("schema_version", 1) + 1},
-            )
-            return version
-        except FileExistsError:
-            raise SnapshotConflictError(
-                f"add_identity_column of v{prev} lost the race for "
-                f"v{version}: the rewrite no longer describes the latest "
-                "version; re-run against the new latest"
-            ) from None
 
     def add_generated_column(
         self,
@@ -833,89 +661,61 @@ class SnapshotStore:
         empty table evolves schema-only."""
         if isinstance(dtype, str):
             dtype = StructType.fromDDL(f"`{name}` {dtype}")[0].dataType
-        prev = self.latest_version()
-        if prev is None:
-            raise ValueError("add_generated_column() on an empty store")
-        doc = self.manifest(prev)
-        if doc.get("schema") is None:
-            raise ValueError(
-                "add_generated_column() needs a schema-tracking manifest"
-            )
-        schema = StructType.fromJson(doc["schema"])
-        if name in schema.fieldNames():
-            raise ValueError(f"column {name!r} already exists")
         if self._expr_references(expr, name):
             raise ValueError("generated expression references itself")
-        phys, mapping = self._fresh_physical(name, doc)
-        new_schema = StructType(
-            list(schema.fields) + [StructField(name, dtype, True)]
+        return self._add_engine_column(
+            spark, "add_generated_column", name, dtype, "generated", expr,
+            lambda df: df.withColumn(name, F.expr(expr).cast(dtype)),
         )
-        generated = dict(doc.get("generated") or {})
-        generated[name] = expr
-        version = prev + 1
-        if not doc["members"]:
-            # validate the expression against the schema on an empty frame
-            spark.createDataFrame([], schema).select(
-                F.expr(expr).cast(dtype)
+
+    def _add_engine_column(
+        self, spark: SparkSession, verb: str, name: str, dtype: DataType,
+        key: str, value, fill,
+    ) -> int:
+        """Add column ``name`` whose values the ENGINE owns, recorded as
+        ``manifest[key][name] = value`` (``identity`` or ``generated``).
+        Existing rows get the column from ``fill`` in ONE rewrite of every
+        member (logical rows, DVs applied and dropped, re-laid-out under
+        the current spec, like compact); the identity watermark then
+        advances past every id just written. An empty table evolves
+        schema-only, with ``fill`` analyzed on an empty frame so a bad
+        expression still refuses. Not rebaseable, like every rewrite."""
+
+        def attempt(prev, doc):
+            if doc.get("schema") is None:
+                raise ValueError(f"{verb}() needs a schema-tracking manifest")
+            schema = StructType.fromJson(doc["schema"])
+            if name in schema.fieldNames():
+                raise ValueError(f"column {name!r} already exists")
+            phys, mapping = self._fresh_physical(name, doc)
+            owned = dict(doc.get(key) or {})
+            alter = {
+                key: owned,
+                "column_mapping": mapping,
+                "schema": StructType(
+                    list(schema.fields) + [StructField(name, dtype, True)]
+                ).jsonValue(),
+                "schema_version": doc.get("schema_version", 1) + 1,
+            }
+            if not doc["members"]:
+                fill(spark.createDataFrame([], schema))
+                owned[name] = value
+                return self._next_doc(doc, "alter", **alter)
+            fields = self._replace_members(
+                spark, doc,
+                [fill(self._read_members(spark, doc, doc["members"]))],
+                mapping=mapping,
             )
-            try:
-                self._publish(version, self._alter_doc(
-                    doc, version, new_schema, generated=generated,
-                    column_mapping=mapping,
-                ))
-                return version
-            except FileExistsError:
-                raise SnapshotConflictError(
-                    f"add_generated_column lost the race for v{version}; "
-                    "re-run against the new latest"
-                ) from None
-        out = self._read_members(spark, doc, doc["members"]).withColumn(
-            name, F.expr(expr).cast(dtype)
-        )
-        written = self._write_under_spec(
-            out, doc.get("partition_spec"),
-            mapping={**mapping} if mapping else None,
-        )
-        stat_cols = sorted(
-            {c for s in doc.get("stats", {}).values() for c in s}
-        )
-        stats = (
-            self._members_stats(
-                spark, [d for d, _ in written], stat_cols
+            owned[name] = (
+                self._advance_watermark(spark, value, fields["added"], phys)
+                if key == "identity" else value
             )
-            if stat_cols
-            else {}
-        )
-        try:
-            self._publish(
-                version,
-                {"version": version, "mode": "alter",
-                 "members": [d for d, _ in written],
-                 "added": [d for d, _ in written],
-                 "rewrote": list(doc["members"]),
-                 "stats": stats,
-                 "partitions": {
-                     d: e for d, e in written if e is not None
-                 },
-                 "partition_spec": doc.get("partition_spec"),
-                 "txns": dict(doc.get("txns", {})),
-                 "constraints": dict(doc.get("constraints", {})),
-                 "defaults": {},
-                 "column_mapping": mapping,
-                 "identity": dict(doc.get("identity") or {}),
-                 "generated": generated,
-                 "retired_physical": list(
-                     doc.get("retired_physical") or []
-                 ),
-                 "schema": new_schema.jsonValue(),
-                 "schema_version": doc.get("schema_version", 1) + 1},
+            return self._next_doc(
+                doc, "alter", all_ddl=True, rewrote=list(doc["members"]),
+                **alter, **fields,
             )
-            return version
-        except FileExistsError:
-            raise SnapshotConflictError(
-                f"add_generated_column of v{prev} lost the race for "
-                f"v{version}; re-run against the new latest"
-            ) from None
+
+        return self._land(verb, attempt, rebase=False)
 
     def _fresh_physical(
         self, name: str, doc: dict
@@ -930,26 +730,6 @@ class SnapshotStore:
             mapping[name] = phys
             return phys, mapping
         return name, mapping
-
-    def _alter_doc(
-        self, doc: dict, version: int, new_schema: StructType, **extra
-    ) -> dict:
-        """A schema-only alter manifest: same members, metadata carried,
-        ``extra`` keys overlaid."""
-        out = {"version": version, "mode": "alter",
-               "members": list(doc["members"]), "added": [],
-               "stats": dict(doc.get("stats", {})),
-               "partitions": dict(doc.get("partitions", {})),
-               "deletes": dict(doc.get("deletes", {})),
-               "deletes_rows": dict(doc.get("deletes_rows", {})),
-               "partition_spec": doc.get("partition_spec"),
-               "txns": dict(doc.get("txns", {})),
-               "constraints": dict(doc.get("constraints", {})),
-               "defaults": self._carry_defaults(doc),
-               "schema": new_schema.jsonValue(),
-               "schema_version": doc.get("schema_version", 1) + 1}
-        out.update(extra)
-        return out
 
     @staticmethod
     def _identity_assign(df: DataFrame, name: str, entry: dict) -> DataFrame:
@@ -1009,11 +789,8 @@ class SnapshotStore:
                     f"unknown transform {tr!r}; use identity|bucket[N]|month|day"
                 )
             norm.append({"source": src, "transform": tr})
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("set_partition_spec() on an empty store")
-            doc = self.manifest(prev)
+
+        def attempt(prev, doc):
             schema_json = doc.get("schema")
             if schema_json is not None:
                 names = set(StructType.fromJson(schema_json).fieldNames())
@@ -1023,30 +800,12 @@ class SnapshotStore:
                         f"spec sources {missing} not in the table schema"
                     )
             spec_id = (doc.get("partition_spec") or {}).get("spec_id", 0) + 1
-            version = prev + 1
-            try:
-                self._publish(
-                    version,
-                    {"version": version, "mode": "alter",
-                     "members": list(doc["members"]), "added": [],
-                     "stats": dict(doc.get("stats", {})),
-                     "partitions": dict(doc.get("partitions", {})),
-                     "deletes": dict(doc.get("deletes", {})),
-                     "deletes_rows": dict(doc.get("deletes_rows", {})),
-                     "schema": schema_json,
-                     "schema_version": doc.get("schema_version", 1),
-                     "txns": dict(doc.get("txns", {})),
-                     "constraints": dict(doc.get("constraints", {})),
-                     "defaults": self._carry_defaults(doc),
-                     "partition_spec": {"spec_id": spec_id, "fields": norm}},
-                )
-                return version
-            except FileExistsError:
-                continue  # rebase: re-read latest, retry one version up
-        raise SnapshotConflictError(
-            f"set_partition_spec could not land after {_OCC_RETRIES} "
-            "rebases (sustained contention on the manifest log)"
-        )
+            return self._next_doc(
+                doc, "alter",
+                partition_spec={"spec_id": spec_id, "fields": norm},
+            )
+
+        return self._land("set_partition_spec", attempt)
 
     # -- CHECK constraints ----------------------------------------------------
 
@@ -1074,11 +833,8 @@ class SnapshotStore:
         column-pruned scan, bounded limit-1 probe): a constraint the
         existing data already violates is a lie and refuses. OCC losers
         rebase like every alter verb."""
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("add_constraint() on an empty store")
-            doc = self.manifest(prev)
+
+        def attempt(prev, doc):
             existing = dict(doc.get("constraints", {}))
             if name in existing:
                 raise ValueError(
@@ -1091,66 +847,23 @@ class SnapshotStore:
                 {name: expression},
                 context=f"add_constraint({name!r}) on v{prev}",
             )
-            version = prev + 1
-            try:
-                self._publish(
-                    version,
-                    {"version": version, "mode": "alter",
-                     "members": list(doc["members"]), "added": [],
-                     "stats": dict(doc.get("stats", {})),
-                     "partitions": dict(doc.get("partitions", {})),
-                     "deletes": dict(doc.get("deletes", {})),
-                     "deletes_rows": dict(doc.get("deletes_rows", {})),
-                     "partition_spec": doc.get("partition_spec"),
-                     "txns": dict(doc.get("txns", {})),
-                     "constraints": {**existing, name: expression},
-                     "defaults": self._carry_defaults(doc),
-                     "schema": doc.get("schema"),
-                     "schema_version": doc.get("schema_version", 1)},
-                )
-                return version
-            except FileExistsError:
-                continue  # rebase: re-validate against the new latest
-        raise SnapshotConflictError(
-            f"add_constraint could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+            return self._next_doc(
+                doc, "alter", constraints={**existing, name: expression}
+            )
+
+        return self._land("add_constraint", attempt)
 
     def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint (alter-mode version, no data)."""
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("drop_constraint() on an empty store")
-            doc = self.manifest(prev)
+
+        def attempt(prev, doc):
             existing = dict(doc.get("constraints", {}))
             if name not in existing:
                 raise ValueError(f"no constraint named {name!r}")
             existing.pop(name)
-            version = prev + 1
-            try:
-                self._publish(
-                    version,
-                    {"version": version, "mode": "alter",
-                     "members": list(doc["members"]), "added": [],
-                     "stats": dict(doc.get("stats", {})),
-                     "partitions": dict(doc.get("partitions", {})),
-                     "deletes": dict(doc.get("deletes", {})),
-                     "deletes_rows": dict(doc.get("deletes_rows", {})),
-                     "partition_spec": doc.get("partition_spec"),
-                     "txns": dict(doc.get("txns", {})),
-                     "constraints": existing,
-                     "defaults": self._carry_defaults(doc),
-                     "schema": doc.get("schema"),
-                     "schema_version": doc.get("schema_version", 1)},
-                )
-                return version
-            except FileExistsError:
-                continue
-        raise SnapshotConflictError(
-            f"drop_constraint could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+            return self._next_doc(doc, "alter", constraints=existing)
+
+        return self._land("drop_constraint", attempt)
 
     @staticmethod
     def _check_rows(
@@ -1351,7 +1064,7 @@ class SnapshotStore:
         self,
         df: DataFrame,
         spec: dict | None,
-        mapping: dict | None = None,
+        mapping: dict,
     ) -> list[tuple[str, dict | None]]:
         """Write ``df`` as this commit's member set under ``spec``:
         unpartitioned -> one member directory (as before); spec'd -> ONE
@@ -1365,8 +1078,6 @@ class SnapshotStore:
         small-files failure mode, not a supported configuration."""
         # column mapping: bytes hit parquet under PHYSICAL names (stable
         # across renames), logical names live only in the manifest schema
-        if mapping is None:
-            mapping = self.column_mapping()
         fields = (spec or {}).get("fields") or []
         if not fields:
             commit_dir, full_dir = self._new_member_dir()
@@ -1837,12 +1548,163 @@ class SnapshotStore:
         )
 
     # -- commit protocol ----------------------------------------------------
+    #
+    # Every verb publishes through ONE path: ``_land`` runs the verb's
+    # attempt against the latest manifest, the attempt derives the next
+    # manifest with ``_next_doc`` (rewrites first write their members with
+    # ``_replace_members``), and ``_publish`` links it into place.
 
-    #: table-level metadata every publish carries forward unless the verb
-    #: sets it explicitly (rename/drop/identity verbs do; commit extends)
+    #: table-level DDL keys a version carries while they are set (older
+    #: lineages never had them, and a verb that does not touch them does
+    #: not add them)
     _CARRIED_KEYS = (
         "column_mapping", "identity", "generated", "retired_physical",
     )
+
+    def _next_doc(
+        self, doc: dict, mode: str, all_ddl: bool = False, **fields
+    ) -> dict:
+        """The manifest of the version after ``doc``: every table-level key
+        of ``doc`` carried (partition spec, writer txns, constraints,
+        default backfills, schema and its version, and the
+        ``_CARRIED_KEYS`` while set; ``all_ddl`` states those four even
+        when empty), with ``fields`` laid over it. A version whose
+        ``fields`` do not name ``members`` keeps ``doc``'s members with
+        their stats, partition values and deletion vectors; one that does
+        states its member-level keys itself (see ``_replace_members``)."""
+        out = {"version": doc.get("version", 0) + 1, "mode": mode}
+        if "members" not in fields:
+            out.update(
+                members=list(doc["members"]), added=[],
+                stats=dict(doc.get("stats", {})),
+                partitions=dict(doc.get("partitions", {})),
+                deletes=dict(doc.get("deletes", {})),
+                deletes_rows=dict(doc.get("deletes_rows", {})),
+            )
+        out.update(
+            partition_spec=doc.get("partition_spec"),
+            txns=dict(doc.get("txns", {})),
+            constraints=dict(doc.get("constraints", {})),
+            defaults=self._carry_defaults(doc),
+            schema=doc.get("schema"),
+            schema_version=doc.get("schema_version", 1),
+        )
+        if all_ddl:
+            out.update(
+                column_mapping=dict(doc.get("column_mapping") or {}),
+                identity=dict(doc.get("identity") or {}),
+                generated=dict(doc.get("generated") or {}),
+                retired_physical=list(doc.get("retired_physical") or []),
+            )
+        else:
+            out.update({k: doc[k] for k in self._CARRIED_KEYS if doc.get(k)})
+        out.update(fields)
+        return out
+
+    def _replace_members(
+        self,
+        spark: SparkSession,
+        doc: dict,
+        frames: list[DataFrame],
+        replaced: list[str] | None = None,
+        verb: str | None = None,
+        inserts: bool = True,
+        mapping: dict | None = None,
+    ) -> dict:
+        """Write ``frames`` as new members in place of ``replaced`` (None:
+        every member, a whole-table rewrite) and return the member-level
+        manifest fields for ``_next_doc``.
+
+        The new members are written under ``doc``'s partition spec (a
+        rewrite doubles as spec migration) and re-statted on every column
+        ``doc`` tracked anywhere, so a rewrite never turns off
+        ``read_where`` / pruned-merge skipping. The replaced members'
+        stats, partition values, deletion vectors and default backfills
+        go (the rewrite read applied them); kept members keep theirs. A
+        whole-table rewrite records no deletion-vector maps at all.
+
+        ``verb`` validates the new rows against the CHECK constraints
+        before anything is statted and, when the rows may be MERGE inserts
+        (``inserts``), refuses NULL identity ids. ``mapping`` overrides
+        ``doc``'s column mapping for a rewrite that adds a column."""
+        if mapping is None:
+            mapping = doc.get("column_mapping") or {}
+        spec = doc.get("partition_spec")
+        written = [
+            w for df in frames
+            for w in self._write_under_spec(df, spec, mapping)
+        ]
+        new = [d for d, _ in written]
+        if verb is not None:
+            self._enforce_constraints(spark, doc, new, verb)
+            if inserts:
+                self._enforce_identity_not_null(spark, doc, new, verb)
+        gone = set(doc["members"] if replaced is None else replaced)
+        keep = [m for m in doc["members"] if m not in gone]
+        kept = set(keep)
+
+        def carried(key: str) -> dict:
+            return {m: v for m, v in doc.get(key, {}).items() if m in kept}
+
+        stat_cols = sorted(
+            {c for s in doc.get("stats", {}).values() for c in s}
+        )
+        fields = {
+            "members": keep + new,
+            "added": new,
+            "stats": {
+                **carried("stats"),
+                **self._members_stats(spark, new, stat_cols, mapping),
+            },
+            "partitions": {
+                **carried("partitions"),
+                **{d: e for d, e in written if e is not None},
+            },
+            "defaults": self._carry_defaults(doc, gone),
+        }
+        if replaced is not None:
+            fields["deletes"] = carried("deletes")
+            fields["deletes_rows"] = carried("deletes_rows")
+        return fields
+
+    def _land(
+        self, verb: str, attempt, rebase: bool = True, empty_ok: bool = False
+    ) -> int:
+        """Publish the version ``attempt(prev, doc)`` derives from the latest
+        one (``doc`` is manifest ``prev``) and return its number. An attempt
+        that returns a version number instead of a manifest publishes
+        nothing (a no-op verb).
+
+        A lost race (another writer published that version number first)
+        REBASES a read-modify-write or blind verb: re-read the new latest
+        and run ``attempt`` again, at most ``_OCC_RETRIES`` times. A
+        rewrite verb (``rebase=False``) wrote files that copy one specific
+        version; landing them over a newer one would revert the winner's
+        commit, so it raises instead. Either way the store is untouched
+        and the loser's data directories are ``vacuum()``-collectable."""
+        for _ in range(_OCC_RETRIES if rebase else 1):
+            prev = self.latest_version()
+            if prev is None and not empty_ok:
+                raise ValueError(f"{verb}() on an empty store")
+            doc = self.manifest(prev) if prev is not None else {}
+            nxt = attempt(prev, doc)
+            if isinstance(nxt, int):
+                return nxt
+            try:
+                self._publish(nxt["version"], nxt)
+                return nxt["version"]
+            except FileExistsError:
+                if not rebase:
+                    raise SnapshotConflictError(
+                        f"{verb} of v{prev} lost the race for "
+                        f"v{nxt['version']}: its rewritten files no longer "
+                        "describe the latest version; re-run it against "
+                        "the new latest"
+                    ) from None
+        raise SnapshotConflictError(
+            f"{verb} could not land after {_OCC_RETRIES} rebases "
+            "(sustained contention on the manifest log)"
+        )
 
     @staticmethod
     def _required_reader(doc: dict) -> int:
@@ -1868,22 +1730,19 @@ class SnapshotStore:
         """Atomically publish ``v{version}.json``; FileExistsError if a
         concurrent writer won the race for this version number.
 
-        This single chokepoint also (a) carries forward the table-level
-        DDL metadata keys a verb did not explicitly set, and (b) stamps
-        ``min_reader_version`` = max(previous stamp, what this doc's
-        content requires) — the protocol floor is MONOTONE like Delta's
-        (removing the last DV does not re-admit readers that would have
-        mis-read the intermediate history)."""
+        This single writer also stamps ``min_reader_version`` =
+        max(previous stamp, what this doc's content requires) — the
+        protocol floor is MONOTONE like Delta's (removing the last DV
+        does not re-admit readers that would have mis-read the
+        intermediate history)."""
         prev_min = 1
         if version > 1:
             try:
-                prev_doc = self.manifest(version - 1)
+                prev_min = int(
+                    self.manifest(version - 1).get("min_reader_version", 1)
+                )
             except FileNotFoundError:
-                prev_doc = {}
-            prev_min = int(prev_doc.get("min_reader_version", 1))
-            for key in self._CARRIED_KEYS:
-                if key not in doc and prev_doc.get(key):
-                    doc[key] = prev_doc[key]
+                pass
         doc["min_reader_version"] = max(
             prev_min, self._required_reader(doc)
         )
@@ -2022,13 +1881,11 @@ class SnapshotStore:
                 if c not in tbl_names and c not in mapping_now and c in used:
                     extra[c] = f"{c}__{uuid.uuid4().hex[:8]}"
         write_mapping = {**mapping_now, **extra}
-        written = self._write_under_spec(
-            df, spec, mapping=write_mapping if write_mapping else None
-        )
+        written = self._write_under_spec(df, spec, write_mapping)
         new_stats = (
             self._members_stats(
                 df.sparkSession, [d for d, _ in written], stats_cols,
-                mapping=write_mapping,
+                write_mapping,
             )
             if stats_cols
             else {}
@@ -2044,10 +1901,10 @@ class SnapshotStore:
         }
         batch_schema = self._normalize(df.schema)
         validated_cons = None  # constraints map already enforced, if any
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            version = (prev or 0) + 1
-            prev_doc = self.manifest(prev) if prev is not None else {}
+        new_dirs = [d for d, _ in written]
+
+        def attempt(prev, prev_doc):
+            nonlocal validated_cons
             # txn idempotence FIRST: an already-landed batch is a no-op
             # even if a later add_constraint would now reject its rows —
             # the duplicate must return idempotently, not raise (and must
@@ -2089,8 +1946,8 @@ class SnapshotStore:
             )
             if cons_key != validated_cons:
                 self._enforce_constraints(
-                    df.sparkSession, prev_doc,
-                    [d for d, _ in written], f"commit(mode={mode!r})",
+                    df.sparkSession, prev_doc, new_dirs,
+                    f"commit(mode={mode!r})",
                 )
                 validated_cons = cons_key
             txns = dict(prev_doc.get("txns", {}))
@@ -2101,15 +1958,6 @@ class SnapshotStore:
             stats = dict(prev_doc.get("stats", {})) if keep_prev else {}
             partitions = (
                 dict(prev_doc.get("partitions", {})) if keep_prev else {}
-            )
-            # deletion vectors ride with the members they mask: appends
-            # carry them forward untouched, overwrite drops them with the
-            # member list (the new state has no masked rows)
-            deletes = (
-                dict(prev_doc.get("deletes", {})) if keep_prev else {}
-            )
-            deletes_rows = (
-                dict(prev_doc.get("deletes_rows", {})) if keep_prev else {}
             )
             prev_schema_json = prev_doc.get("schema") if keep_prev else None
             if prev_schema_json is not None:
@@ -2152,40 +2000,33 @@ class SnapshotStore:
                         if cm[k] not in retired:
                             retired.append(cm[k])
                         del cm[k]
-            doc = {"version": version, "mode": mode, "members": members,
-                   "added": [d for d, _ in written], "stats": stats,
-                   "schema": schema_json, "schema_version": sv,
-                   # spec and txn map are table-level metadata: they
-                   # survive overwrite (the member list resets, the
-                   # layout contract and writer-idempotence do not)
-                   "partition_spec": prev_doc.get("partition_spec"),
-                   "txns": txns,
-                   "constraints": dict(prev_doc.get("constraints", {})),
-                   "column_mapping": cm,
-                   "identity": new_ident,
-                   "generated": gen,
-                   "retired_physical": retired,
-                   # append: prior members keep their default backfill;
-                   # overwrite: the old members die and the backfill
-                   # entries die with them (the new state is physical)
-                   "defaults": self._carry_defaults(
-                       prev_doc,
-                       () if keep_prev else prev_doc.get("members", []),
-                   )}
+            # spec, txn map and constraints are table-level metadata: they
+            # survive overwrite (the member list resets, the layout
+            # contract and writer-idempotence do not)
+            doc = self._next_doc(
+                prev_doc, mode, members=members, added=new_dirs,
+                stats=stats, schema=schema_json, schema_version=sv,
+                txns=txns, column_mapping=cm, identity=new_ident,
+                generated=gen, retired_physical=retired,
+                # append: prior members keep their default backfill;
+                # overwrite: the old members die and the backfill
+                # entries die with them (the new state is physical)
+                defaults=self._carry_defaults(
+                    prev_doc,
+                    () if keep_prev else prev_doc.get("members", []),
+                ),
+            )
             if partitions:
                 doc["partitions"] = partitions
-            if deletes:
-                doc["deletes"] = deletes
-                doc["deletes_rows"] = deletes_rows
-            try:
-                self._publish(version, doc)
-                return version
-            except FileExistsError:
-                continue  # rebase: re-read latest, retry one version up
-        raise SnapshotConflictError(
-            f"commit could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+            # deletion vectors ride with the members they mask: appends
+            # carry them forward untouched, overwrite drops them with the
+            # member list (the new state has no masked rows)
+            if keep_prev and prev_doc.get("deletes"):
+                doc["deletes"] = dict(prev_doc["deletes"])
+                doc["deletes_rows"] = dict(prev_doc.get("deletes_rows", {}))
+            return doc
+
+        return self._land("commit", attempt, empty_ok=True)
 
     def _new_member_dir(self) -> tuple[str, str]:
         """Fresh uniquely-named commit directory (relative, absolute)."""
@@ -2197,9 +2038,8 @@ class SnapshotStore:
         spark: SparkSession,
         full_dir: str,
         cols: list[str],
-        mapping: dict | None = None,
+        mapping: dict,
     ) -> dict:
-        mapping = mapping or {}
         aggs = []
         for c in cols:
             p = mapping.get(c, c)
@@ -2215,7 +2055,7 @@ class SnapshotStore:
         spark: SparkSession,
         dirs: list[str],
         cols: list[str],
-        mapping: dict | None = None,
+        mapping: dict,
     ) -> dict:
         """[min,max] stats for SEVERAL just-written member directories in
         ONE read-back job (rows attributed to members via
@@ -2228,8 +2068,6 @@ class SnapshotStore:
             return {}
         # stats are keyed LOGICAL in the manifest; the read-back of the
         # just-written files selects the physical names
-        if mapping is None:
-            mapping = self.column_mapping()
         if len(dirs) == 1:
             return {
                 dirs[0]: self._member_stats(
@@ -2280,54 +2118,24 @@ class SnapshotStore:
         blindly retrying would REVERT that commit. A lost race raises
         ``SnapshotConflictError``; re-run compact() against the new
         latest (the orphan data directory is vacuum()-collectable)."""
-        prev = self.latest_version()
-        if prev is None:
-            raise ValueError("compact() on an empty store")
-        doc = self.manifest(prev)
-        version = prev + 1
-        # the rewrite honors the CURRENT spec: pre-spec members get
-        # re-laid-out into partition members (how Iceberg migrates old
-        # files to a new spec — rewrite, never in place), so compaction
-        # doubles as spec migration; ``target_files`` applies per
-        # partition under a spec (coalesce bounds files per leaf)
-        written = self._write_under_spec(
-            self.read(spark, prev).coalesce(target_files),
-            doc.get("partition_spec"),
-        )
-        stat_cols = sorted(
-            {c for s in doc.get("stats", {}).values() for c in s}
-        )
-        stats = (
-            self._members_stats(spark, [d for d, _ in written], stat_cols)
-            if stat_cols
-            else {}
-        )
-        partitions = {d: e for d, e in written if e is not None}
-        try:
-            self._publish(
-                version,
-                {"version": version, "mode": "compact",
-                 "members": [d for d, _ in written],
-                 "added": [d for d, _ in written],
-                 "stats": stats, "compaction_of": prev,
-                 "partitions": partitions,
-                 "partition_spec": doc.get("partition_spec"),
-                 "txns": dict(doc.get("txns", {})),
-                 "constraints": dict(doc.get("constraints", {})),
-                 "defaults": self._carry_defaults(doc, doc["members"]),
-                 # the rewrite reads under the recorded schema, so the
-                 # compacted member physically carries every evolved
-                 # column (NULL-backfilled) — schema version unchanged
-                 "schema": doc.get("schema"),
-                 "schema_version": doc.get("schema_version", 1)},
+
+        def attempt(prev, doc):
+            # the rewrite honors the CURRENT spec: pre-spec members get
+            # re-laid-out into partition members (how Iceberg migrates old
+            # files to a new spec — rewrite, never in place), so compaction
+            # doubles as spec migration; ``target_files`` applies per
+            # partition under a spec (coalesce bounds files per leaf). The
+            # rewrite reads under the recorded schema, so the compacted
+            # member physically carries every evolved column
+            # (NULL-backfilled) — schema version unchanged
+            return self._next_doc(
+                doc, "compact", compaction_of=prev,
+                **self._replace_members(
+                    spark, doc, [self.read(spark, prev).coalesce(target_files)]
+                ),
             )
-        except FileExistsError:
-            raise SnapshotConflictError(
-                f"compact of v{prev} lost the race for v{version}: the "
-                "compacted file set no longer describes the latest "
-                "version; re-run compact() against the new latest"
-            ) from None
-        return version
+
+        return self._land("compact", attempt, rebase=False)
 
     def merge(
         self,
@@ -2370,6 +2178,7 @@ class SnapshotStore:
         # (bound: the caller's change batch)
         with materialized(changes) as changes:
             self._validate_changes(changes, keys, op_col)
+
             # MERGE is read-modify-write, so an OCC loss cannot be rebased
             # blindly (that would revert the interleaved commit): each
             # retry RE-READS the new latest manifest, re-validates the
@@ -2377,91 +2186,39 @@ class SnapshotStore:
             # against the new state, and re-publishes — the serializable
             # outcome is "their commit, then our changes batch". A lost
             # attempt's data directory becomes a vacuum()-able orphan.
-            for _ in range(_OCC_RETRIES):
-                prev = self.latest_version()
-                if prev is None:
-                    raise ValueError("merge() on an empty store")
-                doc = self.manifest(prev)
+            def attempt(prev, doc):
                 # conform batch types to the RECORDED schema (re-checked
                 # per rebase: an interleaved alter may have changed it)
                 chg = self._conform_changes(doc, changes, op_col)
                 self._guard_identity_merge(doc, chg, op_col)
                 if prune and len(keys) == 1:
-                    split = self._split_affected(
-                        spark, doc, chg, keys[0]
-                    )
-                    if split is not None:
-                        try:
-                            return self._merge_pruned(
-                                spark, doc, chg, keys, op_col, *split
-                            )
-                        except FileExistsError:
-                            continue  # rebase against the new latest
+                    affected = self._split_affected(spark, doc, chg, keys[0])
+                    if affected is not None:
+                        return self._merge_pruned(
+                            spark, doc, chg, keys, op_col, affected
+                        )
                 cur = self.read(spark, prev)
                 out = self._apply_generated(
                     doc, self._apply_changes(cur, chg, keys, op_col)
                 )
-                # the logical path rewrites the whole table into one
-                # member: re-stat it on every column the prior manifest
-                # tracked, so a logical merge never silently turns off
-                # read_where pruning and future pruned merges (stats are
-                # the pruning's fuel)
-                stat_cols = sorted(
-                    {c for s in doc.get("stats", {}).values() for c in s}
-                )
-                version = prev + 1
                 # change data feed: the applied deltas (pre/post images)
                 # written as their own directory, referenced by the
                 # manifest's "changes" key — read_changes() serves them
                 # where diff() must refuse (a merge is not append-only)
                 cdf_dir, cdf_full = self._new_member_dir()
                 self._change_rows(
-                    cur, chg, keys, op_col, version
+                    cur, chg, keys, op_col, prev + 1
                 ).write.parquet(cdf_full)
-                # the rewrite honors the current spec (like compact): a
-                # logical merge over a spec'd table comes out re-laid-out
-                # into partition members, keeping point pruning alive
-                written = self._write_under_spec(
-                    out, doc.get("partition_spec")
+                # the logical path rewrites the whole table: re-laid-out
+                # under the current spec (like compact, keeping point
+                # pruning alive) and re-statted on every tracked column
+                # (stats are the pruning's fuel)
+                return self._next_doc(
+                    doc, "overwrite", changes=cdf_dir,
+                    **self._replace_members(spark, doc, [out], verb="merge"),
                 )
-                self._enforce_constraints(
-                    spark, doc, [d for d, _ in written], "merge"
-                )
-                self._enforce_identity_not_null(
-                    spark, doc, [d for d, _ in written], "merge"
-                )
-                stats = (
-                    self._members_stats(
-                        spark, [d for d, _ in written], stat_cols
-                    )
-                    if stat_cols
-                    else {}
-                )
-                try:
-                    self._publish(
-                        version,
-                        {"version": version, "mode": "overwrite",
-                         "members": [d for d, _ in written],
-                         "added": [d for d, _ in written],
-                         "changes": cdf_dir,
-                         "stats": stats,
-                         "partitions": {
-                             d: e for d, e in written if e is not None
-                         },
-                         "partition_spec": doc.get("partition_spec"),
-                         "txns": dict(doc.get("txns", {})),
-                         "constraints": dict(doc.get("constraints", {})),
-                         "defaults": self._carry_defaults(doc, doc["members"]),
-                         "schema": doc.get("schema"),
-                         "schema_version": doc.get("schema_version", 1)},
-                    )
-                    return version
-                except FileExistsError:
-                    continue  # rebase against the new latest
-            raise SnapshotConflictError(
-                f"merge could not land after {_OCC_RETRIES} rebases "
-                "(sustained contention on the manifest log)"
-            )
+
+            return self._land("merge", attempt)
 
     @staticmethod
     def _validate_changes(
@@ -2617,37 +2374,16 @@ class SnapshotStore:
         so a lost race recomputes against the new latest (bounded
         retries); lost attempts' files are vacuum()-collectable."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("delete_where() on an empty store")
-            doc = self.manifest(prev)
-            members = doc["members"]
-            if prune_range is not None:
-                col, lo, hi = prune_range
-                stats = doc.get("stats", {})
-                parts = doc.get("partitions", {})
-                members = [
-                    m for m in members
-                    if not (
-                        (e := parts.get(m))
-                        and self._part_excludes_range(e, col, lo, hi)
-                    )
-                    and not (
-                        (s := stats.get(m, {}).get(col)) is not None
-                        and s[0] is not None and s[1] is not None
-                        and not (s[1] >= lo and s[0] < hi)
-                    )
-                ]
-                cond = cond & (F.col(col) >= lo) & (F.col(col) < hi)
+
+        def attempt(prev, doc):
+            members, this_cond = self._in_range(doc, cond, prune_range)
             # the emptiness probe, the DV write, the hit counts and the CDF
             # write all read the matches (bound: the rows being deleted)
             with materialized(
-                self._live_with_pos(spark, doc, members).where(cond)
+                self._live_with_pos(spark, doc, members).where(this_cond)
             ) as matches:
                 if not matches.limit(1).count():
                     return prev  # no-op: nothing deleted, nothing published
-                version = prev + 1
                 dv_dir, dv_full = self._new_member_dir()
                 matches.select("_file", "_pos").write.parquet(dv_full)
                 # which members took hits, with counts — bounded
@@ -2656,37 +2392,43 @@ class SnapshotStore:
                 matches.drop("_file", "_pos").withColumn(
                     "_change_type", F.lit("delete")
                 ).withColumn(
-                    "_commit_version", F.lit(version).cast("int")
+                    "_commit_version", F.lit(prev + 1).cast("int")
                 ).write.parquet(cdf_full)
-                new_deletes, new_dv_rows = self._extend_deletes(
-                    doc, hits, dv_dir
-                )
-                try:
-                    self._publish(
-                        version,
-                        {"version": version, "mode": "delete",
-                         "members": list(doc["members"]), "added": [],
-                         "changes": cdf_dir,
-                         # [min,max] stay valid SUPERSET bounds after a
-                         # delete — pruning never needs exact bounds
-                         "stats": dict(doc.get("stats", {})),
-                         "deletes": new_deletes,
-                         "deletes_rows": new_dv_rows,
-                         "partitions": dict(doc.get("partitions", {})),
-                         "partition_spec": doc.get("partition_spec"),
-                         "txns": dict(doc.get("txns", {})),
-                         "constraints": dict(doc.get("constraints", {})),
-                         "defaults": self._carry_defaults(doc),
-                         "schema": doc.get("schema"),
-                         "schema_version": doc.get("schema_version", 1)},
-                    )
-                    return version
-                except FileExistsError:
-                    continue  # rebase: recompute against the new latest
-        raise SnapshotConflictError(
-            f"delete_where could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+            # members unchanged: their [min,max] stay valid SUPERSET
+            # bounds after a delete — pruning never needs exact bounds
+            deletes, deletes_rows = self._extend_deletes(doc, hits, dv_dir)
+            return self._next_doc(
+                doc, "delete", changes=cdf_dir, deletes=deletes,
+                deletes_rows=deletes_rows,
+            )
+
+        return self._land("delete_where", attempt)
+
+    def _in_range(
+        self, doc: dict, cond: Column, prune_range: tuple | None
+    ) -> tuple[list[str], Column]:
+        """``(members to scan, predicate)`` of a row-level verb:
+        ``prune_range=(col, lo, hi)`` drops the members whose partition
+        values or [min,max] stats exclude ``lo <= col < hi`` and joins that
+        range to ``cond``, so the pruning is sound by construction."""
+        if prune_range is None:
+            return doc["members"], cond
+        col, lo, hi = prune_range
+        stats = doc.get("stats", {})
+        parts = doc.get("partitions", {})
+        members = [
+            m for m in doc["members"]
+            if not (
+                (e := parts.get(m))
+                and self._part_excludes_range(e, col, lo, hi)
+            )
+            and not (
+                (s := stats.get(m, {}).get(col)) is not None
+                and s[0] is not None and s[1] is not None
+                and not (s[1] >= lo and s[0] < hi)
+            )
+        ]
+        return members, cond & (F.col(col) >= lo) & (F.col(col) < hi)
 
     def update_where(
         self,
@@ -2712,11 +2454,8 @@ class SnapshotStore:
             c: (F.expr(e) if isinstance(e, str) else e)
             for c, e in assignments.items()
         }
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            if prev is None:
-                raise ValueError("update_where() on an empty store")
-            doc = self.manifest(prev)
+
+        def attempt(prev, doc):
             schema = (
                 StructType.fromJson(doc["schema"])
                 if doc.get("schema") is not None else None
@@ -2737,32 +2476,13 @@ class SnapshotStore:
                     f"columns {sorted(bad_assign)} are GENERATED ALWAYS "
                     "and cannot be assigned; the engine owns their values"
                 )
-            members = doc["members"]
-            this_cond = cond
-            if prune_range is not None:
-                col, lo, hi = prune_range
-                stats = doc.get("stats", {})
-                parts = doc.get("partitions", {})
-                members = [
-                    m for m in members
-                    if not (
-                        (e := parts.get(m))
-                        and self._part_excludes_range(e, col, lo, hi)
-                    )
-                    and not (
-                        (s := stats.get(m, {}).get(col)) is not None
-                        and s[0] is not None and s[1] is not None
-                        and not (s[1] >= lo and s[0] < hi)
-                    )
-                ]
-                this_cond = cond & (F.col(col) >= lo) & (F.col(col) < hi)
+            members, this_cond = self._in_range(doc, cond, prune_range)
             # bound: the rows being updated
             with materialized(
                 self._live_with_pos(spark, doc, members).where(this_cond)
             ) as matches:
                 if not matches.limit(1).count():
                     return prev  # no-op: nothing matched, nothing published
-                version = prev + 1
                 dv_dir, dv_full = self._new_member_dir()
                 matches.select("_file", "_pos").write.parquet(dv_full)
                 hits = self._member_hits(matches)
@@ -2784,58 +2504,24 @@ class SnapshotStore:
                 cdf_dir, cdf_full = self._new_member_dir()
                 meta = lambda df, t: df.withColumn(  # noqa: E731
                     "_change_type", F.lit(t)
-                ).withColumn("_commit_version", F.lit(version).cast("int"))
+                ).withColumn("_commit_version", F.lit(prev + 1).cast("int"))
                 meta(pre, "update_preimage").unionAll(
                     meta(post, "update_postimage")
                 ).write.parquet(cdf_full)
-                written = self._write_under_spec(
-                    post, doc.get("partition_spec")
+                # post-images only rewrite existing rows: no insert to
+                # refuse, their ids are the pre-images'
+                fields = self._replace_members(
+                    spark, doc, [post], [], verb="update_where",
+                    inserts=False,
                 )
-                self._enforce_constraints(
-                    spark, doc, [d for d, _ in written], "update_where"
-                )
-                stats = dict(doc.get("stats", {}))
-                stat_cols = sorted({c for s in stats.values() for c in s})
-                if stat_cols and written:
-                    stats.update(
-                        self._members_stats(
-                            spark, [d for d, _ in written], stat_cols
-                        )
-                    )
-                partitions = dict(doc.get("partitions", {}))
-                partitions.update(
-                    {d: e for d, e in written if e is not None}
-                )
-                new_deletes, new_dv_rows = self._extend_deletes(
-                    doc, hits, dv_dir
-                )
-                try:
-                    self._publish(
-                        version,
-                        {"version": version, "mode": "update",
-                         "members": list(doc["members"])
-                         + [d for d, _ in written],
-                         "added": [d for d, _ in written],
-                         "changes": cdf_dir, "merge_on_read": True,
-                         "stats": stats, "deletes": new_deletes,
-                         "deletes_rows": new_dv_rows,
-                         "partitions": partitions,
-                         "partition_spec": doc.get("partition_spec"),
-                         "txns": dict(doc.get("txns", {})),
-                         "constraints": dict(doc.get("constraints", {})),
-                         "defaults": self._carry_defaults(doc),
-                         "schema": doc.get("schema"),
-                         "schema_version": doc.get(
-                             "schema_version", 1
-                         )},
-                    )
-                    return version
-                except FileExistsError:
-                    continue  # rebase: recompute against the new latest
-        raise SnapshotConflictError(
-            f"update_where could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+            fields["deletes"], fields["deletes_rows"] = self._extend_deletes(
+                doc, hits, dv_dir
+            )
+            return self._next_doc(
+                doc, "update", changes=cdf_dir, merge_on_read=True, **fields
+            )
+
+        return self._land("update_where", attempt)
 
     def merge_on_read(
         self,
@@ -2866,11 +2552,8 @@ class SnapshotStore:
                 changes.where(F.col(op_col) == "upsert").limit(1).count()
                 > 0
             )
-            for _ in range(_OCC_RETRIES):
-                prev = self.latest_version()
-                if prev is None:
-                    raise ValueError("merge_on_read() on an empty store")
-                doc = self.manifest(prev)
+
+            def attempt(prev, doc):
                 # conform batch types to the RECORDED schema (same guard
                 # as the copy-on-write path — a wider batch type must
                 # never publish a member the recorded schema can't read)
@@ -2880,17 +2563,16 @@ class SnapshotStore:
                 # hold a matched key); unlike copy-on-write, untouched
                 # vs affected does not change what gets rewritten —
                 # nothing does
-                split = (
+                affected = (
                     self._split_affected(spark, doc, chg, keys[0])
                     if len(keys) == 1
                     else None
                 )
-                scan = split[0] if split is not None else doc["members"]
+                scan = doc["members"] if affected is None else affected
                 # bound: the live rows of the members that may hold a key
                 with materialized(
                     self._live_with_pos(spark, doc, scan)
                 ) as cur_pos:
-                    version = prev + 1
                     # mask every current row whose key has a change row
                     # (upsert -> replaced, delete -> dropped)
                     masked = cur_pos.join(
@@ -2905,9 +2587,9 @@ class SnapshotStore:
                     cur = cur_pos.drop("_file", "_pos")
                     cdf_dir, cdf_full = self._new_member_dir()
                     self._change_rows(
-                        cur, chg, keys, op_col, version
+                        cur, chg, keys, op_col, prev + 1
                     ).write.parquet(cdf_full)
-                    written: list[tuple[str, dict | None]] = []
+                    frames = []
                     if has_upserts:
                         data_cols = [c for c in cur.columns if c not in keys]
                         s_cols = set(chg.columns)
@@ -2931,63 +2613,20 @@ class SnapshotStore:
                                 ],
                             )
                         )
-                        written = self._write_under_spec(
-                            self._apply_generated(doc, out_new),
-                            doc.get("partition_spec"),
-                        )
-                        self._enforce_constraints(
-                            spark, doc, [d for d, _ in written],
-                            "merge_on_read",
-                        )
-                        self._enforce_identity_not_null(
-                            spark, doc, [d for d, _ in written],
-                            "merge_on_read",
-                        )
+                        frames.append(self._apply_generated(doc, out_new))
+                    fields = self._replace_members(
+                        spark, doc, frames, [], verb="merge_on_read"
+                    )
                     hits = self._member_hits(dv_back)
-                    new_deletes, new_dv_rows = self._extend_deletes(
-                        doc, hits, dv_dir
-                    )
-                    stats = dict(doc.get("stats", {}))
-                    stat_cols = sorted(
-                        {c for s in stats.values() for c in s}
-                    )
-                    if stat_cols and written:
-                        stats.update(
-                            self._members_stats(
-                                spark, [d for d, _ in written], stat_cols
-                            )
-                        )
-                    partitions = dict(doc.get("partitions", {}))
-                    partitions.update(
-                        {d: e for d, e in written if e is not None}
-                    )
-                    try:
-                        self._publish(
-                            version,
-                            {"version": version, "mode": "merge",
-                             "members": list(doc["members"])
-                             + [d for d, _ in written],
-                             "added": [d for d, _ in written],
-                             "changes": cdf_dir, "merge_on_read": True,
-                             "stats": stats, "deletes": new_deletes,
-                             "deletes_rows": new_dv_rows,
-                             "partitions": partitions,
-                             "partition_spec": doc.get("partition_spec"),
-                             "txns": dict(doc.get("txns", {})),
-                             "constraints": dict(doc.get("constraints", {})),
-                         "defaults": self._carry_defaults(doc),
-                             "schema": doc.get("schema"),
-                             "schema_version": doc.get(
-                                 "schema_version", 1
-                             )},
-                        )
-                        return version
-                    except FileExistsError:
-                        continue  # rebase: recompute against new latest
-            raise SnapshotConflictError(
-                f"merge_on_read could not land after {_OCC_RETRIES} "
-                "rebases (sustained contention on the manifest log)"
-            )
+                fields["deletes"], fields["deletes_rows"] = (
+                    self._extend_deletes(doc, hits, dv_dir)
+                )
+                return self._next_doc(
+                    doc, "merge", changes=cdf_dir, merge_on_read=True,
+                    **fields,
+                )
+
+            return self._land("merge_on_read", attempt)
 
     @staticmethod
     def _change_rows(
@@ -3073,10 +2712,10 @@ class SnapshotStore:
 
     def _split_affected(
         self, spark: SparkSession, doc: dict, changes: DataFrame, key: str
-    ) -> tuple[list[str], list[str]] | None:
-        """(affected, untouched) member split for a pruned merge, or None
-        when no member has usable stats (caller falls back to the logical
-        form). The overlap probe is ONE bounded aggregate over the change
+    ) -> list[str] | None:
+        """The members a pruned merge must read (those whose stats may
+        hold a change key, and those without stats), or None when no
+        member has usable stats (caller falls back to the logical form). The overlap probe is ONE bounded aggregate over the change
         keys — one 0/1 cell per ranged member, rows never leave the
         executors unaggregated."""
         stats = doc.get("stats", {})
@@ -3096,10 +2735,9 @@ class SnapshotStore:
             for i, (_, lo, hi) in enumerate(ranged)
         ]
         row = changes.agg(*probes).collect()[0]
-        untouched = []
-        for i, (m, _, _) in enumerate(ranged):
-            (affected if row[f"m{i}"] == 1 else untouched).append(m)
-        return affected, untouched
+        return affected + [
+            m for i, (m, _, _) in enumerate(ranged) if row[f"m{i}"] == 1
+        ]
 
     def _merge_pruned(
         self,
@@ -3109,8 +2747,11 @@ class SnapshotStore:
         keys: list[str],
         op_col: str,
         affected: list[str],
-        untouched: list[str],
-    ) -> int:
+    ) -> dict | int:
+        """The pruned MERGE attempt: the manifest that rewrites only the
+        ``affected`` members (the others are carried with their stats,
+        partition values and deletion vectors), or ``doc``'s version when
+        the batch changes nothing."""
         prev = doc["version"]
         if affected:
             # manifest-schema read: an affected member written before an
@@ -3137,64 +2778,22 @@ class SnapshotStore:
         out = self._apply_generated(
             doc, self._apply_changes(cur, changes, keys, op_col)
         )
-        version = prev + 1
         # change data feed (same contract as the logical path): the
         # affected-member slice holds every pre-image by construction —
         # an untouched member cannot contain a change key
         cdf_dir, cdf_full = self._new_member_dir()
-        self._change_rows(cur, changes, keys, op_col, version).write.parquet(
+        self._change_rows(cur, changes, keys, op_col, prev + 1).write.parquet(
             cdf_full
         )
         # the rewritten slice honors the current spec; untouched members
         # keep their own (possibly older) spec entries — the mixed-spec
         # member set real table formats carry after spec evolution
-        written = self._write_under_spec(out, doc.get("partition_spec"))
-        self._enforce_constraints(
-            spark, doc, [d for d, _ in written], "merge(prune=True)"
+        return self._next_doc(
+            doc, "merge", changes=cdf_dir, rewrote=affected,
+            **self._replace_members(
+                spark, doc, [out], affected, verb="merge(prune=True)"
+            ),
         )
-        self._enforce_identity_not_null(
-            spark, doc, [d for d, _ in written], "merge(prune=True)"
-        )
-        prev_stats = doc.get("stats", {})
-        stats = {m: prev_stats[m] for m in untouched if m in prev_stats}
-        prev_parts = doc.get("partitions", {})
-        partitions = {m: prev_parts[m] for m in untouched if m in prev_parts}
-        # untouched members keep their deletion vectors (their masked
-        # rows stay masked); affected members' DVs die with the rewrite
-        # (the rewrite read applied them, so the new member is DV-free)
-        prev_dvs = doc.get("deletes", {})
-        deletes = {m: prev_dvs[m] for m in untouched if m in prev_dvs}
-        prev_dv_rows = doc.get("deletes_rows", {})
-        deletes_rows = {
-            m: prev_dv_rows[m] for m in untouched if m in prev_dv_rows
-        }
-        partitions.update({d: e for d, e in written if e is not None})
-        # keep pruning alive across merges: re-stat the rewritten member
-        # on every column the prior manifest tracked anywhere
-        stat_cols = sorted({c for s in prev_stats.values() for c in s})
-        if stat_cols:
-            stats.update(
-                self._members_stats(
-                    spark, [d for d, _ in written], stat_cols
-                )
-            )
-        self._publish(
-            version,
-            {"version": version, "mode": "merge",
-             "members": untouched + [d for d, _ in written],
-             "added": [d for d, _ in written],
-             "changes": cdf_dir,
-             "stats": stats, "rewrote": affected,
-             "deletes": deletes, "deletes_rows": deletes_rows,
-             "partitions": partitions,
-             "partition_spec": doc.get("partition_spec"),
-             "txns": dict(doc.get("txns", {})),
-             "constraints": dict(doc.get("constraints", {})),
-             "defaults": self._carry_defaults(doc, affected),
-             "schema": doc.get("schema"),
-             "schema_version": doc.get("schema_version", 1)},
-        )
-        return version
 
     def masked_stats(self, version: int | None = None) -> dict:
         """Per-member deletion-vector telemetry from the manifest ALONE
@@ -3233,99 +2832,52 @@ class SnapshotStore:
         Concurrency: like ``compact``, NOT rebaseable — the rewritten
         files describe one specific version; a lost race raises
         ``SnapshotConflictError`` (orphans are vacuum()-collectable)."""
-        prev = self.latest_version()
-        if prev is None:
-            raise ValueError("compact_masked() on an empty store")
-        doc = self.manifest(prev)
-        dv_rows = doc.get("deletes_rows", {})
-        candidates = [
-            m for m in doc["members"]
-            if doc.get("deletes", {}).get(m)
-            and dv_rows.get(m, 0) >= min_masked_rows
-        ]
-        if not candidates:
-            return prev
-        totals = {
-            r["m"]: r["n"]
-            # with_pos: the _file address column survives the default-
-            # backfill projections where raw _metadata would not
-            for r in self._read_members_raw(
-                spark, doc, candidates, with_pos=True
-            )
-            .select(
-                F.regexp_extract(
-                    F.col("_file"),
-                    r"^(data/c[0-9a-f]{16})/",
-                    1,
-                ).alias("m")
-            )
-            .groupBy("m")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        rewrite = [
-            m for m in candidates
-            if totals.get(m, 0) > 0
-            and dv_rows.get(m, 0) / totals[m] >= max_masked_fraction
-        ]
-        if not rewrite:
-            return prev
-        version = prev + 1
-        # the LOGICAL rows of the hot members (their DVs applied),
-        # re-laid-out under the current spec like every rewrite verb
-        out = self._read_members(spark, doc, rewrite)
-        written = self._write_under_spec(out, doc.get("partition_spec"))
-        keep = [m for m in doc["members"] if m not in set(rewrite)]
-        stats = {
-            m: v for m, v in doc.get("stats", {}).items() if m in set(keep)
-        }
-        stat_cols = sorted(
-            {c for v in doc.get("stats", {}).values() for c in v}
-        )
-        if stat_cols and written:
-            stats.update(
-                self._members_stats(
-                    spark, [d for d, _ in written], stat_cols
+
+        def attempt(prev, doc):
+            dv_rows = doc.get("deletes_rows", {})
+            candidates = [
+                m for m in doc["members"]
+                if doc.get("deletes", {}).get(m)
+                and dv_rows.get(m, 0) >= min_masked_rows
+            ]
+            if not candidates:
+                return prev
+            totals = {
+                r["m"]: r["n"]
+                # with_pos: the _file address column survives the default-
+                # backfill projections where raw _metadata would not
+                for r in self._read_members_raw(
+                    spark, doc, candidates, with_pos=True
                 )
+                .select(
+                    F.regexp_extract(
+                        F.col("_file"),
+                        r"^(data/c[0-9a-f]{16})/",
+                        1,
+                    ).alias("m")
+                )
+                .groupBy("m")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            }
+            rewrite = [
+                m for m in candidates
+                if totals.get(m, 0) > 0
+                and dv_rows.get(m, 0) / totals[m] >= max_masked_fraction
+            ]
+            if not rewrite:
+                return prev
+            # the LOGICAL rows of the hot members (their DVs applied),
+            # re-laid-out under the current spec like every rewrite verb
+            return self._next_doc(
+                doc, "compact_masked", rewrote=rewrite,
+                **self._replace_members(
+                    spark, doc, [self._read_members(spark, doc, rewrite)],
+                    rewrite,
+                ),
             )
-        partitions = {
-            m: e
-            for m, e in doc.get("partitions", {}).items()
-            if m in set(keep)
-        }
-        partitions.update({d: e for d, e in written if e is not None})
-        deletes = {
-            m: v
-            for m, v in doc.get("deletes", {}).items()
-            if m in set(keep) and v
-        }
-        deletes_rows = {
-            m: n for m, n in dv_rows.items() if m in deletes
-        }
-        try:
-            self._publish(
-                version,
-                {"version": version, "mode": "compact_masked",
-                 "members": keep + [d for d, _ in written],
-                 "added": [d for d, _ in written],
-                 "rewrote": rewrite,
-                 "stats": stats,
-                 "deletes": deletes, "deletes_rows": deletes_rows,
-                 "partitions": partitions,
-                 "partition_spec": doc.get("partition_spec"),
-                 "txns": dict(doc.get("txns", {})),
-                 "constraints": dict(doc.get("constraints", {})),
-                 "defaults": self._carry_defaults(doc, rewrite),
-                 "schema": doc.get("schema"),
-                 "schema_version": doc.get("schema_version", 1)},
-            )
-        except FileExistsError:
-            raise SnapshotConflictError(
-                f"compact_masked of v{prev} lost the race for "
-                f"v{version}: the rewritten members no longer describe "
-                "the latest version; re-run against the new latest"
-            ) from None
-        return version
+
+        return self._land("compact_masked", attempt, rebase=False)
 
     def member_bytes(self, version: int | None = None) -> dict[str, int]:
         """On-disk bytes per member of ``version`` (default latest) —
@@ -3379,118 +2931,71 @@ class SnapshotStore:
         unchanged when fewer than ``min_members`` small members exist.
         Concurrency: like every rewrite verb, NOT rebaseable — a lost
         race raises ``SnapshotConflictError`` (orphans vacuumable)."""
-        prev = self.latest_version()
-        if prev is None:
-            raise ValueError("compact_small() on an empty store")
-        doc = self.manifest(prev)
-        sizes = self.member_bytes(prev)
-        small = [
-            m for m in doc["members"] if sizes[m] < target_bytes // 2
-        ]
-        if len(small) < min_members:
-            return prev
-        # greedy first-fit by manifest order (stable), binned PER
-        # PARTITION ENTRY: under a spec, a mixed-partition bin would fan
-        # back out through _write_under_spec into one member per leaf —
-        # each below target/2, never graduating, re-rewritten every run.
-        # Grouping by the member's partition value guarantees each bin
-        # writes exactly ONE member, so the [target/2, target] graduation
-        # bound holds for partitioned stores too. Members without a
-        # partitions entry (pre-spec) share one group; their first
-        # rewrite under the current spec is a one-time migration whose
-        # outputs gain partition entries and bin per-partition next run.
-        part_of = doc.get("partitions", {})
-        groups: dict[str, list[str]] = {}
-        for m in small:
-            key = json.dumps(part_of.get(m), sort_keys=True)
-            groups.setdefault(key, []).append(m)
-        deletes_map = doc.get("deletes") or {}
-        bins: list[list[str]] = []
-        for key in sorted(groups):
-            cur: list[str] = []
-            acc = 0
-            for m in groups[key]:
-                if cur and acc + sizes[m] > target_bytes:
+
+        def attempt(prev, doc):
+            sizes = self.member_bytes(prev)
+            small = [
+                m for m in doc["members"] if sizes[m] < target_bytes // 2
+            ]
+            if len(small) < min_members:
+                return prev
+            # greedy first-fit by manifest order (stable), binned PER
+            # PARTITION ENTRY: under a spec, a mixed-partition bin would
+            # fan back out through _write_under_spec into one member per
+            # leaf — each below target/2, never graduating, re-rewritten
+            # every run. Grouping by the member's partition value
+            # guarantees each bin writes exactly ONE member, so the
+            # [target/2, target] graduation bound holds for partitioned
+            # stores too. Members without a partitions entry (pre-spec)
+            # share one group; their first rewrite under the current spec
+            # is a one-time migration whose outputs gain partition entries
+            # and bin per-partition next run.
+            part_of = doc.get("partitions", {})
+            groups: dict[str, list[str]] = {}
+            for m in small:
+                key = json.dumps(part_of.get(m), sort_keys=True)
+                groups.setdefault(key, []).append(m)
+            deletes_map = doc.get("deletes") or {}
+            bins: list[list[str]] = []
+            for key in sorted(groups):
+                cur: list[str] = []
+                acc = 0
+                for m in groups[key]:
+                    if cur and acc + sizes[m] > target_bytes:
+                        bins.append(cur)
+                        cur, acc = [], 0
+                    cur.append(m)
+                    acc += sizes[m]
+                if cur:
                     bins.append(cur)
-                    cur, acc = [], 0
-                cur.append(m)
-                acc += sizes[m]
-            if cur:
-                bins.append(cur)
-        # a 1-member DV-less bin would rewrite the same bytes into the
-        # same shape (and recompression can even shrink it back under
-        # target/2 — an endless self-rewrite): pure churn, leave it for
-        # a run where a sibling small member exists in its partition
-        bins = [b for b in bins if len(b) > 1 or deletes_map.get(b[0])]
-        small = [m for b in bins for m in b]
-        if not bins or len(small) < min_members:
-            return prev
-        version = prev + 1
-        written_all: list[tuple[str, dict | None]] = []
-        for b in bins:
-            # the LOGICAL rows of the bin (DVs applied), re-laid-out
+            # a 1-member DV-less bin would rewrite the same bytes into the
+            # same shape (and recompression can even shrink it back under
+            # target/2 — an endless self-rewrite): pure churn, leave it
+            # for a run where a sibling small member exists in its
+            # partition
+            bins = [b for b in bins if len(b) > 1 or deletes_map.get(b[0])]
+            small = [m for b in bins for m in b]
+            if not bins or len(small) < min_members:
+                return prev
+            # the LOGICAL rows of each bin (DVs applied), re-laid-out
             # under the current spec like every rewrite verb; ONE output
             # file per bin — without the coalesce the bin inherits the
             # read's partitioning and writes as many small files as it
-            # consumed (measured by the probe: member count fell 5x,
-            # file count not at all)
-            out = self._read_members(spark, doc, b).coalesce(1)
-            written_all.extend(
-                self._write_under_spec(out, doc.get("partition_spec"))
+            # consumed (measured by the probe: member count fell 5x, file
+            # count not at all)
+            return self._next_doc(
+                doc, "compact_small", rewrote=small,
+                **self._replace_members(
+                    spark, doc,
+                    [
+                        self._read_members(spark, doc, b).coalesce(1)
+                        for b in bins
+                    ],
+                    small,
+                ),
             )
-        keep = [m for m in doc["members"] if m not in set(small)]
-        stats = {
-            m: s for m, s in doc.get("stats", {}).items() if m in set(keep)
-        }
-        stat_cols = sorted(
-            {c for s in doc.get("stats", {}).values() for c in s}
-        )
-        if stat_cols and written_all:
-            stats.update(
-                self._members_stats(
-                    spark, [d for d, _ in written_all], stat_cols
-                )
-            )
-        partitions = {
-            m: e
-            for m, e in doc.get("partitions", {}).items()
-            if m in set(keep)
-        }
-        partitions.update({d: e for d, e in written_all if e is not None})
-        deletes = {
-            m: v
-            for m, v in doc.get("deletes", {}).items()
-            if m in set(keep) and v
-        }
-        deletes_rows = {
-            m: n
-            for m, n in doc.get("deletes_rows", {}).items()
-            if m in deletes
-        }
-        try:
-            self._publish(
-                version,
-                {"version": version, "mode": "compact_small",
-                 "members": keep + [d for d, _ in written_all],
-                 "added": [d for d, _ in written_all],
-                 "rewrote": small,
-                 "stats": stats,
-                 "deletes": deletes, "deletes_rows": deletes_rows,
-                 "partitions": partitions,
-                 "partition_spec": doc.get("partition_spec"),
-                 "txns": dict(doc.get("txns", {})),
-                 "constraints": dict(doc.get("constraints", {})),
-                 "defaults": self._carry_defaults(doc, small),
-                 "schema": doc.get("schema"),
-                 "schema_version": doc.get("schema_version", 1)},
-            )
-        except FileExistsError:
-            raise SnapshotConflictError(
-                f"compact_small of v{prev} lost the race for v{version}: "
-                "the rewritten members no longer describe the latest "
-                "version; re-run against the new latest"
-            ) from None
-        return version
+
+        return self._land("compact_small", attempt, rebase=False)
 
     def vacuum(self, keep_versions: list[int] | None = None) -> list[str]:
         """Delete commit directories unreachable from every retained
@@ -3567,9 +3072,8 @@ class SnapshotStore:
                         f"restore(v{version}) impossible: deletion-vector "
                         f"directory {d} was vacuumed away"
                     )
-        for _ in range(_OCC_RETRIES):
-            prev = self.latest_version()
-            cur = self.manifest(prev)
+
+        def attempt(prev, cur):
             if version == prev:
                 return prev  # restoring to the current state is a no-op
             sv = cur.get("schema_version", 1)
@@ -3589,35 +3093,15 @@ class SnapshotStore:
             for p in target.get("retired_physical") or []:
                 if p not in retired:
                     retired.append(p)
-            new_v = prev + 1
-            doc = {"version": new_v, "mode": "restore",
-                   "restore_of": version,
-                   "members": list(target["members"]), "added": [],
-                   "stats": dict(target.get("stats", {})),
-                   "partitions": dict(target.get("partitions", {})),
-                   "deletes": dict(target.get("deletes", {})),
-                   "deletes_rows": dict(target.get("deletes_rows", {})),
-                   "partition_spec": target.get("partition_spec"),
-                   "txns": dict(cur.get("txns", {})),
-                   "constraints": dict(target.get("constraints", {})),
-                   "defaults": dict(target.get("defaults", {}) or {}),
-                   "column_mapping": dict(
-                       target.get("column_mapping") or {}
-                   ),
-                   "identity": identity,
-                   "generated": dict(target.get("generated") or {}),
-                   "retired_physical": retired,
-                   "schema": target.get("schema"),
-                   "schema_version": sv}
-            try:
-                self._publish(new_v, doc)
-                return new_v
-            except FileExistsError:
-                continue  # rebase: last-writer-wins, like overwrite
-        raise SnapshotConflictError(
-            f"restore could not land after {_OCC_RETRIES} rebases "
-            "(sustained contention on the manifest log)"
-        )
+            # ``target``'s state as the version after ``cur``
+            return self._next_doc(
+                target, "restore", all_ddl=True, version=prev + 1,
+                restore_of=version, txns=dict(cur.get("txns", {})),
+                identity=identity, retired_physical=retired,
+                schema_version=sv,
+            )
+
+        return self._land("restore", attempt)
 
     def clone_to(
         self, dst_dir: str, version: int | None = None
@@ -3648,63 +3132,40 @@ class SnapshotStore:
         absm = {
             m: os.path.join(self.base_dir, m) for m in doc["members"]
         }
-        clone = {"version": 1, "mode": "clone",
-                 "cloned_from": {"base_dir": os.path.abspath(self.base_dir),
-                                 "version": src_v},
-                 "members": [absm[m] for m in doc["members"]],
-                 # a stream over the clone serves v1 as its baseline
-                 "added": [absm[m] for m in doc["members"]],
-                 "stats": {
-                     absm[m]: s
-                     for m, s in doc.get("stats", {}).items()
-                     if m in absm
-                 },
-                 "partitions": {
-                     absm[m]: e
-                     for m, e in doc.get("partitions", {}).items()
-                     if m in absm
-                 },
-                 "deletes": {
-                     absm[m]: [
-                         os.path.join(self.base_dir, d) for d in dirs
-                     ]
-                     for m, dirs in (doc.get("deletes") or {}).items()
-                     if m in absm
-                 },
-                 "deletes_rows": {
-                     absm[m]: n
-                     for m, n in (doc.get("deletes_rows") or {}).items()
-                     if m in absm
-                 },
-                 "partition_spec": doc.get("partition_spec"),
-                 "txns": {},
-                 "constraints": dict(doc.get("constraints", {})),
-                 "defaults": {
-                     c: {"value": s["value"],
-                         "members": [
-                             absm[m] for m in s.get("members", [])
-                             if m in absm
-                         ]}
-                     for c, s in (doc.get("defaults") or {}).items()
-                 },
-                 "column_mapping": dict(doc.get("column_mapping") or {}),
-                 "identity": dict(doc.get("identity") or {}),
-                 "generated": dict(doc.get("generated") or {}),
-                 "retired_physical": list(
-                     doc.get("retired_physical") or []
-                 ),
-                 "schema": doc.get("schema"),
-                 "schema_version": doc.get("schema_version", 1)}
-        dst._publish(1, clone)
+
+        def absolute(key: str, value=lambda v: v) -> dict:
+            return {
+                absm[m]: value(v)
+                for m, v in (doc.get(key) or {}).items()
+                if m in absm
+            }
+
+        dst._publish(1, self._next_doc(
+            doc, "clone", all_ddl=True, version=1,
+            cloned_from={"base_dir": os.path.abspath(self.base_dir),
+                         "version": src_v},
+            members=list(absm.values()),
+            # a stream over the clone serves v1 as its baseline
+            added=list(absm.values()),
+            stats=absolute("stats"),
+            partitions=absolute("partitions"),
+            deletes=absolute(
+                "deletes",
+                lambda dirs: [os.path.join(self.base_dir, d) for d in dirs],
+            ),
+            deletes_rows=absolute("deletes_rows"),
+            txns={},
+            defaults={
+                c: {"value": s["value"],
+                    "members": [
+                        absm[m] for m in s.get("members", []) if m in absm
+                    ]}
+                for c, s in (doc.get("defaults") or {}).items()
+            },
+        ))
         return dst
 
     # -- reads --------------------------------------------------------------
-
-    def _member_paths(self, version: int) -> list[str]:
-        return [
-            os.path.join(self.base_dir, m)
-            for m in self.manifest(version)["members"]
-        ]
 
     def _read_members_raw(
         self,

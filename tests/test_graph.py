@@ -45,6 +45,23 @@ def test_max_iter_caps_rounds(spark):
     assert got[6] != 0  # not yet converged — cap respected
 
 
+def _stored_rdds(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_rounds_free_their_checkpoints(spark):
+    """Each round's label checkpoint is freed once the next round is
+    computed, and the edge list when the loop ends: after a multi-round run
+    the executors hold exactly one new RDD, the returned labels."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], ["doc1", "doc2"]
+    )
+    before = _stored_rdds(spark)
+    labels = connected_components(edges)  # a 6-hop chain: >= 6 rounds
+    assert len(_stored_rdds(spark) - before) == 1
+    assert {r["component"] for r in labels.collect()} == {0}
+
+
 def test_reliable_checkpoint_path_matches_local(spark, tmp_path):
     """checkpoint_dir switches the per-round lineage truncation to
     reliable FS checkpoints (the cluster deployment mode, SCALING §10):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import uuid
 
 import pytest
@@ -582,3 +583,190 @@ def test_staged_pruned_merge_rewrote_exactly_one_member(spark, sf_dir):
     assert len(m["rewrote"]) == 1
     assert len(m["members"]) == _N_RANGE_COMMITS
     assert len(m["stats"]) == _N_RANGE_COMMITS
+
+
+# -- every verb carries the table-level keys it does not set ----------------
+
+#: the table-level manifest keys a version inherits from the one before
+_TABLE_KEYS = (
+    "txns", "constraints", "partition_spec", "column_mapping", "identity",
+    "generated", "defaults", "schema", "schema_version", "min_reader_version",
+)
+
+
+def _rows(spark, lo, hi):
+    return spark.createDataFrame(
+        [(k, f"v{k}") for k in range(lo, hi)], "k long, w string"
+    )
+
+
+def _upserts(spark, rows):
+    return spark.createDataFrame(rows, "k long, w string, _op string")
+
+
+@pytest.fixture(scope="module")
+def ddl_store(spark, tmp_path_factory):
+    """A store with every table-level key set: writer txns, a CHECK
+    constraint, a partition spec, a column mapping (``w`` renamed from
+    ``v``), identity and generated columns, a default backfill, an evolved
+    schema, min_reader_version 4, plus a deletion vector and small
+    partitioned members for the maintenance verbs to work on."""
+    st = SnapshotStore(str(tmp_path_factory.mktemp("ddl") / "snap"))
+    st.commit(
+        _rows(spark, 0, 40).withColumnRenamed("w", "v"), mode="overwrite",
+        stats_cols=["k"], txn=("app", 1),
+    )
+    st.add_identity_column(spark, "rid")
+    st.add_generated_column(spark, "k2", "bigint", "k * 2")
+    st.set_partition_spec([("k", "bucket[2]")])
+    for lo in (40, 44):
+        st.commit(
+            _rows(spark, lo, lo + 4).withColumnRenamed("w", "v"),
+            stats_cols=["k"],
+        )
+    st.add_constraint(spark, "pos", "k >= 0")
+    st.rename_column("v", "w")
+    st.add_column("d", "int", default=7)
+    st.delete_where(spark, "k % 10 = 3")
+    doc = st.manifest(st.latest_version())
+    assert all(doc.get(k) for k in _TABLE_KEYS), [
+        k for k in _TABLE_KEYS if not doc.get(k)
+    ]
+    assert doc["schema_version"] > 1 and doc["min_reader_version"] == 4
+    return st
+
+
+#: verb -> (how to run it, the table-level keys it may set)
+_CARRY_VERBS = {
+    "commit_append": (
+        lambda spark, st: st.commit(_rows(spark, 100, 102), stats_cols=["k"]),
+        {"identity"},
+    ),
+    "commit_txn": (
+        lambda spark, st: st.commit(_rows(spark, 102, 104), txn=("app", 2)),
+        {"identity", "txns"},
+    ),
+    "commit_overwrite": (
+        lambda spark, st: st.commit(
+            _rows(spark, 0, 4).withColumn("d", F.lit(1)), mode="overwrite"
+        ),
+        {"identity", "defaults", "schema", "schema_version"},
+    ),
+    "set_partition_spec": (
+        lambda spark, st: st.set_partition_spec([("k", "bucket[4]")]),
+        {"partition_spec"},
+    ),
+    "add_constraint": (
+        lambda spark, st: st.add_constraint(spark, "small", "k < 10000"),
+        {"constraints"},
+    ),
+    "drop_constraint": (
+        lambda spark, st: st.drop_constraint("pos"), {"constraints"},
+    ),
+    "add_column": (
+        lambda spark, st: st.add_column("e", "string"),
+        {"schema", "schema_version"},
+    ),
+    "rename_column": (
+        lambda spark, st: st.rename_column("w", "w2"),
+        {"schema", "schema_version", "column_mapping"},
+    ),
+    "drop_column": (
+        lambda spark, st: st.drop_column("d"),
+        {"schema", "schema_version", "defaults"},
+    ),
+    "add_identity_column": (
+        lambda spark, st: st.add_identity_column(spark, "rid2"),
+        {"identity", "schema", "schema_version", "defaults"},
+    ),
+    "add_generated_column": (
+        lambda spark, st: st.add_generated_column(
+            spark, "k3", "bigint", "k + 1"
+        ),
+        {"generated", "schema", "schema_version", "defaults"},
+    ),
+    "delete_where": (
+        lambda spark, st: st.delete_where(spark, "k = 5"), set(),
+    ),
+    "update_where": (
+        lambda spark, st: st.update_where(spark, "k = 6", {"w": "'u'"}), set(),
+    ),
+    "merge_on_read": (
+        lambda spark, st: st.merge_on_read(
+            spark, _upserts(spark, [(7, "m", "upsert")]), keys=["k"]
+        ),
+        set(),
+    ),
+    "merge": (
+        lambda spark, st: st.merge(
+            spark, _upserts(spark, [(8, "m", "upsert")]), keys=["k"]
+        ),
+        {"defaults"},
+    ),
+    "merge_pruned": (
+        lambda spark, st: st.merge(
+            spark, _upserts(spark, [(9, None, "delete")]), keys=["k"],
+            prune=True,
+        ),
+        {"defaults"},
+    ),
+    "compact_masked": (
+        lambda spark, st: st.compact_masked(spark, max_masked_fraction=0.0),
+        {"defaults"},
+    ),
+    "compact_small": (
+        lambda spark, st: st.compact_small(spark, target_bytes=10**9),
+        {"defaults"},
+    ),
+    "compact": (lambda spark, st: st.compact(spark), {"defaults"}),
+}
+
+
+def _copy(st, tmp_path):
+    dst = str(tmp_path / "copy")
+    shutil.copytree(st.base_dir, dst)
+    return SnapshotStore(dst)
+
+
+@pytest.mark.parametrize("verb", sorted(_CARRY_VERBS))
+def test_every_verb_carries_the_keys_it_does_not_set(
+    spark, ddl_store, tmp_path, verb
+):
+    st = _copy(ddl_store, tmp_path)
+    prev = st.latest_version()
+    run, sets = _CARRY_VERBS[verb]
+    assert run(spark, st) == prev + 1  # the verb published a version
+    before, after = st.manifest(prev), st.manifest(prev + 1)
+    assert {
+        k: after.get(k) for k in _TABLE_KEYS if k not in sets
+    } == {k: before.get(k) for k in _TABLE_KEYS if k not in sets}
+
+
+def test_restore_and_clone_carry_what_they_copy(spark, ddl_store, tmp_path):
+    """restore takes every table-level key from the target version except
+    the writer txns (and the monotone reader stamp); a clone takes them
+    all from the source except txns, which start empty."""
+    st = _copy(ddl_store, tmp_path)
+    cur_v = st.latest_version()
+    cur = st.manifest(cur_v)
+    target_v = cur_v - 2  # before the default column was added
+    target = st.manifest(target_v)
+    new = st.manifest(st.restore(target_v))
+    assert new["txns"] == cur["txns"]
+    assert new["min_reader_version"] == cur["min_reader_version"]
+    for k in ("constraints", "partition_spec", "column_mapping",
+              "generated", "defaults", "schema"):
+        assert new.get(k) == target.get(k), k
+
+    src = st.manifest(st.latest_version())
+    clone = st.clone_to(str(tmp_path / "clone"))
+    doc = clone.manifest(1)
+    assert doc["txns"] == {}
+    absolute = {
+        c: {"value": s["value"],
+            "members": [os.path.join(st.base_dir, m) for m in s["members"]]}
+        for c, s in src["defaults"].items()
+    }
+    assert doc["defaults"] == absolute
+    for k in set(_TABLE_KEYS) - {"txns", "defaults"}:
+        assert doc.get(k) == src.get(k), k
